@@ -1,5 +1,5 @@
 """Metric names, summary statistics, operation accounting and the
-result line. Pure Python: importable without Spark."""
+result line. Importable without Spark."""
 
 from __future__ import annotations
 
@@ -7,11 +7,13 @@ import json
 import statistics
 import traceback
 
+from registry import MODULES
+
 # name -> unit. Every untraced run prints END_TO_END, every traced run
 # PER_LAYER; a layer a workload does not run reads 0.
 END_TO_END = {
     "setup_s": "s",
-    "items_per_cpu_s": "1/cpu_s",
+    "items_per_ref_s": "1/ref_s",
     "bytes_per_item": "B",
 }
 
@@ -22,7 +24,9 @@ PER_LAYER = {
     "trace.untraced_pass_s": "s",
     "trace.overhead_frac": "ratio",
     "wall.items_per_s": "1/s",
+    "wall.setup_s": "s",
     "cpu.pass_s": "cpu_s",
+    "host.probe_s": "s",
     # tier_build
     "rollup.tier_1m_s": "s",
     "rollup.tier_1h_s": "s",
@@ -37,6 +41,27 @@ PER_LAYER = {
     "catalog.files_written": "count",
     "catalog.live_bytes": "B",
     "catalog.removed_dirs": "count",
+    # tier_build, traced runs: jobs.rollup_job.main once
+    "rollup_job.main_s": "s",
+    "rollup_job.tier_1m_s": "s",
+    "rollup_job.tier_1h_s": "s",
+    "rollup_job.tier_1d_s": "s",
+    "rollup_job.evict_vacuum_s": "s",
+    "rollup_job.jobs": "count",
+    # tier_build, traced runs: one jobs.refresh_job.refresh_once cycle
+    "refresh.cycle_s": "s",
+    "refresh.append_s": "s",
+    "refresh.delta_1m_s": "s",
+    "refresh.tier_1m_s": "s",
+    "refresh.tier_1h_s": "s",
+    "refresh.tier_1d_s": "s",
+    "refresh.tails_s": "s",
+    "refresh.other_s": "s",
+    "refresh.affected_days": "count",
+    "refresh.affected_rows_1m": "count",
+    "refresh.bytes_written": "B",
+    "refresh.jobs": "count",
+    "refresh.live_dirs": "count",
     # codec_stats
     "codec.encode_s": "s",
     "codec.decode_s": "s",
@@ -46,7 +71,12 @@ PER_LAYER = {
     "stats.ewma_s": "s",
     "gapfill.linear_s": "s",
     "gapfill.rows_out": "count",
-    # Spark's own SQL metrics, summed over one pass
+    # codec_stats, traced runs: one registry pass
+    "registry.pass_s": "s",
+    "registry.python_ms": "ms",
+    **{f"registry.{m}.{k}": u for m in MODULES
+       for k, u in (("build_s", "s"), ("exec_s", "s"), ("jobs", "count"))},
+    # Spark's own SQL metrics, summed over one timed pass
     "engine.shuffle_write_bytes": "B",
     "engine.fetch_wait_ms": "ms",
     "engine.spill_bytes": "B",

@@ -1,16 +1,19 @@
 """Benchmark entry point: one workload, one seed, one JSON result line.
 
-    python3 tierbench/run.py --workload tier_build --seed 1 --seconds 20 --trace 0
+    python3 tierbench/run.py --workload tier_build --seed 1 --seconds 10 --trace 0
 
 Run it from the repository root. It starts a local Spark session sized
 for a small host, builds the workload's inputs from ``--seed``, warms
-up with one untimed pass, then runs passes back to back (one client,
-closed loop) until ``--seconds`` have passed and at least three passes
-are done. After the timing it checks the engine's outputs.
+up with untimed passes, then runs passes back to back (one client,
+closed loop) until ``--seconds`` have passed and the workload's minimum
+number of passes is done. After the timing it checks the engine's
+outputs.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` alternates
-untraced and traced passes and prints the per-layer metrics, the
-traced and untraced pass times side by side, and the tracing overhead.
+untraced and traced passes, then runs the workload's traced-only part
+once (a refresh cycle, a registry pass), and prints the per-layer
+metrics, the traced and untraced pass times side by side, and the
+tracing overhead.
 The last stdout line is the result; a readable summary goes to stderr
 and the full artifact (every pass, span and failure, host diagnostics)
 to ``.tierbench/out/``. Everything the run writes stays under
@@ -34,7 +37,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 ENGINE = "yahoo_anomaly_detection_spark"
 DEADLINE_S = 170  # the whole run, set-up and checks included
-MIN_PASSES = 3
 SHUFFLE_PARTITIONS = 8  # fixed: independent of the core count
 DRIVER_MEM = "2g"
 OFFHEAP_MEM = "1g"
@@ -64,6 +66,67 @@ def canary() -> float:
     t0 = time.perf_counter()
     np.arange(10_000_000)
     return time.perf_counter() - t0
+
+
+# the speed probes' work, how often each runs at either end of a run,
+# and the geometric mean of their medians on the idle 4-vCPU host the
+# README's figures come from (loop ~0.36 s, memory ~0.21 s)
+PROBE_LOOPS = 3_000_000
+PROBE_WORDS = 8_000_000  # 64 MB of int64, far past the caches
+PROBE_REPEATS = 3
+REF_PROBE_S = 0.275
+
+_MEM: list = []
+
+
+def _loop() -> None:
+    x = 0
+    for i in range(PROBE_LOOPS):
+        x += i * i
+
+
+def _gather() -> None:
+    a, idx = _MEM
+    for _ in range(4):
+        a[idx].sum()
+
+
+def _forked(procs: int, work) -> float:
+    """Wall seconds for ``procs`` forked processes to do ``work`` at
+    once."""
+    t = time.perf_counter()
+    pids = []
+    for _ in range(procs):
+        pid = os.fork()
+        if pid == 0:  # touches nothing the parent's threads may hold
+            try:
+                work()
+            finally:
+                os._exit(0)
+        pids.append(pid)
+    for pid in pids:
+        os.waitpid(pid, 0)
+    return time.perf_counter() - t
+
+
+def speed_probes(procs: int) -> tuple[float, float]:
+    """How fast the host is right now: (a pure-Python loop, random
+    reads from a 64 MB array the parent built) run in ``procs`` forked
+    processes at once. On a shared host a pass's wall and CPU time both
+    doubled within minutes while the work stayed the same. The loop
+    tracks slower cores; it stayed flat through one such slowdown,
+    which the memory probe is there to see. They run only while no
+    Spark JVM exists (before the session starts, after it has
+    stopped), so nothing the engine leaves running can slow them;
+    probes taken between passes read 20-50% slower right after Python
+    UDF passes."""
+    if not _MEM:
+        import numpy as np
+
+        rng = np.random.default_rng(0)
+        _MEM.extend([np.arange(PROBE_WORDS, dtype=np.int64),
+                     rng.integers(0, PROBE_WORDS, PROBE_WORDS // 4)])
+    return _forked(procs, _loop), _forked(procs, _gather)
 
 
 def _proc_tree() -> list[int]:
@@ -178,16 +241,20 @@ def stop_spark(spark) -> None:
             proc.wait()
 
 
-def end_to_end(wl, passes: list[dict], setup_s: float) -> dict:
-    cpu_s = median([p["cpu_s"] for p in passes])
+def end_to_end(wl, passes: list[dict], setup: dict, scale: float) -> dict:
+    """``scale`` turns this host's seconds into reference seconds."""
+    wall_s = median([p["wall_s"] for p in passes])
     return {
-        "setup_s": setup_s,
-        "items_per_cpu_s": wl.n_items / cpu_s,
-        "bytes_per_item": wl.n_bytes / wl.n_items,
+        "setup_s": setup["wall_s"] * scale,
+        "items_per_ref_s": wl.n_items / (wall_s * scale),
+        "bytes_per_item": wl.n_bytes / max(wl.n_items, 1),
+        "wall.items_per_s": wl.n_items / wall_s,
+        "wall.setup_s": setup["wall_s"],
     }
 
 
-def per_layer(wl, passes: list[dict], ops) -> dict:
+def per_layer(wl, passes: list[dict], ops, extra: dict, setup: dict,
+              probe_s: float) -> dict:
     """Medians over the traced passes, next to the untraced ones."""
     untraced = [p for p in passes if not p["traced"]]
     traced = [p for p in passes if p["traced"]]
@@ -203,8 +270,11 @@ def per_layer(wl, passes: list[dict], ops) -> dict:
         "trace.untraced_pass_s": wall_s,
         "trace.overhead_frac": traced_s / wall_s - 1.0,
         "wall.items_per_s": wl.n_items / wall_s,
+        "wall.setup_s": setup["wall_s"],
         "cpu.pass_s": median([p["cpu_s"] for p in untraced]),
+        "host.probe_s": probe_s,
     })
+    layer.update(extra)
     return layer
 
 
@@ -217,24 +287,28 @@ def run(args) -> tuple[str, dict]:
     work = os.path.join(ROOT, ".tierbench", f"work-{os.getpid()}")
     ops = Ops()
     spark = None
+    wl = WORKLOADS[args.workload](work, args.seed, args.scale, cpus)
+    probes = [speed_probes(cpus) for _ in range(PROBE_REPEATS)]
     try:
         t0 = time.perf_counter()
+        wl.prepare()  # seeded input files, before the JVM starts
+        inputs_s = time.perf_counter() - t0
+        t = time.perf_counter()
         spark = start_spark(work, cpus)
-        session_s = time.perf_counter() - t0
+        session_s = time.perf_counter() - t
         tracer = Tracer(spark)
-        wl = WORKLOADS[args.workload](spark, tracer, work, args.seed,
-                                      args.scale)
+        wl.attach(spark, tracer)
         t = time.perf_counter()
         wl.setup()
-        inputs_s = time.perf_counter() - t
-        t = time.perf_counter()
-        wl.warm_up()  # JIT, Python workers, codegen caches
-        warmup_s = time.perf_counter() - t
-        setup_s = time.perf_counter() - t0
+        build_s = time.perf_counter() - t
+        warmup = wl.warm_up()  # JIT, Python workers, codegen caches
+        setup = {"wall_s": time.perf_counter() - t0, "inputs_s": inputs_s,
+                 "session_s": session_s, "build_s": build_s,
+                 "warmup_pass_s": warmup}
 
         canary_before = canary()
         passes: list[dict] = []
-        min_passes = MIN_PASSES + 1 if args.trace else MIN_PASSES
+        min_passes = wl.min_passes  # traced runs: untraced, traced, untraced
         t_run = time.perf_counter()
         i = 0
         while (time.perf_counter() - t_run < args.seconds
@@ -252,44 +326,59 @@ def run(args) -> tuple[str, dict]:
                                "layers": layers, "engine": sp.get("engine", {})})
             if i >= 3 * min_passes and len(passes) < min_passes:
                 break  # most passes fail: stop, report what failed
-        tracer.set_engine(False)
         canary_after = canary()
-        ops.run(f"{args.workload} output check", wl.check, ops)
-
-        untraced_passes = [p for p in passes if not p["traced"]]
-        traced_passes = [p for p in passes if p["traced"]]
-        e2e = end_to_end(wl, untraced_passes, setup_s)
-        layer = per_layer(wl, passes, ops) if args.trace else {}
-        untraced = [p["wall_s"] for p in untraced_passes]
-        tail = reportable_tail(len(untraced))
-        artifact = {
-            "workload": args.workload, "seed": args.seed,
-            "seconds": args.seconds, "trace": args.trace, "scale": args.scale,
-            "host": {**host, "cpus_used": cpus,
-                     "canary_s": [canary_before, canary_after]},
-            "setup": {"session_s": session_s, "inputs_s": inputs_s,
-                      "warmup_s": warmup_s},
-            "n_items": wl.n_items, "n_bytes": wl.n_bytes,
-            "passes": passes, "drift_frac": drift(untraced),
-            "pass_wall_s": {"n": len(untraced), "p50": median(untraced),
-                            "tail_pct": tail,
-                            "tail": tail and percentile(untraced, tail)},
-            "run_s": time.perf_counter() - t0,
-            "ops": {"attempted": ops.attempted, "failed": ops.failed,
-                    "failed_ops_frac": ops.failed_frac,
-                    "failures": ops.failures},
-            "end_to_end": e2e, "per_layer": layer,
-            "end_to_end_traced": (end_to_end(wl, traced_passes, setup_s)
-                                  if traced_passes else {}),
-            "spans": [{k: s[k] for k in ("name", "parent", "wall_s")}
-                      for s in tracer.spans],
-        }
-        values, units = (layer, PER_LAYER) if args.trace else (e2e, END_TO_END)
-        return result_line(ops, values, units), artifact
+        extra: dict = {}
+        t = time.perf_counter()
+        if args.trace:
+            tracer.set_engine(True)
+            extra = ops.run(f"{args.workload} traced extra", wl.traced_extra,
+                            ops) or {}
+        extra_s = time.perf_counter() - t
+        tracer.set_engine(False)
+        ops.run(f"{args.workload} output check", wl.check, ops, passes)
     finally:
         if spark is not None:
             stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
+
+    # the host's speed over the run, from probes at both ends: every
+    # time below is rescaled to a host whose probes take REF_PROBE_S
+    probes += [speed_probes(cpus) for _ in range(PROBE_REPEATS)]
+    probe_s = (median([p[0] for p in probes])
+               * median([p[1] for p in probes])) ** 0.5
+    scale = REF_PROBE_S / probe_s
+    untraced_passes = [p for p in passes if not p["traced"]]
+    traced_passes = [p for p in passes if p["traced"]]
+    e2e = end_to_end(wl, untraced_passes, setup, scale)
+    layer = (per_layer(wl, passes, ops, extra, setup, probe_s)
+             if args.trace else {})
+    untraced = [p["wall_s"] for p in untraced_passes]
+    tail = reportable_tail(len(untraced))
+    artifact = {
+        "workload": args.workload, "seed": args.seed,
+        "seconds": args.seconds, "trace": args.trace, "scale": args.scale,
+        "host": {**host, "cpus_used": cpus, "probe_s": probe_s,
+                 "probes_loop_mem_s": probes,
+                 "canary_s": [canary_before, canary_after]},
+        "setup": setup,
+        "n_items": wl.n_items, "n_bytes": wl.n_bytes,
+        "passes": passes, "drift_frac": drift(untraced),
+        "pass_wall_s": {"n": len(untraced), "p50": median(untraced),
+                        "tail_pct": tail,
+                        "tail": tail and percentile(untraced, tail)},
+        "traced_extra_s": extra_s,
+        "run_s": time.perf_counter() - t0,
+        "ops": {"attempted": ops.attempted, "failed": ops.failed,
+                "failed_ops_frac": ops.failed_frac,
+                "failures": ops.failures},
+        "end_to_end": e2e, "per_layer": layer,
+        "end_to_end_traced": (end_to_end(wl, traced_passes, setup, scale)
+                              if traced_passes else {}),
+        "spans": [{k: s[k] for k in ("name", "parent", "wall_s")}
+                  for s in tracer.spans],
+    }
+    values, units = (layer, PER_LAYER) if args.trace else (e2e, END_TO_END)
+    return result_line(ops, values, units), artifact
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -308,6 +397,7 @@ def main(argv: list[str] | None = None) -> int:
               "a checkout of the repository", file=sys.stderr)
         return 2
     sys.path.insert(0, ROOT)
+    sys.path.insert(0, os.path.join(ROOT, "jobs"))  # rollup_job, refresh_job
 
     import signal
 

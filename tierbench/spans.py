@@ -8,7 +8,9 @@ untraced run pays nothing else.
 When tracing is on, each span also collects the SQL executions Spark
 ran inside it. The benchmark is a single sequential client, so the
 executions of a span are exactly the execution ids issued between its
-start and its end. Their metrics are read from
+start and its end, less those the benchmark itself ran between spans
+(counts for its own bookkeeping), which :meth:`Tracer.skip` marks and
+no span, however far out, includes. Their metrics are read from
 ``spark._jsparkSession.sharedState().statusStore()`` after the
 listener bus has drained; Spark fills that store even with the UI off.
 Metric values arrive preformatted ("1.9 s (901 ms, ...)", "4.6 MiB",
@@ -33,6 +35,9 @@ ENGINE_METRICS = {
     "time to initialize Python workers": "engine.python_startup_ms",
     "data sent to Python workers": "engine.arrow_to_py_bytes",
     "data returned from Python workers": "engine.arrow_from_py_bytes",
+    # write commands: every catalog commit, checkpoint and compaction
+    "written output": "catalog.bytes_written",
+    "number of written files": "catalog.files_written",
 }
 ENGINE_COUNTS = ("engine.executions", "engine.jobs", "engine.tasks_failed")
 ENGINE_KEYS = tuple(dict.fromkeys(ENGINE_METRICS.values())) + ENGINE_COUNTS
@@ -95,6 +100,7 @@ class Tracer:
         self._bus = spark.sparkContext._jsc.sc().listenerBus()
         self._cache: dict[int, dict] = {}
         self._next_id = 0
+        self._skipped: set[int] = set()
 
     def set_engine(self, on: bool) -> None:
         """Turn per-span engine metrics on or off. Turning them on
@@ -104,9 +110,11 @@ class Tracer:
         self.engine = on
 
     def skip(self) -> None:
-        """Move past every execution issued so far (work outside spans)."""
+        """Mark every execution issued since the last span or skip as
+        the benchmark's own (work between spans): no span counts it."""
         self._drain()
         while self._exists(self._next_id):
+            self._skipped.add(self._next_id)
             self._next_id += 1
 
     def _drain(self) -> None:
@@ -158,8 +166,9 @@ class Tracer:
                 totals = dict.fromkeys(ENGINE_KEYS, 0.0)
                 eid = first
                 while self._exists(eid):
-                    for k, v in self._read(eid).items():
-                        totals[k] += v
+                    if eid not in self._skipped:
+                        for k, v in self._read(eid).items():
+                            totals[k] += v
                     eid += 1
                 self._next_id = eid
                 rec["engine"] = totals

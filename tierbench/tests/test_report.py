@@ -1,6 +1,7 @@
-"""Unit tests of the benchmark's pure parts: SQL-metric parsing,
-percentiles, drift, operation accounting, the result line, and
-BENCHMARK.json agreeing with the metric names the code emits.
+"""Unit tests of the benchmark's parts that need no Spark: SQL-metric
+parsing, span attribution of executions, percentiles, drift, operation
+accounting, the result line, the registry tables, and BENCHMARK.json
+agreeing with the metric names the code emits.
 
     python3 -m pytest tierbench/tests -q
 """
@@ -19,8 +20,9 @@ from report import (  # noqa: E402
     END_TO_END, PER_LAYER, Ops, drift, percentile, reportable_tail,
     result_line,
 )
+from registry import MODULES, QUERIES, write_tables  # noqa: E402
 from spans import (  # noqa: E402
-    ENGINE_KEYS, parse_metric, parse_plan_metrics, parse_scala_map,
+    ENGINE_KEYS, Tracer, parse_metric, parse_plan_metrics, parse_scala_map,
 )
 
 HEADER = "total (min, med, max (stageId: taskId))\n"
@@ -73,6 +75,142 @@ def test_parse_plan_metrics():
     assert parse_plan_metrics(text) == {
         5: "number of output rows", 17: "time in aggregation build",
         -3: "spill size"}
+
+
+class _Opt:
+    def __init__(self, value=None):
+        self.value = value
+
+    def isEmpty(self):
+        return self.value is None
+
+    def get(self):
+        return self.value
+
+
+class _Text:
+    def __init__(self, text):
+        self.text = text
+
+    def toString(self):
+        return self.text
+
+
+class _Execution:
+    def __init__(self, n_jobs):
+        self._jobs = n_jobs
+
+    def metrics(self):
+        return _Text("List(SQLPlanMetric(shuffle bytes written,1,size))")
+
+    def jobs(self):
+        return _Text("Map(" + ", ".join(
+            f"{j} -> SUCCEEDED" for j in range(self._jobs)) + ")")
+
+
+class _FakeSpark:
+    """Just enough of a SparkSession for Tracer: a status store whose
+    executions appear as ``run(jobs, shuffle_bytes)`` is called."""
+
+    def __init__(self):
+        self.executions = []
+        store = self
+
+        class _Shared:
+            def statusStore(self):
+                return store
+
+        class _Bus:
+            def waitUntilEmpty(self, ms):
+                return True
+
+        class _Sc:
+            def listenerBus(self):
+                return _Bus()
+
+        class _Jsc:
+            def sc(self):
+                return _Sc()
+
+        class _Tracker:
+            def getJobInfo(self, jid):
+                return None
+
+        class _Ctx:
+            _jsc = _Jsc()
+
+            def statusTracker(self):
+                return _Tracker()
+
+        self.sparkContext = _Ctx()
+        self._jsparkSession = type("J", (), {
+            "sharedState": lambda _: _Shared()})()
+
+    def run(self, jobs, shuffle_bytes):
+        self.executions.append((jobs, shuffle_bytes))
+
+    def execution(self, eid):
+        if eid >= len(self.executions):
+            return _Opt()
+        return _Opt(_Execution(self.executions[eid][0]))
+
+    def executionMetrics(self, eid):
+        return _Text(f"Map(1 -> {self.executions[eid][1]} B)")
+
+
+def test_spans_leave_out_work_skipped_between_them():
+    spark = _FakeSpark()
+    spark.run(5, 999)  # before tracing starts
+    tr = Tracer(spark)
+    tr.set_engine(True)
+    with tr.span("pass") as whole:
+        with tr.span("a") as a:
+            spark.run(1, 10)
+            spark.run(2, 20)
+        spark.run(7, 7000)  # the benchmark's own count between spans
+        tr.skip()
+        with tr.span("b") as b:
+            spark.run(3, 300)
+        spark.run(9, 9000)  # bookkeeping after the last child span
+        tr.skip()
+    assert a["engine"]["engine.jobs"] == 3
+    assert a["engine"]["engine.shuffle_write_bytes"] == 30
+    assert b["engine"]["engine.jobs"] == 3
+    assert b["engine"]["engine.executions"] == 1
+    assert whole["engine"]["engine.jobs"] == 6
+    assert whole["engine"]["engine.executions"] == 3
+    assert whole["engine"]["engine.shuffle_write_bytes"] == 330
+
+
+def test_spans_without_engine_read_nothing():
+    spark = _FakeSpark()
+    tr = Tracer(spark)
+    with tr.span("pass") as sp:
+        spark.run(1, 1)
+    assert "engine" not in sp and sp["wall_s"] >= 0
+
+
+def test_registry_covers_every_registry_operator_module():
+    assert set(MODULES) == set(
+        "tsanalytics statstests sketches sessions alerting journeys dedup "
+        "similarity textstats curation enrich layout multimodal "
+        "cascade".split())
+    assert {"acf_1d", "holt_1m", "multimodal_features"} <= set(QUERIES)
+
+
+def test_registry_tables_follow_the_seed(tmp_path):
+    import pandas as pd
+
+    a = write_tables(str(tmp_path / "a"), seed=5, scale=0.2)
+    b = write_tables(str(tmp_path / "b"), seed=5, scale=0.2)
+    c = write_tables(str(tmp_path / "c"), seed=6, scale=0.2)
+    for t in ("events", "documents", "embeddings"):
+        x, y, z = (pd.read_parquet(os.path.join(d, f"{t}.parquet"))
+                   for d in (a, b, c))
+        assert x.astype(str).equals(y.astype(str))
+        assert not x.astype(str).equals(z.astype(str))
+    ev = pd.read_parquet(os.path.join(a, "events.parquet"))
+    assert ev["ts"].is_monotonic_increasing and (ev["value"] > 0).all()
 
 
 def test_percentile_nearest_rank():
