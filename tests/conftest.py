@@ -40,6 +40,7 @@ _SESSION_CONFS = (
     "spark.sql.files.maxPartitionBytes",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes",
     "spark.sql.session.timeZone",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
 )
 
 
