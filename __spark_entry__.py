@@ -2078,38 +2078,21 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_rollup_1m(spark, "/root/testdata/sf0.001")
 
 
-# Ordering is load-bearing: the driver's correctness gate checks
-# exactly the FIRST 50 queries() entries. The round-5 window rotates
-# onto the queries that have NEVER received a driver CORRECTNESS row
-# (SURVEY §7.5's rotation batches (a) statstests/enrich/similarity,
-# (b) sketches/journeys/layout, (c) curation/text — all green on the
-# local gate replica at sf0.001 + sf0.01) plus the two correlation
-# queries whose centered-sum refactor this round changed their
-# operator shape: xcorr_1d (round 4's one red row — the fix must be
-# re-gated) and leadlag_1h (same idiom, also never checked). Every
-# entry displaced from the round-4 window is driver-green in
-# CORRECTNESS_r04 and byte-unchanged since, except coreset_kcenter /
-# mmr_rerank / spread_monitor / granger_1d / corr_break /
-# ou_halflife / bloom_join which are IN-window precisely because
-# round 5 touched them.
-_R5_WINDOW = [
-    # batch (a): round-4 statstests / enrich / similarity layer
+# The driver's correctness gate checks only the first 50 queries()
+# entries, so every query a change touches belongs in this list.
+_GATE_WINDOW = [
     "mann_kendall", "spearman_corr", "bh_fdr", "wasserstein_drift",
     "ou_halflife", "hurst_exponent", "perm_entropy", "max_drawdown",
     "winsor_rollup", "gini_concentration", "ljung_box", "croston",
     "corr_clusters", "bloom_join", "series_profile",
-    "variance_decomp", "matrix_profile", "spread_monitor",
-    "coreset_kcenter", "mmr_rerank", "granger_1d", "seasonal_mk",
-    "corr_break", "coflag_lift",
-    # round-5 refactor re-gates
-    "xcorr_1d", "leadlag_1h",
-    # batch (b): sketches / journeys / layout
+    "variance_decomp", "matrix_profile", "matrix_profile_banded",
+    "spread_monitor", "coreset_kcenter", "mmr_rerank", "granger_1d",
+    "seasonal_mk", "corr_break", "coflag_lift",
+    "xcorr_1d", "leadlag_1h", "acf_1d", "dominant_period",
+    "fleet_beta", "capacity_forecast", "zipf_fit",
     "hll_actives_1d", "hll_cascade_7d", "cms_heavy_hitters",
-    "kmv_overlap", "bitmap_actives_1d", "bitmap_rolling_7d",
-    "ddsketch_1d", "pagerank_types", "journey_surprise",
-    "markov_entropy", "compaction_plan", "grouping_cube_1d",
-    "key_skew",
-    # batch (c): curation / text
+    "bitmap_actives_1d", "ddsketch_1d", "pagerank_types",
+    "compaction_plan",
     "doc_repetition", "decontaminate", "pmi_bigrams",
     "unigram_logppl", "seq_pack", "heavy_hitters", "bpe_pairs",
     "char_entropy", "tfidf_top3", "weighted_sample",
@@ -2119,30 +2102,24 @@ _R5_WINDOW = [
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     reg = _registry()
-    out = {n: reg[n] for n in _R5_WINDOW}
+    out = {n: reg[n] for n in _GATE_WINDOW}
     out.update((n, f) for n, f in reg.items() if n not in out)
     return out
 
 
 def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # (round-4 window comments below are historical — the gate order
-    # is now _R5_WINDOW above; this dict carries the full registry)
     return {
-        # -- never driver-checked before round 4
         "stratified_sample": q_stratified_sample,
         "curated_corpus": q_curated_corpus,
         "topk_per_band": q_topk_per_band,
         "multimodal_resize": q_multimodal_resize,
         "multimodal_frames": q_multimodal_frames,
-        # -- driver-green only in round 2
         "quality_score": q_quality_score,
         "token_count": q_token_count,
         "doc_fingerprint": q_doc_fingerprint,
         "multimodal_meta": q_multimodal_meta,
         "multimodal_features": q_multimodal_features,
-        # -- new in round 4: incremental-refresh merge math
         "tier_merge_refresh": q_tier_merge_refresh,
-        # -- new in round 4 (late): timeseries analytics layer
         "mad_flags": q_mad_flags,
         "counter_rate_1m": q_counter_rate_1m,
         "turn_taking": q_turn_taking,
@@ -2157,14 +2134,11 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hist_quantile_1d": q_hist_quantile_1d,
         "alert_states": q_alert_states,
         "xcorr_1d": q_xcorr_1d,
-        # -- new in round 4 (late): alerting & incident analytics
         "breach_intervals": q_breach_intervals,
         "slo_burn": q_slo_burn,
         "merged_intervals": q_merged_intervals,
         "incident_overlap": q_incident_overlap,
         "incident_overlap_bucketed": q_incident_overlap_bucketed,
-        # -- new in round 4 (final): M4 downsample, changepoints,
-        #    alert-cooldown suppression
         "m4_1h": q_m4_1h,
         "changepoint_flags": q_changepoint_flags,
         "alert_cooldown": q_alert_cooldown,
@@ -2174,31 +2148,10 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel_steps": q_funnel_steps,
         "retention_cohorts": q_retention_cohorts,
         "holt_winters_1m": q_holt_winters_1m,
-        # -- new in round 4 (post-verdict): user-journey flow layer
         "event_transitions": q_event_transitions,
         "type_streaks": q_type_streaks,
         "depth_hist": q_depth_hist,
         "next_gap_1d": q_next_gap_1d,
-        # -- round-3-green core set: only the entries whose round-4
-        #    change altered the OPERATOR SHAPE keep a window slot
-        #    (dedup_canonical's CC convergence fold, the two-phase
-        #    events_vs_trailing_p95, value_percentiles' sketch param).
-        #    rollup_1m / gapfill_1m / ewma_1m / codec_roundtrip cede
-        #    their slots to never-driver-checked round-4 entries:
-        #    their round-4 deltas are perf-internal (salted_agg
-        #    combiner, eager materialize, shared segmented-scan
-        #    scaffold; codec.py byte-unchanged), each is green on the
-        #    local sf0.001+sf0.01 gate replica and carries dedicated
-        #    pytest batteries, and their semantics stay driver-covered
-        #    in-window (tier_merge_refresh re-runs the rollup merge
-        #    math, holt_1m/holt_winters_1m exercise the same
-        #    recursive-scan scaffold as ewma, entry() smoke-runs the
-        #    rollup cascade every round). In their place: the three
-        #    never-checked operator FAMILIES with no other in-window
-        #    representative — realtime_rollup_1h (watermark splice of
-        #    sealed tier + live tail), asof_snapshot (instant as-of
-        #    state query), segment_rollup_1d (broadcast snowflake
-        #    dimension enrichment).
         "trend_1d": q_trend_1d,
         "realtime_rollup_1h": q_realtime_rollup_1h,
         "asof_snapshot": q_asof_snapshot,
@@ -2206,45 +2159,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "value_percentiles": q_value_percentiles,
         "events_vs_trailing_p95": q_events_vs_trailing_p95,
         "dedup_canonical": q_dedup_canonical,
-        # ---- past the driver's 50-query window from here down:
-        # every entry below was driver-green in round 3 (those
-        # displaced by the late-round-4 tsanalytics and alerting
-        # blocks included), is UNCHANGED since that green run, and is
-        # redundant with or verified alongside an in-window operator
-        # (rollup_1d ≡ rollup_1m/1h at day grain and its merge math
-        # is tier_merge_refresh's; threshold_sweep_raw_lt is the <
-        # variant of threshold_sweep, whose full grid best_threshold
-        # re-runs in-window; dup_clusters is composed inside
-        # dedup_canonical; doc_sha's digest grouping is dedup_exact's
-        # core; split_counts is a trivial union count;
-        # topk_buckets is plain TakeOrderedAndProject; zscore_flags /
-        # best_threshold / confusion_metrics are round-1-green and
-        # unchanged since — rolling_stats computes zscore_flags'
-        # window stats in-window, best_threshold is the argmax of the
-        # threshold_sweep grid, confusion_metrics' tp/fp counts
-        # feed best_threshold's F1, and roc_auc's distributed
-        # tie-aware ranks build on the same preds⋈truth relation
-        # confusion_metrics checks; latency_1m's lead-lag derivation
-        # is re-exercised in-window by tier_merge_refresh's
-        # conv-tails math, rolling_stats' window stats feed the
-        # in-window residual_cascade and ewma paths, and sessionize
-        # is the first phase session_stats runs in-window)
-        # rollup_1h's hour-tier semantics are triple-covered in-window
-        # (tier_parity_1h verifies the 1h tier against raw points,
-        # tier_merge_refresh re-runs the hour merge math, rollup_1m
-        # the same bucketing at minute grain)
-        # -- newest post-verdict additions: the 50-window is full of
-        #    round-4 firsts, so this block rides the local gate
-        #    replica (scripts/check_oracle.py — all green at sf0.001
-        #    and sf0.01) this round and is first in line to rotate
-        #    into the round-5 window. The five left out here all have
-        #    independent correctness anchors: absent_1m and
-        #    incident_coverage_1d are property-tested against python
-        #    reference walks (tests/test_round4_ops.py),
-        #    ensemble_flags is a majority vote over three in-window
-        #    flag queries' logic, dq_checks_1d / burstiness_1d are
-        #    single-pass aggregate profiles with dq_profile pytest
-        #    coverage.
         "rollup_1m": q_rollup_1m,
         "gapfill_1m": q_gapfill_1m,
         "ewma_1m": q_ewma_1m,
@@ -2255,22 +2169,10 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dq_checks_1d": q_dq_checks_1d,
         "burstiness_1d": q_burstiness_1d,
         "rollup_1h": q_rollup_1h,
-        # displaced by the round-4 journey layer — all four were
-        # driver-green in round 3 and are byte-unchanged since:
-        # tier_parity_1h (1h tier semantics triple-covered in-window,
-        # see rollup_1h note), conv_stats_salted (the salting
-        # identity feeds the in-window conv-keyed rollups),
-        # detector_lifecycle (composes threshold_sweep/best_epoch
-        # pieces verified in-window), session_stats (first phase =
-        # sessionize, same _tagged body; its groupBy shape is
-        # re-exercised in-window by retention_cohorts/next_gap_1d)
         "tier_parity_1h": q_tier_parity_1h,
         "conv_stats_salted": q_conv_stats_salted,
         "detector_lifecycle": q_detector_lifecycle,
         "session_stats": q_session_stats,
-        # residual_cascade's exact recombination math (decomposable
-        # count/mean/M2 merge) is what tier_merge_refresh verifies
-        # in-window every round
         "residual_cascade": q_residual_cascade,
         "roc_auc": q_roc_auc,
         "zscore_flags": q_zscore_flags,
@@ -2309,9 +2211,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_dups": q_simhash_dups,
         "ann_lsh_buckets": q_ann_lsh_buckets,
         "ivf_cells": q_ivf_cells,
-        # round-4 late additions (past the window; local-replica-green
-        # at sf0.001 + sf0.01, first in line behind the five leftover
-        # firsts for the round-5 rotation)
         "acf_1d": q_acf_1d,
         "theilsen_1d": q_theilsen_1d,
         "spectral_power": q_spectral_power,
@@ -2329,8 +2228,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pmi_bigrams": q_pmi_bigrams,
         "unigram_logppl": q_unigram_logppl,
         "seq_pack": q_seq_pack,
-        # round-4 final wave: substring-span dedup, MG heavy hitters,
-        # BPE pair stats, PAA+SAX words (replica-green sf0.001+sf0.01)
         "dup_ngram_spans": q_dup_ngram_spans,
         "heavy_hitters": q_heavy_hitters,
         "bpe_pairs": q_bpe_pairs,

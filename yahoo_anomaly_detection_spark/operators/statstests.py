@@ -35,6 +35,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from yahoo_anomaly_detection_spark.functions.comoments import (
+    OLS, PEARSON, Fit, comoments, comoments_sql, ols_slope, ols_slope_sql,
+    pearson, pearson_sql,
+)
 from yahoo_anomaly_detection_spark.functions.portable import portable_round
 
 _R = 4
@@ -219,8 +223,8 @@ def spearman_corr(events: DataFrame, key: str = "event_type",
     exactly representable far below 2^52 — so every partial sum is
     exact and summation ORDER cannot move a bit on either engine;
     the n·Σxy − ΣxΣy cancellation is computed over exact integers
-    and is itself exact. The centered-sums rewrite is only needed
-    where the inputs are float aggregates (hourly/daily means).
+    and is itself exact. Centered co-moments are only needed where
+    the inputs are float aggregates (hourly/daily means).
 
     Output: (type_a, type_b, n_days, rho) for type_a < type_b,
     rho rounded to 4.
@@ -632,31 +636,16 @@ def ou_halflife(events: DataFrame, key: str = "event_type",
              .withColumn("ylag", F.lag("y").over(lw))
              .withColumn("hlag", F.lag("h").over(lw))
              .where(F.col("hlag") == F.col("h") - 1))
-    # centered OLS (the metric_corr idiom): subtract per-series
-    # window means before the product sums — the hourly means are
-    # float-summation-order-dependent, and the uncentered
-    # n·Σxy − ΣxΣy form would amplify cross-engine ulp noise via
-    # catastrophic cancellation. The unbounded window rides the lag
-    # window's (key) clustering; the groupBy reuses it too.
-    cw = W.partitionBy(key)
-    cen = (pairs
-           .withColumn("cx", F.col("ylag") - F.avg("ylag").over(cw))
-           .withColumn("cyv", F.col("y") - F.avg("y").over(cw)))
-    m = cen.groupBy(key).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg("ylag").alias("mx"), F.avg("y").alias("my"),
-        F.sum(F.col("cx") * F.col("cyv")).alias("sxy"),
-        F.sum(F.col("cx") * F.col("cx")).alias("sxx"))
-    n = F.col("n")
-    phi = F.when((n >= 2) & (F.col("sxx") > 0),
-                 F.col("sxy") / F.col("sxx"))
+    m = comoments(pairs, [key], OLS,
+                  Fit({"x": F.col("ylag"), "y": F.col("y")}), means=True)
+    phi = ols_slope(2)
     c = F.col("my") - phi * F.col("mx")
     mu = F.when(phi.isNotNull() & (phi != 1.0),
                 c / (F.lit(1.0) - phi))
     hl = F.when(phi.isNotNull() & (phi > 0) & (phi < 1),
                 F.lit(-math.log(2.0)) / F.log(phi))
     return m.select(
-        key, n.cast("long").alias("n_pairs"),
+        key, F.col("n").alias("n_pairs"),
         portable_round(phi, _R).alias("phi"),
         portable_round(mu, _R).alias("mu"),
         portable_round(hl, _R).alias("half_life_hours"))
@@ -672,27 +661,9 @@ pairs AS (
         WINDOW w AS (PARTITION BY event_type ORDER BY h))
     WHERE hlag = h - 1
 ),
-cen AS (
-    SELECT event_type, y, ylag,
-           ylag - avg(ylag) OVER w AS cx,
-           y - avg(y) OVER w AS cyv
-    FROM pairs
-    WINDOW w AS (PARTITION BY event_type)
-),
-m AS (
-    SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-           avg(ylag) AS mx, avg(y) AS my,
-           sum(cx * cyv) AS sxy, sum(cx * cx) AS sxx
-    FROM cen GROUP BY 1
-),
-f AS (
-    SELECT event_type, n,
-           CASE WHEN n >= 2 AND sxx > 0
-                THEN sxy / sxx
-           END AS phi,
-           mx, my
-    FROM m
-),
+{comoments_sql("m", "pairs", ["event_type"], OLS,
+               Fit({"x": "ylag", "y": "y"}), means=True)},
+f AS (SELECT *, {ols_slope_sql(2)} AS phi FROM m),
 g AS (
     SELECT *,
            CASE WHEN phi IS NOT NULL AND phi <> 1.0
@@ -701,7 +672,7 @@ g AS (
                 THEN -ln(2.0) / ln(phi) END AS hl
     FROM f
 )
-SELECT event_type, CAST(n AS BIGINT) AS n_pairs,
+SELECT event_type, n AS n_pairs,
        round(phi, 4) AS phi, round(mu, 4) AS mu,
        round(hl, 4) AS half_life_hours
 FROM g
@@ -737,8 +708,8 @@ def hurst_exponent(events: DataFrame,
     Scale shape: corpus → hourly tier once; the tier is replicated
     |scales|× by a literal explode (still tier-sized), block means
     and per-scale variances are two more map-side-combined
-    aggregates, and the log-log fit is one moment aggregate per
-    series. No windows, no corpus re-scan.
+    aggregates, and the log-log fit is one centered co-moment
+    aggregate per series. No corpus re-scan.
     """
     if hourly is None:
         hourly = _hourly(events, key, ts_col, value_col)
@@ -752,22 +723,11 @@ def hurst_exponent(events: DataFrame,
                  .agg(F.var_pop("by").alias("v"),
                       F.count(F.lit(1)).alias("nb"))
                  .where((F.col("v") > 0) & (F.col("nb") >= 2)))
-    lm = F.log(F.col("m").cast("double"))
-    lv = F.log("v")
-    fit = (per_scale.select(key, lm.alias("x"), lv.alias("y"))
-           .groupBy(key)
-           .agg(F.count(F.lit(1)).cast("double").alias("n"),
-                F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-                F.sum(F.col("x") * F.col("y")).alias("sxy"),
-                F.sum(F.col("x") * F.col("x")).alias("sxx")))
-    n = F.col("n")
-    varx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = F.when((n >= 2) & (varx > 0),
-                   (n * F.col("sxy") - F.col("sx") * F.col("sy"))
-                   / varx)
+    fit = comoments(per_scale, [key], OLS, Fit({
+        "x": F.log(F.col("m").cast("double")), "y": F.log("v")}))
     return fit.select(
-        key, n.cast("long").alias("n_scales"),
-        portable_round(F.lit(1.0) + slope / 2, _R).alias("h"))
+        key, F.col("n").alias("n_scales"),
+        portable_round(F.lit(1.0) + ols_slope(2) / 2, _R).alias("h"))
 
 
 def _hurst_sql(scales: tuple[int, ...] = HURST_SCALES) -> str:
@@ -787,19 +747,10 @@ per_scale AS (
     FROM blocks GROUP BY 1, 2
     HAVING var_pop(by) > 0 AND count(*) >= 2
 ),
-fit AS (
-    SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-           sum(x) AS sx, sum(y) AS sy,
-           sum(x * y) AS sxy, sum(x * x) AS sxx
-    FROM (SELECT event_type, ln(CAST(m AS DOUBLE)) AS x,
-                 ln(v) AS y
-          FROM per_scale)
-    GROUP BY 1
-)
-SELECT event_type, CAST(n AS BIGINT) AS n_scales,
-       round(1.0 + (CASE WHEN n >= 2 AND n * sxx - sx * sx > 0
-                    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
-                    END) / 2, 4) AS h
+{comoments_sql("fit", "per_scale", ["event_type"], OLS,
+               Fit({"x": "ln(CAST(m AS DOUBLE))", "y": "ln(v)"}))}
+SELECT event_type, n AS n_scales,
+       round(1.0 + ({ols_slope_sql(2)}) / 2, 4) AS h
 FROM fit
 """
 
@@ -1913,30 +1864,16 @@ def spread_monitor(events: DataFrame, max_halflife_days: float = 7.0,
                 F.col(f"b.{key}").alias("type_b"),
                 F.col("a.day").alias("day"),
                 F.col("a.y").alias("x"), F.col("b.y").alias("y")))
-    # centered OLS via window-mean subtraction (the metric_corr
-    # idiom, see granger_1d) — daily means are summation-order-
-    # dependent, so the uncentered normal-equation form would
-    # amplify cross-engine ulp noise via catastrophic cancellation
-    pw = W.partitionBy("type_a", "type_b")
-    cen = (pairs
-           .withColumn("cx", F.col("x") - F.avg("x").over(pw))
-           .withColumn("cyv", F.col("y") - F.avg("y").over(pw)))
-    g = cen.groupBy("type_a", "type_b").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg("x").alias("mx"), F.avg("y").alias("my"),
-        F.sum(F.col("cx") * F.col("cyv")).alias("sxy"),
-        F.sum(F.col("cx") * F.col("cx")).alias("sxx"))
-    n = F.col("n")
-    beta = F.when((n >= 3) & (F.col("sxx") > 0),
-                  F.col("sxy") / F.col("sxx"))
+    g = comoments(pairs, ["type_a", "type_b"], OLS,
+                  Fit({"x": F.col("x"), "y": F.col("y")}), means=True)
+    beta = ols_slope(3)
     coef = g.select(
-        "type_a", "type_b", n.cast("long").alias("n_days"),
+        "type_a", "type_b", F.col("n").alias("n_days"),
         beta.alias("beta"),
         (F.col("my") - beta * F.col("mx")).alias("alpha"))
     sp = (pairs.join(F.broadcast(coef), ["type_a", "type_b"])
           .where(F.col("beta").isNotNull())
-          .select("type_a", "type_b", "day", "n_days", "beta",
-                  "alpha",
+          .select("type_a", "type_b", "day",
                   (F.col("y") - F.col("alpha")
                    - F.col("beta") * F.col("x")).alias("s")))
     lw = W.partitionBy("type_a", "type_b").orderBy("day")
@@ -1944,17 +1881,9 @@ def spread_monitor(events: DataFrame, max_halflife_days: float = 7.0,
               .withColumn("slag", F.lag("s").over(lw))
               .withColumn("dlag", F.lag("day").over(lw))
               .where(F.datediff(F.col("day"), F.col("dlag")) == 1))
-    lcen = (lagged
-            .withColumn("cl", F.col("slag") - F.avg("slag").over(pw))
-            .withColumn("cs", F.col("s") - F.avg("s").over(pw)))
-    m = lcen.groupBy("type_a", "type_b", "n_days", "beta",
-                     "alpha").agg(
-        F.count(F.lit(1)).cast("double").alias("np"),
-        F.sum(F.col("cl") * F.col("cs")).alias("pxy"),
-        F.sum(F.col("cl") * F.col("cl")).alias("pxx"))
-    npc = F.col("np")
-    phi = F.when((npc >= 2) & (F.col("pxx") > 0),
-                 F.col("pxy") / F.col("pxx"))
+    m = comoments(lagged, ["type_a", "type_b"], OLS,
+                  Fit({"x": F.col("slag"), "y": F.col("s")}))
+    phi = ols_slope(2)
     hl = F.when(phi.isNotNull() & (phi > 0) & (phi < 1),
                 F.lit(-math.log(2.0)) / F.log(phi))
     hlr = portable_round(hl, _R)
@@ -1982,25 +1911,11 @@ pairs AS (
     FROM daily a JOIN daily b
       ON a.day = b.day AND a.event_type < b.event_type
 ),
-cen AS (
-    SELECT type_a, type_b, day, x, y,
-           x - avg(x) OVER w AS cx,
-           y - avg(y) OVER w AS cyv
-    FROM pairs
-    WINDOW w AS (PARTITION BY type_a, type_b)
-),
-g AS (
-    SELECT type_a, type_b, CAST(count(*) AS DOUBLE) AS n,
-           avg(x) AS mx, avg(y) AS my,
-           sum(cx * cyv) AS sxy, sum(cx * cx) AS sxx
-    FROM cen GROUP BY 1, 2
-),
+{comoments_sql("g", "pairs", ["type_a", "type_b"], OLS,
+               Fit({"x": "x", "y": "y"}), means=True)},
 coef AS (
-    SELECT type_a, type_b, CAST(n AS BIGINT) AS n_days,
-           CASE WHEN n >= 3 AND sxx > 0
-                THEN sxy / sxx
-           END AS beta,
-           mx, my
+    SELECT type_a, type_b, n AS n_days,
+           {ols_slope_sql(3)} AS beta, mx, my
     FROM g
 ),
 coef2 AS (
@@ -2022,25 +1937,9 @@ lagged AS (
         WINDOW w AS (PARTITION BY type_a, type_b ORDER BY day))
     WHERE date_diff('day', dlag, day) = 1
 ),
-lcen AS (
-    SELECT type_a, type_b,
-           slag - avg(slag) OVER w AS cl,
-           s - avg(s) OVER w AS cs
-    FROM lagged
-    WINDOW w AS (PARTITION BY type_a, type_b)
-),
-m AS (
-    SELECT type_a, type_b, CAST(count(*) AS DOUBLE) AS np,
-           sum(cl * cs) AS pxy, sum(cl * cl) AS pxx
-    FROM lcen GROUP BY 1, 2
-),
-f AS (
-    SELECT type_a, type_b,
-           CASE WHEN np >= 2 AND pxx > 0
-                THEN pxy / pxx
-           END AS phi
-    FROM m
-),
+{comoments_sql("m", "lagged", ["type_a", "type_b"], OLS,
+               Fit({"x": "slag", "y": "s"}))},
+f AS (SELECT type_a, type_b, {ols_slope_sql(2)} AS phi FROM m),
 h AS (
     SELECT type_a, type_b, round(phi, 4) AS phi,
            round(CASE WHEN phi > 0 AND phi < 1
@@ -2106,30 +2005,12 @@ def granger_1d(events: DataFrame, f_crit: float = 4.0,
               .withColumn("xl", F.lag("x").over(lw))
               .withColumn("dl", F.lag("day").over(lw))
               .where(F.datediff(F.col("day"), F.col("dl")) == 1))
-    # centered moments from WINDOW-MEAN-subtracted values (the
-    # metric_corr idiom): the daily means feeding this test are
-    # float-summation-order-dependent, so the sufficient-statistic
-    # form Σab − ΣaΣb/n would amplify cross-engine ulp noise via
-    # catastrophic cancellation; subtracting the per-pair means
-    # first keeps both engines at ulp agreement. The unbounded
-    # window rides the SAME (x_type, y_type) clustering the lag
-    # window and the groupBy already use — no extra exchange.
-    gw = W.partitionBy("x_type", "y_type")
-    cen = (lagged
-           .withColumn("cy", F.col("y") - F.avg("y").over(gw))
-           .withColumn("c1", F.col("yl") - F.avg("yl").over(gw))
-           .withColumn("c2", F.col("xl") - F.avg("xl").over(gw)))
-    mom = cen.groupBy("x_type", "y_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("cy") * F.col("c1")).alias("_cy1"),
-        F.sum(F.col("cy") * F.col("c2")).alias("_cy2"),
-        F.sum(F.col("c1") * F.col("c1")).alias("_c11"),
-        F.sum(F.col("c2") * F.col("c2")).alias("_c22"),
-        F.sum(F.col("c1") * F.col("c2")).alias("_c12"),
-        F.sum(F.col("cy") * F.col("cy")).alias("_cyy"))
+    mom = comoments(
+        lagged, ["x_type", "y_type"], ("ya", "yb", "aa", "bb", "ab", "yy"),
+        Fit({"y": F.col("y"), "a": F.col("yl"), "b": F.col("xl")}))
     n = F.col("n")
-    c11, c22, c12 = F.col("_c11"), F.col("_c22"), F.col("_c12")
-    cy1, cy2, cyy = F.col("_cy1"), F.col("_cy2"), F.col("_cyy")
+    c11, c22, c12 = F.col("saa"), F.col("sbb"), F.col("sab")
+    cy1, cy2, cyy = F.col("sya"), F.col("syb"), F.col("syy")
     # restricted: y ~ yl -> RSS_r = cyy - cy1^2/c11
     rss_r = cyy - cy1 * cy1 / c11
     # full: y ~ yl + xl (Cramer) -> RSS_f = cyy - b1*cy1 - b2*cy2
@@ -2141,8 +2022,7 @@ def granger_1d(events: DataFrame, f_crit: float = 4.0,
     f_stat = F.when(f_ok, (rss_r - rss_f) / (rss_f / (n - 3)))
     fr = portable_round(f_stat, _R)
     return mom.select(
-        "x_type", "y_type", n.cast("long").alias("n"),
-        fr.alias("f_stat"),
+        "x_type", "y_type", "n", fr.alias("f_stat"),
         F.coalesce((fr > F.lit(float(f_crit))).cast("int"),
                    F.lit(0)).alias("leads"))
 
@@ -2165,20 +2045,13 @@ lagged AS (
         WINDOW w AS (PARTITION BY x_type, y_type ORDER BY day))
     WHERE date_diff('day', dl, day) = 1
 ),
-cen AS (
-    SELECT x_type, y_type,
-           y - avg(y) OVER w AS cy,
-           yl - avg(yl) OVER w AS c1,
-           xl - avg(xl) OVER w AS c2
-    FROM lagged
-    WINDOW w AS (PARTITION BY x_type, y_type)
-),
+{comoments_sql("m", "lagged", ["x_type", "y_type"],
+               ("ya", "yb", "aa", "bb", "ab", "yy"),
+               Fit({"y": "y", "a": "yl", "b": "xl"}))},
 c AS (
-    SELECT x_type, y_type, CAST(count(*) AS DOUBLE) AS n,
-           sum(c1 * c1) AS c11, sum(c2 * c2) AS c22,
-           sum(c1 * c2) AS c12, sum(cy * c1) AS cy1,
-           sum(cy * c2) AS cy2, sum(cy * cy) AS cyy
-    FROM cen GROUP BY 1, 2
+    SELECT x_type, y_type, n, saa AS c11, sbb AS c22, sab AS c12,
+           sya AS cy1, syb AS cy2, syy AS cyy
+    FROM m
 ),
 f AS (
     SELECT x_type, y_type, n,
@@ -2201,7 +2074,7 @@ f AS (
            END AS f_stat
     FROM c
 )
-SELECT x_type, y_type, CAST(n AS BIGINT) AS n,
+SELECT x_type, y_type, n,
        round(f_stat, 4) AS f_stat,
        CAST(coalesce(round(f_stat, 4) > {float(f_crit)}, false)
             AS INT) AS leads
@@ -2373,58 +2246,17 @@ def corr_break(events: DataFrame, z_crit: float = 1.96,
     # on BOTH engines (no timestamp construction, no tz semantics)
     mid = ((F.unix_timestamp("_d0") + F.unix_timestamp("_d1"))
            .cast("long") / F.lit(2))
-    early = ((F.unix_timestamp("day") < mid)
-             .cast("int").cast("double"))
-    late = F.lit(1.0) - early
-
-    # centered per-half sums (the metric_corr idiom): window means of
-    # each half within the pair partition are subtracted BEFORE the
-    # product sums, so the cancellation-prone n·Σxy − ΣxΣy form never
-    # appears — the pair relation is tiny (|types|²·days rows) and
-    # the window shares the groupBy's clustering
-    wp = W.partitionBy("type_a", "type_b")
-
-    def _c(w: Column, suf: str) -> list[Column]:
-        mx = F.try_divide(F.sum(w * F.col("x")).over(wp),
-                          F.sum(w).over(wp))
-        my = F.try_divide(F.sum(w * F.col("y")).over(wp),
-                          F.sum(w).over(wp))
-        return [
-            w.alias(f"w{suf}"),
-            (w * (F.col("x") - mx)).alias(f"cx{suf}"),
-            (w * (F.col("y") - my)).alias(f"cy{suf}"),
-        ]
-
-    proj = pairs.select(
-        "type_a", "type_b", *(_c(early, "1") + _c(late, "2")))
-
-    def _m(suf: str):
-        return [
-            F.sum(F.col(f"w{suf}")).alias(f"n{suf}"),
-            F.sum(F.col(f"cx{suf}") * F.col(f"cy{suf}"))
-            .alias(f"sxy{suf}"),
-            F.sum(F.col(f"cx{suf}") * F.col(f"cx{suf}"))
-            .alias(f"sxx{suf}"),
-            F.sum(F.col(f"cy{suf}") * F.col(f"cy{suf}"))
-            .alias(f"syy{suf}"),
-        ]
-
-    mom = proj.groupBy("type_a", "type_b").agg(*(_m("1") + _m("2")))
-
-    def _r(suf: str) -> Column:
-        n = F.col(f"n{suf}")
-        return F.when(
-            (n >= 4) & (F.col(f"sxx{suf}") > 0)
-            & (F.col(f"syy{suf}") > 0),
-            F.col(f"sxy{suf}")
-            / F.sqrt(F.col(f"sxx{suf}") * F.col(f"syy{suf}")))
+    early = F.unix_timestamp("day") < mid
+    xy = {"x": F.col("x"), "y": F.col("y")}
+    mom = comoments(pairs, ["type_a", "type_b"], PEARSON,
+                    Fit(xy, early, "1"), Fit(xy, ~early, "2"))
 
     def _fz(r: Column) -> Column:
         rc = F.least(F.greatest(r, F.lit(-1.0 + 1e-12)),
                      F.lit(1.0 - 1e-12))
         return F.lit(0.5) * F.log((1 + rc) / (1 - rc))
 
-    r1, r2 = _r("1"), _r("2")
+    r1, r2 = pearson("1", min_n=4), pearson("2", min_n=4)
     zd = F.when(
         r1.isNotNull() & r2.isNotNull(),
         F.abs(_fz(r1) - _fz(r2))
@@ -2432,8 +2264,7 @@ def corr_break(events: DataFrame, z_crit: float = 1.96,
     zr = portable_round(zd, _R)
     return mom.select(
         "type_a", "type_b",
-        F.col("n1").cast("long").alias("n_before"),
-        F.col("n2").cast("long").alias("n_after"),
+        F.col("n1").alias("n_before"), F.col("n2").alias("n_after"),
         portable_round(r1, _R).alias("r_before"),
         portable_round(r2, _R).alias("r_after"),
         zr.alias("z_diff"),
@@ -2442,28 +2273,7 @@ def corr_break(events: DataFrame, z_crit: float = 1.96,
 
 
 def _corr_break_sql(z_crit: float = 1.96) -> str:
-    def c(w: str, suf: str) -> str:
-        wp = "PARTITION BY type_a, type_b"
-        mx = (f"sum({w} * x) OVER ({wp}) "
-              f"/ nullif(sum({w}) OVER ({wp}), 0)")
-        my = (f"sum({w} * y) OVER ({wp}) "
-              f"/ nullif(sum({w}) OVER ({wp}), 0)")
-        return (f"{w} AS w{suf}, "
-                f"{w} * (x - ({mx})) AS cx{suf}, "
-                f"{w} * (y - ({my})) AS cy{suf}")
-
-    def m(suf: str) -> str:
-        return (f"sum(w{suf}) AS n{suf}, "
-                f"sum(cx{suf} * cy{suf}) AS sxy{suf}, "
-                f"sum(cx{suf} * cx{suf}) AS sxx{suf}, "
-                f"sum(cy{suf} * cy{suf}) AS syy{suf}")
-
-    def r(suf: str) -> str:
-        return (
-            f"CASE WHEN n{suf} >= 4 "
-            f"AND sxx{suf} > 0 AND syy{suf} > 0 "
-            f"THEN sxy{suf} / sqrt(sxx{suf} * syy{suf}) END")
-
+    xy = {"x": "x", "y": "y"}
     fz = ("0.5 * ln((1 + least(greatest({r}, -1 + 1e-12), "
           "1 - 1e-12)) / (1 - least(greatest({r}, -1 + 1e-12), "
           "1 - 1e-12)))")
@@ -2473,27 +2283,17 @@ bounds AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
 pairs AS (
     SELECT a.event_type AS type_a, b.event_type AS type_b,
            a.day, a.y AS x, b.y AS y,
-           CAST(CAST(epoch(a.day) < (epoch(bo.d0)
-                + epoch(bo.d1)) / 2.0 AS INT)
-                AS DOUBLE) AS e
+           epoch(a.day) < (epoch(bo.d0) + epoch(bo.d1)) / 2.0 AS early
     FROM daily a
     JOIN daily b ON a.day = b.day AND a.event_type < b.event_type
     CROSS JOIN bounds bo
 ),
-c AS (
-    SELECT type_a, type_b,
-           {c('e', '1')},
-           {c('(1.0 - e)', '2')}
-    FROM pairs
-),
-mom AS (
-    SELECT type_a, type_b,
-           {m('1')},
-           {m('2')}
-    FROM c GROUP BY 1, 2
-),
+{comoments_sql("mom", "pairs", ["type_a", "type_b"], PEARSON,
+               Fit(xy, "early", "1"), Fit(xy, "NOT early", "2"))},
 rr AS (
-    SELECT *, {r('1')} AS r1, {r('2')} AS r2 FROM mom
+    SELECT *, {pearson_sql("1", min_n=4)} AS r1,
+           {pearson_sql("2", min_n=4)} AS r2
+    FROM mom
 ),
 zz AS (
     SELECT *,
@@ -2503,8 +2303,7 @@ zz AS (
                  END, 4) AS z_diff
     FROM rr
 )
-SELECT type_a, type_b,
-       CAST(n1 AS BIGINT) AS n_before, CAST(n2 AS BIGINT) AS n_after,
+SELECT type_a, type_b, n1 AS n_before, n2 AS n_after,
        round(r1, 4) AS r_before, round(r2, 4) AS r_after, z_diff,
        CAST(coalesce(z_diff > {float(z_crit)}, false) AS INT)
            AS broken

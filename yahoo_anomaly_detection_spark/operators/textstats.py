@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from yahoo_anomaly_detection_spark.functions.comoments import (
+    PEARSON, Fit, comoments, comoments_sql, ols_slope, ols_slope_sql,
+)
 from yahoo_anomaly_detection_spark.functions.portable import portable_round
 
 from yahoo_anomaly_detection_spark.operators.dedup import HEXINT_SQL, P_FP
@@ -800,28 +803,17 @@ def zipf_fit(docs: DataFrame, k: int = 100) -> DataFrame:
         ).alias("x"),
         F.log10(F.col("cnt").cast("double")).alias("y"),
     )
-    m = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
+    m = comoments(xy, [], PEARSON,
+                  Fit({"x": F.col("x"), "y": F.col("y")}), means=True)
+    slope = ols_slope(2)
+    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
     return m.select(
-        F.col("n").cast("long").alias("n_terms"),
-        F.when(varx > 0, portable_round(slope, _R)).alias("slope"),
-        F.when(
-            varx > 0,
-            portable_round((F.col("sy") - slope * F.col("sx")) / F.col("n"),
-                           _R),
-        ).alias("intercept"),
-        F.when((varx > 0) & (vary > 0),
-               portable_round(cov * cov / (varx * vary), _R)).alias("r2"),
+        F.col("n").alias("n_terms"),
+        portable_round(slope, _R).alias("slope"),
+        portable_round(F.col("my") - slope * F.col("mx"), _R)
+        .alias("intercept"),
+        F.when(slope.isNotNull() & (syy > 0),
+               portable_round(sxy * sxy / (sxx * syy), _R)).alias("r2"),
     )
 
 
@@ -838,25 +830,14 @@ top AS (
 ),
 xy AS (SELECT log10(CAST(r AS DOUBLE)) AS x,
               log10(CAST(cnt AS DOUBLE)) AS y FROM top),
-m AS (
-    SELECT CAST(count(*) AS DOUBLE) AS n,
-           sum(x) AS sx, sum(y) AS sy,
-           sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-    FROM xy
-)
-SELECT CAST(n AS BIGINT) AS n_terms,
-       CASE WHEN n * sxx - sx * sx > 0
-            THEN round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4)
-       END AS slope,
-       CASE WHEN n * sxx - sx * sx > 0
-            THEN round((sy - (n * sxy - sx * sy)
-                             / (n * sxx - sx * sx) * sx) / n, 4)
-       END AS intercept,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-            THEN round(pow(n * sxy - sx * sy, 2)
-                       / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 4)
-       END AS r2
-FROM m
+{comoments_sql("m", "xy", [], PEARSON, Fit({"x": "x", "y": "y"}),
+               means=True)},
+f AS (SELECT *, {ols_slope_sql(2)} AS slope FROM m)
+SELECT n AS n_terms, round(slope, 4) AS slope,
+       round(my - slope * mx, 4) AS intercept,
+       CASE WHEN slope IS NOT NULL AND syy > 0
+            THEN round(sxy * sxy / (sxx * syy), 4) END AS r2
+FROM f
 """
 
 

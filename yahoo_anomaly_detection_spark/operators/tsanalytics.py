@@ -50,6 +50,10 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from yahoo_anomaly_detection_spark import caching
+from yahoo_anomaly_detection_spark.functions.comoments import (
+    OLS, PEARSON, Fit, comoments, comoments_sql, ols_slope, ols_slope_sql,
+    pearson, pearson_sql,
+)
 from yahoo_anomaly_detection_spark.functions.portable import portable_round
 
 _R = 4
@@ -1728,20 +1732,12 @@ def metric_corr(events: DataFrame, metrics: tuple[str, ...],
     move together" panel of an observability dashboard, and the
     correlation-matrix primitive of feature-drift monitors.
 
-    r is computed from CENTERED sums: a window pass over the grid
-    relation subtracts the per-(coarse-bucket, pair) means first,
-    then one groupBy accumulates Σ(x−x̄)(y−ȳ), Σ(x−x̄)², Σ(y−ȳ)².
-    The textbook uncentered form n·Σxy − ΣxΣy is catastrophically
-    cancellation-prone here because the grid means are themselves
-    float-summation-order-dependent aggregates — at 32-way partial
-    aggregation the uncentered r can drift past a 4-decimal rounding
-    boundary vs a single-threaded oracle (the round-4 ``xcorr_1d``
-    hash flake); centered sums keep the cross-engine difference at
-    ulp level, far inside ``portable_round``'s 1e-9 boundary epsilon.
-    Cost: the corpus still crosses exactly ONE heavy map-side-combined
-    exchange (raw events → #grid-buckets wide rows); the extra window
-    runs on the already-tiny grid relation and shares its hash
-    clustering with the final coarse-bucket groupBy.
+    r comes from centered co-moments (``functions.comoments``) over
+    each pair's both-present grid points. Cost: the corpus crosses
+    exactly ONE heavy map-side-combined exchange (raw events →
+    #grid-buckets wide rows); the centering window runs on the
+    already-tiny grid relation and shares its hash clustering with
+    the final coarse-bucket groupBy.
     Degenerate pairs (fewer than two shared points, or zero variance
     on either side) yield r = NULL. Output: one row per
     (bucket_start, metric_a, metric_b) with ``n_pts`` and ``r``.
@@ -1758,51 +1754,31 @@ def metric_corr(events: DataFrame, metrics: tuple[str, ...],
             for i, m in enumerate(ms)
         ])
     )
-    pairs = [
-        (i, j) for i in range(len(ms)) for j in range(len(ms)) if i < j
-    ]
-    wd = W.partitionBy("_day")
-    proj_cols = []
+    return _pair_corr(
+        grid.withColumn("_day", _bucket_expr("_grid", int(corr_seconds))),
+        "_day", "_m", "_m", ms,
+    ).select(F.col("_day").alias("bucket_start"), "_p.*")
+
+
+def _pair_corr(df: DataFrame, by: str, xp: str, yp: str,
+               ms: list[str]) -> DataFrame:
+    """Pearson r per ``by`` group for every metric pair i < j of
+    columns ``<xp>i`` / ``<yp>j``, over the rows where both exist:
+    one ``_p`` struct row (metric_a, metric_b, n_pts, r) per pair."""
+    pairs = [(i, j) for i in range(len(ms)) for j in range(i + 1, len(ms))]
+    fits = []
     for i, j in pairs:
-        x, y = F.col(f"_m{i}"), F.col(f"_m{j}")
-        both = x.isNotNull() & y.isNotNull()
-        xm, ym = F.when(both, x), F.when(both, y)
-        p = f"_{i}_{j}"
-        proj_cols += [
-            xm.alias(f"x{p}"),
-            (xm - F.avg(xm).over(wd)).alias(f"cx{p}"),
-            (ym - F.avg(ym).over(wd)).alias(f"cy{p}"),
-        ]
-    proj = grid.withColumn(
-        "_day", _bucket_expr("_grid", int(corr_seconds))
-    ).select("_day", *proj_cols)
-    aggs = []
-    for i, j in pairs:
-        p = f"_{i}_{j}"
-        aggs += [
-            F.count(F.col(f"x{p}")).alias(f"n{p}"),
-            F.sum(F.col(f"cx{p}") * F.col(f"cy{p}")).alias(f"sxy{p}"),
-            F.sum(F.col(f"cx{p}") * F.col(f"cx{p}")).alias(f"sxx{p}"),
-            F.sum(F.col(f"cy{p}") * F.col(f"cy{p}")).alias(f"syy{p}"),
-        ]
-    agg = proj.groupBy(F.col("_day").alias("bucket_start")).agg(*aggs)
-    rows = []
-    for i, j in pairs:
-        p = f"_{i}_{j}"
-        sxy, sxx, syy = F.col(f"sxy{p}"), F.col(f"sxx{p}"), F.col(f"syy{p}")
-        r = F.when(
-            (sxx > 0) & (syy > 0),
-            sxy / F.sqrt(sxx * syy),
-        )
-        rows.append(F.struct(
-            F.lit(ms[i]).alias("metric_a"),
-            F.lit(ms[j]).alias("metric_b"),
-            F.col(f"n{p}").cast("long").alias("n_pts"),
-            portable_round(r, _R).alias("r"),
-        ))
-    return agg.select(
-        "bucket_start", F.explode(F.array(*rows)).alias("_p")
-    ).select("bucket_start", "_p.*")
+        x, y = F.col(f"{xp}{i}"), F.col(f"{yp}{j}")
+        fits.append(Fit({"x": x, "y": y}, x.isNotNull() & y.isNotNull(),
+                        f"_{i}_{j}"))
+    rows = [F.struct(
+        F.lit(ms[i]).alias("metric_a"),
+        F.lit(ms[j]).alias("metric_b"),
+        F.col(f"n_{i}_{j}").alias("n_pts"),
+        portable_round(pearson(f"_{i}_{j}"), _R).alias("r"),
+    ) for i, j in pairs]
+    return comoments(df, [by], PEARSON, *fits).select(
+        by, F.explode(F.array(*rows)).alias("_p"))
 
 
 def leadlag_corr(events: DataFrame, metrics: tuple[str, ...],
@@ -1863,54 +1839,8 @@ def leadlag_corr(events: DataFrame, metrics: tuple[str, ...],
     )
     joined = a.join(F.broadcast(b), "_tgt")
 
-    pairs = [(i, j) for i in range(len(ms)) for j in range(len(ms))
-             if i < j]
-    # centered pair sums (the metric_corr idiom): subtract the
-    # per-(lag, pair) window mean before accumulating products, so
-    # the cancellation-prone n·Σxy − ΣxΣy form never appears — the
-    # lag relation is tiny and the window shares the groupBy's
-    # clustering on "lag"
-    wl = W.partitionBy("lag")
-    proj_cols = []
-    for i, j in pairs:
-        x, y = F.col(f"_x{i}"), F.col(f"_y{j}")
-        both = x.isNotNull() & y.isNotNull()
-        xm, ym = F.when(both, x), F.when(both, y)
-        p = f"_{i}_{j}"
-        proj_cols += [
-            xm.alias(f"x{p}"),
-            (xm - F.avg(xm).over(wl)).alias(f"cx{p}"),
-            (ym - F.avg(ym).over(wl)).alias(f"cy{p}"),
-        ]
-    proj = joined.select("lag", *proj_cols)
-    aggs = []
-    for i, j in pairs:
-        p = f"_{i}_{j}"
-        aggs += [
-            F.count(F.col(f"x{p}")).alias(f"n{p}"),
-            F.sum(F.col(f"cx{p}") * F.col(f"cy{p}")).alias(f"sxy{p}"),
-            F.sum(F.col(f"cx{p}") * F.col(f"cx{p}")).alias(f"sxx{p}"),
-            F.sum(F.col(f"cy{p}") * F.col(f"cy{p}")).alias(f"syy{p}"),
-        ]
-    agg = proj.groupBy("lag").agg(*aggs)
-    rows = []
-    for i, j in pairs:
-        p = f"_{i}_{j}"
-        sxy, sxx, syy = (F.col(f"sxy{p}"), F.col(f"sxx{p}"),
-                         F.col(f"syy{p}"))
-        r = F.when(
-            (sxx > 0) & (syy > 0),
-            sxy / F.sqrt(sxx * syy),
-        )
-        rows.append(F.struct(
-            F.lit(ms[i]).alias("metric_a"),
-            F.lit(ms[j]).alias("metric_b"),
-            F.col(f"n{p}").cast("long").alias("n_pts"),
-            portable_round(r, _R).alias("r"),
-        ))
-    flat = agg.select(
-        "lag", F.explode(F.array(*rows)).alias("_p")
-    ).select("_p.metric_a", "_p.metric_b", "lag", "_p.n_pts", "_p.r")
+    flat = _pair_corr(joined, "lag", "_x", "_y", ms).select(
+        "_p.metric_a", "_p.metric_b", "lag", "_p.n_pts", "_p.r")
     wbest = W.partitionBy("metric_a", "metric_b").orderBy(
         F.abs(F.col("r")).desc_nulls_last(), F.col("lag").asc())
     return flat.select(
@@ -2244,46 +2174,16 @@ def acf(tier_df: DataFrame, value_col: str, lags: tuple[int, ...] = (1, 2, 3),
         key, "_grp", "_v",
         *[F.lag("_v", k).over(w).alias(f"_l{k}") for k in lags],
     )
-    # Pearson r from CENTERED pair sums (the metric_corr idiom)
-    # instead of F.corr: ANSI mode turns corr's zero-variance
-    # division into an error, the explicit guard gives DuckDB's
-    # NULL on degenerate groups, and centering (per-lag masked
-    # window means subtracted before the product sums) keeps the
-    # Spark side at ulp agreement with the oracle's natively-stable
-    # corr() — the uncentered n·Σxy − ΣxΣy form would amplify the
-    # tier values' summation-order noise via cancellation
-    wg = W.partitionBy(key, "_grp")
-    proj_cols = []
+    # Pearson r from centered co-moments instead of F.corr: ANSI
+    # mode turns corr's zero-variance division into an error, and the
+    # guard gives DuckDB's NULL on degenerate groups
+    agg = comoments(lagged, [key, "_grp"], PEARSON, *[
+        Fit({"x": F.col("_v"), "y": F.col(f"_l{k}")},
+            F.col(f"_l{k}").isNotNull(), f"{k}") for k in lags])
     for k in lags:
-        x = F.when(F.col(f"_l{k}").isNotNull(), F.col("_v"))
-        y = F.when(F.col(f"_l{k}").isNotNull(), F.col(f"_l{k}"))
-        proj_cols += [
-            x.alias(f"_x{k}"),
-            (x - F.avg(x).over(wg)).alias(f"_cx{k}"),
-            (y - F.avg(y).over(wg)).alias(f"_cy{k}"),
-        ]
-    proj = lagged.select(key, "_grp", *proj_cols)
-    aggs = []
-    for k in lags:
-        aggs += [
-            F.count(F.col(f"_x{k}")).alias(f"_n{k}"),
-            F.sum(F.col(f"_cx{k}") * F.col(f"_cy{k}"))
-            .alias(f"_sxy{k}"),
-            F.sum(F.col(f"_cx{k}") * F.col(f"_cx{k}"))
-            .alias(f"_sxx{k}"),
-            F.sum(F.col(f"_cy{k}") * F.col(f"_cy{k}"))
-            .alias(f"_syy{k}"),
-        ]
-    agg = proj.groupBy(key, "_grp").agg(*aggs)
-    for k in lags:
-        agg = agg.withColumn(
-            f"_a{k}",
-            F.when((F.col(f"_sxx{k}") > 0) & (F.col(f"_syy{k}") > 0),
-                   F.col(f"_sxy{k}")
-                   / F.sqrt(F.col(f"_sxx{k}") * F.col(f"_syy{k}"))),
-        )
+        agg = agg.withColumn(f"_a{k}", pearson(f"{k}"))
     stack = ", ".join(
-        f"{k}, _n{k}, _a{k}" for k in lags
+        f"{k}, n{k}, _a{k}" for k in lags
     )
     return agg.select(
         key, F.col("_grp").alias(bucket_col),
@@ -3517,43 +3417,13 @@ FROM rp
 
 def _metric_corr_sql(metrics: tuple[str, ...]) -> str:
     """Oracle mirror of :func:`metric_corr` at the driver defaults
-    (hour grid, day correlation buckets) — CENTERED pair sums
-    (window-avg subtraction before the day aggregate) generated from
-    the SAME metric list as the Spark expressions, so both engines
-    evaluate the identical cancellation-free closed form."""
+    (hour grid, day correlation buckets), its co-moments generated
+    from the same pair fits as the Spark side."""
     mcols = ",\n           ".join(
         f"avg(CASE WHEN event_type = '{m}' THEN v END) AS m{i}"
         for i, m in enumerate(metrics))
     in_list = ", ".join(f"'{m}'" for m in metrics)
-    proj, sums, selects = [], [], []
-    for i in range(len(metrics)):
-        for j in range(i + 1, len(metrics)):
-            p = f"_{i}_{j}"
-            both = f"m{i} IS NOT NULL AND m{j} IS NOT NULL"
-            xm = f"CASE WHEN {both} THEN m{i} END"
-            ym = f"CASE WHEN {both} THEN m{j} END"
-            proj += [
-                f"{xm} AS x{p}",
-                f"{xm} - avg({xm}) OVER (PARTITION BY _day) AS cx{p}",
-                f"{ym} - avg({ym}) OVER (PARTITION BY _day) AS cy{p}",
-            ]
-            sums += [
-                f"count(x{p}) AS n{p}",
-                f"sum(cx{p} * cy{p}) AS sxy{p}",
-                f"sum(cx{p} * cx{p}) AS sxx{p}",
-                f"sum(cy{p} * cy{p}) AS syy{p}",
-            ]
-            selects.append(f"""
-SELECT bucket_start, '{metrics[i]}' AS metric_a,
-       '{metrics[j]}' AS metric_b,
-       CAST(n{p} AS BIGINT) AS n_pts,
-       round(CASE WHEN sxx{p} > 0 AND syy{p} > 0
-                  THEN sxy{p} / sqrt(sxx{p} * syy{p})
-             END, 4) AS r
-FROM agg""")
-    body = "\nUNION ALL".join(selects)
-    proj_sql = ",\n           ".join(proj)
-    sums_sql = ",\n           ".join(sums)
+    src = "(SELECT date_trunc('day', g) AS _day, * FROM grid)"
     return f"""
 WITH grid AS (
     SELECT date_trunc('hour', ts) AS g,
@@ -3563,18 +3433,25 @@ WITH grid AS (
           WHERE value IS NOT NULL AND event_type IN ({in_list}))
     GROUP BY 1
 ),
-c AS (
-    SELECT _day,
-           {proj_sql}
-    FROM (SELECT date_trunc('day', g) AS _day, * FROM grid)
-),
-agg AS (
-    SELECT _day AS bucket_start,
-           {sums_sql}
-    FROM c GROUP BY 1
-)
-{body}
+{_pair_corr_sql(src, "_day", "m", "m", metrics)}
+SELECT _day AS bucket_start, metric_a, metric_b, n_pts, r FROM pc
 """
+
+
+def _pair_corr_sql(src: str, by: str, xp: str, yp: str, ms) -> str:
+    """SQL twin of :func:`_pair_corr`: the co-moment CTEs plus ``pc``,
+    one (by, metric_a, metric_b, n_pts, r) row per group and pair."""
+    pairs = [(i, j) for i in range(len(ms)) for j in range(i + 1, len(ms))]
+    fits = [Fit({"x": f"{xp}{i}", "y": f"{yp}{j}"},
+                f"{xp}{i} IS NOT NULL AND {yp}{j} IS NOT NULL", f"_{i}_{j}")
+            for i, j in pairs]
+    rows = "\n    UNION ALL".join(f"""
+    SELECT {by}, '{ms[i]}' AS metric_a, '{ms[j]}' AS metric_b,
+           n_{i}_{j} AS n_pts, round({pearson_sql(f"_{i}_{j}")}, 4) AS r
+    FROM agg""" for i, j in pairs)
+    return f"""{comoments_sql("agg", src, [by], PEARSON, *fits)},
+pc AS ({rows}
+)"""
 
 
 def _leadlag_sql(metrics: tuple[str, ...], max_lag: int,
@@ -3588,36 +3465,6 @@ def _leadlag_sql(metrics: tuple[str, ...], max_lag: int,
     xy = ", ".join(
         [f"a.m{i} AS x{i}" for i in range(len(ms))]
         + [f"b.m{i} AS y{i}" for i in range(len(ms))])
-    proj, sums, selects = [], [], []
-    for i in range(len(ms)):
-        for j in range(len(ms)):
-            if i >= j:
-                continue
-            p = f"_{i}_{j}"
-            both = f"x{i} IS NOT NULL AND y{j} IS NOT NULL"
-            xm = f"CASE WHEN {both} THEN x{i} END"
-            ym = f"CASE WHEN {both} THEN y{j} END"
-            proj += [
-                f"{xm} AS xp{p}",
-                f"{xm} - avg({xm}) OVER (PARTITION BY lag) AS cx{p}",
-                f"{ym} - avg({ym}) OVER (PARTITION BY lag) AS cy{p}",
-            ]
-            sums += [
-                f"count(xp{p}) AS n{p}",
-                f"sum(cx{p} * cy{p}) AS sxy{p}",
-                f"sum(cx{p} * cx{p}) AS sxx{p}",
-                f"sum(cy{p} * cy{p}) AS syy{p}",
-            ]
-            selects.append(f"""
-SELECT '{ms[i]}' AS metric_a, '{ms[j]}' AS metric_b, lag,
-       CAST(n{p} AS BIGINT) AS n_pts,
-       round(CASE WHEN sxx{p} > 0 AND syy{p} > 0
-                  THEN sxy{p} / sqrt(sxx{p} * syy{p})
-             END, 4) AS r
-FROM agg""")
-    body = "\nUNION ALL".join(selects)
-    proj_sql = ",\n           ".join(proj)
-    sums_sql = ",\n           ".join(sums)
     return f"""
 WITH grid AS (
     SELECT date_trunc('hour', ts) AS g,
@@ -3634,15 +3481,13 @@ j AS (
     JOIN grid b
       ON b.g = a.g + (l.lag * {grid_seconds}) * INTERVAL 1 SECOND
 ),
-c AS (SELECT lag, {proj_sql} FROM j),
-agg AS (SELECT lag, {sums_sql} FROM c GROUP BY 1),
-flat AS ({body})
+{_pair_corr_sql("j", "lag", "x", "y", ms)}
 SELECT metric_a, metric_b, CAST(lag AS INT) AS lag, n_pts, r,
        CAST(row_number() OVER (
                 PARTITION BY metric_a, metric_b
                 ORDER BY abs(r) DESC NULLS LAST, lag ASC) = 1 AS INT)
            AS best
-FROM flat
+FROM pc
 """
 
 
@@ -4628,27 +4473,10 @@ def dominant_period(events: DataFrame, max_lag: int = 24,
         shifted,
         (F.col("kk") == F.col("kk2")) & (F.col("bs") == F.col("b2")),
     ).select("kk", "lag", "v", "v2")
-    # Pearson r from CENTERED moments with try_divide — Spark's
-    # ANSI-mode corr RAISES on zero-variance input where DuckDB
-    # returns NULL, and the uncentered n·Σxy − ΣxΣy form would
-    # amplify the hourly means' summation-order ulp noise via
-    # catastrophic cancellation (the metric_corr idiom)
-    dw = W.partitionBy("kk", "lag")
-    cen = (joined
-           .withColumn("cx", F.col("v") - F.avg("v").over(dw))
-           .withColumn("cy", F.col("v2") - F.avg("v2").over(dw)))
-    mom = cen.groupBy("kk", "lag").agg(
-        F.count(F.lit(1)).cast("double").alias("nn"),
-        F.sum(F.col("cx") * F.col("cy")).alias("sxy"),
-        F.sum(F.col("cx") * F.col("cx")).alias("sxx"),
-        F.sum(F.col("cy") * F.col("cy")).alias("syy"),
-    )
-    num = F.col("sxy")
-    den = F.when((F.col("sxx") > 0) & (F.col("syy") > 0),
-                 F.sqrt(F.col("sxx") * F.col("syy")))
+    mom = comoments(joined, ["kk", "lag"], PEARSON,
+                    Fit({"x": F.col("v"), "y": F.col("v2")}))
     per_lag = (mom.select(
-        "kk", "lag",
-        portable_round(F.try_divide(num, den), _R).alias("c"))
+        "kk", "lag", portable_round(pearson(), _R).alias("c"))
         .where(F.col("c").isNotNull()))
     return (per_lag.groupBy(F.col("kk").alias(key))
             .agg(F.max_by(F.col("lag"),
@@ -4924,71 +4752,37 @@ def fleet_beta(events: DataFrame, key: str = "event_type",
         F.col(key), F.date_trunc("hour", F.col(ts_col)).alias("b"))
         .agg(F.avg(v).alias("y")))
     fleet = hourly.groupBy("b").agg(F.avg("y").alias("x"))
-    j = hourly.join(fleet, "b")
-    # centered OLS via window-mean subtraction (the metric_corr
-    # idiom): hourly means are summation-order-dependent, so the
-    # uncentered normal-equation form would amplify cross-engine
-    # ulp noise via catastrophic cancellation
-    kw = W.partitionBy(key)
-    cen = (j
-           .withColumn("cx", F.col("x") - F.avg("x").over(kw))
-           .withColumn("cyv", F.col("y") - F.avg("y").over(kw)))
-    mom = cen.groupBy(key).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg("x").alias("mx"), F.avg("y").alias("my"),
-        F.sum(F.col("cx") * F.col("cyv")).alias("sxy"),
-        F.sum(F.col("cx") * F.col("cx")).alias("sxx"),
-        F.sum(F.col("cyv") * F.col("cyv")).alias("syy"),
-    )
-    n = F.col("n")
-    ok = (n >= 2) & (F.col("sxx") > 0)
-    beta = F.when(ok, F.col("sxy") / F.col("sxx"))
-    alpha = F.when(ok, F.col("my") - beta * F.col("mx"))
-    r2 = F.when(ok & (F.col("syy") > 0),
+    mom = comoments(hourly.join(fleet, "b"), [key], PEARSON,
+                    Fit({"x": F.col("x"), "y": F.col("y")}), means=True)
+    beta = ols_slope(2)
+    alpha = F.col("my") - beta * F.col("mx")
+    r2 = F.when(beta.isNotNull() & (F.col("syy") > 0),
                 F.col("sxy") * F.col("sxy")
                 / (F.col("sxx") * F.col("syy")))
     return mom.select(
-        key, n.cast("long").alias("n_buckets"),
+        key, F.col("n").alias("n_buckets"),
         portable_round(beta, _R).alias("beta"),
         portable_round(alpha, _R).alias("alpha"),
         portable_round(r2, _R).alias("r2"),
     )
 
 
-_FLEET_BETA_SQL = """
+_FLEET_BETA_SQL = f"""
 WITH hourly AS (
     SELECT event_type, date_trunc('hour', ts) AS b,
            avg(CAST(value AS DOUBLE)) AS y
     FROM events GROUP BY 1, 2
 ),
 fleet AS (SELECT b, avg(y) AS x FROM hourly GROUP BY 1),
-cen AS (
-    SELECT event_type,
-           x - avg(x) OVER w AS cx,
-           y - avg(y) OVER w AS cyv,
-           x, y
-    FROM hourly JOIN fleet USING (b)
-    WINDOW w AS (PARTITION BY event_type)
-),
-d AS (
-    SELECT event_type,
-           CAST(count(*) AS DOUBLE) AS n,
-           avg(x) AS mx, avg(y) AS my,
-           sum(cx * cyv) AS cov,
-           sum(cx * cx) AS varx,
-           sum(cyv * cyv) AS vary
-    FROM cen
-    GROUP BY 1
-)
-SELECT event_type,
-       CAST(n AS BIGINT) AS n_buckets,
-       CASE WHEN n >= 2 AND varx > 0
-            THEN round(cov / varx, 4) END AS beta,
-       CASE WHEN n >= 2 AND varx > 0
-            THEN round(my - (cov / varx) * mx, 4) END AS alpha,
-       CASE WHEN n >= 2 AND varx > 0 AND vary > 0
-            THEN round(cov * cov / (varx * vary), 4) END AS r2
-FROM d
+{comoments_sql("d", "hourly JOIN fleet USING (b)", ["event_type"],
+               PEARSON, Fit({"x": "x", "y": "y"}), means=True)},
+f AS (SELECT *, {ols_slope_sql(2)} AS beta FROM d)
+SELECT event_type, n AS n_buckets,
+       round(beta, 4) AS beta,
+       round(my - beta * mx, 4) AS alpha,
+       round(CASE WHEN beta IS NOT NULL AND syy > 0
+                  THEN sxy * sxy / (sxx * syy) END, 4) AS r2
+FROM f
 """
 
 
@@ -5295,24 +5089,11 @@ def capacity_forecast(events: DataFrame, threshold: float = 100.0,
              .agg(F.avg(F.col(value_col).cast("double")).alias("y")))
     x = (F.unix_micros(F.col("day").cast("timestamp"))
          / F.lit(86_400_000_000.0))
-    # centered OLS via window-mean subtraction (the metric_corr
-    # idiom): x here is ~2·10⁴ epoch-days, so the uncentered
-    # n·Σxx − Σx² loses ~(mean/std)² ≈ 10⁸ relative precision and
-    # would magnify the daily means' summation-order ulp noise
-    cw = W.partitionBy(key)
-    cen = (daily.select(F.col(key), x.alias("x"), "y")
-           .withColumn("cx", F.col("x") - F.avg("x").over(cw))
-           .withColumn("cyv", F.col("y") - F.avg("y").over(cw)))
-    mom = cen.groupBy(key).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg("x").alias("mx"), F.avg("y").alias("my"),
-        F.sum(F.col("cx") * F.col("cyv")).alias("sxy"),
-        F.sum(F.col("cx") * F.col("cx")).alias("sxx"),
-        F.max("x").alias("x1"),
-    )
-    n = F.col("n")
-    slope = F.when((n >= 2) & (F.col("sxx") > 0),
-                   F.col("sxy") / F.col("sxx"))
+    # x is ~2·10⁴ epoch-days: uncentered, n·Σxx − Σx² would lose
+    # ~(mean/std)² ≈ 10⁸ relative precision
+    mom = comoments(daily, [key], OLS, Fit({"x": x, "y": F.col("y")}),
+                    means=True, extra=[F.max("x").alias("x1")])
+    slope = ols_slope(2)
     level = F.when(slope.isNotNull(),
                    F.col("my")
                    + slope * (F.col("x1") - F.col("mx")))
@@ -5320,7 +5101,7 @@ def capacity_forecast(events: DataFrame, threshold: float = 100.0,
         slope.isNotNull() & (slope > 0) & (level < F.lit(threshold)),
         (F.lit(threshold) - level) / slope)
     return mom.select(
-        key, n.cast("long").alias("n_days"),
+        key, F.col("n").alias("n_days"),
         portable_round(slope, _R).alias("slope_per_day"),
         portable_round(level, _R).alias("level_now"),
         portable_round(eta, _R).alias("eta_days"),
@@ -5338,32 +5119,10 @@ WITH daily AS (
            avg(CAST(value AS DOUBLE)) AS y
     FROM events GROUP BY 1, 2
 ),
-cen AS (
-    SELECT event_type, x, y,
-           x - avg(x) OVER w AS cx,
-           y - avg(y) OVER w AS cyv
-    FROM (SELECT event_type, y,
-                 epoch_us(day) / 86400000000.0 AS x
-          FROM daily)
-    WINDOW w AS (PARTITION BY event_type)
-),
-m AS (
-    SELECT event_type,
-           CAST(count(*) AS DOUBLE) AS n,
-           avg(x) AS mx, avg(y) AS my,
-           sum(cx * cyv) AS sxy, sum(cx * cx) AS sxx,
-           max(x) AS x1
-    FROM cen
-    GROUP BY 1
-),
-f AS (
-    SELECT event_type, n, x1,
-           CASE WHEN n >= 2 AND sxx > 0
-                THEN sxy / sxx
-           END AS slope,
-           mx, my
-    FROM m
-),
+{comoments_sql("m", "daily", ["event_type"], OLS,
+               Fit({"x": "epoch_us(day) / 86400000000.0", "y": "y"}),
+               means=True, extra=["max(x) AS x1"])},
+f AS (SELECT *, {ols_slope_sql(2)} AS slope FROM m),
 l AS (
     SELECT *,
            CASE WHEN slope IS NOT NULL
@@ -5376,7 +5135,7 @@ e AS (
                 THEN ({threshold} - level) / slope END AS eta
     FROM l
 )
-SELECT event_type, CAST(n AS BIGINT) AS n_days,
+SELECT event_type, n AS n_days,
        round(slope, 4) AS slope_per_day,
        round(level, 4) AS level_now,
        round(eta, 4) AS eta_days,
