@@ -286,8 +286,10 @@ def refresh_once(spark, catalog, bronze_table: str = "transcripts",
     # fresh snapshots: a zero-delta refresh carries OLD pins forward,
     # and compact+expire here could retire exactly those pinned
     # snapshots. When we did write, the pins are the tables' current
-    # snapshots — compaction pushes them to position -2, which
-    # keep_last >= 2 (validated at entry) retains for crash-retry.
+    # snapshots — a rewriting compaction pushes them to position -2, a
+    # no-op one (the view already is one dir) leaves them current;
+    # keep_last >= 2 (validated at entry) retains them either way for
+    # crash-retry.
     wrote_outputs = bool(days) or mode != "incremental"
     if vacuum_keep_last is not None and wrote_outputs:
         for t in [*(f"tier_{t}" for t in tiers), TAILS_TABLE]:

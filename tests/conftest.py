@@ -23,6 +23,31 @@ def count_exchanges(df) -> int:
                           plan_str(df)))
 
 
+def file_digests(root) -> dict:
+    """sha256 of every file under ``root``, by path."""
+    import hashlib
+
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            with open(p, "rb") as fh:
+                out[p] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``: job ids from the
+    status tracker, read once the listener bus has drained."""
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(30_000)
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty(30_000)
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("yads-tests", cores=8, shuffle_partitions=8)

@@ -11,9 +11,12 @@ shim's exact public surface so it cannot drift while unexercised.
 """
 
 import inspect
+import os
+from datetime import date, timedelta
 
 import pytest
 
+from conftest import file_digests, jobs_started
 from yahoo_anomaly_detection_spark.sources.catalog import ParquetCatalog
 from yahoo_anomaly_detection_spark.sources.iceberg import (
     IcebergCatalog,
@@ -24,7 +27,8 @@ from yahoo_anomaly_detection_spark.sources.iceberg import (
 CONTRACT_METHODS = ["append", "overwrite_table", "delete_where", "read",
                     "snapshots", "current_snapshot_id", "exists",
                     "expire_snapshots", "compact", "remove_orphan_files",
-                    "replace_where", "read_appended", "merge_upsert"]
+                    "replace_where", "read_appended", "merge_upsert",
+                    "partition_values"]
 
 
 def test_adapter_interface_matches_shim():
@@ -151,6 +155,53 @@ def test_contract_compact_collapses_commits(spark, catalog):
     assert after == before
     if isinstance(catalog, ParquetCatalog):
         assert len(catalog.snapshots("t7")[-1].paths) == 1
+
+
+def test_read_of_many_partitions_starts_no_job(spark, tmp_path):
+    """Partition discovery of a commit dir with more day= subdirs than
+    Spark's default parallel-listing threshold (32) runs on the driver:
+    building the read starts no Spark job."""
+    cat = ParquetCatalog(str(tmp_path / "wh"))
+    rows = [(i, date(2025, 1, 1) + timedelta(days=i), float(i))
+            for i in range(40)]
+    cat.overwrite_table(
+        spark.createDataFrame(rows, "id int, day date, v double"), "t",
+        partition_by=["day"])
+    df, n_jobs = jobs_started(spark, lambda: cat.read(spark, "t"))
+    assert n_jobs == 0
+    assert sorted(r.id for r in df.collect()) == list(range(40))
+
+
+def test_compact_of_one_dir_view_is_noop(spark, tmp_path):
+    """A view that already is one dir in the table's spec compacts to
+    itself: same snapshot id, no job, no commit, files byte-identical.
+    A new partition_by — or a dir whose layout differs from the spec —
+    still rewrites."""
+    cat = ParquetCatalog(str(tmp_path / "wh"))
+    sid = cat.overwrite_table(
+        _df(spark, [(1, "d1", 1.0), (2, "d2", 2.0)]), "t",
+        partition_by=["day"])
+    before = file_digests(tmp_path / "wh" / "t")
+    got, n_jobs = jobs_started(spark, lambda: cat.compact(spark, "t"))
+    assert (got, n_jobs) == (sid, 0)
+    assert cat.compact(spark, "t", partition_by=["day"]) == sid
+    assert len(cat.snapshots("t")) == 1
+    assert file_digests(tmp_path / "wh" / "t") == before
+
+    s2 = cat.compact(spark, "t", partition_by=["id"])
+    assert s2 != sid and len(cat.snapshots("t")) == 2
+    assert sorted(n for n in os.listdir(cat.snapshots("t")[-1].paths[0])
+                  if "=" in n) == ["id=1", "id=2"]
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 2]
+
+    # a delete that matches nothing but sets a new spec leaves the flat
+    # dir under a [day] spec: compaction must lay it out by day
+    cat.overwrite_table(_df(spark, [(3, "d3", 3.0)]), "f")
+    cat.delete_where(spark, "f", "id < 0", partition_by=["day"])
+    s3 = cat.compact(spark, "f")
+    assert s3 == cat.current_snapshot_id("f")
+    assert len(cat.snapshots("f")) == 3
+    assert "day=d3" in os.listdir(cat.snapshots("f")[-1].paths[0])
 
 
 def test_contract_replace_where(spark, catalog):

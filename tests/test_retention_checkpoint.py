@@ -5,6 +5,7 @@ from datetime import datetime
 import pandas as pd
 import pytest
 
+from conftest import file_digests, jobs_started
 from yahoo_anomaly_detection_spark.operators.checkpoint import (
     LINEAGE_TABLE,
     CheckpointedRun,
@@ -109,19 +110,6 @@ def test_checkpoint_resume_skips_done_units(spark, catalog):
     assert (lineage["input_snapshot"] == "snap-a").all()
 
 
-def _file_digests(root):
-    import hashlib
-    import os
-
-    out = {}
-    for dirpath, _, files in os.walk(root):
-        for f in files:
-            p = os.path.join(dirpath, f)
-            with open(p, "rb") as fh:
-                out[p] = hashlib.sha256(fh.read()).hexdigest()
-    return out
-
-
 def test_eviction_prunes_untouched_dirs(spark, catalog):
     """TTL eviction must NOT rewrite data dirs with no expired rows:
     their files stay byte-identical (the shim's analog of Iceberg's
@@ -129,7 +117,7 @@ def test_eviction_prunes_untouched_dirs(spark, catalog):
     catalog.append(_tier_df(spark, [1, 5]), "tier_1m")     # all expire
     s_new = catalog.append(_tier_df(spark, [20]), "tier_1m")  # all survive
     new_dir = catalog.snapshots("tier_1m")[-1].summary["added_path"]
-    before_files = _file_digests(new_dir)
+    before_files = file_digests(new_dir)
     now = datetime(2025, 1, 21)
     retention = {"1m": 7 * 86400}
     evict_tier(catalog, spark, "tier_1m", "1m", now, retention)
@@ -137,7 +125,7 @@ def test_eviction_prunes_untouched_dirs(spark, catalog):
     assert snap.summary["pruned_dirs"] == 1
     assert snap.summary["rewritten_dirs"] == 1
     assert new_dir in snap.paths, "surviving dir must carry over as-is"
-    assert _file_digests(new_dir) == before_files, "survivor dir rewritten"
+    assert file_digests(new_dir) == before_files, "survivor dir rewritten"
     after = catalog.read(spark, "tier_1m")
     assert after.count() == 2  # only day-20 rows
     assert verify_evicted(after, cutoff_for("1m", now, retention)) == 0
@@ -150,6 +138,42 @@ def test_eviction_prunes_untouched_dirs(spark, catalog):
     assert sorted(snap2.paths) == sorted(paths_before)
     assert s_new  # time travel to pre-eviction still works
     assert catalog.read(spark, "tier_1m", s_new).count() == 6
+
+
+def test_noop_partition_eviction_is_metadata_only(spark, catalog):
+    """Nothing at or before the cutoff day: evict_tier(partition_col=)
+    decides from the hive dir names alone — no job, no new snapshot —
+    and vacuum's compaction of the one-dir view is a no-op too. A
+    NULL-day row survives both this and a real eviction (its partition
+    conjunct is NULL, never TRUE)."""
+    from datetime import date
+
+    rows = [("c1", datetime(2025, 1, d, 12), float(d), date(2025, 1, d))
+            for d in (18, 20)]
+    rows.append(("c2", datetime(2025, 1, 1), -1.0, None))
+    sid = catalog.overwrite_table(
+        spark.createDataFrame(
+            rows, "conv_id string, bucket_start timestamp, mean double, "
+                  "day date"),
+        "tier_1m", partition_by=["day"])
+    retention = {"1m": 7 * 86400}
+    got, n_jobs = jobs_started(spark, lambda: evict_tier(
+        catalog, spark, "tier_1m", "1m", datetime(2025, 1, 21), retention,
+        partition_col="day"))  # cutoff 2025-01-14
+    assert (got, n_jobs) == (sid, 0)
+    assert len(catalog.snapshots("tier_1m")) == 1
+    _, n_jobs = jobs_started(spark, lambda: vacuum_tier(
+        catalog, spark, "tier_1m", keep_last=1))
+    assert n_jobs == 0 and catalog.current_snapshot_id("tier_1m") == sid
+    assert catalog.read(spark, "tier_1m").count() == 3
+
+    # cutoff 2025-01-19: day 18 goes, the NULL-day row stays
+    snap = evict_tier(catalog, spark, "tier_1m", "1m", datetime(2025, 1, 26),
+                      retention, partition_col="day")
+    assert snap != sid
+    assert sorted(r.conv_id + str(r.day) for r in
+                  catalog.read(spark, "tier_1m").collect()) == [
+        "c12025-01-20", "c2None"]
 
 
 def test_delete_where_creates_new_snapshot(spark, catalog):

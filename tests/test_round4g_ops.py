@@ -545,6 +545,28 @@ def test_bloom_mixed_int_width_keys_no_false_negatives(spark):
     assert members <= kept_ids
 
 
+def test_bloom_zero_scale_decimal_keys_no_false_negatives(spark):
+    """Zero-scale decimal keys against integer keys, both ways: every
+    member must survive. DECIMAL(10,0) vs INT pins the explicit BIGINT
+    widening; DECIMAL(20,0) hashes by its bytes under xxhash64, so
+    against BIGINT it needs the try_cast narrowing."""
+    from yahoo_anomaly_detection_spark.operators import enrich
+
+    def keys(typ, n, step):
+        return spark.range(0, n).select(
+            (F.col("id") * step).cast(typ).alias("k"))
+
+    members = {i * 3 for i in range(500) if i * 3 < 3000}
+    for build, probe in (("int", "decimal(10,0)"), ("decimal(10,0)", "int"),
+                         ("bigint", "decimal(20,0)"),
+                         ("decimal(20,0)", "bigint")):
+        bloom = enrich.bloom_runtime_filter(keys(build, 500, 3), "k",
+                                            1 << 16, 5)
+        kept_ids = {int(r.k) for r in enrich.bloom_semi_join(
+            keys(probe, 3000, 1), "k", bloom, 1 << 16, 5).collect()}
+        assert members <= kept_ids, (build, probe)
+
+
 def test_bloom_semi_join_rejects_reserved_column(spark):
     from yahoo_anomaly_detection_spark.operators import enrich
     import pytest

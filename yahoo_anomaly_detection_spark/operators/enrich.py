@@ -16,6 +16,7 @@ join here would shuffle the full fact table per dimension).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -224,6 +225,7 @@ def _bloom_pos_sql(key_expr: str, seed: int, m_bits: int) -> str:
 
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
+_WHOLE_DECIMAL = re.compile(r"decimal\((\d+),0\)")
 
 
 def _canon_key_sql(df: DataFrame, key_col: str) -> str:
@@ -231,16 +233,25 @@ def _canon_key_sql(df: DataFrame, key_col: str) -> str:
     TYPE-sensitive in Spark (hash(INT 7) != hash(BIGINT 7)), so an
     INT build key probed with a BIGINT fact key would silently drop
     matching rows — violating the 'false negatives impossible'
-    contract. Widening every integral key to BIGINT on BOTH sides
-    makes build/probe positions agree regardless of the declared
-    width; other types pass through unchanged (string/binary hash by
-    bytes, which don't depend on a declared width)."""
+    contract. Widening every integral key — and every zero-scale
+    decimal of at most 18 digits, whose values all fit a BIGINT
+    exactly — to BIGINT on BOTH sides makes build/probe positions
+    agree regardless of the declared type. A wider zero-scale decimal
+    hashes by its bytes, so it is narrowed with ``try_cast``: values
+    in BIGINT range hash like BIGINT keys, larger ones all take the
+    NULL key's positions (extra false positives among them, never a
+    false negative). Other types pass through unchanged (string/binary
+    hash by bytes, which don't depend on a declared width)."""
     dt = dict(df.dtypes).get(key_col)
     if dt is None:
         raise ValueError(
             f"bloom key column {key_col!r} not in {df.columns}")
     if dt in _INTEGRAL_TYPES:
         return f"cast({key_col} as bigint)"
+    m = _WHOLE_DECIMAL.fullmatch(dt)
+    if m:
+        cast = "cast" if int(m.group(1)) <= 18 else "try_cast"
+        return f"{cast}({key_col} as bigint)"
     return key_col
 
 

@@ -14,12 +14,15 @@ survives (SURVEY §2.7).
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from yahoo_anomaly_detection_spark.sources.catalog import ParquetCatalog
+from yahoo_anomaly_detection_spark.sources.catalog import (
+    HIVE_NULL_PARTITION,
+    ParquetCatalog,
+)
 
 DEFAULT_RETENTION_S = {"1m": 7 * 86400, "1h": 90 * 86400, "1d": 3650 * 86400}
 
@@ -33,7 +36,8 @@ def evict_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
                tier: str, now: datetime,
                retention_s: dict[str, int] | None = None,
                partition_col: str | None = None) -> str:
-    """Drop buckets older than the tier's TTL; returns new snapshot id.
+    """Drop buckets older than the tier's TTL; returns the snapshot id
+    of the evicted view.
 
     ``partition_col``: name of a hive-partition date column derived
     from ``bucket_start`` (the rollup job writes ``day``). When given,
@@ -41,13 +45,34 @@ def evict_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
     ``col <= date(cutoff)`` — semantically redundant (implied by the
     bucket_start bound) but it is what makes the delete prunable by
     partition metadata: whole-partition drops are metadata-only on
-    Iceberg, and the shim's per-dir probes short-circuit on the hive
-    dir names instead of opening parquet footers."""
+    Iceberg, and the shim's probes prune the scan to the matching
+    day dirs. If the table is partitioned by exactly ``partition_col``
+    and no partition value is on or before the cutoff date, the
+    conjunct is TRUE for no row, so nothing is deleted: the hive dir
+    names alone show it, and the current snapshot id is returned with
+    no Spark job and no commit."""
     cutoff = cutoff_for(tier, now, retention_s)
     pred = f"bucket_start < TIMESTAMP '{cutoff.isoformat(sep=' ')}'"
     if partition_col is not None:
         pred += f" AND {partition_col} <= DATE '{cutoff.date().isoformat()}'"
+        snap = catalog.current_snapshot_id(table)
+        days = catalog.partition_values(table, partition_col, snap)
+        if days is not None and not any(
+                _on_or_before(d, cutoff.date()) for d in days):
+            return snap
     return catalog.delete_where(spark, table, pred)
+
+
+def _on_or_before(value: str, day: date) -> bool:
+    """Can rows of hive partition ``value`` satisfy ``col <= day``?
+    NULL (the default partition) never does; a name that does not
+    parse as a date is assumed to."""
+    if value == HIVE_NULL_PARTITION:
+        return False
+    try:
+        return date.fromisoformat(value) <= day
+    except ValueError:
+        return True
 
 
 def vacuum_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
@@ -69,13 +94,16 @@ def vacuum_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
     ``verify`` (default on): compaction must preserve the live view
     exactly — the row count is checked across the rewrite and a
     mismatch raises BEFORE any snapshot is expired, while every
-    pre-compaction snapshot is still time-travelable. ``partition_by``
-    is rarely needed: the catalog's sticky partition spec already
-    carries the tier's layout through the rewrite."""
+    pre-compaction snapshot is still time-travelable. A compaction
+    that commits nothing (the view already is one dir) has nothing to
+    verify. ``partition_by`` is rarely needed: the catalog's sticky
+    partition spec already carries the tier's layout through the
+    rewrite."""
     if compact:
-        n_before = catalog.read(spark, table).count() if verify else None
+        pre = catalog.current_snapshot_id(table)
         snap = catalog.compact(spark, table, partition_by=partition_by)
-        if verify:
+        if verify and snap != pre:
+            n_before = catalog.read(spark, table, pre).count()
             n_after = catalog.read(spark, table, snap).count()
             if n_after != n_before:
                 raise RuntimeError(

@@ -58,6 +58,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # List partition dirs on the driver. Above the threshold
+        # (default 32) Spark starts a distributed listing job for every
+        # read of a directory with more subdirectories — each day-
+        # partitioned tier commit dir has one per day, so every tier
+        # read-back, eviction probe and rewrite paid 0.2-0.4 s for it.
+        # Catalog tables live on local or NFS storage, where listing a
+        # few hundred dirs costs milliseconds on the driver. 4096 sits
+        # above the 3650 day partitions the 1d tier's 10-year TTL holds.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "4096")
         # Off-heap Tungsten memory + large pages: on-heap execution
         # memory funnels every page allocate/free of every task through
         # the ONE synchronized HeapMemoryAllocator pool monitor. At 32

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _LOCK_TIMEOUT_S = 60.0
+HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # dir name of a NULL value
 
 
 class CommitConflictError(RuntimeError):
@@ -270,11 +271,12 @@ class ParquetCatalog:
         untouched dirs over by reference.
 
         Dirs are probed CONCURRENTLY (Spark job submission is
-        thread-safe): each probe is a metadata-cheap limit(1) scan,
-        but a long-history table has one dir per un-compacted commit
-        and a sequential driver loop would serialize that many tiny
-        jobs — the pool bounds latency by ceil(dirs/8) round-trips
-        instead of dirs.
+        thread-safe): each probe is a ``limit(1)`` scan — a Spark job
+        of its own, which partition pruning and min-max pushdown keep
+        small but never free — and a long-history table has one dir per
+        un-compacted commit, so a sequential driver loop would
+        serialize that many jobs; the pool bounds latency by
+        ceil(dirs/8) round-trips instead of dirs.
 
         Returns ``(untouched_paths, rewrite_dir_or_None, n_affected,
         schema_json)``.
@@ -561,9 +563,50 @@ class ParquetCatalog:
         table's sticky partition spec is inherited unless overridden,
         so compaction never flattens a partitioned table — and time
         travel to pre-compaction snapshots keeps working until
-        ``expire_snapshots`` retires them."""
+        ``expire_snapshots`` retires them.
+
+        No-op when the view already is at most one data dir laid out
+        in the table's spec and ``partition_by`` is ``None`` or that
+        spec: returns the current snapshot id, rewrites nothing and
+        commits nothing (a rewrite would only copy the dir)."""
+        cur = self._snapshot(table)
+        spec = cur.summary.get("partition_by")
+        if (len(cur.paths) <= 1 and partition_by in (None, spec)
+                and all(self._laid_out_as(p, spec) for p in cur.paths)):
+            return cur.snapshot_id
         return self.overwrite_table(self.read(spark, table), table,
                                     partition_by=partition_by)
+
+    @staticmethod
+    def _data_names(path: str) -> list[str]:
+        """Top-level entries of a commit dir that a scan reads (Spark
+        skips ``_``/``.`` names: ``_SUCCESS``, checksum files)."""
+        return [n for n in os.listdir(path) if not n.startswith(("_", "."))]
+
+    @staticmethod
+    def _laid_out_as(path: str, spec: list[str] | None) -> bool:
+        """Whether a commit dir's top level matches ``spec``: only
+        ``spec[0]=`` subdirs when partitioned, no ``k=v`` subdir when
+        flat."""
+        names = ParquetCatalog._data_names(path)
+        if spec:
+            return all(n.startswith(f"{spec[0]}=") for n in names)
+        return not any("=" in n for n in names)
+
+    def partition_values(self, table: str, col: str,
+                         snapshot_id: str | None = None) -> set[str] | None:
+        """Hive ``col=`` values of a snapshot's data dirs (default:
+        current), read with ``os.listdir`` alone — no Spark job, no
+        parquet footer. A NULL value shows as
+        :data:`HIVE_NULL_PARTITION`. ``None`` unless the table spec
+        is exactly ``[col]`` and every dir is laid out that way, i.e.
+        unless the names stand for every row of the view."""
+        snap = self._snapshot(table, snapshot_id)
+        if snap.summary.get("partition_by") != [col] or not all(
+                self._laid_out_as(p, [col]) for p in snap.paths):
+            return None
+        return {n.split("=", 1)[1]
+                for p in snap.paths for n in self._data_names(p)}
 
     # ---------- reads ----------
     @staticmethod
@@ -595,22 +638,25 @@ class ParquetCatalog:
             out = out.unionByName(one(p), allowMissingColumns=True)
         return out
 
-    def read(self, spark: SparkSession, table: str,
-             snapshot_id: str | None = None) -> DataFrame:
+    def _snapshot(self, table: str,
+                  snapshot_id: str | None = None) -> Snapshot:
+        """Snapshot ``snapshot_id`` of ``table`` (default: current)."""
         snaps = self.snapshots(table)
         if not snaps:
             raise FileNotFoundError(f"no snapshots for table {table!r}")
         if snapshot_id is None:
-            snap = snaps[-1]
-        else:
-            try:
-                snap = next(s for s in snaps
-                            if s.snapshot_id == snapshot_id)
-            except StopIteration:
-                raise ValueError(
-                    f"snapshot {snapshot_id!r} not found for table "
-                    f"{table!r} (expired or never existed)"
-                ) from None
+            return snaps[-1]
+        try:
+            return next(s for s in snaps if s.snapshot_id == snapshot_id)
+        except StopIteration:
+            raise ValueError(
+                f"snapshot {snapshot_id!r} not found for table "
+                f"{table!r} (expired or never existed)"
+            ) from None
+
+    def read(self, spark: SparkSession, table: str,
+             snapshot_id: str | None = None) -> DataFrame:
+        snap = self._snapshot(table, snapshot_id)
         schema_json = snap.summary.get("schema")
         if not snap.paths:
             if schema_json is not None:

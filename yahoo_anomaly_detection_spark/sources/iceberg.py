@@ -278,6 +278,12 @@ class IcebergCatalog:
         ).collect()
         return self.current_snapshot_id(table)
 
+    def partition_values(self, table: str, col: str,
+                         snapshot_id: str | None = None) -> set[str] | None:
+        """Always ``None``: Iceberg answers a partition-only delete from
+        its own metadata, so callers take the ``delete_where`` path."""
+        return None
+
     # ---------- reads ----------
     def read(self, spark: SparkSession, table: str,
              snapshot_id: str | None = None) -> DataFrame:
