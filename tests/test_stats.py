@@ -173,3 +173,26 @@ def test_pred_value_counts(spark):
     df = spark.createDataFrame([(1,), (0,), (1,), (1,)], "pred int")
     got = {r["pred"]: r["count"] for r in pred_value_counts(df).collect()}
     assert got == {0: 1, 1: 3}
+
+
+def test_ewma_partition_count_from_plan_stats_no_job(spark, tmp_path):
+    # the partition count comes from Catalyst's sizeInBytes estimate,
+    # not a hidden count() job, and lands where the count path did
+    import re
+
+    from conftest import jobs_started
+    from yahoo_anomaly_detection_spark.operators import stats
+
+    path = str(tmp_path / "tier")
+    spark.createDataFrame(
+        [(f"c{i % 7}", i, float(i)) for i in range(500)],
+        "conv_id string, bucket_start int, v double",
+    ).write.parquet(path)
+    scan = spark.read.parquet(path)
+    out, n_jobs = jobs_started(spark, lambda: ewma(scan, "v", alpha=0.5))
+    assert n_jobs == 0
+    plan = out._jdf.queryExecution().logical().toString()
+    parts = int(re.search(r"RepartitionByExpression \[[^\]]*\], (\d+)",
+                          plan).group(1))
+    assert parts == max(spark.sparkContext.defaultParallelism,
+                        -(-scan.count() // stats.EWMA_MAX_ROWS_PER_PARTITION))

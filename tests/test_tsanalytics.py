@@ -1132,6 +1132,28 @@ def test_absent_flags_run_counting(spark):
     assert [r["absent"] for r in rows] == [0, 0, 0, 0, 1, 0, 0, 0, 0, 1, 0]
 
 
+def test_absent_flags_null_key_never_present(spark):
+    # a NULL key never matches an observation: every bucket of its
+    # min..max span is a miss, counted from its first bucket
+    from yahoo_anomaly_detection_spark import caching
+
+    df = spark.createDataFrame(
+        [(None, 0), (None, 2), (None, 5), ("x", 1), ("x", 3)],
+        "conv_id string, m long",
+    ).select("conv_id",
+             F.timestamp_seconds(F.lit(1700000040) + F.col("m") * 60)
+             .alias("bucket_start"))
+    with caching.scope():
+        rows = sorted(
+            (r["conv_id"] or "", r["bucket_start"], r["present"],
+             r["miss_run"], r["absent"])
+            for r in tsa.absent_flags(df, k=3).collect())
+    null_rows = [r[2:] for r in rows if r[0] == ""]
+    assert null_rows == [(0, m, int(m >= 3)) for m in range(6)]
+    assert [r[2:] for r in rows if r[0] == "x"] == [
+        (1, 0, 0), (0, 1, 0), (1, 0, 0)]
+
+
 def test_absent_flags_validation(spark):
     obs = _series1(spark, [1.0])
     with pytest.raises(ValueError, match="k must be"):

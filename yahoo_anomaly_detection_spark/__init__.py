@@ -15,4 +15,8 @@ Everything is DataFrame API + vectorized pandas/Arrow UDFs; no RDDs,
 no per-row Python in hot paths.
 """
 
+from yahoo_anomaly_detection_spark import zipguard
+
+zipguard.install()
+
 __version__ = "0.1.0"

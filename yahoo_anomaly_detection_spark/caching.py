@@ -1,8 +1,8 @@
 """Operator-internal cache registry.
 
 Several operators materialize an intermediate relation that feeds a
-self-join (shingles, LSH bands) or multiple consumers (gap-fill
-skeleton bounds + join) — without a materialized cache Spark
+self-join (shingles, LSH bands) or multiple consumers (a relation read by
+both sides of a join) — without a materialized cache Spark
 re-evaluates the subtree per consumer (measured ~40× slower for the
 shingle explode at sf0.1). Those persists cannot be released inside
 the operator (the returned DataFrame is lazy; the cache must survive

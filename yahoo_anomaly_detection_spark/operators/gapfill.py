@@ -2,66 +2,67 @@
 
 North-rule component; nearest reference analog is the NaN→1 patch in
 the Si basis function (/root/reference/Network/ITF/functions.py:153)
-— the engine implements real bucket-skeleton + linear interpolation.
+— the engine implements a dense bucket grid + linear interpolation.
 
-Semantics: for each conversation, materialize EVERY tier bucket
-between its first and last observed bucket (``sequence`` + explode —
-no driver loop), left-join observed rows, and linearly interpolate
-interior NULL runs between the nearest observed neighbors on the time
-axis. Leading/trailing buckets (no neighbor on one side) stay NULL.
+Semantics: for each conversation, emit EVERY tier bucket between its
+first and last observed bucket and linearly interpolate interior NULL
+runs between the nearest observed neighbors on the time axis.
+Leading/trailing buckets (no neighbor on one side) stay NULL.
 ``gap_filled`` marks synthesized values.
 
-Scale: skeleton generation is per-conversation map-side arithmetic;
-the join is on (conv_id, bucket_start) — same clustering as the tier
-tables, so AQE keeps it a co-partitioned sort-merge join; the
-interpolation itself is four window functions over conv_id, reusing
-that single shuffle.
+Scale: one pass over the observed rows, no join and no cache. The
+rows shuffle once on the key; two running windows over that shuffle
+(descending, then ascending) give each observed row its previous and
+next non-NULL anchors and the key's next observed bucket, and the row
+then explodes into its own bucket plus the empty buckets before that
+next one (:func:`_run_explode`, map-side arithmetic, no driver loop).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-
-from yahoo_anomaly_detection_spark import caching
 
 from yahoo_anomaly_detection_spark.operators.rollup import TIER_SECONDS
 
 
-def bucket_skeleton(tier_df: DataFrame, tier: str = "1m",
-                    key: str = "conv_id",
-                    bucket_col: str = "bucket_start") -> DataFrame:
-    """All buckets from min to max observed per key, one row each."""
-    step = F.expr(f"INTERVAL {TIER_SECONDS[tier]} SECONDS")
-    return (
-        tier_df.groupBy(key)
-        .agg(F.min(bucket_col).alias("_b0"), F.max(bucket_col).alias("_b1"))
-        .select(
-            key,
-            F.explode(F.sequence(F.col("_b0"), F.col("_b1"), step)).alias(bucket_col),
-        )
-    )
+def _run_explode(df: DataFrame, tier_seconds: int, key: str,
+                 bucket_col: str, *cols: str | Column) -> DataFrame:
+    """The dense (key, bucket) grid from the observed rows alone: each
+    row expands to its own bucket and the empty buckets before the
+    key's next observed bucket, so the union over a key runs from its
+    first to its last observed bucket.
+
+    ``cols`` are evaluated once per observed row (window functions
+    over ``W.partitionBy(key).orderBy(bucket_col)`` share this
+    helper's window) and repeated on each bucket of its run. Output:
+    ``key``, ``cols``, the observed ``_run_b0``, the exploded
+    ``bucket_col`` and ``_run_off`` (buckets since ``_run_b0``; 0 on
+    the observed row's own bucket). Duplicate (key, bucket) rows each
+    keep their own bucket; ``greatest`` keeps their empty run from
+    inverting the sequence, and skips the last row's NULL lead.
+    """
+    b = F.col(bucket_col)
+    step = F.expr(f"INTERVAL {int(tier_seconds)} SECONDS")
+    nxt = F.lead(b).over(W.partitionBy(key).orderBy(bucket_col))
+    runs = df.select(key, *cols, b.alias("_run_b0"),
+                     F.greatest(nxt - step, b).alias("_run_b1"))
+    return runs.select(
+        "*",
+        F.posexplode(F.sequence("_run_b0", "_run_b1", step))
+        .alias("_run_off", bucket_col),
+    ).drop("_run_b1")
 
 
 def gapfill_linear(tier_df: DataFrame, tier: str = "1m",
                    value_col: str = "mean", key: str = "conv_id",
                    bucket_col: str = "bucket_start") -> DataFrame:
-    """Skeleton join + linear interpolation of ``value_col``.
+    """Dense bucket grid + linear interpolation of ``value_col``.
 
     Output: (key, bucket_start, <value_col> observed-or-null,
-    <value_col>_filled, gap_filled boolean).
+    <value_col>_filled, gap_filled boolean). A NULL key is never
+    matched (as in a join): its buckets are emitted with NULL values.
     """
-    # feeds both the skeleton bounds and the join — materialize (fill
-    # the cache eagerly) so the two consumers can't race a cold
-    # persist() and each recompute the tier subtree (the same race
-    # dedup's banded self-join fixes); caller releases via
-    # caching.release_all()
-    tier_df = caching.materialize(tier_df)
-    skel = bucket_skeleton(tier_df, tier, key, bucket_col)
-    obs = tier_df.select(key, bucket_col, F.col(value_col).alias("_v"))
-    joined = skel.join(obs, on=[key, bucket_col], how="left")
-
-    t = F.unix_micros(F.col(bucket_col)).cast("double")
     # both directions as RUNNING frames (O(n)); a
     # (CURRENT ROW, UNBOUNDED FOLLOWING) frame would make Spark rescan
     # the partition remainder per row (O(n²) — 10×+ slower measured)
@@ -71,19 +72,40 @@ def gapfill_linear(tier_df: DataFrame, tier: str = "1m",
     w_next = W.partitionBy(key).orderBy(F.desc(bucket_col)).rowsBetween(
         W.unboundedPreceding, 0
     )
+    w_asc = W.partitionBy(key).orderBy(bucket_col)
+    # a NULL key never matches an observation, as in a join
+    v_in = F.when(F.col(key).isNotNull(), F.col(value_col))
+    t = F.unix_micros(F.col(bucket_col)).cast("double")
+    # next anchor at or after each observed row; its lead is the next
+    # anchor strictly after it, i.e. the right neighbor of every empty
+    # bucket in the row's run (and of the row itself when v is NULL)
+    anchored = tier_df.select(
+        key, bucket_col, v_in.alias("_v"),
+        F.last(v_in, ignorenulls=True).over(w_next).alias("_nv"),
+        F.last(F.when(v_in.isNotNull(), t), ignorenulls=True)
+        .over(w_next).alias("_nt"),
+    )
     v = F.col("_v")
-    prev_v = F.last(v, ignorenulls=True).over(w_prev)
-    prev_t = F.last(F.when(v.isNotNull(), t), ignorenulls=True).over(w_prev)
-    next_v = F.last(v, ignorenulls=True).over(w_next)
-    next_t = F.last(F.when(v.isNotNull(), t), ignorenulls=True).over(w_next)
+    runs = _run_explode(
+        anchored, TIER_SECONDS[tier], key, bucket_col, "_v",
+        F.last(v, ignorenulls=True).over(w_prev).alias("_pv"),
+        F.last(F.when(v.isNotNull(), t), ignorenulls=True)
+        .over(w_prev).alias("_pt"),
+        F.lead("_nv").over(w_asc).alias("_nv"),
+        F.lead("_nt").over(w_asc).alias("_nt"),
+    )
 
+    # from here on bucket_col, and so t, is the grid bucket
+    v = F.when(F.col("_run_off") == 0, F.col("_v"))
+    prev_v, prev_t = F.col("_pv"), F.col("_pt")
+    next_v, next_t = F.col("_nv"), F.col("_nt")
     interp = F.when(v.isNotNull(), v).otherwise(
         F.when(
             prev_v.isNotNull() & next_v.isNotNull(),
             prev_v + (next_v - prev_v) * (t - prev_t) / (next_t - prev_t),
         )
     )
-    return joined.select(
+    return runs.select(
         key,
         bucket_col,
         v.alias(value_col),

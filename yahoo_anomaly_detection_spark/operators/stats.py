@@ -14,6 +14,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -157,11 +158,12 @@ def _estimated_partitions(df: DataFrame) -> int:
     which would otherwise silently yield a huge partition count, so
     the exact count is worth one job there)."""
     try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes().toString()
-        )
-    except Exception:
+        # py4j hands the Scala BigInt back as a Python int (Spark 4.1)
+        # or as a JavaObject; str() covers both
+        size = int(str(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        ))
+    except (Py4JError, ValueError):
         size = -1
     if 0 <= size < (1 << 44):
         return -(-(size * EWMA_SCAN_INFLATION)
@@ -191,8 +193,9 @@ def segmented_scan(df: DataFrame, keys: tuple[str, ...], order_col: str,
     grows instead of the per-worker frame. Callers that know the row
     count pass n_rows (exact); otherwise the cap comes from
     Catalyst's sizeInBytes estimate of the optimized plan — NO extra
-    job (round 2 ran a hidden full-pass df.count() here, one whole
-    extra traversal of the input per call).
+    job (a count() here would be one whole extra traversal of the
+    input per call; it runs only when the estimate is missing or
+    absurd).
     """
     schema = T.StructType(
         df.schema.fields

@@ -2420,52 +2420,41 @@ def absent_flags(tier_df: DataFrame, k: int = 3,
     is structurally blind to (no samples → no rows → no flags).
 
     Input: observed tier rows (one row per (key, bucket) that has
-    data — e.g. a rollup tier). Output: the full skeleton with
+    data — e.g. a rollup tier). Output: the dense bucket grid with
     ``present`` (0/1), ``miss_run`` (position within the current gap,
     0 on present rows) and ``absent`` (miss_run ≥ k). Pure integer
     logic — engine-exact vs the oracle, no float rounding anywhere.
 
-    Shape: skeleton generation is the gap-fill idiom (per-key
-    ``sequence`` + explode — map-side arithmetic, no driver loop);
-    the run accounting is one cumulative-sum window plus one
-    row_number over (key, gap-group), both clustered on the key
-    hash. Each group starts at its present row (the skeleton starts
-    at an observed bucket), so ``row_number − 1`` IS the miss count.
+    Shape: the gap-fill run explode (``gapfill._run_explode``): each
+    observed bucket expands to itself plus the empty buckets before
+    the key's next observation, off one lead() window over a single
+    key shuffle — no join, no cache. ``miss_run`` is the bucket's
+    offset from its run's observed start. A NULL key never counts as
+    present (as in a join), so its misses run from its first bucket.
     """
-    from yahoo_anomaly_detection_spark import caching
-    from yahoo_anomaly_detection_spark.operators.gapfill import (
-        bucket_skeleton,
-    )
+    from yahoo_anomaly_detection_spark.operators.gapfill import _run_explode
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    tier_name = {60: "1m", 3600: "1h", 86400: "1d"}.get(tier_seconds)
-    if tier_name is None:
+    if tier_seconds not in (60, 3600, 86400):
         raise ValueError(
             f"tier_seconds must be one of 60/3600/86400, got {tier_seconds}")
-    # the skeleton bounds and the join both consume obs — materialize
-    # through the registry (caller releases) so the two consumers
-    # can't race a cold persist and each recompute the input subtree
-    obs = caching.materialize(tier_df.select(key, bucket_col).distinct())
-    skel = bucket_skeleton(obs, tier_name, key, bucket_col)
-    j = skel.join(
-        obs.withColumn("_present", F.lit(1)), on=[key, bucket_col],
-        how="left",
-    ).withColumn("_present", F.coalesce(F.col("_present"), F.lit(0)))
-    w_run = W.partitionBy(key).orderBy(bucket_col).rowsBetween(
-        W.unboundedPreceding, 0)
-    grouped = j.withColumn("_grp", F.sum("_present").over(w_run))
-    rn = F.row_number().over(
-        W.partitionBy(key, "_grp").orderBy(bucket_col))
-    miss = (rn - F.lit(1)).cast("long")
-    return grouped.select(
+    first = F.first(bucket_col).over(
+        W.partitionBy(key).orderBy(bucket_col))
+    runs = _run_explode(tier_df.select(key, bucket_col).distinct(),
+                        tier_seconds, key, bucket_col, first.alias("_b0"))
+    present = F.col(key).isNotNull() & (F.col("_run_off") == 0)
+    # 0 on a present row, so neither output needs a present case
+    miss = F.when(F.col(key).isNotNull(), F.col("_run_off")).otherwise(
+        (F.unix_seconds(F.col(bucket_col)) - F.unix_seconds(F.col("_b0")))
+        / F.lit(int(tier_seconds))).cast("long")
+    return runs.select(
         key,
         bucket_col,
-        F.col("_present").cast("int").alias("present"),
-        F.when(F.col("_present") == 1, F.lit(0).cast("long"))
-         .otherwise(miss).alias("miss_run"),
-        F.when((F.col("_present") == 0) & (miss >= F.lit(int(k))),
-               F.lit(1)).otherwise(F.lit(0)).alias("absent"),
+        present.cast("int").alias("present"),
+        miss.alias("miss_run"),
+        F.when(miss >= F.lit(int(k)), F.lit(1)).otherwise(F.lit(0))
+        .alias("absent"),
     )
 
 
