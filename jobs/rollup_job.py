@@ -83,6 +83,39 @@ def _full_stages(spark, points, t1m, metrics, sink_fn) -> None:
     metrics["stages"]["gorilla_encode"] = round(_t.time() - t0, 2)
 
 
+def evict_verified(catalog, spark, tier: str, now) -> str:
+    """TTL-evict ``tier_<tier>`` (hive-partitioned by ``day``) and
+    prove the eviction before anything irreversible; returns the
+    evicted snapshot id.
+
+    Both invariants must hold BEFORE any vacuum: nothing past the TTL
+    survived, and nothing inside the TTL was lost (rollback via time
+    travel is still possible here; after expire_snapshots it is not).
+    An unchanged snapshot is a no-op eviction decided from the day dir
+    names: no day is on or before the cutoff date, and
+    ``day = to_date(bucket_start)``, so no row is past the TTL and none
+    was lost — checking would only start Spark jobs."""
+    table = f"tier_{tier}"
+    pre_snap = catalog.current_snapshot_id(table)
+    snap = retention.evict_tier(catalog, spark, table, tier, now,
+                                partition_col="day")
+    if snap == pre_snap:
+        return snap
+    cutoff = retention.cutoff_for(tier, now)
+    after = catalog.read(spark, table, snap)
+    bad = retention.verify_evicted(after, cutoff)
+    lost = retention.verify_survivors(
+        catalog.read(spark, table, pre_snap), after, cutoff)
+    if bad or lost:
+        raise RuntimeError(
+            f"eviction verification failed for {table}: "
+            f"{bad} rows past the TTL survived, {lost} live "
+            f"rows lost — pre-eviction snapshot {pre_snap} is "
+            "still time-travelable; NOT vacuuming"
+        )
+    return snap
+
+
 def main(argv: list[str] | None = None) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet dir")
@@ -267,30 +300,8 @@ def main(argv: list[str] | None = None) -> dict:
 
         now = datetime.fromisoformat(args.evict_now)
         for tier in tiers:
-            table = f"tier_{tier}"
-            pre_snap = catalog.current_snapshot_id(table)
-            before = catalog.read(spark, table, pre_snap)
-            snap = retention.evict_tier(catalog, spark, table, tier, now,
-                                        partition_col="day")
-            after = catalog.read(spark, table, snap)
-            cutoff = retention.cutoff_for(tier, now)
-            # both invariants must hold BEFORE any irreversible vacuum:
-            # nothing past the TTL survived, and nothing inside the
-            # TTL was lost (rollback via time travel is still possible
-            # here; after expire_snapshots it is not)
-            bad = retention.verify_evicted(after, cutoff)
-            # an unchanged snapshot (no-op eviction) lost nothing: the
-            # anti-join would compare the snapshot with itself
-            lost = (0 if snap == pre_snap else
-                    retention.verify_survivors(before, after, cutoff))
-            if bad or lost:
-                raise RuntimeError(
-                    f"eviction verification failed for {table}: "
-                    f"{bad} rows past the TTL survived, {lost} live "
-                    f"rows lost — pre-eviction snapshot {pre_snap} is "
-                    "still time-travelable; NOT vacuuming"
-                )
-            metrics["stages"][f"evict_{tier}_snapshot"] = snap
+            metrics["stages"][f"evict_{tier}_snapshot"] = evict_verified(
+                catalog, spark, tier, now)
 
     if args.vacuum_keep_last is not None:
         # GC every table this job grows, not just the tiers: the

@@ -1,8 +1,10 @@
 """Catalog commit safety + run isolation (round-4 hardening).
 
 Covers the hazards a shared multi-writer warehouse hits:
-- delete_where raising on a concurrent commit instead of silently
-  dropping its rows (Iceberg serializable-isolation validation)
+- delete_where / replace_where / merge_upsert raising on a concurrent
+  commit instead of silently dropping its rows (Iceberg
+  serializable-isolation validation), and an append raising when a
+  concurrent commit changed the table's partition spec
 - expire_snapshots never deleting an in-flight writer's data dir
   (GC targets only dirs the expired snapshots referenced);
   remove_orphan_files handling true orphans behind an age guard
@@ -66,6 +68,58 @@ def test_delete_where_conflict_raises(spark, cat):
     cat._write_data = orig
     cat.delete_where(spark, "t", "v > 5.0")
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 3]
+
+
+def test_replace_where_conflict_raises(spark, cat):
+    """A commit landing mid-replace_where raises CommitConflictError:
+    the replace was computed against a stale view. Nothing commits,
+    and the retry against the new snapshot also replaces the
+    concurrent append's matching rows."""
+    cat.append(_df(spark, [(1, "d1", 1.0), (2, "d2", 2.0)]), "t")
+    orig = cat._write_data
+    injected = []
+
+    def inject(df, data_dir, pb):
+        if not injected:  # concurrent append mid-replace, once
+            injected.append(1)
+            ParquetCatalog(cat.root).append(
+                _df(spark, [(3, "d2", 3.0)]), "t")
+        return orig(df, data_dir, pb)
+
+    cat._write_data = inject
+    with pytest.raises(CommitConflictError):
+        cat.replace_where(spark, _df(spark, [(9, "d2", 9.0)]), "t",
+                          "day = 'd2'")
+    assert [s.operation for s in cat.snapshots("t")] == ["append"] * 2
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 2, 3]
+    cat._write_data = orig
+    cat.replace_where(spark, _df(spark, [(9, "d2", 9.0)]), "t", "day = 'd2'")
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 9]
+
+
+def test_append_conflicts_with_concurrent_spec_change(spark, cat):
+    """An append whose table spec another commit changed mid-write
+    raises CommitConflictError: its dir is laid out in the old spec,
+    and the view's dirs must all follow the snapshot's spec. The retry
+    writes in the new spec."""
+    cat.append(_df(spark, [(1, "d1", 1.0)]), "t", partition_by=["day"])
+    orig = cat._write_data
+    injected = []
+
+    def inject(df, data_dir, pb):
+        out = orig(df, data_dir, pb)
+        if not injected:  # concurrent re-layout after the append's write
+            injected.append(1)
+            ParquetCatalog(cat.root).compact(spark, "t", partition_by=["id"])
+        return out
+
+    cat._write_data = inject
+    with pytest.raises(CommitConflictError):
+        cat.append(_df(spark, [(2, "d2", 2.0)]), "t")
+    assert len(cat.snapshots("t")) == 2
+    cat._write_data = orig
+    cat.append(_df(spark, [(2, "d2", 2.0)]), "t")
+    assert cat.partition_values("t", "id") == {"1", "2"}
 
 
 def test_merge_upsert_prunes_untouched_dirs(spark, cat):

@@ -175,8 +175,8 @@ def test_read_of_many_partitions_starts_no_job(spark, tmp_path):
 def test_compact_of_one_dir_view_is_noop(spark, tmp_path):
     """A view that already is one dir in the table's spec compacts to
     itself: same snapshot id, no job, no commit, files byte-identical.
-    A new partition_by — or a dir whose layout differs from the spec —
-    still rewrites."""
+    A new partition_by still rewrites. Only whole-view writes change
+    the spec: an append cannot, and a delete keeps it."""
     cat = ParquetCatalog(str(tmp_path / "wh"))
     sid = cat.overwrite_table(
         _df(spark, [(1, "d1", 1.0), (2, "d2", 2.0)]), "t",
@@ -194,14 +194,23 @@ def test_compact_of_one_dir_view_is_noop(spark, tmp_path):
                   if "=" in n) == ["id=1", "id=2"]
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 2]
 
-    # a delete that matches nothing but sets a new spec leaves the flat
-    # dir under a [day] spec: compaction must lay it out by day
+    # an append with another spec raises and commits nothing
+    tdir = tmp_path / "wh" / "t"
+    dirs = sorted(os.listdir(tdir))
+    with pytest.raises(ValueError, match="spec"):
+        cat.append(_df(spark, [(3, "d3", 3.0)]), "t", partition_by=["day"])
+    assert len(cat.snapshots("t")) == 2 and sorted(os.listdir(tdir)) == dirs
+
+    # a delete that matches nothing keeps the spec and the files
+    live = cat.snapshots("t")[-1].paths
+    before = file_digests(live[0])
+    cat.delete_where(spark, "t", "id < 0")
+    snap = cat.snapshots("t")[-1]
+    assert snap.paths == live and snap.summary["partition_by"] == ["id"]
+    assert file_digests(live[0]) == before
+
     cat.overwrite_table(_df(spark, [(3, "d3", 3.0)]), "f")
-    cat.delete_where(spark, "f", "id < 0", partition_by=["day"])
-    s3 = cat.compact(spark, "f")
-    assert s3 == cat.current_snapshot_id("f")
-    assert len(cat.snapshots("f")) == 3
-    assert "day=d3" in os.listdir(cat.snapshots("f")[-1].paths[0])
+    assert cat.partition_values("f", "day") is None
 
 
 def test_contract_replace_where(spark, catalog):

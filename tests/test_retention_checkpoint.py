@@ -176,6 +176,37 @@ def test_noop_partition_eviction_is_metadata_only(spark, catalog):
         "c12025-01-20", "c2None"]
 
 
+def test_rollup_job_noop_eviction_skips_verification(spark, catalog):
+    """rollup_job's verified eviction starts no Spark job for a no-op
+    tier: the day dir names that show no day is on or before the
+    cutoff also show no row is past the TTL. An eviction that commits
+    is still verified: a planted TTL violator (an old bucket_start
+    filed under a recent day, so the partition conjunct keeps it)
+    raises."""
+    from datetime import date
+
+    from jobs import rollup_job
+
+    def tier(rows):
+        return spark.createDataFrame(
+            rows, "conv_id string, bucket_start timestamp, mean double, "
+                  "day date")
+
+    rows = [("c1", datetime(2025, 1, d, 12), float(d), date(2025, 1, d))
+            for d in (18, 20)]
+    sid = catalog.overwrite_table(tier(rows), "tier_1m", partition_by=["day"])
+    got, n_jobs = jobs_started(spark, lambda: rollup_job.evict_verified(
+        catalog, spark, "1m", datetime(2025, 1, 21)))  # cutoff 2025-01-14
+    assert (got, n_jobs) == (sid, 0)
+
+    rows.append(("c9", datetime(2025, 1, 1), -1.0, date(2025, 1, 20)))
+    sid = catalog.overwrite_table(tier(rows), "tier_1m")
+    with pytest.raises(RuntimeError, match="1 rows past the TTL"):
+        rollup_job.evict_verified(  # cutoff 2025-01-19: day 18 goes
+            catalog, spark, "1m", datetime(2025, 1, 26))
+    assert catalog.current_snapshot_id("tier_1m") != sid
+
+
 def test_delete_where_creates_new_snapshot(spark, catalog):
     s1 = catalog.append(_tier_df(spark, [1, 2]), "t")
     s2 = catalog.delete_where(spark, "t", "bucket_start < TIMESTAMP '2025-01-02 00:00:00'")

@@ -1,4 +1,10 @@
-"""Streaming 1m rollup: batch parity + late-data watermark behavior."""
+"""Streaming 1m rollup: batch parity + late-data watermark behavior.
+
+Queries that are only driven by ``processAllAvailable`` start with
+``trigger_secs=0``: micro-batches run back to back instead of one per
+second. The state-TTL tests keep the 1 s processing-time trigger,
+because their timeouts are measured in processing time.
+"""
 
 import os
 import time
@@ -39,7 +45,7 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
 
     _mk_points(spark, early).coalesce(1).write.mode("append").parquet(src)
     stream = stream_rollup_1m(read_point_stream(spark, src), "10 minutes")
-    q = start_stream_to_parquet(stream, out, ckpt, trigger_secs=1)
+    q = start_stream_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         _mk_points(spark, flush).coalesce(1).write.mode("append").parquet(src)
@@ -115,7 +121,7 @@ def test_stream_latency_matches_batch(spark, tmp_path):
     stream = stream_latency(
         read_transcript_stream(spark, src, max_files_per_trigger=1)
     )
-    q = start_points_to_parquet(stream, out, ckpt)
+    q = start_points_to_parquet(stream, out, ckpt, trigger_secs=0)
     # hop 2 chains off hop 1's sink dir. NOTE: that dir has a
     # _spark_metadata log, so hop 2's file source only sees files the
     # hop-1 QUERY committed — the watermark-advancing flush row must
@@ -125,6 +131,7 @@ def test_stream_latency_matches_batch(spark, tmp_path):
     q2 = start_stream_to_parquet(
         stream_rollup_1m(read_point_stream(spark, out), "10 minutes"),
         out2, ckpt2,
+        trigger_secs=0,
     )
     try:
         q.processAllAvailable()
@@ -253,7 +260,7 @@ def test_stream_resumes_from_checkpoint(spark, tmp_path):
         "append"
     ).parquet(src)
     s1 = stream_rollup_1m(read_point_stream(spark, src), "5 minutes")
-    q1 = start_stream_to_parquet(s1, out, ckpt)
+    q1 = start_stream_to_parquet(s1, out, ckpt, trigger_secs=0)
     q1.processAllAvailable()
     q1.stop()
     # restart from the same checkpoint; new data triggers finalization
@@ -261,7 +268,7 @@ def test_stream_resumes_from_checkpoint(spark, tmp_path):
         "append"
     ).parquet(src)
     s2 = stream_rollup_1m(read_point_stream(spark, src), "5 minutes")
-    q2 = start_stream_to_parquet(s2, out, ckpt)
+    q2 = start_stream_to_parquet(s2, out, ckpt, trigger_secs=0)
     q2.processAllAvailable()
     q2.stop()
     got = spark.read.parquet(out)
@@ -311,7 +318,8 @@ def test_stream_rolling_flags_match_batch(spark, tmp_path):
         .parquet(src)
     )
     q = start_flags_to_parquet(
-        stream_rolling_flags(tiers, threshold=thr, k=k), out, ckpt
+        stream_rolling_flags(tiers, threshold=thr, k=k), out, ckpt,
+        trigger_secs=0
     )
     try:
         q.processAllAvailable()
@@ -429,11 +437,13 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
     q1 = start_points_to_parquet(
         stream_latency(read_transcript_stream(spark, src)),
         pts, str(tmp_path / "ck1"),
+        trigger_secs=0,
     )
     q1.processAllAvailable()  # create pts dir before hop 2 starts
     q2 = start_stream_to_parquet(
         stream_rollup_1m(read_point_stream(spark, pts), "2 minutes"),
         tiers, str(tmp_path / "ck2"),
+        trigger_secs=0,
     )
     q2.processAllAvailable()
     tier_ddl = (
@@ -449,6 +459,7 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
     q3 = start_flags_to_parquet(
         stream_rolling_flags(tier_stream, threshold=15.0, k=3),
         flags, str(tmp_path / "ck3"),
+        trigger_secs=0,
     )
     try:
         for batch in (f2, flush, flush2):
@@ -534,6 +545,7 @@ def test_stream_latency_out_of_order_never_regresses_state(spark, tmp_path):
     q = start_points_to_parquet(
         stream_latency(read_transcript_stream(spark, src)),
         out, str(tmp_path / "ck"),
+        trigger_secs=0,
     )
     try:
         q.processAllAvailable()
@@ -682,12 +694,14 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
         return start_points_to_parquet(
             stream_latency(read_transcript_stream(spark, src)),
             pts, str(tmp_path / "ck1"),
+            trigger_secs=0,
         )
 
     def start_q2():
         return start_stream_to_parquet(
             stream_rollup_1m(read_point_stream(spark, pts), "2 minutes"),
             tiers, str(tmp_path / "ck2"),
+            trigger_secs=0,
         )
 
     def start_q3():
@@ -699,6 +713,7 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
         return start_flags_to_parquet(
             stream_rolling_flags(tier_stream, threshold=15.0, k=3),
             flags, str(tmp_path / "ck3"),
+            trigger_secs=0,
         )
 
     # ---- phase 1: process f1 through all hops, then crash the
@@ -825,12 +840,14 @@ def test_stream_rollup_cascade_matches_batch(spark, tmp_path):
     q1 = start_stream_to_parquet(
         stream_rollup_1m(read_point_stream(spark, src), "10 minutes"),
         t1m, str(tmp_path / "c_ck1"),
+        trigger_secs=0,
     )
     q1.processAllAvailable()
     q2 = start_stream_to_parquet(
         stream_rollup_cascade(read_tier_stream(spark, t1m), "1h",
                               "2 hours"),
         t1h, str(tmp_path / "c_ck2"),
+        trigger_secs=0,
     )
     try:
         for batch in (f2,) + flushes:
@@ -915,18 +932,21 @@ def test_stream_full_tier_chain_1m_1h_1d(spark, tmp_path):
     q1 = start_stream_to_parquet(
         stream_rollup_1m(read_point_stream(spark, src), "10 minutes"),
         t1m, str(tmp_path / "d_ck1"),
+        trigger_secs=0,
     )
     q1.processAllAvailable()
     q2 = start_stream_to_parquet(
         stream_rollup_cascade(read_tier_stream(spark, t1m), "1h",
                               "2 hours"),
         t1h, str(tmp_path / "d_ck2"),
+        trigger_secs=0,
     )
     q2.processAllAvailable()
     q3 = start_stream_to_parquet(
         stream_rollup_cascade(read_tier_stream(spark, t1h), "1d",
                               "2 hours"),
         t1d, str(tmp_path / "d_ck3"),
+        trigger_secs=0,
     )
     try:
         for batch in flushes:
@@ -1021,7 +1041,8 @@ def test_stream_alert_states_match_batch(spark, tmp_path):
         .parquet(src)
     )
     q = start_alerts_to_parquet(
-        stream_alert_states(tiers, threshold=thr, for_k=for_k), out, ckpt
+        stream_alert_states(tiers, threshold=thr, for_k=for_k), out, ckpt,
+        trigger_secs=0
     )
     try:
         q.processAllAvailable()
@@ -1111,6 +1132,7 @@ def test_stream_absence_alerts_fire_and_rearm(spark, tmp_path):
         stream_absence_alerts(tiers, k=3, bucket_seconds=60,
                               watermark_delay="0 seconds"),
         out, ckpt,
+        trigger_secs=0,
     )
     try:
         q.processAllAvailable()
@@ -1185,6 +1207,7 @@ def test_stream_absence_single_batch_interior_gaps(spark, tmp_path):
         stream_absence_alerts(tiers, k=3, bucket_seconds=60,
                               watermark_delay="0 seconds"),
         out, ckpt,
+        trigger_secs=0,
     )
     try:
         q.processAllAvailable()
@@ -1244,7 +1267,7 @@ def test_stream_dedup_collapses_redeliveries(spark, tmp_path):
     tiers = stream_rollup_1m(
         deduped.select("conv_id", "ts", "value"), set_watermark=False)
     mk(b1).coalesce(1).write.mode("append").parquet(src)
-    q = start_stream_to_parquet(tiers, out, ckpt, trigger_secs=1)
+    q = start_stream_to_parquet(tiers, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         mk(b2).coalesce(1).write.mode("append").parquet(src)
@@ -1316,7 +1339,7 @@ def test_stream_hll_matches_batch_estimate(spark, tmp_path):
     _mk_events(spark, batch1).coalesce(1).write.mode("append") \
         .parquet(src)
     stream = stream_hll_distinct(read_event_stream(spark, src), p=8)
-    q = start_sketches_to_parquet(stream, out, ckpt, trigger_secs=1)
+    q = start_sketches_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         _mk_events(spark, batch2).coalesce(1).write.mode("append") \
@@ -1387,7 +1410,7 @@ def test_stream_sessions_match_batch_sessionize(spark, tmp_path):
     mk2(batch1).coalesce(1).write.mode("append").parquet(src)
     stream = stream_sessions(read_session_event_stream(spark, src),
                              gap_seconds=GAP, watermark="5 minutes")
-    q = start_sessions_to_parquet(stream, out, ckpt, trigger_secs=1)
+    q = start_sessions_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         mk2(batch2).coalesce(1).write.mode("append").parquet(src)
@@ -1465,7 +1488,7 @@ def test_stream_drift_matches_batch_on_closed_days(spark, tmp_path):
         .write.mode("append").parquet(src)
     stream = stream_drift_1d(
         spark.readStream.schema(schema).parquet(src))
-    q = start_drift_to_parquet(stream, out, ckpt, trigger_secs=1)
+    q = start_drift_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
     finally:
@@ -1475,7 +1498,7 @@ def test_stream_drift_matches_batch_on_closed_days(spark, tmp_path):
         .write.mode("append").parquet(src)
     stream2 = stream_drift_1d(
         spark.readStream.schema(schema).parquet(src))
-    q2 = start_drift_to_parquet(stream2, out, ckpt, trigger_secs=1)
+    q2 = start_drift_to_parquet(stream2, out, ckpt, trigger_secs=0)
     try:
         q2.processAllAvailable()
     finally:
@@ -1553,7 +1576,7 @@ def test_stream_drift_drops_backwards_days(spark, tmp_path):
         .write.mode("append").parquet(src)
     q = start_drift_to_parquet(
         stream_drift_1d(spark.readStream.schema(schema).parquet(src)),
-        out, ckpt, trigger_secs=1)
+        out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
     finally:
@@ -1562,7 +1585,7 @@ def test_stream_drift_drops_backwards_days(spark, tmp_path):
         .write.mode("append").parquet(src)
     q2 = start_drift_to_parquet(
         stream_drift_1d(spark.readStream.schema(schema).parquet(src)),
-        out, ckpt, trigger_secs=1)
+        out, ckpt, trigger_secs=0)
     try:
         q2.processAllAvailable()
     finally:

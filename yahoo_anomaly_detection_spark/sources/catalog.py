@@ -24,23 +24,29 @@ Concurrency model (mirrors Iceberg's optimistic commits): data files
 are written OUTSIDE any lock (long Spark jobs never serialize); the
 manifest read-modify-write is atomic under a per-table lock file.
 Appends and full overwrites rebase onto whatever parent is current at
-commit time (Iceberg fast-append semantics). ``delete_where`` is a
-copy-on-write operation whose probe/rewrite depend on the snapshot it
-read — if another commit lands in between it raises
-:class:`CommitConflictError` instead of silently dropping that
-commit's rows (Iceberg's serializable-isolation validation; the
-caller retries). ``expire_snapshots`` deletes ONLY data dirs that the
+commit time (Iceberg fast-append semantics). ``delete_where``,
+``replace_where`` and ``merge_upsert`` are copy-on-write operations
+whose probe/rewrite depend on the snapshot they read — if another
+commit lands in between they raise :class:`CommitConflictError`
+instead of silently dropping that commit's rows (Iceberg's
+serializable-isolation validation; the caller retries).
+``expire_snapshots`` deletes ONLY data dirs that the
 expired snapshots referenced and no retained snapshot still does —
 never "any dir not in the manifest", because a concurrent append
 writes its data dir before taking the commit lock. Dirs orphaned by
 crashed writers are reclaimed by :meth:`remove_orphan_files` (age-
 guarded, exactly like Iceberg's ``remove_orphan_files`` procedure).
 
-The table partition spec is sticky, as in Iceberg: a write that
-passes ``partition_by`` sets it; later writes/rewrites that don't
-pass one inherit the current spec from the snapshot summary, so
-compaction and TTL rewrites keep the hive layout that partition
-pruning relies on.
+Every data dir of a view is laid out in its snapshot's partition spec
+(``summary["partition_by"]``), so the spec alone tells how the files
+are laid out. Only writes that lay out the whole view set it: a
+table's first write, :meth:`overwrite_table` and
+``compact(partition_by=...)``. Appends and copy-on-write commits
+inherit it, so compaction and TTL rewrites keep the hive layout that
+partition pruning relies on. An ``append`` whose explicit
+``partition_by`` differs from the table's spec raises ``ValueError``;
+one whose spec another commit changed mid-write raises
+:class:`CommitConflictError`.
 """
 
 from __future__ import annotations
@@ -150,17 +156,9 @@ class ParquetCatalog:
         return os.path.join(self.root, table, f"snap={snap_id}")
 
     def _current_spec(self, table: str) -> list[str] | None:
-        """The table's sticky partition spec (latest snapshot summary)."""
+        """The table's partition spec (latest snapshot summary)."""
         snaps = self.snapshots(table)
         return snaps[-1].summary.get("partition_by") if snaps else None
-
-    def _effective_spec(self, table: str,
-                        partition_by: list[str] | None) -> list[str] | None:
-        # Iceberg semantics: an explicit partition_by (re)sets the
-        # table spec; None follows the current spec — so TTL rewrites
-        # and compaction never silently flatten a partitioned table.
-        return partition_by if partition_by is not None \
-            else self._current_spec(table)
 
     # ---------- writes ----------
     def _write_data(self, df: DataFrame, data_dir: str,
@@ -171,14 +169,26 @@ class ParquetCatalog:
         w.parquet(data_dir)
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> str:
+        snaps = self.snapshots(table)
+        pb = snaps[-1].summary.get("partition_by") if snaps else partition_by
+        if partition_by is not None and partition_by != pb:
+            raise ValueError(
+                f"append to {table!r} with partition_by={partition_by} but "
+                f"the table spec is {pb}: only overwrite_table() or "
+                "compact(partition_by=...) change a table's spec")
         snap_id = self._new_snap_id()
         data_dir = self._new_data_dir(table, snap_id)
-        pb = self._effective_spec(table, partition_by)
         self._write_data(df, data_dir, pb)
 
         def make(snaps: list[Snapshot]) -> Snapshot:
             # rebase: parent/paths come from the manifest AS OF commit
-            # time, not the possibly-stale pre-write read
+            # time, not the possibly-stale pre-write read — unless the
+            # spec changed meanwhile: the new dir is laid out in the old
+            # one, and committing it would break the layout rule
+            if snaps and snaps[-1].summary.get("partition_by") != pb:
+                raise CommitConflictError(
+                    f"partition spec of table {table!r} changed during "
+                    "append — re-run the append")
             parent = snaps[-1].snapshot_id if snaps else None
             parent_paths = snaps[-1].paths if snaps else []
             return Snapshot(snap_id, parent, "append",
@@ -192,7 +202,10 @@ class ParquetCatalog:
                         partition_by: list[str] | None = None) -> str:
         snap_id = self._new_snap_id()
         data_dir = self._new_data_dir(table, snap_id)
-        pb = self._effective_spec(table, partition_by)
+        # an explicit partition_by (re)sets the table spec; None keeps
+        # it, so compaction never silently flattens a partitioned table
+        pb = partition_by if partition_by is not None \
+            else self._current_spec(table)
         self._write_data(df, data_dir, pb)
         return self._commit(
             table,
@@ -203,181 +216,144 @@ class ParquetCatalog:
             ),
         )
 
-    def delete_where(self, spark: SparkSession, table: str, predicate: str,
-                     partition_by: list[str] | None = None) -> str:
-        """Iceberg ``DELETE FROM t WHERE p`` → new snapshot, touching
-        only affected data dirs (manifest-filtering analog).
+    def _cow_commit(self, spark: SparkSession, table: str, op: str,
+                    matches: Callable, keep: Callable, summary: dict,
+                    new_df: DataFrame | None = None) -> str:
+        """Copy-on-write commit of ``op`` against the current snapshot
+        (the base), touching only the data dirs it affects — the
+        manifest-filtering analog behind :meth:`delete_where`,
+        :meth:`replace_where` and :meth:`merge_upsert`.
 
-        Each data dir composing the current view is probed with the
-        predicate (``limit(1)`` — partition pruning / parquet min-max
-        pushdown make this a metadata read for partition- and
-        range-predicates, the TTL shape). Dirs with NO matching rows
-        carry over into the new snapshot untouched — their files stay
-        byte-identical on disk (asserted in tests). Only dirs that
-        contain matches are filtered and rewritten. Real Iceberg goes
-        one step further (whole-partition deletes are metadata-only);
-        the shim's unit of pruning is the commit data dir.
+        ``new_df`` (if any) is written first as ``snap=<id>`` and read
+        back as ``written``: the probes and the rewrite then scan a
+        stable delta instead of recomputing an arbitrary upstream plan
+        per dir. Every data dir of the base is probed with
+        ``matches(rows, written).limit(1)`` — partition pruning and
+        parquet min-max pushdown make this a metadata read for
+        partition- and range-predicates, the TTL shape. Dirs with NO
+        match carry over into the new snapshot untouched: their files
+        stay byte-identical on disk (asserted in tests). The affected
+        dirs are rewritten together as ``keep(rows, written)`` into
+        ``snap=<id>_rw`` next to new data, or ``snap=<id>`` without.
+        Real Iceberg goes one step further (whole-partition deletes are
+        metadata-only); the shim's unit of pruning is the commit data
+        dir. The snapshot inherits the base's spec and schema, and the
+        delete and the insert are atomic together, so a reader never
+        sees the gap between them.
 
-        NULL-predicate rows are RETAINED (Iceberg / ANSI DELETE
-        semantics: only predicate=TRUE rows are deleted). The rewrite
-        filter is ``(p) IS NOT TRUE`` — not ``NOT (p)``, which would
-        drop NULL rows from rewritten dirs while the probe (which
-        detects TRUE matches only) left them alive in untouched dirs,
-        making survival depend on physical dir layout.
+        Dirs are probed CONCURRENTLY (Spark job submission is
+        thread-safe): each probe is a Spark job of its own, which
+        pruning keeps small but never free, and a long-history table
+        has one dir per un-compacted commit, so a sequential driver
+        loop would serialize that many jobs; the pool bounds latency by
+        ceil(dirs/8) round-trips instead of dirs.
 
-        Copy-on-write validation: the probe and rewrite are computed
-        against the snapshot current at entry; if another commit lands
-        before this one, :class:`CommitConflictError` is raised (the
+        NULL retention: ``keep`` must retain exactly the rows
+        ``matches`` does not return, under SQL's three-valued logic. A
+        predicate ``p`` therefore pairs ``p`` with ``(p) IS NOT TRUE``
+        (:meth:`_predicate`), not ``NOT (p)``: the probe detects TRUE
+        matches only, so ``NOT (p)`` would drop NULL-predicate rows
+        from rewritten dirs while leaving them alive in untouched dirs,
+        making survival depend on physical dir layout. Only
+        predicate=TRUE rows go (Iceberg / ANSI DELETE semantics).
+
+        Validation: the probe and rewrite are computed against the
+        base; if another commit lands before this one,
+        :class:`CommitConflictError` is raised and nothing commits (the
         rewrite would silently drop the concurrent commit's rows
         otherwise). Callers retry — Iceberg serializable isolation.
         """
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"no snapshots for table {table!r}")
-        base = snaps[-1]
-        pb = partition_by if partition_by is not None \
-            else base.summary.get("partition_by")
-        snap_id = self._new_snap_id()
-        untouched, rewrite_dir, n_affected, schema_json = \
-            self._cow_rewrite(spark, base, predicate, pb, table, snap_id)
-
-        def make(op_paths: list[str], summary: dict):
-            def _make(cur: list[Snapshot]) -> Snapshot:
-                if not cur or cur[-1].snapshot_id != base.snapshot_id:
-                    raise CommitConflictError(
-                        f"table {table!r} advanced past "
-                        f"{base.snapshot_id!r} during delete_where — "
-                        "re-run the delete against the new snapshot"
-                    )
-                return Snapshot(snap_id, base.snapshot_id, "delete_where",
-                                op_paths, summary)
-            return _make
-
-        summary = {"predicate": predicate, "rewritten_dirs": n_affected,
-                   "pruned_dirs": len(untouched), "partition_by": pb,
-                   "schema": schema_json}
-        if rewrite_dir is None:  # metadata-only no-op commit
-            return self._commit(table, make(list(untouched), summary))
-        return self._commit(table, make(untouched + [rewrite_dir], summary))
-
-    def _cow_rewrite(self, spark: SparkSession, base: "Snapshot",
-                     predicate: str, pb: list[str] | None, table: str,
-                     snap_id: str, dir_suffix: str = ""):
-        """Copy-on-write core shared by :meth:`delete_where` and
-        :meth:`replace_where`: probe every data dir of ``base`` for
-        predicate matches, rewrite ONLY the affected dirs filtered to
-        ``(p) IS NOT TRUE`` (NULL-predicate rows retained — see
-        delete_where's docstring for why not ``NOT (p)``), carry
-        untouched dirs over by reference.
-
-        Dirs are probed CONCURRENTLY (Spark job submission is
-        thread-safe): each probe is a ``limit(1)`` scan — a Spark job
-        of its own, which partition pruning and min-max pushdown keep
-        small but never free — and a long-history table has one dir per
-        un-compacted commit, so a sequential driver loop would
-        serialize that many jobs; the pool bounds latency by
-        ceil(dirs/8) round-trips instead of dirs.
-
-        Returns ``(untouched_paths, rewrite_dir_or_None, n_affected,
-        schema_json)``.
-        """
-        base_schema = base.summary.get("schema")
-
-        def _empty(p: str) -> bool:
-            d = self._read_dirs(spark, [p], base_schema)
-            return d.where(predicate).limit(1).count() == 0
-
         from concurrent.futures import ThreadPoolExecutor
+
+        base = self._snapshot(table)
+        spec = base.summary.get("partition_by")
+        schema = base.summary.get("schema")
+        snap_id = self._new_snap_id()
+        data_dir = self._new_data_dir(table, snap_id)
+        written = None
+        if new_df is not None:
+            self._write_data(new_df, data_dir, spec)
+            written = self._read_dirs(spark, [data_dir],
+                                      new_df.schema.jsonValue())
+
+        def untouched(p: str) -> bool:
+            rows = self._read_dirs(spark, [p], schema)
+            return matches(rows, written).limit(1).count() == 0
 
         with ThreadPoolExecutor(
             max_workers=max(1, min(8, len(base.paths)))
         ) as ex:
-            empties = list(ex.map(_empty, base.paths))
-        untouched = [p for p, e in zip(base.paths, empties) if e]
-        affected = [p for p, e in zip(base.paths, empties) if not e]
-        if not affected:
-            return untouched, None, 0, base_schema
-        rewrite_dir = self._new_data_dir(table, snap_id) + dir_suffix
-        kept = self._read_dirs(spark, affected, base_schema).where(
-            f"({predicate}) IS NOT TRUE"
-        )
-        self._write_data(kept, rewrite_dir, pb)
-        return (untouched, rewrite_dir, len(affected),
-                base_schema or kept.schema.jsonValue())
-
-    def replace_where(self, spark: SparkSession, df: DataFrame, table: str,
-                      predicate: str,
-                      partition_by: list[str] | None = None) -> str:
-        """Iceberg ``writeTo(t).overwrite(p)`` — dynamic predicate
-        overwrite in ONE commit: rows matching ``predicate`` are
-        replaced by ``df``; everything else carries over untouched.
-
-        This is the continuous-aggregate refresh primitive: an
-        incremental tier refresh replaces ONLY the affected day
-        partitions (``day IN (...)``) with freshly merged rows, so
-        commit cost scales with the delta, never with table history.
-
-        Same copy-on-write machinery as :meth:`delete_where` (probe
-        dirs, rewrite only dirs containing matches, NULL-predicate
-        rows retained, CommitConflictError if the table advanced), plus
-        the new data as one extra dir in the same snapshot — the
-        delete and the insert are atomic together, so a reader never
-        sees the gap between them.
-        """
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(
-                f"no snapshots for table {table!r} — create it with "
-                "append()/overwrite_table() first"
-            )
-        base = snaps[-1]
-        pb = partition_by if partition_by is not None \
-            else base.summary.get("partition_by")
-
-        snap_id = self._new_snap_id()
-        untouched, rewrite_dir, n_affected, schema_json = \
-            self._cow_rewrite(spark, base, predicate, pb, table, snap_id,
-                              dir_suffix="_rw")
-        new_paths = list(untouched)
-        if rewrite_dir is not None:
-            new_paths.append(rewrite_dir)
-        data_dir = self._new_data_dir(table, snap_id)
-        self._write_data(df, data_dir, pb)
-        new_paths.append(data_dir)
+            empty = list(ex.map(untouched, base.paths))
+        paths = [p for p, e in zip(base.paths, empty) if e]
+        affected = [p for p, e in zip(base.paths, empty) if not e]
+        if affected:
+            rewrite_dir = data_dir + "_rw" if new_df is not None else data_dir
+            kept = keep(self._read_dirs(spark, affected, schema), written)
+            self._write_data(kept, rewrite_dir, spec)
+            paths.append(rewrite_dir)
+        if new_df is not None:
+            paths.append(data_dir)
+        summary = {**summary, "rewritten_dirs": len(affected),
+                   "pruned_dirs": len(base.paths) - len(affected),
+                   "partition_by": spec, "schema": schema}
 
         def make(cur: list[Snapshot]) -> Snapshot:
             if not cur or cur[-1].snapshot_id != base.snapshot_id:
                 raise CommitConflictError(
                     f"table {table!r} advanced past {base.snapshot_id!r} "
-                    "during replace_where — re-run against the new snapshot"
-                )
-            return Snapshot(
-                snap_id, base.snapshot_id, "replace_where", new_paths,
-                {"predicate": predicate, "rewritten_dirs": n_affected,
-                 "pruned_dirs": len(untouched), "partition_by": pb,
-                 "schema": schema_json or df.schema.jsonValue()},
-            )
+                    f"during {op} — re-run against the new snapshot")
+            return Snapshot(snap_id, base.snapshot_id, op, paths, summary)
 
         return self._commit(table, make)
 
+    @staticmethod
+    def _predicate(predicate: str) -> tuple[Callable, Callable]:
+        """``(matches, keep)`` of a predicate copy-on-write: ``p`` and
+        ``(p) IS NOT TRUE`` (see :meth:`_cow_commit` for why not
+        ``NOT (p)``)."""
+        return (lambda rows, _: rows.where(predicate),
+                lambda rows, _: rows.where(f"({predicate}) IS NOT TRUE"))
+
+    def delete_where(self, spark: SparkSession, table: str,
+                     predicate: str) -> str:
+        """Iceberg ``DELETE FROM t WHERE p`` → new snapshot: only
+        predicate=TRUE rows go, and only the data dirs holding them are
+        rewritten (:meth:`_cow_commit`). A delete that matches nothing
+        commits a metadata-only snapshot over the same dirs."""
+        return self._cow_commit(spark, table, "delete_where",
+                                *self._predicate(predicate),
+                                {"predicate": predicate})
+
+    def replace_where(self, spark: SparkSession, df: DataFrame, table: str,
+                      predicate: str) -> str:
+        """Iceberg ``writeTo(t).overwrite(p)`` — dynamic predicate
+        overwrite in ONE commit: rows matching ``predicate`` are
+        replaced by ``df``; everything else, NULL-predicate rows
+        included, carries over (:meth:`_cow_commit`).
+
+        This is the continuous-aggregate refresh primitive: an
+        incremental tier refresh replaces ONLY the affected day
+        partitions (``day IN (...)``) with freshly merged rows, so
+        commit cost scales with the delta, never with table history.
+        """
+        return self._cow_commit(spark, table, "replace_where",
+                                *self._predicate(predicate),
+                                {"predicate": predicate}, new_df=df)
+
     def merge_upsert(self, spark: SparkSession, source: DataFrame,
-                     table: str, key_cols: list[str],
-                     partition_by: list[str] | None = None,
-                     broadcast_keys: bool = True) -> str:
+                     table: str, key_cols: list[str]) -> str:
         """Iceberg ``MERGE INTO t USING s ON t.k = s.k WHEN MATCHED
         THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` — the
         keyed upsert, in ONE atomic commit.
 
         Because the only clauses are update-all and insert-all, the
         post-merge view is exactly ``(target ANTI-JOIN source ON keys)
-        ∪ source`` — so the copy-on-write plan is: probe each data dir
-        for key matches (left_semi, source side broadcast — the CDC /
-        refresh delta is small by construction; pass
-        ``broadcast_keys=False`` for a bulk backfill-sized source),
-        rewrite ONLY affected dirs with a left_anti filter, carry
-        untouched dirs over by reference, and add the source rows as
-        one new dir. Commit cost scales with the delta and the dirs it
-        touches, never with the 10^12-turn table.
+        ∪ source`` — so the copy-on-write plan (:meth:`_cow_commit`)
+        probes each data dir for key matches (left_semi, source keys
+        broadcast — the CDC / refresh delta is small by construction),
+        rewrites ONLY affected dirs with a left_anti filter and adds the
+        source rows as one new dir. Commit cost scales with the delta
+        and the dirs it touches, never with the 10^12-turn table.
 
         Semantics pinned to SQL MERGE:
 
@@ -394,100 +370,40 @@ class ParquetCatalog:
           not a schema-evolution path (``allowMissingColumns`` is for
           reads of historic dirs, not new writes).
 
-        Copy-on-write validation as in :meth:`delete_where` /
-        :meth:`replace_where`: probe + rewrite are computed against
-        the snapshot current at entry; if the table advances before
-        commit, :class:`CommitConflictError` — the caller retries
-        against the new snapshot. ``read_appended`` correctly refuses
-        incremental reads across a merge (operation != append).
+        ``read_appended`` correctly refuses incremental reads across a
+        merge (operation != append).
         """
         from pyspark.sql import functions as F
 
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(
-                f"no snapshots for table {table!r} — create it with "
-                "append()/overwrite_table() first"
-            )
-        base = snaps[-1]
-        pb = partition_by if partition_by is not None \
-            else base.summary.get("partition_by")
+        tgt_cols = self.read(spark, table).columns
         if not key_cols:
             raise ValueError("merge_upsert needs at least one key column")
         missing = [k for k in key_cols if k not in source.columns]
         if missing:
             raise ValueError(f"key columns {missing} not in source "
                              f"columns {source.columns}")
-        base_schema = base.summary.get("schema")
-        tgt_cols = (
-            [f["name"] for f in base_schema["fields"]]
-            if base_schema is not None
-            else self._read_dirs(spark, base.paths, None).columns
-        )
         if set(source.columns) != set(tgt_cols):
             raise ValueError(
                 f"merge_upsert source columns {sorted(source.columns)} != "
                 f"target columns {sorted(tgt_cols)}: MERGE is not a "
                 "schema-evolution path"
             )
-
-        snap_id = self._new_snap_id()
-        # materialize the source FIRST: it is the new data dir of the
-        # final view, and re-reading it from disk makes the per-dir
-        # probes and the anti-join rewrite scan a cheap stable delta
-        # instead of recomputing an arbitrary upstream plan per dir
-        src_dir = self._new_data_dir(table, snap_id)
-        self._write_data(source, src_dir, pb)
-        src = self._read_dirs(spark, [src_dir], source.schema.jsonValue())
-
-        dup = (src.dropna(subset=key_cols).groupBy(*key_cols).count()
-               .where(F.col("count") > 1).limit(1).count())
-        if dup:
-            shutil.rmtree(src_dir, ignore_errors=True)
+        if (source.dropna(subset=key_cols).groupBy(*key_cols).count()
+                .where(F.col("count") > 1).limit(1).count()):
             raise ValueError(
                 "merge_upsert source has duplicate rows per key "
                 f"{key_cols} — a MERGE target row would match multiple "
                 "source rows; de-duplicate the source first"
             )
-        keys = src.select(*key_cols)
-        kb = F.broadcast(keys) if broadcast_keys else keys
 
-        def _untouched(p: str) -> bool:
-            d = self._read_dirs(spark, [p], base_schema)
-            return d.join(kb, key_cols, "left_semi").limit(1).count() == 0
+        def keys(src: DataFrame) -> DataFrame:
+            return F.broadcast(src.select(*key_cols))
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(8, len(base.paths)))
-        ) as ex:
-            empties = list(ex.map(_untouched, base.paths))
-        untouched = [p for p, e in zip(base.paths, empties) if e]
-        affected = [p for p, e in zip(base.paths, empties) if not e]
-        new_paths = list(untouched)
-        if affected:
-            rewrite_dir = src_dir + "_rw"
-            kept = self._read_dirs(spark, affected, base_schema).join(
-                kb, key_cols, "left_anti")
-            self._write_data(kept, rewrite_dir, pb)
-            new_paths.append(rewrite_dir)
-        new_paths.append(src_dir)
-
-        def make(cur: list[Snapshot]) -> Snapshot:
-            if not cur or cur[-1].snapshot_id != base.snapshot_id:
-                raise CommitConflictError(
-                    f"table {table!r} advanced past {base.snapshot_id!r} "
-                    "during merge_upsert — re-run against the new snapshot"
-                )
-            return Snapshot(
-                snap_id, base.snapshot_id, "merge", new_paths,
-                {"merge_keys": list(key_cols),
-                 "rewritten_dirs": len(affected),
-                 "pruned_dirs": len(untouched), "partition_by": pb,
-                 "schema": base_schema or source.schema.jsonValue()},
-            )
-
-        return self._commit(table, make)
+        return self._cow_commit(
+            spark, table, "merge",
+            lambda rows, src: rows.join(keys(src), key_cols, "left_semi"),
+            lambda rows, src: rows.join(keys(src), key_cols, "left_anti"),
+            {"merge_keys": list(key_cols)}, new_df=source)
 
     # ---------- maintenance ----------
     def expire_snapshots(self, table: str, keep_last: int = 1) -> dict:
@@ -560,38 +476,21 @@ class ParquetCatalog:
         ``rewrite_data_files``): collapses the O(#commits) union that
         ``read`` otherwise plans over a long append history back to
         one scan node. Commits a normal overwrite snapshot — the
-        table's sticky partition spec is inherited unless overridden,
+        table's partition spec is inherited unless overridden,
         so compaction never flattens a partitioned table — and time
         travel to pre-compaction snapshots keeps working until
         ``expire_snapshots`` retires them.
 
-        No-op when the view already is at most one data dir laid out
-        in the table's spec and ``partition_by`` is ``None`` or that
-        spec: returns the current snapshot id, rewrites nothing and
-        commits nothing (a rewrite would only copy the dir)."""
+        No-op when the view already is at most one data dir and
+        ``partition_by`` is ``None`` or the table's spec: returns the
+        current snapshot id, rewrites nothing and commits nothing (a
+        rewrite would only copy the dir)."""
         cur = self._snapshot(table)
-        spec = cur.summary.get("partition_by")
-        if (len(cur.paths) <= 1 and partition_by in (None, spec)
-                and all(self._laid_out_as(p, spec) for p in cur.paths)):
+        if (len(cur.paths) <= 1
+                and partition_by in (None, cur.summary.get("partition_by"))):
             return cur.snapshot_id
         return self.overwrite_table(self.read(spark, table), table,
                                     partition_by=partition_by)
-
-    @staticmethod
-    def _data_names(path: str) -> list[str]:
-        """Top-level entries of a commit dir that a scan reads (Spark
-        skips ``_``/``.`` names: ``_SUCCESS``, checksum files)."""
-        return [n for n in os.listdir(path) if not n.startswith(("_", "."))]
-
-    @staticmethod
-    def _laid_out_as(path: str, spec: list[str] | None) -> bool:
-        """Whether a commit dir's top level matches ``spec``: only
-        ``spec[0]=`` subdirs when partitioned, no ``k=v`` subdir when
-        flat."""
-        names = ParquetCatalog._data_names(path)
-        if spec:
-            return all(n.startswith(f"{spec[0]}=") for n in names)
-        return not any("=" in n for n in names)
 
     def partition_values(self, table: str, col: str,
                          snapshot_id: str | None = None) -> set[str] | None:
@@ -599,14 +498,13 @@ class ParquetCatalog:
         current), read with ``os.listdir`` alone — no Spark job, no
         parquet footer. A NULL value shows as
         :data:`HIVE_NULL_PARTITION`. ``None`` unless the table spec
-        is exactly ``[col]`` and every dir is laid out that way, i.e.
-        unless the names stand for every row of the view."""
+        is exactly ``[col]``: every dir is laid out in the spec, so
+        then the names stand for every row of the view."""
         snap = self._snapshot(table, snapshot_id)
-        if snap.summary.get("partition_by") != [col] or not all(
-                self._laid_out_as(p, [col]) for p in snap.paths):
+        if snap.summary.get("partition_by") != [col]:
             return None
-        return {n.split("=", 1)[1]
-                for p in snap.paths for n in self._data_names(p)}
+        return {n.split("=", 1)[1] for p in snap.paths
+                for n in os.listdir(p) if n.startswith(f"{col}=")}
 
     # ---------- reads ----------
     @staticmethod
@@ -626,7 +524,14 @@ class ParquetCatalog:
         (b) older dirs null-fill columns added by later commits
         without per-file inference. Legacy manifests without a
         recorded schema fall back to inference + allowMissingColumns.
+        An empty path list reads as the empty view.
         """
+        if not paths:
+            if schema_json is not None:
+                return spark.createDataFrame(
+                    [], schema=StructType.fromJson(schema_json))
+            return spark.createDataFrame([], schema="dummy string").limit(0)
+
         def one(p: str) -> DataFrame:
             r = spark.read.option("mergeSchema", "false")
             if schema_json is not None:
@@ -657,12 +562,6 @@ class ParquetCatalog:
     def read(self, spark: SparkSession, table: str,
              snapshot_id: str | None = None) -> DataFrame:
         snap = self._snapshot(table, snapshot_id)
-        schema_json = snap.summary.get("schema")
-        if not snap.paths:
-            if schema_json is not None:
-                return spark.createDataFrame(
-                    [], schema=StructType.fromJson(schema_json))
-            return spark.createDataFrame([], schema="dummy string").limit(0)
         # Trade: the plan grows O(#append commits since last rewrite),
         # so a long-lived high-frequency append table wants periodic
         # compaction (overwrite_table with the current view collapses
@@ -670,7 +569,8 @@ class ParquetCatalog:
         # already do). Iceberg does this in metadata (one manifest
         # list per snapshot, planned in a single scan node), which is
         # one of the reasons the real deployment uses sources/iceberg.py.
-        return self._read_dirs(spark, snap.paths, schema_json)
+        return self._read_dirs(spark, snap.paths,
+                               snap.summary.get("schema"))
 
     def read_appended(self, spark: SparkSession, table: str,
                       since_snapshot_id: str | None,
@@ -688,48 +588,32 @@ class ParquetCatalog:
         must fall back to a full recompute (Iceberg's incremental scan
         refuses the same way).
         """
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"no snapshots for table {table!r}")
-        ids = [s.snapshot_id for s in snaps]
-        if until_snapshot_id is None:
-            until_snapshot_id = ids[-1]
-        if until_snapshot_id not in ids:
-            raise ValueError(
-                f"snapshot {until_snapshot_id!r} not found for table "
-                f"{table!r} (expired or never existed)")
+        until = self._snapshot(table, until_snapshot_id)
         if since_snapshot_id is None:
-            return self.read(spark, table, until_snapshot_id)
-        if since_snapshot_id not in ids:
-            raise ValueError(
-                f"snapshot {since_snapshot_id!r} not found for table "
-                f"{table!r} (expired or never existed)")
-        lo, hi = ids.index(since_snapshot_id), ids.index(until_snapshot_id)
+            return self._read_dirs(spark, until.paths,
+                                   until.summary.get("schema"))
+        since = self._snapshot(table, since_snapshot_id)
+        snaps = self.snapshots(table)
+        lo, hi = snaps.index(since), snaps.index(until)
         if hi < lo:
             raise ValueError(
-                f"until snapshot {until_snapshot_id!r} predates since "
-                f"snapshot {since_snapshot_id!r} for table {table!r}")
+                f"until snapshot {until.snapshot_id!r} predates since "
+                f"snapshot {since.snapshot_id!r} for table {table!r}")
         rng = snaps[lo + 1: hi + 1]
         non_append = [s.snapshot_id for s in rng if s.operation != "append"]
         if non_append:
             raise ValueError(
                 f"incremental read of table {table!r} is undefined: "
-                f"snapshots {non_append} in ({since_snapshot_id!r}, "
-                f"{until_snapshot_id!r}] are not appends — fall back to "
+                f"snapshots {non_append} in ({since.snapshot_id!r}, "
+                f"{until.snapshot_id!r}] are not appends — fall back to "
                 "a full recompute from the current view")
-        since_paths = set(snaps[lo].paths)
+        since_paths = set(since.paths)
         new_paths: list[str] = []
         for s in rng:
             for p in s.paths:
                 if p not in since_paths and p not in new_paths:
                     new_paths.append(p)
-        schema_json = snaps[hi].summary.get("schema")
-        if not new_paths:
-            if schema_json is not None:
-                return spark.createDataFrame(
-                    [], schema=StructType.fromJson(schema_json))
-            return spark.createDataFrame([], schema="dummy string").limit(0)
-        return self._read_dirs(spark, new_paths, schema_json)
+        return self._read_dirs(spark, new_paths, until.summary.get("schema"))
 
     def exists(self, table: str) -> bool:
         return bool(self.snapshots(table))

@@ -154,15 +154,14 @@ class IcebergCatalog:
         w.createOrReplace()
         return self.current_snapshot_id(table)
 
-    def delete_where(self, spark: SparkSession, table: str, predicate: str,
-                     partition_by: list[str] | None = None) -> str:
+    def delete_where(self, spark: SparkSession, table: str,
+                     predicate: str) -> str:
         """Iceberg ``DELETE FROM t WHERE p``.
 
         Native semantics match the shim by construction: only
         predicate=TRUE rows are deleted (NULL rows retained), fully
         matched files drop via metadata, partially matched files are
-        rewritten (copy-on-write). ``partition_by`` is accepted for
-        signature parity; Iceberg keeps the table's own partition spec.
+        rewritten (copy-on-write).
         """
         if not self.exists(table):
             raise FileNotFoundError(f"no snapshots for table {table!r}")
@@ -170,14 +169,11 @@ class IcebergCatalog:
         return self.current_snapshot_id(table)
 
     def replace_where(self, spark: SparkSession, df: DataFrame, table: str,
-                      predicate: str,
-                      partition_by: list[str] | None = None) -> str:
+                      predicate: str) -> str:
         """Iceberg dynamic predicate overwrite:
         ``df.writeTo(t).overwrite(expr(p))`` — rows matching the
         predicate are replaced by ``df`` in one atomic commit (the
-        continuous-aggregate refresh primitive). ``partition_by`` is
-        accepted for signature parity; Iceberg keeps the table's own
-        partition spec."""
+        continuous-aggregate refresh primitive)."""
         from pyspark.sql import functions as F
 
         if not self.exists(table):
@@ -189,19 +185,14 @@ class IcebergCatalog:
         return self.current_snapshot_id(table)
 
     def merge_upsert(self, spark: SparkSession, source: DataFrame,
-                     table: str, key_cols: list[str],
-                     partition_by: list[str] | None = None,
-                     broadcast_keys: bool = True) -> str:
+                     table: str, key_cols: list[str]) -> str:
         """Native ``MERGE INTO t USING s ON t.k = s.k WHEN MATCHED
         THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``.
 
         Semantics match the shim by construction: NULL keys never
         match (``=``), duplicate non-NULL source keys raise at runtime
         (Iceberg's "multiple source rows matched"), copy-on-write
-        rewrites only the files containing matches. ``partition_by``
-        and ``broadcast_keys`` are accepted for signature parity;
-        Iceberg keeps the table's own spec and Spark's AQE/statistics
-        pick the join strategy."""
+        rewrites only the files containing matches."""
         if not self.exists(table):
             raise FileNotFoundError(
                 f"no snapshots for table {table!r} — create it with "
@@ -267,9 +258,9 @@ class IcebergCatalog:
 
     def compact(self, spark: SparkSession, table: str,
                 partition_by: list[str] | None = None) -> str:
-        """Iceberg's ``rewrite_data_files`` (bin-packing compaction).
-        ``partition_by`` is accepted for signature parity; Iceberg
-        rewrites within the table's own partition spec."""
+        """Iceberg's ``rewrite_data_files`` (bin-packing compaction),
+        within the table's own partition spec: ``partition_by`` is not
+        applied."""
         if not self.exists(table):
             raise FileNotFoundError(f"no snapshots for table {table!r}")
         spark.sql(
