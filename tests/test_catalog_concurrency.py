@@ -43,6 +43,14 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id int, day string, v double")
 
 
+def _unreferenced_dirs(cat, table):
+    """``snap=`` dirs on disk that no snapshot of ``table`` references."""
+    referenced = {os.path.basename(p)
+                  for s in cat.snapshots(table) for p in s.paths}
+    return sorted(n for n in os.listdir(os.path.join(cat.root, table))
+                  if n.startswith("snap=") and n not in referenced)
+
+
 def test_delete_where_conflict_raises(spark, cat):
     """A commit landing between delete_where's probe and its manifest
     commit must raise CommitConflictError — the rewrite was computed
@@ -62,6 +70,7 @@ def test_delete_where_conflict_raises(spark, cat):
     cat._write_data = inject
     with pytest.raises(CommitConflictError):
         cat.delete_where(spark, "t", "v > 5.0")
+    assert _unreferenced_dirs(cat, "t") == []
     # nothing committed by the failed delete; both appends intact
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 2, 3]
     # the retry (fresh probe against the new snapshot) succeeds
@@ -90,6 +99,7 @@ def test_replace_where_conflict_raises(spark, cat):
     with pytest.raises(CommitConflictError):
         cat.replace_where(spark, _df(spark, [(9, "d2", 9.0)]), "t",
                           "day = 'd2'")
+    assert _unreferenced_dirs(cat, "t") == []
     assert [s.operation for s in cat.snapshots("t")] == ["append"] * 2
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 2, 3]
     cat._write_data = orig
@@ -116,6 +126,7 @@ def test_append_conflicts_with_concurrent_spec_change(spark, cat):
     cat._write_data = inject
     with pytest.raises(CommitConflictError):
         cat.append(_df(spark, [(2, "d2", 2.0)]), "t")
+    assert _unreferenced_dirs(cat, "t") == []
     assert len(cat.snapshots("t")) == 2
     cat._write_data = orig
     cat.append(_df(spark, [(2, "d2", 2.0)]), "t")
@@ -202,6 +213,7 @@ def test_merge_upsert_conflict_raises(spark, cat):
     with pytest.raises(CommitConflictError):
         cat.merge_upsert(spark, _df(spark, [(1, "d1", 10.0)]), "t",
                          key_cols=["id"])
+    assert _unreferenced_dirs(cat, "t") == []
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 5]
     cat._write_data = orig
     cat.merge_upsert(spark, _df(spark, [(1, "d1", 10.0)]), "t",

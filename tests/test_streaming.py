@@ -6,8 +6,8 @@ second. The state-TTL tests keep the 1 s processing-time trigger,
 because their timeouts are measured in processing time.
 """
 
+import datetime as dt
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,10 +16,15 @@ from yahoo_anomaly_detection_spark.operators.rollup import (
     rollup_cascade,
     rollup_points,
 )
-from yahoo_anomaly_detection_spark.streaming.rollup_stream import (
+from yahoo_anomaly_detection_spark.streaming.hop import (
+    EVENTS_DDL,
     POINTS_DDL,
-    read_point_stream,
-    start_stream_to_parquet,
+    TIERS_DDL,
+    TRANSCRIPTS_DDL,
+    read_parquet_stream,
+    start_to_parquet,
+)
+from yahoo_anomaly_detection_spark.streaming.rollup_stream import (
     stream_rollup_1m,
 )
 
@@ -44,8 +49,10 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
     flush = [("a", 30, 0, 1.0), ("b", 31, 0, 2.0)]
 
     _mk_points(spark, early).coalesce(1).write.mode("append").parquet(src)
-    stream = stream_rollup_1m(read_point_stream(spark, src), "10 minutes")
-    q = start_stream_to_parquet(stream, out, ckpt, trigger_secs=0)
+    stream = stream_rollup_1m(
+        read_parquet_stream(spark, src, POINTS_DDL), "10 minutes"
+    )
+    q = start_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         _mk_points(spark, flush).coalesce(1).write.mode("append").parquet(src)
@@ -96,6 +103,17 @@ def _mk_transcripts(spark, rows):
     )
 
 
+def _mk_turns(spark, rows):
+    """rows: (conv_id, turn_idx, minute, second) -> transcript rows."""
+    return spark.createDataFrame(
+        [
+            (c, i, "user", "t", None, dt.datetime(2024, 1, 1, 0, m, s))
+            for c, i, m, s in rows
+        ],
+        TRANSCRIPTS_DDL,
+    )
+
+
 def test_stream_latency_matches_batch(spark, tmp_path):
     """Streamed latency derivation (applyInPandasWithState) must equal
     the batch lag window on the same in-order input, INCLUDING turns
@@ -105,8 +123,6 @@ def test_stream_latency_matches_batch(spark, tmp_path):
         transcripts_latency,
     )
     from yahoo_anomaly_detection_spark.streaming.latency_stream import (
-        read_transcript_stream,
-        start_points_to_parquet,
         stream_latency,
     )
 
@@ -119,17 +135,20 @@ def test_stream_latency_matches_batch(spark, tmp_path):
 
     _mk_transcripts(spark, f1).coalesce(1).write.mode("append").parquet(src)
     stream = stream_latency(
-        read_transcript_stream(spark, src, max_files_per_trigger=1)
+        read_parquet_stream(spark, src, TRANSCRIPTS_DDL,
+                            max_files_per_trigger=1)
     )
-    q = start_points_to_parquet(stream, out, ckpt, trigger_secs=0)
+    q = start_to_parquet(stream, out, ckpt, trigger_secs=0)
     # hop 2 chains off hop 1's sink dir. NOTE: that dir has a
     # _spark_metadata log, so hop 2's file source only sees files the
     # hop-1 QUERY committed — the watermark-advancing flush row must
     # flow through hop 1 (a late transcript), not a side batch write.
     out2 = str(tmp_path / "tiers")
     ckpt2 = str(tmp_path / "tckpt2")
-    q2 = start_stream_to_parquet(
-        stream_rollup_1m(read_point_stream(spark, out), "10 minutes"),
+    q2 = start_to_parquet(
+        stream_rollup_1m(
+            read_parquet_stream(spark, out, POINTS_DDL), "10 minutes"
+        ),
         out2, ckpt2,
         trigger_secs=0,
     )
@@ -203,13 +222,11 @@ def test_stream_latency_state_ttl_evicts_idle(spark, tmp_path):
     noDataMicroBatches is disabled for the query: Spark 4.1's
     FlatMapGroupsInPandasWithStateExec NPEs when a NO-DATA batch is
     planned (copy() with a null session), and processing-time timeouts
-    schedule exactly such batches (see latency_stream docstring);
+    schedule exactly such batches (see hop.keyed_state docstring);
     with the conf off, timeouts process during data batches."""
     import time as _time
 
     from yahoo_anomaly_detection_spark.streaming.latency_stream import (
-        read_transcript_stream,
-        start_points_to_parquet,
         stream_latency,
     )
 
@@ -222,10 +239,11 @@ def test_stream_latency_state_ttl_evicts_idle(spark, tmp_path):
         "append"
     ).parquet(src)
     stream = stream_latency(
-        read_transcript_stream(spark, src, max_files_per_trigger=1),
+        read_parquet_stream(spark, src, TRANSCRIPTS_DDL,
+                            max_files_per_trigger=1),
         state_ttl_ms=500,
     )
-    q = start_points_to_parquet(stream, out, ckpt)
+    q = start_to_parquet(stream, out, ckpt)
     try:
         q.processAllAvailable()
         _time.sleep(1.5)  # let a's TTL lapse
@@ -259,16 +277,20 @@ def test_stream_resumes_from_checkpoint(spark, tmp_path):
     _mk_points(spark, [("c", 0, 1, 1.0)]).coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    s1 = stream_rollup_1m(read_point_stream(spark, src), "5 minutes")
-    q1 = start_stream_to_parquet(s1, out, ckpt, trigger_secs=0)
+    s1 = stream_rollup_1m(
+        read_parquet_stream(spark, src, POINTS_DDL), "5 minutes"
+    )
+    q1 = start_to_parquet(s1, out, ckpt, trigger_secs=0)
     q1.processAllAvailable()
     q1.stop()
     # restart from the same checkpoint; new data triggers finalization
     _mk_points(spark, [("c", 20, 0, 2.0)]).coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    s2 = stream_rollup_1m(read_point_stream(spark, src), "5 minutes")
-    q2 = start_stream_to_parquet(s2, out, ckpt, trigger_secs=0)
+    s2 = stream_rollup_1m(
+        read_parquet_stream(spark, src, POINTS_DDL), "5 minutes"
+    )
+    q2 = start_to_parquet(s2, out, ckpt, trigger_secs=0)
     q2.processAllAvailable()
     q2.stop()
     got = spark.read.parquet(out)
@@ -296,7 +318,6 @@ def test_stream_rolling_flags_match_batch(spark, tmp_path):
     F.avg/F.stddev_pop inside rowsBetween(-k,-1)."""
     from yahoo_anomaly_detection_spark.operators.stats import rolling_stats
     from yahoo_anomaly_detection_spark.streaming.flags_stream import (
-        start_flags_to_parquet,
         stream_rolling_flags,
     )
 
@@ -317,7 +338,7 @@ def test_stream_rolling_flags_match_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_flags_to_parquet(
+    q = start_to_parquet(
         stream_rolling_flags(tiers, threshold=thr, k=k), out, ckpt,
         trigger_secs=0
     )
@@ -393,25 +414,11 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
     )
     from yahoo_anomaly_detection_spark.operators.stats import rolling_stats
     from yahoo_anomaly_detection_spark.streaming.latency_stream import (
-        TRANSCRIPTS_DDL,
-        read_transcript_stream,
-        start_points_to_parquet,
         stream_latency,
     )
     from yahoo_anomaly_detection_spark.streaming.flags_stream import (
-        start_flags_to_parquet,
         stream_rolling_flags,
     )
-
-    def mk_turns(rows):
-        return spark.createDataFrame(
-            [
-                (c, i, "user", "t", None,
-                 dt.datetime(2024, 1, 1, 0, m, s))
-                for c, i, m, s in rows
-            ],
-            TRANSCRIPTS_DDL,
-        )
 
     # conv a: steady ~20s cadence, then a 100s stall inside minute 3
     # (latency spike -> pred=1); conv b: steady 30s cadence
@@ -433,15 +440,17 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
     flags = str(tmp_path / "flags")
     os.makedirs(src)
 
-    mk_turns(f1).coalesce(1).write.mode("append").parquet(src)
-    q1 = start_points_to_parquet(
-        stream_latency(read_transcript_stream(spark, src)),
+    _mk_turns(spark, f1).coalesce(1).write.mode("append").parquet(src)
+    q1 = start_to_parquet(
+        stream_latency(read_parquet_stream(spark, src, TRANSCRIPTS_DDL)),
         pts, str(tmp_path / "ck1"),
         trigger_secs=0,
     )
     q1.processAllAvailable()  # create pts dir before hop 2 starts
-    q2 = start_stream_to_parquet(
-        stream_rollup_1m(read_point_stream(spark, pts), "2 minutes"),
+    q2 = start_to_parquet(
+        stream_rollup_1m(
+            read_parquet_stream(spark, pts, POINTS_DDL), "2 minutes"
+        ),
         tiers, str(tmp_path / "ck2"),
         trigger_secs=0,
     )
@@ -456,7 +465,7 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 8)
         .parquet(tiers)
     )
-    q3 = start_flags_to_parquet(
+    q3 = start_to_parquet(
         stream_rolling_flags(tier_stream, threshold=15.0, k=3),
         flags, str(tmp_path / "ck3"),
         trigger_secs=0,
@@ -464,7 +473,8 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
     try:
         for batch in (f2, flush, flush2):
             q3.processAllAvailable()
-            mk_turns(batch).coalesce(1).write.mode("append").parquet(src)
+            _mk_turns(spark, batch).coalesce(1).write.mode("append") \
+                .parquet(src)
             q1.processAllAvailable()
             q2.processAllAvailable()
         q1.processAllAvailable()
@@ -479,7 +489,7 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
     }
     # batch expectation over exactly the finalized buckets
     batch_tiers = rollup_points(
-        transcripts_latency(mk_turns(f1 + f2 + flush)), "1m"
+        transcripts_latency(_mk_turns(spark, f1 + f2 + flush)), "1m"
     )
     finalized = spark.read.parquet(tiers).select(
         "conv_id", "bucket_start"
@@ -522,9 +532,6 @@ def test_stream_latency_out_of_order_never_regresses_state(spark, tmp_path):
     import datetime as dt
 
     from yahoo_anomaly_detection_spark.streaming.latency_stream import (
-        TRANSCRIPTS_DDL,
-        read_transcript_stream,
-        start_points_to_parquet,
         stream_latency,
     )
 
@@ -542,8 +549,8 @@ def test_stream_latency_out_of_order_never_regresses_state(spark, tmp_path):
     # batch 1: turns 4,5 accepted (state -> turn 5 @ 00:00:50)
     mk([("a", 4, 40), ("a", 5, 50)]).coalesce(1) \
         .write.mode("append").parquet(src)
-    q = start_points_to_parquet(
-        stream_latency(read_transcript_stream(spark, src)),
+    q = start_to_parquet(
+        stream_latency(read_parquet_stream(spark, src, TRANSCRIPTS_DDL)),
         out, str(tmp_path / "ck"),
         trigger_secs=0,
     )
@@ -586,7 +593,6 @@ def test_stream_flags_state_ttl_evicts_window(spark, tmp_path):
     import time as _time
 
     from yahoo_anomaly_detection_spark.streaming.flags_stream import (
-        start_flags_to_parquet,
         stream_rolling_flags,
     )
 
@@ -604,7 +610,7 @@ def test_stream_flags_state_ttl_evicts_window(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_flags_to_parquet(
+    q = start_to_parquet(
         stream_rolling_flags(tiers, threshold=4.0, k=3,
                              state_ttl_ms=500),
         out, ckpt,
@@ -651,25 +657,11 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     )
     from yahoo_anomaly_detection_spark.operators.stats import rolling_stats
     from yahoo_anomaly_detection_spark.streaming.latency_stream import (
-        TRANSCRIPTS_DDL,
-        read_transcript_stream,
-        start_points_to_parquet,
         stream_latency,
     )
     from yahoo_anomaly_detection_spark.streaming.flags_stream import (
-        start_flags_to_parquet,
         stream_rolling_flags,
     )
-
-    def mk_turns(rows):
-        return spark.createDataFrame(
-            [
-                (c, i, "user", "t", None,
-                 dt.datetime(2024, 1, 1, 0, m, s))
-                for c, i, m, s in rows
-            ],
-            TRANSCRIPTS_DDL,
-        )
 
     f1 = [("a", 0, 0, 10), ("a", 1, 0, 30), ("a", 2, 0, 50),
           ("a", 3, 1, 10), ("a", 4, 1, 30), ("b", 0, 0, 5),
@@ -691,15 +683,17 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     )
 
     def start_q1():
-        return start_points_to_parquet(
-            stream_latency(read_transcript_stream(spark, src)),
+        return start_to_parquet(
+            stream_latency(read_parquet_stream(spark, src, TRANSCRIPTS_DDL)),
             pts, str(tmp_path / "ck1"),
             trigger_secs=0,
         )
 
     def start_q2():
-        return start_stream_to_parquet(
-            stream_rollup_1m(read_point_stream(spark, pts), "2 minutes"),
+        return start_to_parquet(
+            stream_rollup_1m(
+                read_parquet_stream(spark, pts, POINTS_DDL), "2 minutes"
+            ),
             tiers, str(tmp_path / "ck2"),
             trigger_secs=0,
         )
@@ -710,7 +704,7 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
             .option("maxFilesPerTrigger", 8)
             .parquet(tiers)
         )
-        return start_flags_to_parquet(
+        return start_to_parquet(
             stream_rolling_flags(tier_stream, threshold=15.0, k=3),
             flags, str(tmp_path / "ck3"),
             trigger_secs=0,
@@ -720,7 +714,7 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     # topology unevenly: downstream hops die first, hop 1 keeps
     # running long enough to ingest f2 (its sink now LEADS the
     # downstream checkpoints), then dies too
-    mk_turns(f1).coalesce(1).write.mode("append").parquet(src)
+    _mk_turns(spark, f1).coalesce(1).write.mode("append").parquet(src)
     q1 = start_q1()
     q1.processAllAvailable()
     q2 = start_q2()
@@ -729,7 +723,7 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     q3.processAllAvailable()
     q3.stop()
     q2.stop()
-    mk_turns(f2).coalesce(1).write.mode("append").parquet(src)
+    _mk_turns(spark, f2).coalesce(1).write.mode("append").parquet(src)
     q1.processAllAvailable()
     q1.stop()
 
@@ -741,7 +735,8 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     try:
         for batch in (flush, flush2):
             q3.processAllAvailable()
-            mk_turns(batch).coalesce(1).write.mode("append").parquet(src)
+            _mk_turns(spark, batch).coalesce(1).write.mode("append") \
+                .parquet(src)
             q1.processAllAvailable()
             q2.processAllAvailable()
         q1.processAllAvailable()
@@ -764,7 +759,7 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     ))
 
     batch_tiers = rollup_points(
-        transcripts_latency(mk_turns(f1 + f2 + flush)), "1m"
+        transcripts_latency(_mk_turns(spark, f1 + f2 + flush)), "1m"
     )
     finalized = spark.read.parquet(tiers).select(
         "conv_id", "bucket_start"
@@ -807,7 +802,6 @@ def test_stream_rollup_cascade_matches_batch(spark, tmp_path):
     streaming mode. Exactness holds because the cascade consumes only
     FINALIZED 1m rows and sums the decomposed tier state."""
     from yahoo_anomaly_detection_spark.streaming.rollup_stream import (
-        read_tier_stream,
         stream_rollup_cascade,
     )
 
@@ -837,14 +831,16 @@ def test_stream_rollup_cascade_matches_batch(spark, tmp_path):
                [("a", 7, 0, 0.0)])
 
     mk(f1).coalesce(1).write.mode("append").parquet(src)
-    q1 = start_stream_to_parquet(
-        stream_rollup_1m(read_point_stream(spark, src), "10 minutes"),
+    q1 = start_to_parquet(
+        stream_rollup_1m(
+            read_parquet_stream(spark, src, POINTS_DDL), "10 minutes"
+        ),
         t1m, str(tmp_path / "c_ck1"),
         trigger_secs=0,
     )
     q1.processAllAvailable()
-    q2 = start_stream_to_parquet(
-        stream_rollup_cascade(read_tier_stream(spark, t1m), "1h",
+    q2 = start_to_parquet(
+        stream_rollup_cascade(read_parquet_stream(spark, t1m, TIERS_DDL), "1h",
                               "2 hours"),
         t1h, str(tmp_path / "c_ck2"),
         trigger_secs=0,
@@ -901,7 +897,6 @@ def test_stream_full_tier_chain_1m_1h_1d(spark, tmp_path):
     import datetime as dt
 
     from yahoo_anomaly_detection_spark.streaming.rollup_stream import (
-        read_tier_stream,
         stream_rollup_cascade,
     )
 
@@ -929,21 +924,23 @@ def test_stream_full_tier_chain_1m_1h_1d(spark, tmp_path):
                             (2, 18), (2, 21))]
 
     mk(data).coalesce(1).write.mode("append").parquet(src)
-    q1 = start_stream_to_parquet(
-        stream_rollup_1m(read_point_stream(spark, src), "10 minutes"),
+    q1 = start_to_parquet(
+        stream_rollup_1m(
+            read_parquet_stream(spark, src, POINTS_DDL), "10 minutes"
+        ),
         t1m, str(tmp_path / "d_ck1"),
         trigger_secs=0,
     )
     q1.processAllAvailable()
-    q2 = start_stream_to_parquet(
-        stream_rollup_cascade(read_tier_stream(spark, t1m), "1h",
+    q2 = start_to_parquet(
+        stream_rollup_cascade(read_parquet_stream(spark, t1m, TIERS_DDL), "1h",
                               "2 hours"),
         t1h, str(tmp_path / "d_ck2"),
         trigger_secs=0,
     )
     q2.processAllAvailable()
-    q3 = start_stream_to_parquet(
-        stream_rollup_cascade(read_tier_stream(spark, t1h), "1d",
+    q3 = start_to_parquet(
+        stream_rollup_cascade(read_parquet_stream(spark, t1h, TIERS_DDL), "1d",
                               "2 hours"),
         t1d, str(tmp_path / "d_ck3"),
         trigger_secs=0,
@@ -1019,7 +1016,6 @@ def test_stream_alert_states_match_batch(spark, tmp_path):
         alert_states,
     )
     from yahoo_anomaly_detection_spark.streaming.alerts_stream import (
-        start_alerts_to_parquet,
         stream_alert_states,
     )
 
@@ -1040,7 +1036,7 @@ def test_stream_alert_states_match_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_alerts_to_parquet(
+    q = start_to_parquet(
         stream_alert_states(tiers, threshold=thr, for_k=for_k), out, ckpt,
         trigger_secs=0
     )
@@ -1093,7 +1089,6 @@ def test_stream_absence_alerts_fire_and_rearm(spark, tmp_path):
         absent_flags,
     )
     from yahoo_anomaly_detection_spark.streaming.absence_stream import (
-        start_absence_to_parquet,
         stream_absence_alerts,
     )
 
@@ -1128,7 +1123,7 @@ def test_stream_absence_alerts_fire_and_rearm(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_absence_to_parquet(
+    q = start_to_parquet(
         stream_absence_alerts(tiers, k=3, bucket_seconds=60,
                               watermark_delay="0 seconds"),
         out, ckpt,
@@ -1185,7 +1180,6 @@ def test_stream_absence_single_batch_interior_gaps(spark, tmp_path):
     retroactive channel emits both alerts immediately — no watermark
     movement required (it is the timeout channel that needs one)."""
     from yahoo_anomaly_detection_spark.streaming.absence_stream import (
-        start_absence_to_parquet,
         stream_absence_alerts,
     )
 
@@ -1203,7 +1197,7 @@ def test_stream_absence_single_batch_interior_gaps(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_absence_to_parquet(
+    q = start_to_parquet(
         stream_absence_alerts(tiers, k=3, bucket_seconds=60,
                               watermark_delay="0 seconds"),
         out, ckpt,
@@ -1267,7 +1261,7 @@ def test_stream_dedup_collapses_redeliveries(spark, tmp_path):
     tiers = stream_rollup_1m(
         deduped.select("conv_id", "ts", "value"), set_watermark=False)
     mk(b1).coalesce(1).write.mode("append").parquet(src)
-    q = start_stream_to_parquet(tiers, out, ckpt, trigger_secs=0)
+    q = start_to_parquet(tiers, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         mk(b2).coalesce(1).write.mode("append").parquet(src)
@@ -1319,8 +1313,6 @@ def test_stream_hll_matches_batch_estimate(spark, tmp_path):
         hll_distinct,
     )
     from yahoo_anomaly_detection_spark.streaming.sketch_stream import (
-        read_event_stream,
-        start_sketches_to_parquet,
         stream_hll_distinct,
     )
 
@@ -1338,8 +1330,9 @@ def test_stream_hll_matches_batch_estimate(spark, tmp_path):
 
     _mk_events(spark, batch1).coalesce(1).write.mode("append") \
         .parquet(src)
-    stream = stream_hll_distinct(read_event_stream(spark, src), p=8)
-    q = start_sketches_to_parquet(stream, out, ckpt, trigger_secs=0)
+    stream = stream_hll_distinct(
+        read_parquet_stream(spark, src, EVENTS_DDL), p=8)
+    q = start_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         _mk_events(spark, batch2).coalesce(1).write.mode("append") \
@@ -1381,8 +1374,6 @@ def test_stream_sessions_match_batch_sessionize(spark, tmp_path):
         session_stats,
     )
     from yahoo_anomaly_detection_spark.streaming.session_stream import (
-        read_session_event_stream,
-        start_sessions_to_parquet,
         stream_sessions,
     )
 
@@ -1408,9 +1399,9 @@ def test_stream_sessions_match_batch_sessionize(spark, tmp_path):
             "string, value double")
 
     mk2(batch1).coalesce(1).write.mode("append").parquet(src)
-    stream = stream_sessions(read_session_event_stream(spark, src),
+    stream = stream_sessions(read_parquet_stream(spark, src, EVENTS_DDL),
                              gap_seconds=GAP, watermark="5 minutes")
-    q = start_sessions_to_parquet(stream, out, ckpt, trigger_secs=0)
+    q = start_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
         mk2(batch2).coalesce(1).write.mode("append").parquet(src)
@@ -1458,7 +1449,6 @@ def test_stream_drift_matches_batch_on_closed_days(spark, tmp_path):
     checkpoint continues the day/prev-day chain, never re-emitting."""
     from yahoo_anomaly_detection_spark.operators import statstests
     from yahoo_anomaly_detection_spark.streaming.drift_stream import (
-        start_drift_to_parquet,
         stream_drift_1d,
     )
 
@@ -1488,7 +1478,7 @@ def test_stream_drift_matches_batch_on_closed_days(spark, tmp_path):
         .write.mode("append").parquet(src)
     stream = stream_drift_1d(
         spark.readStream.schema(schema).parquet(src))
-    q = start_drift_to_parquet(stream, out, ckpt, trigger_secs=0)
+    q = start_to_parquet(stream, out, ckpt, trigger_secs=0)
     try:
         q.processAllAvailable()
     finally:
@@ -1498,7 +1488,7 @@ def test_stream_drift_matches_batch_on_closed_days(spark, tmp_path):
         .write.mode("append").parquet(src)
     stream2 = stream_drift_1d(
         spark.readStream.schema(schema).parquet(src))
-    q2 = start_drift_to_parquet(stream2, out, ckpt, trigger_secs=0)
+    q2 = start_to_parquet(stream2, out, ckpt, trigger_secs=0)
     try:
         q2.processAllAvailable()
     finally:
@@ -1554,7 +1544,6 @@ def test_stream_drift_drops_backwards_days(spark, tmp_path):
     must equal the batch walk over the in-order rows only."""
     from yahoo_anomaly_detection_spark.operators import statstests
     from yahoo_anomaly_detection_spark.streaming.drift_stream import (
-        start_drift_to_parquet,
         stream_drift_1d,
     )
 
@@ -1574,7 +1563,7 @@ def test_stream_drift_drops_backwards_days(spark, tmp_path):
 
     _mk_drift_tier_rows(spark, batch1).coalesce(1) \
         .write.mode("append").parquet(src)
-    q = start_drift_to_parquet(
+    q = start_to_parquet(
         stream_drift_1d(spark.readStream.schema(schema).parquet(src)),
         out, ckpt, trigger_secs=0)
     try:
@@ -1583,7 +1572,7 @@ def test_stream_drift_drops_backwards_days(spark, tmp_path):
         q.stop()
     _mk_drift_tier_rows(spark, batch2).coalesce(1) \
         .write.mode("append").parquet(src)
-    q2 = start_drift_to_parquet(
+    q2 = start_to_parquet(
         stream_drift_1d(spark.readStream.schema(schema).parquet(src)),
         out, ckpt, trigger_secs=0)
     try:

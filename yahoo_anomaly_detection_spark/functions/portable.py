@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -20,3 +22,20 @@ def portable_round(c: Column, nd: int = 4) -> Column:
     of boundary values like mean = 46.23125."""
     p = F.lit(float(10 ** nd))
     return F.round((c + F.lit(1e-9)) * p) / p
+
+
+def np_portable_round(x, nd: int = 4):
+    """numpy twin of :func:`portable_round` for the streaming kernels,
+    which round in Python and must emit the batch operators' values.
+
+    Spark rounds the scaled double HALF_UP on its decimal string; that
+    string round-trips, so it can only sit on a .5 tie when the double
+    itself does. Rounding the double's exact value half away from zero
+    (split off the fraction exactly with ``trunc``) therefore gives
+    Spark's result, where ``floor(y + 0.5)`` would not when the add
+    itself rounds (``y`` just below 0.5, or beyond 2^52)."""
+    p = float(10 ** nd)
+    y = (np.asarray(x, np.float64) + 1e-9) * p
+    r = np.trunc(y)
+    r = r + np.copysign(np.abs(y - r) >= 0.5, y)
+    return r / p

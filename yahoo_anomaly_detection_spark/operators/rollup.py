@@ -23,7 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 TIERS = ("1m", "1h", "1d")
@@ -51,6 +51,37 @@ def transcripts_latency(df: DataFrame) -> DataFrame:
     )
 
 
+# the decomposable merge state every tier carries (everything else —
+# mean/std/turn_rate — is derived from these by _finish_tier)
+TIER_STATE_COLS = ("conv_id", "bucket_start", "cnt", "vcnt", "sum",
+                   "sum_sq", "min", "max")
+
+
+def point_state(v: Column) -> list[Column]:
+    """The tier-state aggregates over raw point values ``v``."""
+    return [
+        F.count(F.lit(1)).alias("cnt"),
+        F.count(v).alias("vcnt"),
+        F.sum(v).alias("sum"),
+        F.sum(v * v).alias("sum_sq"),
+        F.min(v).alias("min"),
+        F.max(v).alias("max"),
+    ]
+
+
+def merged_state() -> list[Column]:
+    """The tier-state aggregates over lower-tier (or partial) rows:
+    counts and sums add, extremes take the extreme."""
+    return [
+        F.sum("cnt").alias("cnt"),
+        F.sum("vcnt").alias("vcnt"),
+        F.sum("sum").alias("sum"),
+        F.sum("sum_sq").alias("sum_sq"),
+        F.min("min").alias("min"),
+        F.max("max").alias("max"),
+    ]
+
+
 def rollup_points(df: DataFrame, tier: str = "1m",
                   value_col: str = "value") -> DataFrame:
     """Raw point rows (conv_id, ts, value) → one tier table.
@@ -60,17 +91,7 @@ def rollup_points(df: DataFrame, tier: str = "1m",
     (sum, sum_sq, cnt) so tiers recombine exactly.
     """
     v = F.col(value_col).cast("double")
-    agg = (
-        df.groupBy("conv_id", bucket_col(tier))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.count(v).alias("vcnt"),
-            F.sum(v).alias("sum"),
-            F.sum(v * v).alias("sum_sq"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-        )
-    )
+    agg = df.groupBy("conv_id", bucket_col(tier)).agg(*point_state(v))
     return _finish_tier(agg, tier)
 
 
@@ -78,14 +99,7 @@ def _finish_tier(agg: DataFrame, tier: str) -> DataFrame:
     mean = F.col("sum") / F.col("vcnt")
     var = F.greatest(F.col("sum_sq") / F.col("vcnt") - mean * mean, F.lit(0.0))
     return agg.select(
-        "conv_id",
-        "bucket_start",
-        "cnt",
-        "vcnt",
-        "sum",
-        "sum_sq",
-        F.col("min"),
-        F.col("max"),
+        *TIER_STATE_COLS,
         F.when(F.col("vcnt") > 0, mean).alias("mean"),
         F.when(F.col("vcnt") > 0, F.sqrt(var)).alias("std"),
         (F.col("cnt") / F.lit(float(TIER_SECONDS[tier]))).alias("turn_rate"),
@@ -94,27 +108,11 @@ def _finish_tier(agg: DataFrame, tier: str) -> DataFrame:
 
 def rollup_cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:
     """Lower tier → upper tier by exact recombination (no raw re-scan)."""
-    agg = (
-        tier_df.groupBy(
-            "conv_id",
-            F.date_trunc(TIER_TRUNC[to_tier], F.col("bucket_start")).alias("bucket_start"),
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("vcnt").alias("vcnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-    )
+    agg = tier_df.groupBy(
+        "conv_id",
+        F.date_trunc(TIER_TRUNC[to_tier], F.col("bucket_start")).alias("bucket_start"),
+    ).agg(*merged_state())
     return _finish_tier(agg, to_tier)
-
-
-# the decomposable merge state every tier carries (everything else —
-# mean/std/turn_rate — is derived from these by _finish_tier)
-TIER_STATE_COLS = ("conv_id", "bucket_start", "cnt", "vcnt", "sum",
-                   "sum_sq", "min", "max")
 
 
 def merge_tiers(parts: list[DataFrame], tier: str) -> DataFrame:

@@ -29,7 +29,8 @@ commit time (Iceberg fast-append semantics). ``delete_where``,
 whose probe/rewrite depend on the snapshot they read — if another
 commit lands in between they raise :class:`CommitConflictError`
 instead of silently dropping that commit's rows (Iceberg's
-serializable-isolation validation; the caller retries).
+serializable-isolation validation; the caller retries). A commit that
+raises it first removes the data dirs it wrote.
 ``expire_snapshots`` deletes ONLY data dirs that the
 expired snapshots referenced and no retained snapshot still does —
 never "any dir not in the manifest", because a concurrent append
@@ -137,16 +138,28 @@ class ParquetCatalog:
         os.replace(tmp, self._manifest_path(table))  # atomic commit
 
     def _commit(self, table: str,
-                make_snap: Callable[[list[Snapshot]], Snapshot]) -> str:
+                make_snap: Callable[[list[Snapshot]], Snapshot],
+                written: list[str]) -> str:
         """Atomic manifest commit: under the table lock, re-read the
         CURRENT snapshot list and let ``make_snap`` build the new
         snapshot against it (rebase) or raise CommitConflictError
-        (validate). One manifest parse per commit."""
-        with self._lock(table):
-            snaps = self.snapshots(table)
-            snap = make_snap(snaps)
-            self._write_manifest(table, snaps + [snap])
-            return snap.snapshot_id
+        (validate). One manifest parse per commit.
+
+        ``written`` are the data dirs the caller wrote for this commit.
+        A conflict removes them before re-raising: they are named after
+        this commit's fresh snapshot id, so no snapshot and no other
+        writer can reference them, and nothing else would reclaim them
+        before :meth:`remove_orphan_files`' age guard."""
+        try:
+            with self._lock(table):
+                snaps = self.snapshots(table)
+                snap = make_snap(snaps)
+                self._write_manifest(table, snaps + [snap])
+                return snap.snapshot_id
+        except CommitConflictError:
+            for d in written:
+                shutil.rmtree(d, ignore_errors=True)
+            raise
 
     @staticmethod
     def _new_snap_id() -> str:
@@ -196,7 +209,7 @@ class ParquetCatalog:
                             {"added_path": data_dir, "partition_by": pb,
                              "schema": df.schema.jsonValue()})
 
-        return self._commit(table, make)
+        return self._commit(table, make, [data_dir])
 
     def overwrite_table(self, df: DataFrame, table: str,
                         partition_by: list[str] | None = None) -> str:
@@ -214,6 +227,7 @@ class ParquetCatalog:
                 "overwrite", [data_dir],
                 {"partition_by": pb, "schema": df.schema.jsonValue()},
             ),
+            [data_dir],
         )
 
     def _cow_commit(self, spark: SparkSession, table: str, op: str,
@@ -284,15 +298,16 @@ class ParquetCatalog:
             max_workers=max(1, min(8, len(base.paths)))
         ) as ex:
             empty = list(ex.map(untouched, base.paths))
-        paths = [p for p, e in zip(base.paths, empty) if e]
         affected = [p for p, e in zip(base.paths, empty) if not e]
+        new_paths = []
         if affected:
             rewrite_dir = data_dir + "_rw" if new_df is not None else data_dir
             kept = keep(self._read_dirs(spark, affected, schema), written)
             self._write_data(kept, rewrite_dir, spec)
-            paths.append(rewrite_dir)
+            new_paths.append(rewrite_dir)
         if new_df is not None:
-            paths.append(data_dir)
+            new_paths.append(data_dir)
+        paths = [p for p, e in zip(base.paths, empty) if e] + new_paths
         summary = {**summary, "rewritten_dirs": len(affected),
                    "pruned_dirs": len(base.paths) - len(affected),
                    "partition_by": spec, "schema": schema}
@@ -304,7 +319,7 @@ class ParquetCatalog:
                     f"during {op} — re-run against the new snapshot")
             return Snapshot(snap_id, base.snapshot_id, op, paths, summary)
 
-        return self._commit(table, make)
+        return self._commit(table, make, new_paths)
 
     @staticmethod
     def _predicate(predicate: str) -> tuple[Callable, Callable]:

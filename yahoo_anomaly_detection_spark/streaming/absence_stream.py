@@ -59,7 +59,6 @@ from __future__ import annotations
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -168,15 +167,3 @@ def stream_absence_alerts(tiers: DataFrame, k: int = 3,
         )
     )
 
-
-def start_absence_to_parquet(alerts: DataFrame, out_path: str,
-                             checkpoint_path: str, trigger_secs: int = 1):
-    """Append-mode parquet sink with a streaming checkpoint."""
-    return (
-        alerts.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
-    )

@@ -25,7 +25,7 @@ Semantics vs batch (`operators/tsanalytics.py alert_states`,
 
 Scale: state is a single long per live conversation — the smallest
 state of any hop — TTL-evicted like the others (`state_ttl_ms`,
-same Spark 4.1 noDataMicroBatches caveat as latency_stream). The
+same Spark 4.1 noDataMicroBatches caveat, see ``hop.keyed_state``). The
 within-batch run-length recursion is numpy-vectorized via the
 cumsum/running-max reset trick — no per-row Python.
 
@@ -42,7 +42,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from yahoo_anomaly_detection_spark.streaming.hop import keyed_state
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -90,20 +92,8 @@ def stream_alert_states(tiers: DataFrame, threshold: float,
     if for_k < 1:
         raise ValueError(f"for_k must be >= 1, got {for_k}")
     thr = float(threshold)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values("bucket_start", ignore_index=True)
+    def step(key, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         vals = pdf[value_col].to_numpy(np.float64)
         carry = int(state.get[0]) if state.exists else 0
         # NULL samples are non-breaches and reset the run (batch
@@ -115,9 +105,7 @@ def stream_alert_states(tiers: DataFrame, threshold: float,
             breach == 0, "ok", np.where(run >= for_k, "firing", "pending")
         )
         state.update((int(run[-1]) if breach[-1] == 1 else 0,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "conv_id": key[0],
                 "bucket_start": pdf["bucket_start"],
@@ -128,24 +116,9 @@ def stream_alert_states(tiers: DataFrame, threshold: float,
             }
         )
 
-    return (
+    return keyed_state(
         tiers.select("conv_id", "bucket_start",
-                     tiers[value_col].alias(value_col))
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, _OUT_SCHEMA, _STATE_SCHEMA, "append", timeout
-        )
-    )
-
-
-def start_alerts_to_parquet(alerts: DataFrame, out_path: str,
-                            checkpoint_path: str, trigger_secs: int = 1):
-    """Append-mode parquet sink with a streaming checkpoint."""
-    return (
-        alerts.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
+                     tiers[value_col].alias(value_col)),
+        ["conv_id"], step, _OUT_SCHEMA, _STATE_SCHEMA, state_ttl_ms,
+        sort_col="bucket_start",
     )

@@ -24,9 +24,8 @@ Semantics:
 State per conversation: the live day's 9 bin counts plus the
 previous closed day's 7-point CDF — a fixed ~130 bytes regardless
 of volume, TTL-evicted like the other stateful hops. The kernel is
-numpy over the whole Arrow batch; W1 rounding matches
-``portable_round`` (epsilon + HALF_UP on the scaled value, exact
-for the non-negative W1).
+numpy over the whole Arrow batch; W1 is rounded with
+``np_portable_round``, the numpy twin of the batch ``portable_round``.
 """
 
 from __future__ import annotations
@@ -36,10 +35,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
+from yahoo_anomaly_detection_spark.functions.portable import (
+    np_portable_round,
+)
 from yahoo_anomaly_detection_spark.operators.statstests import (
     W1_BOUNDARIES,
+)
+from yahoo_anomaly_detection_spark.streaming.hop import (
+    keyed_state,
+    require_utc,
 )
 
 _BOUNDS = np.asarray(W1_BOUNDARIES, np.float64)
@@ -66,12 +72,6 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _round4(x: float) -> float:
-    """portable_round replica for non-negative scalars:
-    floor((x+1e-9)·10⁴ + 0.5)/10⁴ == Spark's HALF_UP round."""
-    return float(np.floor((x + 1e-9) * 1e4 + 0.5) / 1e4)
-
-
 def _close_day(out_rows: list, conv: str, day: int, counts: np.ndarray,
                prev_day: int, prev_cdf: np.ndarray | None):
     cdf = np.cumsum(counts)[: len(_BOUNDS) - 1] / counts.sum()
@@ -79,7 +79,7 @@ def _close_day(out_rows: list, conv: str, day: int, counts: np.ndarray,
         out_rows.append((conv, day, None, None))
     else:
         w1 = float(np.sum(np.abs(cdf - prev_cdf) * _GAPS))
-        out_rows.append((conv, day, prev_day, _round4(w1)))
+        out_rows.append((conv, day, prev_day, float(np_portable_round(w1))))
     return cdf
 
 
@@ -88,38 +88,22 @@ def stream_drift_1d(tiers: DataFrame, value_col: str = "mean_v",
                     state_ttl_ms: int | None = None) -> DataFrame:
     """finalized tier rows → per-conversation daily W1 drift rows.
 
-    Requires a UTC session (same guard as ``rollup_stream``): the
+    Requires a UTC session (``hop.require_utc``, as the tier hops): the
     day keys here are epoch-day arithmetic on pandas-converted
     timestamps — which Spark renders in the SESSION zone — while the
     batch ``wasserstein_drift`` buckets with session-tz
     ``date_trunc('day')``; any non-UTC zone would silently shift the
     streamed day keys off the batch ones."""
-    from yahoo_anomaly_detection_spark.streaming.rollup_stream import (
-        _require_utc,
-    )
+    require_utc(tiers)
 
-    _require_utc(tiers)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values(ts_col, ignore_index=True)
+    def step(key, pdf: pd.DataFrame, state: GroupState):
         vals = pdf[value_col].to_numpy(np.float64)
         days = (pdf[ts_col].astype("int64").to_numpy()
                 // 86_400_000_000_000)
         keep = ~np.isnan(vals)
         vals, days = vals[keep], days[keep]
         if len(vals) == 0:
-            return
+            return None
         # bin = #{boundaries < v}, strict — matches the batch
         # chained-comparison binning exactly
         bins = np.searchsorted(_BOUNDS, vals, side="left")
@@ -154,41 +138,26 @@ def stream_drift_1d(tiers: DataFrame, value_col: str = "mean_v",
         state.update((cur_day, cur_counts.tolist(), int(prev_day),
                       (prev_cdf.tolist() if prev_cdf is not None
                        else [])))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "conv_id": [r[0] for r in out],
-                    "day": pd.to_datetime(
-                        [r[1] * 86400 for r in out], unit="s"),
-                    "prev_day": pd.to_datetime(
-                        [r[2] * 86400 if r[2] is not None else None
-                         for r in out], unit="s"),
-                    "w1": [r[3] for r in out],
-                }
-            )
+        if not out:
+            return None
+        return pd.DataFrame(
+            {
+                "conv_id": [r[0] for r in out],
+                "day": pd.to_datetime(
+                    [r[1] * 86400 for r in out], unit="s"),
+                "prev_day": pd.to_datetime(
+                    [r[2] * 86400 if r[2] is not None else None
+                     for r in out], unit="s"),
+                "w1": [r[3] for r in out],
+            }
+        )
 
-    return (
+    return keyed_state(
         tiers.select(
             "conv_id",
             tiers[ts_col].alias(ts_col),
             tiers[value_col].alias(value_col),
-        )
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, _OUT_SCHEMA, _STATE_SCHEMA, "append", timeout
-        )
-    )
-
-
-def start_drift_to_parquet(drift: DataFrame, out_path: str,
-                           checkpoint_path: str, trigger_secs: int = 1):
-    """Append-mode parquet sink with a streaming checkpoint."""
-    return (
-        drift.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
+        ),
+        ["conv_id"], step, _OUT_SCHEMA, _STATE_SCHEMA, state_ttl_ms,
+        sort_col=ts_col,
     )

@@ -26,7 +26,7 @@ Semantics vs batch (`operators/stats.py`):
 Scale: state is one float64[≤k] array per live conversation —
 bounded, and `state_ttl_ms` evicts idle conversations exactly like
 latency_stream (same Spark 4.1 noDataMicroBatches caveat, see
-latency_stream docstring). The kernel is numpy-vectorized over the
+``hop.keyed_state``). The kernel is numpy-vectorized over the
 whole Arrow batch (prefix-sum window stats — no per-row Python, no
 per-window loop).
 
@@ -44,7 +44,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from yahoo_anomaly_detection_spark.streaming.hop import keyed_state
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -103,20 +105,8 @@ def stream_rolling_flags(tiers: DataFrame, threshold: float, k: int = 10,
     matching the batch `F.when(cond).otherwise(0)` projection).
     """
     thr = float(threshold)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values("bucket_start", ignore_index=True)
+    def step(key, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         new = pdf[value_col].to_numpy(np.float64)
         hist = (
             np.asarray(state.get[0], np.float64)
@@ -134,9 +124,7 @@ def stream_rolling_flags(tiers: DataFrame, threshold: float, k: int = 10,
         pred = ((resid > thr) & ~np.isnan(resid)).astype(np.int32)
 
         state.update((vals[-k:].tolist(),))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "conv_id": key[0],
                 "bucket_start": pdf["bucket_start"],
@@ -148,24 +136,9 @@ def stream_rolling_flags(tiers: DataFrame, threshold: float, k: int = 10,
             }
         )
 
-    return (
+    return keyed_state(
         tiers.select("conv_id", "bucket_start",
-                     tiers[value_col].alias(value_col))
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, _OUT_SCHEMA, _STATE_SCHEMA, "append", timeout
-        )
-    )
-
-
-def start_flags_to_parquet(flags: DataFrame, out_path: str,
-                           checkpoint_path: str, trigger_secs: int = 1):
-    """Append-mode parquet sink with a streaming checkpoint."""
-    return (
-        flags.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
+                     tiers[value_col].alias(value_col)),
+        ["conv_id"], step, _OUT_SCHEMA, _STATE_SCHEMA, state_ttl_ms,
+        sort_col="bucket_start",
     )

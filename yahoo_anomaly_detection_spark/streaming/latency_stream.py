@@ -4,7 +4,7 @@ Closes the gap documented in round 2 (rollup_stream.py scope note):
 the batch path derives per-turn latency with a lag window over
 ``(conv_id, turn_idx)`` — an unbounded-partition window Structured
 Streaming cannot express declaratively. This module derives the same
-``(conv_id, ts, value)`` point stream with ``applyInPandasWithState``
+``(conv_id, ts, value)`` point stream with :func:`hop.keyed_state`
 keyed by conv_id: the state carries (last_turn_idx, last_ts_us), so
 the first turn of each micro-batch gets its latency against the last
 turn of the PREVIOUS micro-batch — the recursion never resets at
@@ -31,15 +31,8 @@ Semantics & scale:
 - The kernel is vectorized (numpy diff over the batch) — no per-row
   Python, matching the input_hint constraint.
 
-Known Spark 4.1 caveat: with ``state_ttl_ms`` set, run the session
-with ``spark.sql.streaming.noDataMicroBatches.enabled=false``.
-Processing-time timeouts schedule no-data micro-batches, and planning
-one NPEs inside ``FlatMapGroupsInPandasWithStateExec.copy`` (null
-session during CollapseCodegenStages) — an upstream bug, observed
-here as a permanently hung ``processAllAvailable``. With no-data
-batches off, timeouts are evaluated during ordinary data batches (an
-eviction can be deferred until the next batch arrives, which is
-harmless for a TTL).
+The state plumbing (TTL, timeouts and the Spark 4.1
+``noDataMicroBatches`` caveat) is :func:`hop.keyed_state`'s.
 """
 
 from __future__ import annotations
@@ -47,14 +40,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
-TRANSCRIPTS_DDL = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp"
-)
+from yahoo_anomaly_detection_spark.streaming.hop import keyed_state
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -71,15 +61,29 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def read_transcript_stream(spark: SparkSession, path: str,
-                           max_files_per_trigger: int = 8) -> DataFrame:
-    """File-source stream over a growing transcripts parquet directory
-    (local stand-in for a Kafka/queue source)."""
-    return (
-        spark.readStream.schema(TRANSCRIPTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+def _step(key, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+    ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
+    turns = pdf["turn_idx"].to_numpy(np.int64)
+    lat = np.empty(len(pdf), np.float64)
+    lat[1:] = (ts_us[1:] - ts_us[:-1]) / 1e6
+    lat[0] = np.nan
+    if state.exists:
+        last_turn, last_ts = state.get
+        # EVERY stale row (turn_idx ≤ last accepted turn) gets
+        # NULL latency — not just the batch's first row; the
+        # first fresh row's latency is measured against the last
+        # ACCEPTED turn (state), since its in-batch predecessor
+        # is stale and was never emitted as a real step
+        stale = turns <= last_turn
+        lat[stale] = np.nan
+        fresh = np.flatnonzero(~stale)
+        if fresh.size:
+            lat[fresh[0]] = (ts_us[fresh[0]] - last_ts) / 1e6
+            state.update((int(turns[fresh[-1]]), int(ts_us[fresh[-1]])))
+        # all-stale batch: state never regresses
+    else:
+        state.update((int(turns[-1]), int(ts_us[-1])))
+    return pd.DataFrame({"conv_id": key[0], "ts": pdf["ts"], "value": lat})
 
 
 def stream_latency(transcripts: DataFrame,
@@ -88,68 +92,8 @@ def stream_latency(transcripts: DataFrame,
     ``(conv_id, ts, value)``; value = seconds since the previous turn
     of the same conversation (NULL for the first seen turn), matching
     ``rollup.transcripts_latency`` on in-order input."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values("turn_idx", ignore_index=True)
-        ts_us = (
-            pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        )
-        turns = pdf["turn_idx"].to_numpy(np.int64)
-        lat = np.empty(len(pdf), np.float64)
-        lat[1:] = (ts_us[1:] - ts_us[:-1]) / 1e6
-        lat[0] = np.nan
-        if state.exists:
-            last_turn, last_ts = state.get
-            # EVERY stale row (turn_idx ≤ last accepted turn) gets
-            # NULL latency — not just the batch's first row; the
-            # first fresh row's latency is measured against the last
-            # ACCEPTED turn (state), since its in-batch predecessor
-            # is stale and was never emitted as a real step
-            stale = turns <= last_turn
-            lat[stale] = np.nan
-            fresh = np.flatnonzero(~stale)
-            if fresh.size:
-                lat[fresh[0]] = (ts_us[fresh[0]] - last_ts) / 1e6
-                state.update(
-                    (int(turns[fresh[-1]]), int(ts_us[fresh[-1]]))
-                )
-            # all-stale batch: state never regresses
-        else:
-            state.update((int(turns[-1]), int(ts_us[-1])))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
-            {"conv_id": key[0], "ts": pdf["ts"], "value": lat}
-        )
-
-    return (
-        transcripts.select("conv_id", "turn_idx", "ts")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, _OUT_SCHEMA, _STATE_SCHEMA, "append", timeout
-        )
-    )
-
-
-def start_points_to_parquet(points: DataFrame, out_path: str,
-                            checkpoint_path: str, trigger_secs: int = 1):
-    """Latency-point sink feeding the 1m rollup stream's source dir."""
-    return (
-        points.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
+    return keyed_state(
+        transcripts.select("conv_id", "turn_idx", "ts"), ["conv_id"],
+        _step, _OUT_SCHEMA, _STATE_SCHEMA, state_ttl_ms,
+        sort_col="turn_idx",
     )

@@ -12,7 +12,7 @@ a streaming checkpoint.
 
 The per-turn latency derivation that feeds this aggregate is itself
 available as a streaming operator: ``latency_stream.stream_latency``
-(``applyInPandasWithState`` keyed by conv_id carrying last-turn
+(:func:`hop.keyed_state` keyed by conv_id carrying last-turn
 state), so the full north-star pipeline runs as a two-hop streaming
 topology — transcripts → latency points → 1m tiers (parity with the
 batch path asserted in tests/test_streaming.py).
@@ -26,24 +26,31 @@ batch tier row exactly and upper tiers recombine from it with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yahoo_anomaly_detection_spark.operators.rollup import _finish_tier
+from yahoo_anomaly_detection_spark.operators.rollup import (
+    TIER_STATE_COLS,
+    _finish_tier,
+    merged_state,
+    point_state,
+)
+from yahoo_anomaly_detection_spark.streaming.hop import require_utc
 
-POINTS_DDL = "conv_id string, ts timestamp, value double"
+TIER_WINDOW = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
 
-def read_point_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
-    """File-source stream over a growing points parquet directory
-    (the local stand-in for a Kafka/queue source; swap `.format` and
-    options for Kafka without touching the aggregation)."""
-    return (
-        spark.readStream.schema(POINTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
+def _window_tier(df: DataFrame, ts_col: str, tier: str,
+                 aggs: list) -> DataFrame:
+    """Per-conversation ``F.window`` aggregate of the tier state,
+    finished like a batch tier row."""
+    agg = (
+        df.groupBy("conv_id", F.window(ts_col, TIER_WINDOW[tier]).alias("w"))
+        .agg(*aggs)
+        .select("conv_id", F.col("w.start").alias("bucket_start"),
+                *TIER_STATE_COLS[2:])
     )
+    return _finish_tier(agg, tier)
 
 
 def stream_rollup_1m(points: DataFrame,
@@ -62,66 +69,11 @@ def stream_rollup_1m(points: DataFrame,
     redefining a watermark mid-plan, and the upstream one composes —
     the engine tracks the min across chained stateful operators.
     """
-    _require_utc(points)
-    if not set_watermark:
-        points_wm = points
-    else:
-        points_wm = points.withWatermark("ts", watermark)
-    v = F.col("value").cast("double")
-    agg = (
-        points_wm
-        .groupBy("conv_id", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.count(v).alias("vcnt"),
-            F.sum(v).alias("sum"),
-            F.sum(v * v).alias("sum_sq"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-        )
-        .select(
-            "conv_id",
-            F.col("w.start").alias("bucket_start"),
-            "cnt", "vcnt", "sum", "sum_sq", "min", "max",
-        )
-    )
-    return _finish_tier(agg, "1m")
-
-
-TIER_WINDOW = {"1h": "1 hour", "1d": "1 day"}
-
-
-def _require_utc(df: DataFrame) -> None:
-    """The streaming hops bucket with ``F.window()`` (epoch/UTC
-    aligned — the only groupBy shape whose state the watermark can
-    evict), while the batch tiers bucket with ``date_trunc`` in the
-    SESSION timezone. get_spark pins the session to UTC so the two
-    agree bit-for-bit; any other zone would silently shift streamed
-    1h/1d bucket_starts by the zone offset — fail loudly instead."""
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    if tz.upper() not in ("UTC", "GMT", "ETC/UTC", "Z"):
-        raise ValueError(
-            f"streaming tier rollups require spark.sql.session.timeZone"
-            f"=UTC for batch parity (window() is epoch-aligned, batch "
-            f"date_trunc is session-zone); got {tz!r}"
-        )
-
-TIERS_DDL = (
-    "conv_id string, bucket_start timestamp, cnt long, vcnt long,"
-    " sum double, sum_sq double, min double, max double,"
-    " mean double, std double, turn_rate double"
-)
-
-
-def read_tier_stream(spark: SparkSession, path: str,
-                     max_files_per_trigger: int = 8) -> DataFrame:
-    """File-source stream over a growing tier parquet directory (the
-    sink of the tier below — the streaming medallion handoff)."""
-    return (
-        spark.readStream.schema(TIERS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+    require_utc(points)
+    if set_watermark:
+        points = points.withWatermark("ts", watermark)
+    return _window_tier(points, "ts", "1m",
+                        point_state(F.col("value").cast("double")))
 
 
 def stream_rollup_cascade(tiers: DataFrame, to_tier: str,
@@ -154,41 +106,6 @@ def stream_rollup_cascade(tiers: DataFrame, to_tier: str,
     set ``max_files_per_trigger`` high enough that one upstream
     commit lands in one batch. A queue source (Kafka) with
     per-partition ordering does not have the file-reorder hazard."""
-    _require_utc(tiers)
-    agg = (
-        tiers.withWatermark("bucket_start", watermark)
-        .groupBy(
-            "conv_id",
-            F.window("bucket_start", TIER_WINDOW[to_tier]).alias("w"),
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("vcnt").alias("vcnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "conv_id",
-            F.col("w.start").alias("bucket_start"),
-            "cnt", "vcnt", "sum", "sum_sq", "min", "max",
-        )
-    )
-    return _finish_tier(agg, to_tier)
-
-
-def start_stream_to_parquet(tiers: DataFrame, out_path: str,
-                            checkpoint_path: str, trigger_secs: int = 1):
-    """Append-mode parquet sink with a streaming checkpoint — finalized
-    (watermark-expired) buckets land exactly once; restart resumes
-    from the checkpoint like the batch path resumes from the catalog
-    snapshot table."""
-    return (
-        tiers.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
-    )
+    require_utc(tiers)
+    return _window_tier(tiers.withWatermark("bucket_start", watermark),
+                        "bucket_start", to_tier, merged_state())

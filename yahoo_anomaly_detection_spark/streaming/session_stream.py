@@ -28,23 +28,8 @@ batch operator's event-span duration.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double"
-)
-
-
-def read_session_event_stream(spark: SparkSession, path: str,
-                              max_files_per_trigger: int = 8
-                              ) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
 
 
 def stream_sessions(events: DataFrame, gap_seconds: int = 1800,
@@ -70,15 +55,3 @@ def stream_sessions(events: DataFrame, gap_seconds: int = 1800,
         )
     )
 
-
-def start_sessions_to_parquet(sessions: DataFrame, out_path: str,
-                              checkpoint_path: str,
-                              trigger_secs: int = 1):
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
-    )

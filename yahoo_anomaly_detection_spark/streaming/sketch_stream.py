@@ -36,7 +36,7 @@ reference is batch-only):
 - ``state_ttl_ms`` evicts idle (key, day) sketches — state is
   2^p longs per LIVE key-day, independent of stream length. Same
   Spark 4.1 no-data-batch caveat as the other stateful hops (see
-  ``latency_stream`` module docstring).
+  ``hop.keyed_state``).
 """
 
 from __future__ import annotations
@@ -46,21 +46,20 @@ import math
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
+from yahoo_anomaly_detection_spark.functions.portable import (
+    np_portable_round,
+)
 from yahoo_anomaly_detection_spark.operators.sketches import (
     _check_p,
     _hll_alpha,
     _lane,
 )
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double"
-)
+from yahoo_anomaly_detection_spark.streaming.hop import keyed_state
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -76,16 +75,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("regs", T.ArrayType(T.LongType())),
     ]
 )
-
-
-def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
-    """File-source stream over a growing events parquet directory."""
-    return (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
 
 
 def stream_hll_registers(events: DataFrame, id_col: str = "user_id",
@@ -124,8 +113,7 @@ def _np_estimate(regs: np.ndarray, p: int) -> float:
         est = float(m) * math.log(float(m) / float(v))
     else:
         est = raw
-    y = (est + 1e-9) * 1e4
-    return math.floor(y + 0.5) / 1e4 if y >= 0 else math.ceil(y - 0.5) / 1e4
+    return float(np_portable_round(est))
 
 
 def stream_hll_distinct(events: DataFrame, id_col: str = "user_id",
@@ -143,19 +131,8 @@ def stream_hll_distinct(events: DataFrame, id_col: str = "user_id",
     # kernel's vectorized np.maximum.at — one pass, no per-row
     # Python; the shuffled row is 4 narrow columns per event
     regs_upd = stream_hll_registers(events, id_col, key, ts_col, p)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(grp_key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            return
+    def step(grp_key, pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
         if state.exists:
             seq, regs_list = state.get
             regs = np.asarray(regs_list, dtype=np.int64)
@@ -166,9 +143,7 @@ def stream_hll_distinct(events: DataFrame, id_col: str = "user_id",
                       pdf["rho"].to_numpy(np.int64))
         seq += 1
         state.update((int(seq), [int(x) for x in regs]))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "event_type": [grp_key[0]],
                 "bucket_start": [pd.Timestamp(grp_key[1])],
@@ -177,24 +152,5 @@ def stream_hll_distinct(events: DataFrame, id_col: str = "user_id",
             }
         )
 
-    return (
-        regs_upd.groupBy(key, "bucket_start")
-        .applyInPandasWithState(
-            fn, _OUT_SCHEMA, _STATE_SCHEMA, "append", timeout
-        )
-    )
-
-
-def start_sketches_to_parquet(journal: DataFrame, out_path: str,
-                              checkpoint_path: str,
-                              trigger_secs: int = 1):
-    """Estimate-journal sink (append; read back with max upd_seq per
-    key for the live view)."""
-    return (
-        journal.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_secs} seconds")
-        .start()
-    )
+    return keyed_state(regs_upd, [key, "bucket_start"], step,
+                       _OUT_SCHEMA, _STATE_SCHEMA, state_ttl_ms)
