@@ -96,7 +96,8 @@ def stream_drift_1d(tiers: DataFrame, value_col: str = "mean_v",
     streamed day keys off the batch ones."""
     require_utc(tiers)
 
-    def step(key, pdf: pd.DataFrame, state: GroupState):
+    def step(key, pdf: pd.DataFrame,
+             state: GroupState) -> pd.DataFrame | None:
         vals = pdf[value_col].to_numpy(np.float64)
         days = (pdf[ts_col].astype("int64").to_numpy()
                 // 86_400_000_000_000)
