@@ -6,6 +6,13 @@ carries the DuckDB-equivalent ANSI SQL for each. Column names and
 rounding (4 decimals on all computed doubles) are kept identical on
 both sides so the driver's order-insensitive value-hash matches.
 
+Both are derived. To add a query, define ``q_<name>`` here and add
+``ORACLE_SQL["<name>"]`` in the module that implements it (this
+module's ``ORACLE_SQL`` for queries built here; a new operator module
+also joins the tuple in ``oracle_sql()``). ``queries()`` lists
+``_GATE_WINDOW`` first (the 50 entries the driver checks), then every
+other ``q_*`` function in definition order.
+
 Conventions:
 - series view over ``events``: conv_id = CAST(user_id AS STRING),
   ts, value (FIXTURES.md F3 — user_id plays conv_id).
@@ -35,6 +42,7 @@ from yahoo_anomaly_detection_spark.operators import refresh as refresh_op
 from yahoo_anomaly_detection_spark.operators import layout
 from yahoo_anomaly_detection_spark.operators import statstests
 from yahoo_anomaly_detection_spark.functions.portable import portable_round
+from yahoo_anomaly_detection_spark.functions.tiers import mean_tier
 
 TRAIN_END = "2024-01-15 00:00:00"
 VAL_END = "2024-01-23 00:00:00"
@@ -45,6 +53,13 @@ _R = 4  # rounding decimals for computed doubles (both engines)
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest.events_as_series(ingest.load_table(spark, sf_dir, "events"))
+
+
+def _mean_tier(spark: SparkSession, sf_dir: str,
+               unit: str = "minute") -> DataFrame:
+    """The series' per-conversation mean tier — the shared input of
+    the mean-series detectors (functions/tiers.py)."""
+    return mean_tier(_series(spark, sf_dir), unit)
 
 
 def _events_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -770,37 +785,12 @@ def q_weighted_sample(spark, sf_dir):
                                      weight_col="n_chars", salt="w0")
 
 
-def _t1m_mean(spark, sf_dir):
-    """Per-conversation 1m mean series (non-null values only) — the
-    shared input of the tsanalytics detectors (mad/holt/ar2); mirrors
-    the oracle module's _T1M_BASE CTE."""
-    return (
-        _series(spark, sf_dir)
-        .where(F.col("value").isNotNull())
-        .groupBy("conv_id", F.date_trunc("minute", F.col("ts")).alias(
-            "bucket_start"))
-        .agg(F.avg(F.col("value").cast("double")).alias("mean_v"))
-    )
-
-
-def _t1h_mean(spark, sf_dir):
-    """Hourly sibling of _t1m_mean (theilsen/spectral input); mirrors
-    the oracle module's _T1H_BASE CTE."""
-    return (
-        _series(spark, sf_dir)
-        .where(F.col("value").isNotNull())
-        .groupBy("conv_id", F.date_trunc("hour", F.col("ts")).alias(
-            "bucket_start"))
-        .agg(F.avg(F.col("value").cast("double")).alias("mean_v"))
-    )
-
-
 def q_acf_1d(spark, sf_dir):
     # per-(conversation, day) autocorrelation at lags 1..3 over the 1m
     # mean series — the seasonality/persistence diagnostic; one hash
     # exchange serves the lag window AND the groupBy, unpivot runs on
     # the aggregated (3 rows/group) relation
-    return tsanalytics.acf(_t1m_mean(spark, sf_dir), "mean_v",
+    return tsanalytics.acf(_mean_tier(spark, sf_dir), "mean_v",
                            lags=(1, 2, 3))
 
 
@@ -809,14 +799,14 @@ def q_pacf_1d(spark, sf_dir):
     # Durbin-Levinson closed forms) per (conversation, day) — reads
     # the AR order off the same 1m series acf_1d diagnoses; one
     # (key, day) exchange serves both window phases and the groupBy
-    return tsanalytics.pacf(_t1m_mean(spark, sf_dir), "mean_v")
+    return tsanalytics.pacf(_mean_tier(spark, sf_dir), "mean_v")
 
 
 def q_hampel_1m(spark, sf_dir):
     # Hampel despiking filter: ±3-sample centered rolling median/MAD
     # via one collect_list window (Spark has no median over a frame);
     # identical array-median formula on both engines
-    return tsanalytics.hampel_flags(_t1m_mean(spark, sf_dir), "mean_v",
+    return tsanalytics.hampel_flags(_mean_tier(spark, sf_dir), "mean_v",
                                     k=3, nsig=3.0)
 
 
@@ -825,7 +815,7 @@ def q_ewma_chart_1m(spark, sf_dir):
     # L·σ·sqrt((1−λ)^2t + λ/(2−λ)(1−(1−λ)^2t)) matching the engine's
     # z0=x0 seed; recursion through the shared mapInPandas scan, the
     # μ/σ window reuses the key exchange
-    return tsanalytics.ewma_chart(_t1m_mean(spark, sf_dir), "mean_v",
+    return tsanalytics.ewma_chart(_mean_tier(spark, sf_dir), "mean_v",
                                   alpha=0.3, big_l=3.0)
 
 
@@ -833,7 +823,7 @@ def q_kalman_1m(spark, sf_dir):
     # local-level Kalman filter (q=0.2, r=1.0) per series — adaptive
     # baseline with data-independent gain sequence, so the filter runs
     # as a time-varying-weight block scan; recursive-CTE oracle
-    out = tsanalytics.kalman_level(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.kalman_level(_mean_tier(spark, sf_dir), "mean_v",
                                    q=0.2, r=1.0)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "level", "gain"),
@@ -846,7 +836,8 @@ def q_theilsen_1d(spark, sf_dir):
     # tier (≤24 points → ≤276 pairs per group by construction): median
     # of pairwise slopes + median intercept — the outlier-immune twin
     # of trend_1d's OLS
-    return tsanalytics.theilsen_trend(_t1h_mean(spark, sf_dir), "mean_v")
+    return tsanalytics.theilsen_trend(_mean_tier(spark, sf_dir, "hour"),
+                                      "mean_v")
 
 
 def q_spectral_power(spark, sf_dir):
@@ -854,8 +845,8 @@ def q_spectral_power(spark, sf_dir):
     # 168h weekly) per conversation over the hourly series — fraction
     # of variance a P-periodic sinusoid explains; ONE map-side-combined
     # groupBy of six moment sums, no window, no sort
-    return tsanalytics.spectral_power(_t1h_mean(spark, sf_dir), "mean_v",
-                                      periods_h=(24, 168))
+    return tsanalytics.spectral_power(_mean_tier(spark, sf_dir, "hour"),
+                                      "mean_v", periods_h=(24, 168))
 
 
 def q_mad_flags(spark, sf_dir):
@@ -863,7 +854,7 @@ def q_mad_flags(spark, sf_dir):
     1m mean series — the outlier-immune twin of zscore_flags. Exact
     percentiles here (the oracle path); rel_error= switches both
     medians to the mergeable approx_percentile sketch."""
-    out = tsanalytics.robust_flags(_t1m_mean(spark, sf_dir), "mean_v", k=3.0)
+    out = tsanalytics.robust_flags(_mean_tier(spark, sf_dir), "mean_v", k=3.0)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "med", "mad", "flag"),
         ["mean_v", "med", "mad"],
@@ -874,7 +865,7 @@ def q_holt_1m(spark, sf_dir):
     # Holt double-exponential smoothing (level + trend) per series —
     # the two-state recursive scan, one vectorized mapInPandas pass
     # (recursive-CTE oracle)
-    out = tsanalytics.holt(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.holt(_mean_tier(spark, sf_dir), "mean_v",
                            alpha=0.3, beta=0.1)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "level", "trend"),
@@ -885,7 +876,7 @@ def q_holt_1m(spark, sf_dir):
 def q_ar2_flags(spark, sf_dir):
     # distributed AR(2) Yule-Walker fit from lag-product aggregates +
     # one-step residuals + the reference's global envelope on |resid|
-    res = tsanalytics.ar2_residuals(_t1m_mean(spark, sf_dir), "mean_v")
+    res = tsanalytics.ar2_residuals(_mean_tier(spark, sf_dir), "mean_v")
     flagged = stats.zscore_envelope_flags(
         res.withColumn("score", F.abs(F.col("resid"))), "score", y=3.0
     )
@@ -950,14 +941,14 @@ def q_snaive_eval(spark, sf_dir):
     # sample with its previous same-minute-of-hour observation, roll
     # up MAE/SMAPE — the bar any forecasting model must beat
     return tsanalytics.seasonal_naive_eval(
-        _t1m_mean(spark, sf_dir), "mean_v", phase="minute_of_hour")
+        _mean_tier(spark, sf_dir), "mean_v", phase="minute_of_hour")
 
 
 def q_holt_winters_1m(spark, sf_dir):
     # additive Holt-Winters (level+trend+4-periodic seasonal) per
     # series — the 2+m-state recursive scan; oracle = recursive CTE
     # with the seasonal buffer as 4 explicit columns
-    out = tsanalytics.holt_winters(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.holt_winters(_mean_tier(spark, sf_dir), "mean_v",
                                    alpha=0.3, beta=0.1, gamma=0.2, m=4)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "level",
@@ -978,7 +969,7 @@ def q_seasonal_zscore(spark, sf_dir):
     # seasonal-profile flags: each 1m bucket vs the mean/std of its
     # own minute-of-hour phase across the conversation's history
     out = tsanalytics.seasonal_zscore(
-        _t1m_mean(spark, sf_dir), "mean_v", phase="minute_of_hour", k=3.0
+        _mean_tier(spark, sf_dir), "mean_v", phase="minute_of_hour", k=3.0
     )
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "phase",
@@ -991,7 +982,7 @@ def q_cusum_flags(spark, sf_dir):
     # two-sided tabular CUSUM drift chart per series: accumulated
     # small same-sign deviations flag sustained level shifts that
     # point-wise envelopes miss (recursive-CTE oracle)
-    out = tsanalytics.cusum_flags(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.cusum_flags(_mean_tier(spark, sf_dir), "mean_v",
                                   slack_k=0.5, threshold_h=5.0)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v",
@@ -1012,7 +1003,7 @@ def q_ensemble_flags(spark, sf_dir):
     # majority-vote anomaly ensemble over the 1m mean series: z-score
     # envelope + median/MAD envelope + two-sided CUSUM, flag where at
     # least two of the three detectors agree
-    out = tsanalytics.ensemble_flags(_t1m_mean(spark, sf_dir), "mean_v")
+    out = tsanalytics.ensemble_flags(_mean_tier(spark, sf_dir), "mean_v")
     return _round_cols(out, ["mean_v"])
 
 
@@ -1046,7 +1037,7 @@ def q_asof_snapshot(spark, sf_dir):
     # (no window, no corpus sort; engine strategy differs from the
     # oracle's row_number formulation on purpose)
     out = tsanalytics.asof_snapshot(
-        _t1m_mean(spark, sf_dir), "2024-01-20 12:00:00", ("mean_v",))
+        _mean_tier(spark, sf_dir), "2024-01-20 12:00:00", ("mean_v",))
     return _round_cols(out, ["mean_v"])
 
 
@@ -1094,7 +1085,7 @@ def q_alert_states(spark, sf_dir):
     # flap-free FOR-duration alerting over the 1m mean series: a
     # breach must hold 3 consecutive samples before the alert fires
     # (states ok / pending / firing; sessionize-idiom run-length)
-    out = tsanalytics.alert_states(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.alert_states(_mean_tier(spark, sf_dir), "mean_v",
                                    threshold=100.0, for_k=3)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "breach",
@@ -1115,7 +1106,7 @@ def q_breach_intervals(spark, sf_dir):
     # flag→episode consolidation: maximal runs of breached 1m samples
     # become incident intervals (sessionize idiom, one key exchange);
     # same breach rule as alert_states so the layers compose
-    flagged = _t1m_mean(spark, sf_dir).withColumn(
+    flagged = _mean_tier(spark, sf_dir).withColumn(
         "breach", (F.col("mean_v") > 100.0).cast("int"))
     return alerting.flag_intervals(flagged, "breach", sample_seconds=60)
 
@@ -1124,7 +1115,7 @@ def q_slo_burn(spark, sf_dir):
     # SRE multi-window burn-rate paging over the 1m mean series: page
     # only when the trailing 5m AND 1h breach ratios both exceed
     # their thresholds; two time-RANGE frames in ONE window operator
-    out = alerting.slo_burn(_t1m_mean(spark, sf_dir), "mean_v",
+    out = alerting.slo_burn(_mean_tier(spark, sf_dir), "mean_v",
                             threshold=100.0)
     return _round_cols(
         out.select("conv_id", "bucket_start", "breach", "short_ratio",
@@ -1148,7 +1139,7 @@ def q_changepoint_flags(spark, sf_dir):
     # sliding two-window mean-shift changepoint score over the 1m
     # mean series: trailing-10 vs leading-10 Welch statistic, both
     # frames in ONE window operator over one exchange
-    out = tsanalytics.changepoints(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.changepoints(_mean_tier(spark, sf_dir), "mean_v",
                                    w=10, k=3.0)
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "mean_l",
@@ -1162,7 +1153,7 @@ def q_alert_cooldown(spark, sf_dir):
     # series, then suppress re-pages within 10 minutes of the last
     # NOTIFIED alert (anchor-resetting sequential recursion —
     # recursive-CTE oracle, position-major numpy kernel engine-side)
-    flagged = _t1m_mean(spark, sf_dir).withColumn(
+    flagged = _mean_tier(spark, sf_dir).withColumn(
         "flag", (F.col("mean_v") > 100.0).cast("int"))
     out = alerting.alert_cooldown(flagged, "flag", cooldown_seconds=600)
     return _round_cols(
@@ -1242,7 +1233,7 @@ def q_stl_lite_1m(spark, sf_dir):
     # the 1m mean series: centered rolling-mean trend, minute-of-hour
     # phase seasonal, ONE exchange (phase window reuses the key
     # partitioning)
-    out = tsanalytics.stl_lite(_t1m_mean(spark, sf_dir), "mean_v",
+    out = tsanalytics.stl_lite(_mean_tier(spark, sf_dir), "mean_v",
                                trend_halfwidth=5, phase="minute_of_hour")
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "trend", "phase",
@@ -1256,7 +1247,7 @@ def q_lttb_check(spark, sf_dir):
     # exactly least(n, 20) points kept per series, endpoints always
     # kept (the sequential pick chain itself is not SQL-expressible;
     # the oracle checks these invariants from the input alone)
-    sel = tsanalytics.lttb(_t1m_mean(spark, sf_dir), "mean_v", n_out=20,
+    sel = tsanalytics.lttb(_mean_tier(spark, sf_dir), "mean_v", n_out=20,
                            ts_col="bucket_start")
     return sel.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_in"),
@@ -1314,28 +1305,16 @@ def q_ddsketch_1d(spark, sf_dir):
     return tsanalytics.ddsketch_quantiles(_series(spark, sf_dir))
 
 
-def _t1d_mean(spark, sf_dir):
-    """Per-conversation DAILY mean series — the cross-sectional axis
-    input (all conversations share day buckets, so the fleet
-    median/MAD at each day carries real signal; minute buckets are
-    almost never shared on this fixture)."""
-    return (
-        _series(spark, sf_dir)
-        .where(F.col("value").isNotNull())
-        .groupBy("conv_id", F.date_trunc("day", F.col("ts")).alias(
-            "bucket_start"))
-        .agg(F.avg(F.col("value").cast("double")).alias("mean_v"))
-    )
-
-
 def q_fleet_outliers(spark, sf_dir):
     """Cross-sectional robust envelope: each conversation's daily
     mean vs the FLEET's median/MAD that day — flags who is abnormal
     vs everyone else today (mad_flags is the within-series twin; the
     grouping key flips from conv_id to the day bucket, so per-group
-    size is fleet cardinality, not retention length)."""
+    size is fleet cardinality, not retention length). It reads day
+    buckets because every conversation shares them; a minute bucket
+    is almost never shared on this fixture."""
     out = tsanalytics.robust_flags(
-        _t1d_mean(spark, sf_dir), "mean_v", k=3.0,
+        _mean_tier(spark, sf_dir, "day"), "mean_v", k=3.0,
         keys=("bucket_start",))
     return _round_cols(
         out.select("conv_id", "bucket_start", "mean_v", "med", "mad",
@@ -1576,7 +1555,7 @@ def q_fleet_incidents(spark, sf_dir):
     # overlap-edge join (never all-pairs) -> reused CC min-label
     # loop -> one row per fleet incident; iv_id is derived from
     # natural keys so both engines agree on incident identity
-    flagged = _t1m_mean(spark, sf_dir).withColumn(
+    flagged = _mean_tier(spark, sf_dir).withColumn(
         "breach", (F.col("mean_v") > 100.0).cast("int"))
     iv = alerting.flag_intervals(flagged, "breach", sample_seconds=60)
     iv = iv.withColumn(
@@ -1883,7 +1862,7 @@ def q_season_strength(spark, sf_dir):
     # series key the decomposition windows partition by (no second
     # corpus exchange)
     return tsanalytics.season_strength(
-        _t1m_mean(spark, sf_dir), "mean_v",
+        _mean_tier(spark, sf_dir), "mean_v",
         trend_halfwidth=5, phase="minute_of_hour")
 
 
@@ -2101,220 +2080,11 @@ _GATE_WINDOW = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    reg = _registry()
-    out = {n: reg[n] for n in _GATE_WINDOW}
-    out.update((n, f) for n, f in reg.items() if n not in out)
-    return out
-
-
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "stratified_sample": q_stratified_sample,
-        "curated_corpus": q_curated_corpus,
-        "topk_per_band": q_topk_per_band,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_frames": q_multimodal_frames,
-        "quality_score": q_quality_score,
-        "token_count": q_token_count,
-        "doc_fingerprint": q_doc_fingerprint,
-        "multimodal_meta": q_multimodal_meta,
-        "multimodal_features": q_multimodal_features,
-        "tier_merge_refresh": q_tier_merge_refresh,
-        "mad_flags": q_mad_flags,
-        "counter_rate_1m": q_counter_rate_1m,
-        "turn_taking": q_turn_taking,
-        "time_weighted_1h": q_time_weighted_1h,
-        "holt_1m": q_holt_1m,
-        "ar2_flags": q_ar2_flags,
-        "candles_1h": q_candles_1h,
-        "seasonal_zscore": q_seasonal_zscore,
-        "stl_lite_1m": q_stl_lite_1m,
-        "lttb_check": q_lttb_check,
-        "cusum_flags": q_cusum_flags,
-        "hist_quantile_1d": q_hist_quantile_1d,
-        "alert_states": q_alert_states,
-        "xcorr_1d": q_xcorr_1d,
-        "breach_intervals": q_breach_intervals,
-        "slo_burn": q_slo_burn,
-        "merged_intervals": q_merged_intervals,
-        "incident_overlap": q_incident_overlap,
-        "incident_overlap_bucketed": q_incident_overlap_bucketed,
-        "m4_1h": q_m4_1h,
-        "changepoint_flags": q_changepoint_flags,
-        "alert_cooldown": q_alert_cooldown,
-        "active_users_1d": q_active_users_1d,
-        "snaive_eval": q_snaive_eval,
-        "psi_drift_1d": q_psi_drift_1d,
-        "funnel_steps": q_funnel_steps,
-        "retention_cohorts": q_retention_cohorts,
-        "holt_winters_1m": q_holt_winters_1m,
-        "event_transitions": q_event_transitions,
-        "type_streaks": q_type_streaks,
-        "depth_hist": q_depth_hist,
-        "next_gap_1d": q_next_gap_1d,
-        "trend_1d": q_trend_1d,
-        "realtime_rollup_1h": q_realtime_rollup_1h,
-        "asof_snapshot": q_asof_snapshot,
-        "segment_rollup_1d": q_segment_rollup_1d,
-        "value_percentiles": q_value_percentiles,
-        "events_vs_trailing_p95": q_events_vs_trailing_p95,
-        "dedup_canonical": q_dedup_canonical,
-        "rollup_1m": q_rollup_1m,
-        "gapfill_1m": q_gapfill_1m,
-        "ewma_1m": q_ewma_1m,
-        "codec_roundtrip": q_codec_roundtrip,
-        "ensemble_flags": q_ensemble_flags,
-        "absent_1m": q_absent_1m,
-        "incident_coverage_1d": q_incident_coverage_1d,
-        "dq_checks_1d": q_dq_checks_1d,
-        "burstiness_1d": q_burstiness_1d,
-        "rollup_1h": q_rollup_1h,
-        "tier_parity_1h": q_tier_parity_1h,
-        "conv_stats_salted": q_conv_stats_salted,
-        "detector_lifecycle": q_detector_lifecycle,
-        "session_stats": q_session_stats,
-        "residual_cascade": q_residual_cascade,
-        "roc_auc": q_roc_auc,
-        "zscore_flags": q_zscore_flags,
-        "latency_1m": q_latency_1m,
-        "rolling_stats": q_rolling_stats,
-        "sessionize": q_sessionize,
-        "best_threshold": q_best_threshold,
-        "confusion_metrics": q_confusion_metrics,
-        "threshold_sweep": q_threshold_sweep,
-        "split_counts": q_split_counts,
-        "doc_sha": q_doc_sha,
-        "dedup_exact": q_dedup_exact,
-        "topk_buckets": q_topk_buckets,
-        "rollup_1d": q_rollup_1d,
-        "threshold_sweep_raw_lt": q_threshold_sweep_raw_lt,
-        "dup_clusters": q_dup_clusters,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "simhash64": q_simhash64,
-        "simhash_hamming": q_simhash_hamming,
-        "embedding_topk": q_embedding_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_lsh_multiprobe": q_ann_lsh_multiprobe,
-        "ivf_topk": q_ivf_topk,
-        "embedding_near_dups": q_embedding_near_dups,
-        "lang_id": q_lang_id,
-        "vocab_topk": q_vocab_topk,
-        "quality_filter": q_quality_filter,
-        "pred_value_counts": q_pred_value_counts,
-        "bof_eval": q_bof_eval,
-        "kl_closed_form": q_kl_closed_form,
-        "ocsvm_remap": q_ocsvm_remap,
-        "best_epoch": q_best_epoch,
-        "minhash_signatures": q_minhash_signatures,
-        "simhash": q_simhash,
-        "simhash_dups": q_simhash_dups,
-        "ann_lsh_buckets": q_ann_lsh_buckets,
-        "ivf_cells": q_ivf_cells,
-        "acf_1d": q_acf_1d,
-        "theilsen_1d": q_theilsen_1d,
-        "spectral_power": q_spectral_power,
-        "rolling_actives_7d": q_rolling_actives_7d,
-        "weighted_sample": q_weighted_sample,
-        "ann_recall_lsh": q_ann_recall_lsh,
-        "tfidf_top3": q_tfidf_top3,
-        "pacf_1d": q_pacf_1d,
-        "kalman_1m": q_kalman_1m,
-        "hampel_1m": q_hampel_1m,
-        "ewma_chart_1m": q_ewma_chart_1m,
-        "embedding_outliers": q_embedding_outliers,
-        "doc_repetition": q_doc_repetition,
-        "decontaminate": q_decontaminate,
-        "pmi_bigrams": q_pmi_bigrams,
-        "unigram_logppl": q_unigram_logppl,
-        "seq_pack": q_seq_pack,
-        "dup_ngram_spans": q_dup_ngram_spans,
-        "heavy_hitters": q_heavy_hitters,
-        "bpe_pairs": q_bpe_pairs,
-        "sax_1h": q_sax_1h,
-        "sax_motifs": q_sax_motifs,
-        "sigma_clip_1d": q_sigma_clip_1d,
-        "leadlag_1h": q_leadlag_1h,
-        "cluster_split": q_cluster_split,
-        "mixture_sample": q_mixture_sample,
-        "season_strength": q_season_strength,
-        "ks_drift_1d": q_ks_drift_1d,
-        "char_entropy": q_char_entropy,
-        "rate_5m": q_rate_5m,
-        "bigram_logppl": q_bigram_logppl,
-        "key_skew": q_key_skew,
-        "sax_discords": q_sax_discords,
-        "anomaly_movers": q_anomaly_movers,
-        "ddsketch_1d": q_ddsketch_1d,
-        "fleet_outliers": q_fleet_outliers,
-        "hll_actives_1d": q_hll_actives_1d,
-        "hll_cascade_7d": q_hll_cascade_7d,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "pagerank_types": q_pagerank_types,
-        "benford_dq": q_benford_dq,
-        "trigram_flows": q_trigram_flows,
-        "shingle_novelty": q_shingle_novelty,
-        "zipf_fit": q_zipf_fit,
-        "survival_km": q_survival_km,
-        "apdex_1h": q_apdex_1h,
-        "embed_quant_error": q_embed_quant_error,
-        "bitmap_actives_1d": q_bitmap_actives_1d,
-        "grouping_cube_1d": q_grouping_cube_1d,
-        "kmv_overlap": q_kmv_overlap,
-        "journey_surprise": q_journey_surprise,
-        "shesd_flags": q_shesd_flags,
-        "did_impact": q_did_impact,
-        "dominant_period": q_dominant_period,
-        "compaction_plan": q_compaction_plan,
-        "label_centroid_qc": q_label_centroid_qc,
-        "weekend_effect": q_weekend_effect,
-        "fleet_incidents": q_fleet_incidents,
-        "props_profile": q_props_profile,
-        "fuzzy_token_pairs": q_fuzzy_token_pairs,
-        "change_attribution": q_change_attribution,
-        "funnel_latency": q_funnel_latency,
-        "pii_scan": q_pii_scan,
-        "ri_audit": q_ri_audit,
-        "fleet_beta": q_fleet_beta,
-        "normality_check": q_normality_check,
-        "bitmap_rolling_7d": q_bitmap_rolling_7d,
-        "backfill_plan": q_backfill_plan,
-        "quota_violations": q_quota_violations,
-        "lateness_audit": q_lateness_audit,
-        "session_lift": q_session_lift,
-        "time_folds": q_time_folds,
-        "touch_attribution": q_touch_attribution,
-        "join_size_est": q_join_size_est,
-        "anomalous_days": q_anomalous_days,
-        "capacity_forecast": q_capacity_forecast,
-        "pot_tail": q_pot_tail,
-        "markov_entropy": q_markov_entropy,
-        "mann_kendall": q_mann_kendall,
-        "spearman_corr": q_spearman_corr,
-        "bh_fdr": q_bh_fdr,
-        "wasserstein_drift": q_wasserstein_drift,
-        "ou_halflife": q_ou_halflife,
-        "hurst_exponent": q_hurst_exponent,
-        "perm_entropy": q_perm_entropy,
-        "max_drawdown": q_max_drawdown,
-        "winsor_rollup": q_winsor_rollup,
-        "gini_concentration": q_gini_concentration,
-        "ljung_box": q_ljung_box,
-        "croston": q_croston,
-        "corr_clusters": q_corr_clusters,
-        "bloom_join": q_bloom_join,
-        "series_profile": q_series_profile,
-        "variance_decomp": q_variance_decomp,
-        "matrix_profile": q_matrix_profile,
-        "matrix_profile_banded": q_matrix_profile_banded,
-        "spread_monitor": q_spread_monitor,
-        "coreset_kcenter": q_coreset_kcenter,
-        "mmr_rerank": q_mmr_rerank,
-        "granger_1d": q_granger_1d,
-        "seasonal_mk": q_seasonal_mk,
-        "corr_break": q_corr_break,
-        "coflag_lift": q_coflag_lift,
-    }
+    """Every ``q_<name>`` function of this module under ``<name>``:
+    the ``_GATE_WINDOW`` names first, then the rest in definition
+    order."""
+    reg = {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
+    return {**{n: reg[n] for n in _GATE_WINDOW}, **reg}
 
 
 # --------------------------------------------------------------- oracles
@@ -2354,7 +2124,17 @@ agg AS (
 """
 
 
-_LATENCY_SQL = f"""
+ORACLE_SQL: dict[str, str] = {
+    "rollup_1m": _tier_sql("minute", 60),
+    "rollup_1h": _tier_sql("hour", 3600),
+    "rollup_1d": _tier_sql("day", 86400),
+    "tier_merge_refresh": _tier_sql("hour", 3600),
+    # the splice's oracle is deliberately the PLAIN full-scan
+    # tier SQL: the gate proves splice ≡ full recompute
+    "realtime_rollup_1h": _tier_sql("hour", 3600),
+}
+
+ORACLE_SQL["latency_1m"] = f"""
 WITH ev AS ({_EV}),
 lat AS (
     SELECT conv_id, ts,
@@ -2380,7 +2160,7 @@ t1m AS (
 )
 """
 
-_ROLLING_SQL = f"""
+ORACLE_SQL["rolling_stats"] = f"""
 WITH ev AS ({_EV}),
 {_T1M_MEAN}
 SELECT conv_id, bucket_start, round(mean_v, 4) AS mean_v,
@@ -2392,7 +2172,7 @@ WINDOW w AS (PARTITION BY conv_id ORDER BY bucket_start
              ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING)
 """
 
-_ZSCORE_SQL = f"""
+ORACLE_SQL["zscore_flags"] = f"""
 WITH sc AS ({_SCORED}),
 st AS (SELECT avg(score) AS mu, stddev_pop(score) AS sigma FROM sc)
 SELECT event_id, round(score, 4) AS score,
@@ -2424,19 +2204,19 @@ swf AS (
 )
 """
 
-_SWEEP_SQL = (
+ORACLE_SQL["threshold_sweep"] = (
     _SWEEP_BODY
     + "SELECT y, round(threshold, 4) AS threshold, tp, fp, fn, tn, "
     "round(f1, 4) AS f1 FROM swf"
 )
 
-_BEST_SQL = (
+ORACLE_SQL["best_threshold"] = (
     _SWEEP_BODY
     + "SELECT y, round(threshold, 4) AS threshold, round(f1, 4) AS f1, "
     "tp, fp, fn, tn FROM swf ORDER BY f1 DESC, y ASC LIMIT 1"
 )
 
-_CONFUSION_SQL = f"""
+ORACLE_SQL["confusion_metrics"] = f"""
 WITH sc AS ({_SCORED}),
 st AS (SELECT avg(score) AS mu, stddev_pop(score) AS sigma FROM sc),
 p AS (SELECT label,
@@ -2475,7 +2255,7 @@ SELECT tp, fp, fn, tn,
 FROM m
 """
 
-_VALUE_COUNTS_SQL = f"""
+ORACLE_SQL["pred_value_counts"] = f"""
 WITH sc AS ({_SCORED}),
 st AS (SELECT avg(score) AS mu, stddev_pop(score) AS sigma FROM sc)
 SELECT CASE WHEN score > 3.0 * mu + sigma THEN 1 ELSE 0 END AS pred,
@@ -2483,7 +2263,7 @@ SELECT CASE WHEN score > 3.0 * mu + sigma THEN 1 ELSE 0 END AS pred,
 FROM sc, st GROUP BY 1 ORDER BY 1
 """
 
-_SEGMENT_ROLLUP_SQL = """
+ORACLE_SQL["segment_rollup_1d"] = """
 SELECT c.c_mktsegment, n.n_name,
        date_trunc('day', e.ts) AS bucket_start,
        CAST(count(*) AS BIGINT) AS n,
@@ -2498,7 +2278,7 @@ GROUP BY 1, 2, 3
 # skeleton via generate_series, gap groups via a cumulative sum of
 # the present indicator (each group starts at its present row, so
 # row_number − 1 is the consecutive-miss count) — pure integer logic
-_ABSENT_SQL = f"""
+ORACLE_SQL["absent_1m"] = f"""
 WITH ev AS (
     SELECT CAST(user_id AS VARCHAR) AS conv_id, ts FROM events
     WHERE ts >= TIMESTAMP '{GAPFILL_DAY[0]}'
@@ -2539,7 +2319,7 @@ SELECT conv_id, bucket_start, present,
 FROM r
 """
 
-_GAPFILL_SQL = f"""
+ORACLE_SQL["gapfill_1m"] = f"""
 WITH ev AS (
     SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, value FROM events
     WHERE ts >= TIMESTAMP '{GAPFILL_DAY[0]}' AND ts < TIMESTAMP '{GAPFILL_DAY[1]}'
@@ -2582,7 +2362,7 @@ SELECT conv_id, bucket_start, round(v, 4) AS mean_v,
 FROM w
 """
 
-_TOPK_SQL = f"""
+ORACLE_SQL["topk_buckets"] = f"""
 WITH ev AS ({_EV}),
 t1m AS (
     SELECT conv_id, date_trunc('minute', ts) AS bucket_start,
@@ -2599,13 +2379,13 @@ SELECT conv_id, bucket_start, cnt, CAST(rk AS INT) AS rk
 FROM rk WHERE rk <= 3
 """
 
-_TIER_PARITY_SQL = f"""
+ORACLE_SQL["tier_parity_1h"] = f"""
 WITH ev AS ({_EV})
 SELECT count(*) AS n_buckets, CAST(0 AS BIGINT) AS n_mismatch
 FROM (SELECT conv_id, date_trunc('hour', ts) FROM ev GROUP BY 1, 2)
 """
 
-_SPLIT_SQL = f"""
+ORACLE_SQL["split_counts"] = f"""
 WITH ev AS ({_EV})
 SELECT 'train' AS split, count(*) AS n, round(sum(value), 4) AS sum_v
 FROM ev WHERE ts < TIMESTAMP '{TRAIN_END}'
@@ -2617,9 +2397,10 @@ SELECT 'test', count(*), round(sum(value), 4) FROM ev
 WHERE ts >= TIMESTAMP '{VAL_END}'
 """
 
-_DOC_SHA_SQL = "SELECT doc_id, sha256(text) AS text_sha FROM documents"
+ORACLE_SQL["doc_sha"] = (
+    "SELECT doc_id, sha256(text) AS text_sha FROM documents")
 
-_EWMA_SQL = f"""
+ORACLE_SQL["ewma_1m"] = f"""
 WITH ev AS ({_EV}),
 {_T1M_MEAN},
 arr AS (
@@ -2640,19 +2421,19 @@ SELECT conv_id, unnest(bs) AS bucket_start,
 FROM ew
 """
 
-_SALTED_SQL = f"""
+ORACLE_SQL["conv_stats_salted"] = f"""
 WITH ev AS ({_EV})
 SELECT conv_id, count(*) AS cnt, round(sum(value), 4) AS sum_v,
        round(min(value), 4) AS min_v, round(max(value), 4) AS max_v
 FROM ev GROUP BY 1
 """
 
-_CODEC_SQL = """
+ORACLE_SQL["codec_roundtrip"] = """
 SELECT count(*) AS n_points, CAST(0 AS BIGINT) AS n_mismatch
 FROM events WHERE value IS NOT NULL
 """
 
-_ROC_SQL = f"""
+ORACLE_SQL["roc_auc"] = f"""
 WITH sc AS ({_SCORED}),
 grp AS (
     SELECT score AS _s,
@@ -2687,7 +2468,7 @@ SELECT round((rsum - np * (np + 1) / 2.0) / (np * nn), 4) AS auroc,
 FROM agg
 """
 
-_SWEEP_RAW_LT_SQL = f"""
+ORACLE_SQL["threshold_sweep_raw_lt"] = f"""
 WITH sc AS (SELECT event_id, -CAST(value AS DOUBLE) / 500.0 AS score,
             CAST((event_id % 97) < 5 AS INT) AS label FROM events),
 gt AS (SELECT -0.10 + CAST(i AS DOUBLE) * -0.01 AS y,
@@ -2707,7 +2488,7 @@ SELECT round(y, 4) AS y, round(threshold, 4) AS threshold, tp, fp, fn, tn,
 FROM sw
 """
 
-_LIFECYCLE_SQL = f"""
+ORACLE_SQL["detector_lifecycle"] = f"""
 WITH sc AS (SELECT ts, CAST(value AS DOUBLE) AS score,
             CAST((event_id % 97) < 5 AS INT) AS label FROM events),
 val AS (SELECT * FROM sc WHERE ts >= TIMESTAMP '{TRAIN_END}'
@@ -2756,8 +2537,10 @@ SELECT conv_id, date_trunc('minute', ts) AS bucket_start,
        round(sum(value) / count(value), 4) AS v
 FROM ({_EV}) ev GROUP BY 1, 2
 """
+ORACLE_SQL["residual_cascade"] = cascade_op.cascade_oracle_sql(
+    _CASCADE_SERIES_SQL)
 
-_KL_SQL = """
+ORACLE_SQL["kl_closed_form"] = """
 WITH p AS (
     SELECT (CAST(value AS DOUBLE) - 50.0) / 50.0 AS mu,
            -(CAST(event_id % 7 AS DOUBLE) / 7.0) AS logvar
@@ -2768,7 +2551,7 @@ SELECT round(-0.5 * avg(1.0 + logvar - mu * mu - exp(logvar)), 4) AS kl,
 FROM p
 """
 
-_OCSVM_SQL = f"""
+ORACLE_SQL["ocsvm_remap"] = f"""
 WITH sc AS ({_SCORED}),
 st AS (SELECT avg(score) AS mu, stddev_pop(score) AS sigma FROM sc)
 SELECT CASE WHEN score > mu + 2 * sigma THEN 0 ELSE 1 END AS pred,
@@ -2776,7 +2559,7 @@ SELECT CASE WHEN score > mu + 2 * sigma THEN 0 ELSE 1 END AS pred,
 FROM sc, st GROUP BY 1
 """
 
-_BEST_EPOCH_SQL = """
+ORACLE_SQL["best_epoch"] = """
 WITH e AS (
     SELECT event_id % 20 AS epoch,
            round(avg(CAST(value AS DOUBLE)), 4) AS test_loss,
@@ -2787,7 +2570,7 @@ SELECT epoch, test_loss, n_batches FROM e
 ORDER BY test_loss ASC, epoch ASC LIMIT 1
 """
 
-_BOF_SQL = """
+ORACLE_SQL["bof_eval"] = """
 WITH xs AS (SELECT CAST(i AS INT) AS x, CAST(i AS DOUBLE) AS xd
             FROM generate_series(0, 99) t(i))
 SELECT x,
@@ -2846,57 +2629,13 @@ def _epsilonize(sql: str) -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {
-        "tier_merge_refresh": _tier_sql("hour", 3600),
-        "rollup_1m": _tier_sql("minute", 60),
-        "rollup_1h": _tier_sql("hour", 3600),
-        "rollup_1d": _tier_sql("day", 86400),
-        "latency_1m": _LATENCY_SQL,
-        "rolling_stats": _ROLLING_SQL,
-        "zscore_flags": _ZSCORE_SQL,
-        "threshold_sweep": _SWEEP_SQL,
-        "best_threshold": _BEST_SQL,
-        "confusion_metrics": _CONFUSION_SQL,
-        "pred_value_counts": _VALUE_COUNTS_SQL,
-        "gapfill_1m": _GAPFILL_SQL,
-        "absent_1m": _ABSENT_SQL,
-        "segment_rollup_1d": _SEGMENT_ROLLUP_SQL,
-        # the splice's oracle is deliberately the PLAIN full-scan
-        # tier SQL: the gate proves splice ≡ full recompute
-        "realtime_rollup_1h": _tier_sql("hour", 3600),
-        "topk_buckets": _TOPK_SQL,
-        "tier_parity_1h": _TIER_PARITY_SQL,
-        "split_counts": _SPLIT_SQL,
-        "doc_sha": _DOC_SHA_SQL,
-        "ewma_1m": _EWMA_SQL,
-        "conv_stats_salted": _SALTED_SQL,
-        "codec_roundtrip": _CODEC_SQL,
-        "roc_auc": _ROC_SQL,
-        "bof_eval": _BOF_SQL,
-        "threshold_sweep_raw_lt": _SWEEP_RAW_LT_SQL,
-        "detector_lifecycle": _LIFECYCLE_SQL,
-        "residual_cascade": cascade_op.cascade_oracle_sql(
-            _CASCADE_SERIES_SQL
-        ),
-        "kl_closed_form": _KL_SQL,
-        "ocsvm_remap": _OCSVM_SQL,
-        "best_epoch": _BEST_EPOCH_SQL,
-    }
-    out.update(dedup.ORACLE_SQL)
-    out.update(similarity.ORACLE_SQL)
-    out.update(textstats.ORACLE_SQL)
-    out.update(multimodal.ORACLE_SQL)
-    out.update(sessions.ORACLE_SQL)
-    out.update(tsanalytics.ORACLE_SQL)
-    out.update(alerting.ORACLE_SQL)
-    out.update(sketches.ORACLE_SQL)
-    out.update(journeys.ORACLE_SQL)
-    out.update(curation.ORACLE_SQL)
-    out["grouping_cube_1d"] = rollup.GROUPED_ROLLUP_SQL
-    out.update(layout.ORACLE_SQL)
-    out.update(enrich.ORACLE_SQL)
-    out.update(gapfill.ORACLE_SQL)
-    out.update(statstests.ORACLE_SQL)
+    """Every query's DuckDB oracle: the ``ORACLE_SQL`` of this module
+    and of each operator module, epsilonized like ``portable_round``."""
+    out = dict(ORACLE_SQL)
+    for m in (dedup, similarity, textstats, multimodal, sessions,
+              tsanalytics, alerting, sketches, journeys, curation, rollup,
+              layout, enrich, gapfill, statstests):
+        out.update(m.ORACLE_SQL)
     # capstone composition: intersection of three independently-
     # oracled doc_id sets (quality gate, canonical dedup survivors,
     # stratified sample)

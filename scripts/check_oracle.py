@@ -4,7 +4,8 @@ Runs every ``__spark_entry__.queries()`` entry at a given sf dir and
 compares against ``oracle_sql()`` via DuckDB: row count, column-name
 set, and order-insensitive canonical value comparison. Floats are
 compared exactly (queries pre-round to 4 decimals on both sides) with
-a fallback tolerance report so near-misses are visible.
+a fallback tolerance report so near-misses are visible. A query with
+no oracle fails.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
@@ -125,6 +126,10 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            print(f"{name}: NO ORACLE")
+            failures.append(name)
+            continue
         t0 = time.time()
         # release in finally: an erroring query (which may have
         # already persisted shingle relations / CC localCheckpoints)
@@ -135,10 +140,6 @@ def main() -> int:
             except Exception as e:
                 print(f"{name}: SPARK ERROR {e}")
                 failures.append(name)
-                continue
-            if name not in oracles:
-                print(f"{name}: rows-only ({len(spark_pdf)} rows, "
-                      f"{time.time()-t0:.1f}s)")
                 continue
             try:
                 duck_pdf = con.execute(oracles[name]).fetchdf()

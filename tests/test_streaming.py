@@ -331,13 +331,8 @@ def test_stream_rolling_flags_match_batch(spark, tmp_path):
     ckpt = str(tmp_path / "fckpt")
     os.makedirs(src)
     _mk_tier_rows(spark, f1).coalesce(1).write.mode("append").parquet(src)
-    tiers = (
-        spark.readStream.schema(
-            "conv_id string, bucket_start timestamp, mean double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    tiers = read_parquet_stream(spark, src, TIERS_DDL,
+                                max_files_per_trigger=1)
     q = start_to_parquet(
         stream_rolling_flags(tiers, threshold=thr, k=k), out, ckpt,
         trigger_secs=0
@@ -455,16 +450,7 @@ def test_streaming_topology_end_to_end(spark, tmp_path):
         trigger_secs=0,
     )
     q2.processAllAvailable()
-    tier_ddl = (
-        "conv_id string, bucket_start timestamp, cnt long, vcnt long,"
-        " sum double, sum_sq double, min double, max double,"
-        " mean double, std double, turn_rate double"
-    )
-    tier_stream = (
-        spark.readStream.schema(tier_ddl)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(tiers)
-    )
+    tier_stream = read_parquet_stream(spark, tiers, TIERS_DDL)
     q3 = start_to_parquet(
         stream_rolling_flags(tier_stream, threshold=15.0, k=3),
         flags, str(tmp_path / "ck3"),
@@ -603,13 +589,8 @@ def test_stream_flags_state_ttl_evicts_window(spark, tmp_path):
     os.makedirs(src)
     _mk_tier_rows(spark, [("a", 0, 10.0), ("a", 1, 12.0)]).coalesce(1) \
         .write.mode("append").parquet(src)
-    tiers = (
-        spark.readStream.schema(
-            "conv_id string, bucket_start timestamp, mean double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    tiers = read_parquet_stream(spark, src, TIERS_DDL,
+                                max_files_per_trigger=1)
     q = start_to_parquet(
         stream_rolling_flags(tiers, threshold=4.0, k=3,
                              state_ttl_ms=500),
@@ -676,11 +657,6 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
     tiers = str(tmp_path / "tiers")
     flags = str(tmp_path / "flags")
     os.makedirs(src)
-    tier_ddl = (
-        "conv_id string, bucket_start timestamp, cnt long, vcnt long,"
-        " sum double, sum_sq double, min double, max double,"
-        " mean double, std double, turn_rate double"
-    )
 
     def start_q1():
         return start_to_parquet(
@@ -699,11 +675,7 @@ def test_streaming_topology_crash_and_resume(spark, tmp_path):
         )
 
     def start_q3():
-        tier_stream = (
-            spark.readStream.schema(tier_ddl)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(tiers)
-        )
+        tier_stream = read_parquet_stream(spark, tiers, TIERS_DDL)
         return start_to_parquet(
             stream_rolling_flags(tier_stream, threshold=15.0, k=3),
             flags, str(tmp_path / "ck3"),
@@ -1029,13 +1001,8 @@ def test_stream_alert_states_match_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ackpt")
     os.makedirs(src)
     _mk_tier_rows(spark, f1).coalesce(1).write.mode("append").parquet(src)
-    tiers = (
-        spark.readStream.schema(
-            "conv_id string, bucket_start timestamp, mean double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    tiers = read_parquet_stream(spark, src, TIERS_DDL,
+                                max_files_per_trigger=1)
     q = start_to_parquet(
         stream_alert_states(tiers, threshold=thr, for_k=for_k), out, ckpt,
         trigger_secs=0
@@ -1116,13 +1083,8 @@ def test_stream_absence_alerts_fire_and_rearm(spark, tmp_path):
     os.makedirs(src)
     _mk_tier_rows(spark, feeds[0]).coalesce(1).write.mode(
         "append").parquet(src)
-    tiers = (
-        spark.readStream.schema(
-            "conv_id string, bucket_start timestamp, mean double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    tiers = read_parquet_stream(spark, src, TIERS_DDL,
+                                max_files_per_trigger=1)
     q = start_to_parquet(
         stream_absence_alerts(tiers, k=3, bucket_seconds=60,
                               watermark_delay="0 seconds"),
@@ -1190,13 +1152,8 @@ def test_stream_absence_single_batch_interior_gaps(spark, tmp_path):
     _mk_tier_rows(
         spark, [("d", 0, 1.0), ("d", 10, 1.0), ("d", 20, 1.0)]
     ).coalesce(1).write.mode("append").parquet(src)
-    tiers = (
-        spark.readStream.schema(
-            "conv_id string, bucket_start timestamp, mean double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    tiers = read_parquet_stream(spark, src, TIERS_DDL,
+                                max_files_per_trigger=1)
     q = start_to_parquet(
         stream_absence_alerts(tiers, k=3, bucket_seconds=60,
                               watermark_delay="0 seconds"),

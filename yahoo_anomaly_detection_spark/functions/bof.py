@@ -131,17 +131,6 @@ def gaussian_pdf(x, mu, sigma) -> Column:
     )
 
 
-def sigma_from_logvar(logvar) -> Column:
-    """F23: σ = exp(0.5·logvar) (/root/reference/Testing/vae_anm_detc.py:72)."""
-    return F.exp(F.lit(0.5) * _c(logvar))
-
-
-def squared_error(x, xhat) -> Column:
-    """F24: per-point MSE (reduction='none',
-    /root/reference/Testing/lae_anm_detc.py:44,62)."""
-    return (_c(x) - _c(xhat)) ** 2
-
-
 def eval_over_window(fn, window_len: int, *params) -> Column:
     """Evaluate a basis function over x = 0..W−1 → array<double>
     (SURVEY W3). ``fn(x_col, *params)`` must be one of the above."""

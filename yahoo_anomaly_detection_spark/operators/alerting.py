@@ -424,12 +424,12 @@ def alert_cooldown(df: DataFrame, flag_col: str = "flag",
 # props); conv_id := user_id per the engine's series adaptation.
 
 from yahoo_anomaly_detection_spark.operators.tsanalytics import (  # noqa: E402
-    _T1M_BASE,
+    _EV_T1M,
     BREACH_SEGS_SQL,
 )
 
 _BREACH_INTERVALS_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 {BREACH_SEGS_SQL.strip()}
 SELECT conv_id,
        min(bucket_start) AS interval_start,
@@ -442,7 +442,7 @@ GROUP BY conv_id, seg
 """
 
 _SLO_BURN_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 b AS (
     SELECT conv_id, bucket_start, mean_v,
            epoch_us(bucket_start) AS us,
@@ -561,7 +561,7 @@ GROUP BY 1, 2, 3
 # per-series alert sequence with a recursive CTE, one row per step,
 # exactly the holt-oracle pattern
 _ALERT_COOLDOWN_SQL = f"""
-WITH RECURSIVE {_T1M_BASE},
+WITH RECURSIVE {_EV_T1M},
 f AS (
     SELECT conv_id, bucket_start, mean_v,
            row_number() OVER (PARTITION BY conv_id
@@ -771,7 +771,7 @@ connected_components` min-label loop over the overlap graph.
 
 
 _FLEET_INCIDENTS_SQL = f"""
-WITH RECURSIVE {_T1M_BASE},
+WITH RECURSIVE {_EV_T1M},
 {BREACH_SEGS_SQL.strip()},
 iv AS (
     SELECT conv_id,

@@ -257,7 +257,7 @@ def grouped_rollup(events: DataFrame, type_col: str = "event_type",
     )
 
 
-GROUPED_ROLLUP_SQL = f"""
+ORACLE_SQL = {"grouping_cube_1d": f"""
 SELECT coalesce(event_type, '{GROUPED_ALL}') AS event_type,
        coalesce(day, TIMESTAMP '{GROUPED_ALL_TS}') AS day,
        GROUPING(event_type) * 2 + GROUPING(day) AS gid,
@@ -267,4 +267,4 @@ SELECT coalesce(event_type, '{GROUPED_ALL}') AS event_type,
 FROM (SELECT event_type, date_trunc('day', ts) AS day, value
       FROM events)
 GROUP BY CUBE (event_type, day)
-"""
+"""}

@@ -55,6 +55,7 @@ from yahoo_anomaly_detection_spark.functions.comoments import (
     pearson, pearson_sql,
 )
 from yahoo_anomaly_detection_spark.functions.portable import portable_round
+from yahoo_anomaly_detection_spark.functions.tiers import mean_tier_sql
 
 _R = 4
 
@@ -2675,32 +2676,17 @@ def ensemble_flags(df: DataFrame, value_col: str,
 # Driver events table: (event_id, ts, user_id, event_type, value, props);
 # conv_id := user_id per the engine's series adaptation (ingest.py).
 
-# shared base for the 1m-mean-series detectors (mad/holt/ar2/…)
-_T1M_BASE = """
-ev AS (
+_EV = """ev AS (
     SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, value FROM events
-),
-t1m AS (
-    SELECT conv_id, date_trunc('minute', ts) AS bucket_start,
-           avg(value) AS mean_v
-    FROM ev WHERE value IS NOT NULL GROUP BY 1, 2
-)
-"""
+)"""
 
-# hourly sibling of _T1M_BASE (theilsen / spectral inputs)
-_T1H_BASE = """
-ev AS (
-    SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, value FROM events
-),
-t1h AS (
-    SELECT conv_id, date_trunc('hour', ts) AS bucket_start,
-           avg(value) AS mean_v
-    FROM ev WHERE value IS NOT NULL GROUP BY 1, 2
-)
-"""
+# the series and its 1m / 1h mean tiers: the shared bases of the
+# mean-series detectors (1m: mad/holt/ar2/…; 1h: theilsen/spectral)
+_EV_T1M = f"\n{_EV},\n{mean_tier_sql('t1m', 'ev', 'minute')}\n"
+_EV_T1H = f"\n{_EV},\n{mean_tier_sql('t1h', 'ev', 'hour')}\n"
 
 _ACF_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 lagged AS (
     SELECT conv_id, date_trunc('day', bucket_start) AS day, mean_v,
            lag(mean_v, 1) OVER w AS l1,
@@ -2726,7 +2712,7 @@ SELECT conv_id, day, CAST(3 AS INT), n3, round(a3, 4) FROM agg
 """
 
 _PACF_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 lagged AS (
     SELECT conv_id, date_trunc('day', bucket_start) AS day, mean_v AS v,
            lag(mean_v, 1) OVER w AS l1,
@@ -2778,7 +2764,7 @@ SELECT conv_id, day, CAST(3 AS INT), round(p3, 4) FROM fin
 """
 
 _THEILSEN_SQL = f"""
-WITH {_T1H_BASE},
+WITH {_EV_T1H},
 pts AS (
     SELECT conv_id, date_trunc('day', bucket_start) AS day,
            (epoch_us(bucket_start)
@@ -2805,7 +2791,7 @@ GROUP BY p.conv_id, p.day, sl.n_pairs, sl.slope
 """
 
 _SPECTRAL_SQL = f"""
-WITH {_T1H_BASE},
+WITH {_EV_T1H},
 pts AS (
     SELECT conv_id,
            epoch_us(bucket_start) // 3600000000 AS th,
@@ -2835,7 +2821,7 @@ FROM agg
 """
 
 _MAD_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 med AS (
     SELECT conv_id, quantile_cont(mean_v, 0.5) AS med FROM t1m GROUP BY 1
 ),
@@ -2860,14 +2846,8 @@ FROM dev d JOIN mad a USING (conv_id)
 # instead of along each series' own history. Same interpolated
 # median/MAD math; the grouping key flips from conv_id to the bucket.
 _FLEET_SQL = f"""
-WITH ev AS (
-    SELECT CAST(user_id AS VARCHAR) AS conv_id, ts, value FROM events
-),
-t1d AS (
-    SELECT conv_id, date_trunc('day', ts) AS bucket_start,
-           avg(value) AS mean_v
-    FROM ev WHERE value IS NOT NULL GROUP BY 1, 2
-),
+WITH {_EV},
+{mean_tier_sql("t1d", "ev", "day")},
 med AS (
     SELECT bucket_start, quantile_cont(mean_v, 0.5) AS med
     FROM t1d GROUP BY 1
@@ -2961,7 +2941,7 @@ FROM agg
 """
 
 _HOLT_SQL = f"""
-WITH RECURSIVE {_T1M_BASE},
+WITH RECURSIVE {_EV_T1M},
 seq AS (
     SELECT conv_id, bucket_start, mean_v,
            row_number() OVER (PARTITION BY conv_id ORDER BY bucket_start)
@@ -2985,7 +2965,7 @@ FROM holt
 """
 
 _HAMPEL_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 fr AS (
     SELECT conv_id, bucket_start, mean_v AS v,
            list_sort(list(mean_v) OVER (
@@ -3013,7 +2993,7 @@ FROM mad
 """
 
 _EWMA_CHART_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 arr AS (
     SELECT conv_id,
            list(mean_v ORDER BY bucket_start) AS vs,
@@ -3050,7 +3030,7 @@ FROM lim
 """
 
 _KALMAN_SQL = f"""
-WITH RECURSIVE {_T1M_BASE},
+WITH RECURSIVE {_EV_T1M},
 seq AS (
     SELECT conv_id, bucket_start, mean_v,
            row_number() OVER (PARTITION BY conv_id ORDER BY bucket_start)
@@ -3077,7 +3057,7 @@ FROM kf
 """
 
 _AR2_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 dm AS (
     SELECT conv_id, bucket_start, mean_v,
            mean_v - avg(mean_v) OVER (PARTITION BY conv_id) AS d
@@ -3276,7 +3256,7 @@ FROM st
 """
 
 _SEASONAL_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 ph AS (
     SELECT conv_id, bucket_start, mean_v,
            minute(bucket_start) AS phase
@@ -3296,7 +3276,7 @@ FROM ph p JOIN prof f USING (conv_id, phase)
 """
 
 _CUSUM_SQL = f"""
-WITH RECURSIVE {_T1M_BASE},
+WITH RECURSIVE {_EV_T1M},
 st AS (
     SELECT conv_id, avg(mean_v) AS mu, stddev_pop(mean_v) AS sigma
     FROM t1m GROUP BY 1
@@ -3387,7 +3367,7 @@ sg AS (
 """
 
 _ALERT_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 {BREACH_SEGS_SQL.strip()},
 rp AS (
     SELECT *, sum(breach) OVER (PARTITION BY conv_id, seg
@@ -3718,7 +3698,7 @@ FROM pts GROUP BY 1, 2
 # shared 1m mean series; (conv_id, bucket_start) is unique in t1m so
 # the flag joins are key-preserving.
 _ENSEMBLE_SQL = f"""
-WITH RECURSIVE {_T1M_BASE},
+WITH RECURSIVE {_EV_T1M},
 st AS (
     SELECT conv_id, avg(mean_v) AS mu, stddev_pop(mean_v) AS sigma
     FROM t1m GROUP BY 1
@@ -3813,7 +3793,7 @@ FROM f GROUP BY 1, 2
 # the oracle uses the window formulation (row_number DESC = 1), the
 # engine the aggregate one (max_by) — same relation, two strategies
 _ASOF_SNAPSHOT_SQL = f"""
-WITH {_T1M_BASE},
+WITH {_EV_T1M},
 r AS (
     SELECT conv_id, bucket_start, mean_v,
            row_number() OVER (PARTITION BY conv_id
@@ -4018,17 +3998,17 @@ ORACLE_SQL = {
     "ar2_flags": _AR2_SQL,
     "candles_1h": _CANDLES_SQL,
     "m4_1h": _M4_SQL,
-    "changepoint_flags": _CHANGEPOINT_SQL.format(base=_T1M_BASE),
-    "snaive_eval": _SNAIVE_SQL.format(base=_T1M_BASE),
-    "holt_winters_1m": _holt_winters_sql().format(base=_T1M_BASE),
+    "changepoint_flags": _CHANGEPOINT_SQL.format(base=_EV_T1M),
+    "snaive_eval": _SNAIVE_SQL.format(base=_EV_T1M),
+    "holt_winters_1m": _holt_winters_sql().format(base=_EV_T1M),
     "psi_drift_1d": _psi_sql(HIST_BOUNDARIES),
     "ks_drift_1d": _ks_sql(),
     "rate_5m": _rate_range_sql(300),
     "sax_discords": _sax_discords_sql(2, 4),
     "seasonal_zscore": _SEASONAL_SQL,
-    "stl_lite_1m": _STL_SQL.format(base=_T1M_BASE),
-    "season_strength": _SEASON_STRENGTH_SQL.format(base=_T1M_BASE),
-    "lttb_check": _LTTB_CHECK_SQL.format(base=_T1M_BASE),
+    "stl_lite_1m": _STL_SQL.format(base=_EV_T1M),
+    "season_strength": _SEASON_STRENGTH_SQL.format(base=_EV_T1M),
+    "lttb_check": _LTTB_CHECK_SQL.format(base=_EV_T1M),
     "cusum_flags": _CUSUM_SQL,
     "hist_quantile_1d": _hist_quantile_sql(0.95, HIST_BOUNDARIES),
     "alert_states": _ALERT_SQL,
