@@ -286,10 +286,12 @@ def refresh_once(spark, catalog, bronze_table: str = "transcripts",
     # fresh snapshots: a zero-delta refresh carries OLD pins forward,
     # and compact+expire here could retire exactly those pinned
     # snapshots. When we did write, the pins are the tables' current
-    # snapshots — a rewriting compaction pushes them to position -2, a
-    # no-op one (the view already is one dir) leaves them current;
-    # keep_last >= 2 (validated at entry) retains them either way for
-    # crash-retry.
+    # snapshots. The day/bucket replaces above swapped whole leaves,
+    # so each partition is in one path and compaction is a no-op that
+    # leaves the pins current; one that does rewrite (a partition two
+    # paths hold) pushes them to position -2. keep_last >= 2
+    # (validated at entry) retains them either way for crash-retry,
+    # and expiry removes the replaced leaves.
     wrote_outputs = bool(days) or mode != "incremental"
     if vacuum_keep_last is not None and wrote_outputs:
         for t in [*(f"tier_{t}" for t in tiers), TAILS_TABLE]:

@@ -259,10 +259,10 @@ def main(argv: list[str] | None = None) -> dict:
                 else rollup_cascade(prev_tier, tier)
             )
             # tier tables are hive-partitioned by day: TTL eviction
-            # prunes whole partitions (metadata-only on Iceberg; the
-            # shim decides a no-op eviction from the dir names), and
-            # the catalog's sticky spec carries the layout through
-            # rewrites/compaction
+            # drops whole day partitions in metadata (on Iceberg and
+            # the shim alike; the shim decides a no-op eviction from
+            # the dir names), and the catalog's sticky spec carries
+            # the layout through rewrites/compaction
             df = df.withColumn("day", F.to_date("bucket_start"))
             snap = catalog.overwrite_table(df, f"tier_{tier}",
                                            partition_by=["day"])

@@ -270,19 +270,27 @@ def _hive_dirs(data_dir):
 def test_partition_spec_sticky_through_rewrites(spark, cat):
     """A table written partitioned stays partitioned through
     delete_where and compact even when the caller passes no
-    partition_by — TTL pruning depends on the hive layout."""
+    partition_by — TTL pruning depends on the hive layout. Under the
+    one-column spec the delete rewrites only the d2 leaf, which keeps
+    no row, so the view is the d1 leaf of the first commit; compaction
+    rewrites only a day that two paths hold."""
     cat.append(_df(spark, [(1, "d1", 1.0), (2, "d2", 9.0)]), "t",
                partition_by=["day"])
+    first = cat.snapshots("t")[-1].summary["added_path"]
     cat.delete_where(spark, "t", "v > 5.0")  # no partition_by arg
-    rewrite_dir = cat.snapshots("t")[-1].paths[-1]
-    assert _hive_dirs(rewrite_dir) == ["day=d1"]
+    assert cat.snapshots("t")[-1].paths == [os.path.join(first, "day=d1")]
     cat.append(_df(spark, [(3, "d3", 3.0)]), "t")  # inherits spec too
-    assert _hive_dirs(cat.snapshots("t")[-1].summary["added_path"]) \
-        == ["day=d3"]
-    cat.compact(spark, "t")  # no partition_by arg
-    compact_dir = cat.snapshots("t")[-1].paths[0]
-    assert _hive_dirs(compact_dir) == ["day=d1", "day=d3"]
+    d3 = cat.snapshots("t")[-1].summary["added_path"]
+    assert _hive_dirs(d3) == ["day=d3"]
+    sid = cat.current_snapshot_id("t")
+    assert cat.compact(spark, "t") == sid  # each day in one path
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 3]
+    cat.append(_df(spark, [(4, "d1", 4.0)]), "t")
+    cat.compact(spark, "t")  # no partition_by arg
+    paths = cat.snapshots("t")[-1].paths
+    assert paths[0] == d3 and len(paths) == 2
+    assert _hive_dirs(paths[1]) == ["day=d1"]
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [1, 3, 4]
 
 
 def test_read_schema_evolution_null_fills(spark, cat):

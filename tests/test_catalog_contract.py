@@ -302,3 +302,181 @@ def test_contract_snapshot_log_grows(spark, catalog):
     assert len(snaps) == n0 + 1
     assert snaps[-1].parent_id == snaps[-2].snapshot_id
     assert catalog.current_snapshot_id("t5") == snaps[-1].snapshot_id
+
+
+def _evicted_day_table(spark, cat):
+    """A ``[day]`` table of days 1-6 in one commit, then a whole-day
+    delete of days 1-3: returns (first snapshot id, commit dir)."""
+    rows = [(d, date(2025, 1, d), float(d)) for d in range(1, 7)]
+    sid = cat.overwrite_table(
+        spark.createDataFrame(rows, "id int, day date, v double"), "t",
+        partition_by=["day"])
+    commit = cat.snapshots("t")[-1].paths[0]
+    cat.delete_where(spark, "t", "day < DATE '2025-01-04'")
+    return sid, commit
+
+
+def _leaf_names(commit):
+    return sorted(n for n in os.listdir(commit) if n.startswith("day="))
+
+
+def test_expire_removes_exactly_the_dropped_leaves(spark, tmp_path):
+    """After a whole-day delete the view names leaves of the first
+    commit dir. Expiring the first snapshot removes exactly the dropped
+    leaves: the commit dir holds live leaves, so it stays, and the
+    kept leaves' files are untouched."""
+    cat = ParquetCatalog(str(tmp_path / "wh"))
+    _, commit = _evicted_day_table(spark, cat)
+    kept = {n: file_digests(os.path.join(commit, n))
+            for n in _leaf_names(commit)[3:]}
+    out = cat.expire_snapshots("t", keep_last=1)
+    assert out["removed_dirs"] == 3
+    assert _leaf_names(commit) == sorted(kept)
+    assert {n: file_digests(os.path.join(commit, n))
+            for n in _leaf_names(commit)} == kept
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [4, 5, 6]
+
+
+def test_orphan_sweep_keeps_a_commit_dir_with_live_leaves(spark, tmp_path,
+                                                          monkeypatch):
+    """remove_orphan_files counts a commit dir as referenced when a
+    snapshot references any of its leaves: with no age guard it
+    removes nothing, before expiry and after. A dead leaf left behind
+    by a GC interrupted after the manifest rewrite is an orphan."""
+    from yahoo_anomaly_detection_spark.sources import catalog as catalog_mod
+
+    cat = ParquetCatalog(str(tmp_path / "wh"))
+    _, commit = _evicted_day_table(spark, cat)
+    tdir = tmp_path / "wh" / "t"
+    before = file_digests(tdir)
+    assert cat.remove_orphan_files("t", older_than_s=0)["removed_dirs"] == 0
+    assert file_digests(tdir) == before
+    # GC interrupted after the manifest rewrite: no leaf removed yet
+    monkeypatch.setattr(catalog_mod.shutil, "rmtree", lambda *a, **k: None)
+    cat.expire_snapshots("t", keep_last=1)
+    monkeypatch.undo()
+    assert len(_leaf_names(commit)) == 6
+    assert cat.remove_orphan_files("t", older_than_s=0)["removed_dirs"] == 3
+    assert _leaf_names(commit) == [f"day=2025-01-0{d}" for d in (4, 5, 6)]
+    assert cat.remove_orphan_files("t", older_than_s=0)["removed_dirs"] == 0
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [4, 5, 6]
+
+
+def test_read_appended_refuses_a_leaf_level_delete(spark, tmp_path):
+    """A whole-day delete is metadata-only but still not an append:
+    an incremental read across it raises; one starting after it reads
+    only the later appends."""
+    cat = ParquetCatalog(str(tmp_path / "wh"))
+    sid, _ = _evicted_day_table(spark, cat)
+    with pytest.raises(ValueError, match="not appends"):
+        cat.read_appended(spark, "t", sid)
+    after = cat.current_snapshot_id("t")
+    cat.append(spark.createDataFrame([(9, date(2025, 1, 9), 9.0)],
+                                     "id int, day date, v double"), "t")
+    assert [r.id for r in cat.read_appended(spark, "t", after).collect()] \
+        == [9]
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == [4, 5, 6, 9]
+
+
+def test_partition_only_delete_reads_escaped_names(spark, tmp_path):
+    """Partition values that hive escapes in dir names (quote, colon,
+    slash, percent) and the NULL partition evaluate by their real
+    value: the delete drops exactly the matching leaves, rewrites
+    nothing, and the NULL-day row survives."""
+    cat = ParquetCatalog(str(tmp_path / "wh"))
+    days = ["a'b", "c:d/e", "f%g", None]
+    cat.overwrite_table(_df(spark, [(i, d, 1.0) for i, d in enumerate(days)]),
+                        "t", partition_by=["day"])
+    cat.delete_where(spark, "t", "day = 'a\\'b' OR day = 'f%g'")
+    snap = cat.snapshots("t")[-1]
+    assert (snap.summary["dropped_leaves"], snap.summary["rewritten_dirs"]) \
+        == (2, 0)
+    assert sorted((r.id, r.day) for r in cat.read(spark, "t").collect()) \
+        == [(1, "c:d/e"), (3, None)]
+
+
+class _FakeWriter:
+    """``DataFrameWriterV2`` stand-in that records the calls made."""
+
+    def __init__(self, log):
+        self.log = log
+
+    def partitionedBy(self, *cols):
+        self.log.append(("partitionedBy", [str(c) for c in cols]))
+        return self
+
+    def __getattr__(self, name):  # create / append / createOrReplace / overwrite
+        return lambda *args: self.log.append((name, [str(a) for a in args]))
+
+
+class _FakeIcebergSpark:
+    """The calls ``IcebergCatalog`` makes on its session, answered for
+    one existing table of the given spec rows (``DESCRIBE TABLE``)."""
+
+    def __init__(self, describe):
+        from types import SimpleNamespace
+
+        self.describe = describe
+        self.queries = []
+        self.catalog = SimpleNamespace(tableExists=lambda name: True)
+
+    def sql(self, q):
+        from types import SimpleNamespace
+
+        from pyspark.sql import Row
+
+        self.queries.append(q)
+        rows = []
+        if q.startswith("DESCRIBE TABLE"):
+            rows = [Row(col_name=n, data_type=t)
+                    for n, t in [("id", "int"), ("day", "string"),
+                                 ("ts", "timestamp"), *self.describe]]
+        return SimpleNamespace(collect=lambda: rows)
+
+
+def _fake_iceberg(describe):
+    cat = object.__new__(IcebergCatalog)
+    cat.spark, cat.catalog, cat.namespace = (
+        _FakeIcebergSpark(describe), "local", "ns")
+    log = []
+    df = type("FakeDF", (), {"writeTo": lambda self, name: _FakeWriter(log)})()
+    return cat, df, log
+
+
+def test_iceberg_adapter_keeps_the_spec_rule(spark):  # F.col needs a JVM
+    """The adapter follows the shim's spec rule, checked against a fake
+    ``writeTo`` builder (no Iceberg runtime needed): overwrite_table
+    with no partition_by keeps the table and its spec; an append or a
+    compaction whose partition_by differs from the spec raises and
+    writes nothing; a spec given by a transform compares as Spark
+    describes it."""
+    identity = [("", ""), ("# Partition Information", ""),
+                ("# col_name", "data_type"), ("day", "string")]
+    cat, df, log = _fake_iceberg(identity)
+    assert cat._spec("t") == ["day"]
+    cat.overwrite_table(df, "t")
+    assert log == [("overwrite", ["Column<'true'>"])]
+    log.clear()
+    cat.overwrite_table(df, "t", partition_by=["id"])
+    assert log == [("partitionedBy", ["Column<'id'>"]),
+                   ("createOrReplace", [])]
+    log.clear()
+    with pytest.raises(ValueError, match="spec"):
+        cat.append(df, "t", partition_by=["id"])
+    assert log == []
+    cat.append(df, "t", partition_by=["day"])
+    cat.append(df, "t")
+    assert log == [("append", []), ("append", [])]
+    with pytest.raises(ValueError, match="spec"):
+        cat.compact(cat.spark, "t", partition_by=["id"])
+    assert not any("rewrite_data_files" in q for q in cat.spark.queries)
+    cat.compact(cat.spark, "t", partition_by=["day"])
+    cat.compact(cat.spark, "t")
+    assert sum("rewrite_data_files" in q for q in cat.spark.queries) == 2
+
+    cat, df, log = _fake_iceberg([("", ""), ("# Partitioning", ""),
+                                  ("Part 0", "days(ts)")])
+    assert cat._spec("t") == ["days(ts)"]
+    with pytest.raises(ValueError, match="spec"):
+        cat.append(df, "t", partition_by=["ts"])
+    assert _fake_iceberg([])[0]._spec("t") == []

@@ -1,5 +1,6 @@
 """Catalog snapshots, TTL eviction, checkpoint resume, lineage."""
 
+import os
 from datetime import datetime
 
 import pandas as pd
@@ -213,3 +214,99 @@ def test_delete_where_creates_new_snapshot(spark, catalog):
     assert s1 != s2
     assert catalog.read(spark, "t", s1).count() == 4  # time travel sees old data
     assert catalog.read(spark, "t", s2).count() == 2
+
+
+def _day_tier(spark, catalog, days):
+    """A ``[day]``-partitioned tier of four rows per January day, with
+    ``day = to_date(bucket_start)`` as the rollup job writes it."""
+    from datetime import date
+
+    rows = [("c1", datetime(2025, 1, d, h), float(d * 24 + h), date(2025, 1, d))
+            for d in days for h in (0, 6, 12, 18)]
+    return catalog.overwrite_table(
+        spark.createDataFrame(
+            rows, "conv_id string, bucket_start timestamp, mean double, "
+                  "day date"),
+        "tier_1m", partition_by=["day"])
+
+
+def _data_files(root):
+    return {p: d for p, d in file_digests(root).items()
+            if os.path.basename(p).startswith("part-")}
+
+
+def test_midnight_eviction_drops_whole_days_without_a_job(spark, catalog,
+                                                          tmp_path):
+    """A cutoff at midnight evicts whole day partitions only: the
+    partition-only delete starts no Spark job and writes no file, the
+    kept days' files stay the very files first written, and the view
+    equals the row-level eviction."""
+    _day_tier(spark, catalog, range(1, 11))
+    tdir = tmp_path / "warehouse" / "tier_1m"
+    before = _data_files(tdir)
+    full = catalog.read(spark, "tier_1m").collect()
+    now, retention = datetime(2025, 1, 12), {"1m": 7 * 86400}  # cutoff 01-05
+    snap, n_jobs = jobs_started(spark, lambda: evict_tier(
+        catalog, spark, "tier_1m", "1m", now, retention, partition_col="day"))
+    assert n_jobs == 0
+    assert _data_files(tdir) == before
+    cur = catalog.snapshots("tier_1m")[-1]
+    assert cur.snapshot_id == snap and cur.summary["dropped_leaves"] == 4
+    assert cur.summary["rewritten_dirs"] == 0
+    assert [os.path.basename(p) for p in cur.paths] == [
+        f"day=2025-01-{d:02d}" for d in range(5, 11)]
+    cutoff = cutoff_for("1m", now, retention)
+    assert sorted(catalog.read(spark, "tier_1m").collect()) == sorted(
+        r for r in full if r.bucket_start >= cutoff)
+
+
+def test_boundary_eviction_rewrites_only_the_cutoff_day(spark, catalog,
+                                                        tmp_path):
+    """A cutoff inside a day drops the whole days before it and
+    rewrites only the cutoff day's leaf: every other kept leaf's files
+    are byte-identical, and the view equals the row-level eviction."""
+    _day_tier(spark, catalog, range(1, 11))
+    base = catalog.snapshots("tier_1m")[-1].paths[0]
+    leaf = {d: os.path.join(base, f"day=2025-01-{d:02d}") for d in range(1, 11)}
+    kept = {d: file_digests(leaf[d]) for d in range(6, 11)}
+    full = catalog.read(spark, "tier_1m").collect()
+    now, retention = datetime(2025, 1, 12, 9), {"1m": 7 * 86400}
+    evict_tier(catalog, spark, "tier_1m", "1m", now, retention,
+               partition_col="day")  # cutoff 2025-01-05 09:00
+    cur = catalog.snapshots("tier_1m")[-1]
+    assert cur.summary["rewritten_dirs"] == 1
+    assert cur.paths[:-1] == [leaf[d] for d in range(6, 11)]
+    assert [n for n in os.listdir(cur.paths[-1]) if n.startswith("day=")] \
+        == ["day=2025-01-05"]
+    assert {d: file_digests(leaf[d]) for d in range(6, 11)} == kept
+    cutoff = cutoff_for("1m", now, retention)
+    assert sorted(catalog.read(spark, "tier_1m").collect()) == sorted(
+        r for r in full if r.bucket_start >= cutoff)
+
+
+def test_day_replace_swaps_leaves_without_a_probe(spark, catalog, tmp_path):
+    """replace_where(day IN ...) starts no job beyond writing the new
+    rows: the replaced leaves leave the view by name, no dir is probed
+    or rewritten, and the other days carry over as leaves."""
+    from datetime import date
+
+    _day_tier(spark, catalog, range(1, 6))
+    base = catalog.snapshots("tier_1m")[-1].paths[0]
+    new = spark.createDataFrame(
+        [("c9", datetime(2025, 1, d, 3), -1.0, date(2025, 1, d))
+         for d in (2, 4)],
+        "conv_id string, bucket_start timestamp, mean double, day date")
+    _, write_jobs = jobs_started(spark, lambda: new.write.partitionBy("day")
+                                 .parquet(str(tmp_path / "scratch")))
+    _, n_jobs = jobs_started(spark, lambda: catalog.replace_where(
+        spark, new, "tier_1m", "day IN (DATE'2025-01-02', DATE'2025-01-04')"))
+    assert n_jobs == write_jobs
+    cur = catalog.snapshots("tier_1m")[-1]
+    assert cur.summary["dropped_leaves"] == 2
+    assert cur.summary["rewritten_dirs"] == 0
+    assert cur.paths[:-1] == [os.path.join(base, f"day=2025-01-0{d}")
+                              for d in (1, 3, 5)]
+    got = sorted((r.conv_id, r.day.day) for r in
+                 catalog.read(spark, "tier_1m").collect())
+    assert got == sorted([("c1", d) for d in (1, 3, 5) for _ in range(4)]
+                         + [("c9", 2), ("c9", 4)])

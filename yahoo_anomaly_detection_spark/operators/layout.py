@@ -226,7 +226,8 @@ FROM planned
 """
 
 
-ORACLE_SQL = {"compaction_plan": _compaction_sql()}
+# the registry query plans with target_rows=2_000 (q_compaction_plan)
+ORACLE_SQL = {"compaction_plan": _compaction_sql(2_000)}
 
 
 # ----------------------------------------------------- bucketed tables

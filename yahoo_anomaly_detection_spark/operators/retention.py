@@ -7,14 +7,14 @@ North-rule component (reference has no storage layer; its analog of
 Policy: each tier keeps ``retention`` seconds of history relative to a
 caller-supplied ``now`` watermark (never the wall clock — determinism,
 SURVEY §7.4). Eviction is an Iceberg-style ``DELETE WHERE`` through
-the catalog shim (metadata-only partition drop on real Iceberg);
-verification is a ``left_anti`` join proving no evicted bucket
-survives (SURVEY §2.7).
+the catalog; whole expired day partitions drop in metadata alone, on
+the parquet shim as on real Iceberg. Verification is a ``left_anti``
+join proving no evicted bucket survives (SURVEY §2.7).
 """
 
 from __future__ import annotations
 
-from datetime import date, datetime, timedelta
+from datetime import date, datetime, time, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,39 +40,47 @@ def evict_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
     of the evicted view.
 
     ``partition_col``: name of a hive-partition date column derived
-    from ``bucket_start`` (the rollup job writes ``day``). When given,
-    the predicate gains the equivalent partition conjunct
-    ``col <= date(cutoff)`` — semantically redundant (implied by the
-    bucket_start bound) but it is what makes the delete prunable by
-    partition metadata: whole-partition drops are metadata-only on
-    Iceberg, and the shim's probes prune the scan to the matching
-    day dirs. If the table is partitioned by exactly ``partition_col``
-    and no partition value is on or before the cutoff date, the
-    conjunct is TRUE for no row, so nothing is deleted: the hive dir
-    names alone show it, and the current snapshot id is returned with
-    no Spark job and no commit."""
+    from ``bucket_start`` (the rollup job writes ``day``), so a row of
+    day ``d`` is past a cutoff ``c`` exactly when ``d < date(c)``, or
+    ``d = date(c)`` and ``bucket_start < c``. If the table is
+    partitioned by exactly ``partition_col``, the eviction is those two
+    deletes: ``col < DATE '<date(c)>'`` references the partition column
+    alone, so the catalog drops those whole day partitions in metadata
+    with no Spark job (as Iceberg does), and only a cutoff that is not
+    midnight adds the second, which rewrites the one boundary day.
+    Each is issued only if the hive dir names show a day it can hold;
+    with none, the current snapshot id is returned with no Spark job
+    and no commit. Under any other layout the predicate is the bucket
+    bound plus the redundant partition conjunct ``col <= date(c)``,
+    which keeps the delete prunable by partition metadata."""
     cutoff = cutoff_for(tier, now, retention_s)
     pred = f"bucket_start < TIMESTAMP '{cutoff.isoformat(sep=' ')}'"
-    if partition_col is not None:
-        pred += f" AND {partition_col} <= DATE '{cutoff.date().isoformat()}'"
-        snap = catalog.current_snapshot_id(table)
-        days = catalog.partition_values(table, partition_col, snap)
-        if days is not None and not any(
-                _on_or_before(d, cutoff.date()) for d in days):
-            return snap
-    return catalog.delete_where(spark, table, pred)
-
-
-def _on_or_before(value: str, day: date) -> bool:
-    """Can rows of hive partition ``value`` satisfy ``col <= day``?
-    NULL (the default partition) never does; a name that does not
-    parse as a date is assumed to."""
-    if value == HIVE_NULL_PARTITION:
-        return False
-    try:
-        return date.fromisoformat(value) <= day
-    except ValueError:
-        return True
+    if partition_col is None:
+        return catalog.delete_where(spark, table, pred)
+    day = cutoff.date()
+    snap = catalog.current_snapshot_id(table)
+    days = catalog.partition_values(table, partition_col, snap)
+    if days is None:
+        return catalog.delete_where(
+            spark, table, f"{pred} AND {partition_col} <= DATE '{day}'")
+    before = on = False
+    for v in days:
+        if v == HIVE_NULL_PARTITION:  # NULL satisfies neither
+            continue
+        try:
+            d = date.fromisoformat(v)
+        except ValueError:  # not a date: let the deletes decide
+            before = on = True
+            continue
+        before |= d < day
+        on |= d == day
+    if before:
+        snap = catalog.delete_where(
+            spark, table, f"{partition_col} < DATE '{day}'")
+    if on and cutoff != datetime.combine(day, time()):
+        snap = catalog.delete_where(
+            spark, table, f"{partition_col} = DATE '{day}' AND {pred}")
+    return snap
 
 
 def vacuum_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
@@ -84,8 +92,8 @@ def vacuum_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
     ``delete_where`` commits a new snapshot but every pre-eviction
     data dir stays on disk for time travel — run forever and dead
     storage grows without bound. This is the standard Iceberg
-    maintenance pairing: optionally ``compact`` the live view into a
-    single rewrite (collapsing the O(#commits) read plan), then
+    maintenance pairing: optionally ``compact`` the live view (merging
+    what a long commit history split over many dirs), then
     ``expire_snapshots(keep_last=)`` to GC unreferenced dirs. Call it
     on the TTL job's cadence, after :func:`evict_tier` +
     :func:`verify_survivors` have proven the new snapshot correct —
@@ -95,8 +103,7 @@ def vacuum_tier(catalog: ParquetCatalog, spark: SparkSession, table: str,
     exactly — the row count is checked across the rewrite and a
     mismatch raises BEFORE any snapshot is expired, while every
     pre-compaction snapshot is still time-travelable. A compaction
-    that commits nothing (the view already is one dir) has nothing to
-    verify. ``partition_by`` is rarely needed: the catalog's sticky
+    that commits nothing (nothing to merge) has nothing to verify. ``partition_by`` is rarely needed: the catalog's sticky
     partition spec already carries the tier's layout through the
     rewrite."""
     if compact:

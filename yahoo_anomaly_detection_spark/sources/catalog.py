@@ -13,12 +13,21 @@ Layout on disk::
     <root>/<table>/
         _snapshots.json          # ordered commit log
         _manifest.lock           # exclusive commit mutex (transient)
-        snap=<id>/...parquet     # data files of snapshot <id>
+        snap=<id>/...parquet     # data files of commit <id>
+        snap=<id>/<col>=<v>/...  # ... hive-partitioned by the spec
 
 Each snapshot is a FULL logical view assembled from parent snapshot
 data minus replaced/deleted partitions plus new files — implemented
-here by listing parquet paths per snapshot in the manifest (classic
-Iceberg manifest-list behavior, simplified).
+here by listing paths per snapshot in the manifest (classic Iceberg
+manifest-list behavior, simplified). A path is a commit dir
+``snap=<id>``, or, when the table's spec is one column, a **leaf**
+``snap=<id>/<col>=<v>`` of one: whole-view writes and appends record
+their commit dir, and a commit that drops or swaps some partitions of
+a dir records the dir's other leaves instead. So a delete or replace
+whose predicate references only the spec column (``day < DATE '…'``,
+``day IN (…)``) is metadata-only, as on Iceberg: it is evaluated
+against the view's partition values, and the matching leaves leave
+the view without a probe, a rewrite or a Spark job.
 
 Concurrency model (mirrors Iceberg's optimistic commits): data files
 are written OUTSIDE any lock (long Spark jobs never serialize); the
@@ -31,12 +40,13 @@ commit lands in between they raise :class:`CommitConflictError`
 instead of silently dropping that commit's rows (Iceberg's
 serializable-isolation validation; the caller retries). A commit that
 raises it first removes the data dirs it wrote.
-``expire_snapshots`` deletes ONLY data dirs that the
+``expire_snapshots`` deletes ONLY data dirs and leaves that the
 expired snapshots referenced and no retained snapshot still does —
 never "any dir not in the manifest", because a concurrent append
-writes its data dir before taking the commit lock. Dirs orphaned by
-crashed writers are reclaimed by :meth:`remove_orphan_files` (age-
-guarded, exactly like Iceberg's ``remove_orphan_files`` procedure).
+writes its data dir before taking the commit lock, and never a commit
+dir that still holds live leaves. Dirs orphaned by crashed writers
+are reclaimed by :meth:`remove_orphan_files` (age-guarded, exactly
+like Iceberg's ``remove_orphan_files`` procedure).
 
 Every data dir of a view is laid out in its snapshot's partition spec
 (``summary["partition_by"]``), so the spec alone tells how the files
@@ -77,9 +87,38 @@ class CommitConflictError(RuntimeError):
 class Snapshot:
     snapshot_id: str
     parent_id: str | None
-    operation: str  # append | overwrite | delete_where
-    paths: list[str] = field(default_factory=list)  # parquet dirs composing the view
+    operation: str  # append | overwrite | delete_where | replace_where | merge | compact
+    paths: list[str] = field(default_factory=list)  # commit dirs and leaves composing the view
     summary: dict = field(default_factory=dict)
+
+
+def _commit_dir(path: str) -> str:
+    """The ``snap=<id>`` commit dir a view path is or lies in."""
+    if os.path.basename(path).startswith("snap="):
+        return path
+    return os.path.dirname(path)
+
+
+def _leaf_col(snap: Snapshot) -> str | None:
+    """The spec column when the spec is exactly one column (then the
+    view may name leaves), else None."""
+    spec = snap.summary.get("partition_by")
+    return spec[0] if spec and len(spec) == 1 else None
+
+
+def _hive_leaves(commit_dir: str) -> list[str]:
+    """Every ``<col>=<v>`` leaf on disk of a commit dir, sorted."""
+    return sorted(os.path.join(commit_dir, n)
+                  for n in os.listdir(commit_dir) if "=" in n)
+
+
+def _leaves(path: str, col: str | None) -> list[str]:
+    """The units a view path stands for under spec column ``col``: the
+    leaves of a commit dir, or ``[path]`` for a leaf or when ``col`` is
+    None."""
+    if col is None or path != _commit_dir(path):
+        return [path]
+    return _hive_leaves(path)
 
 
 class ParquetCatalog:
@@ -232,28 +271,36 @@ class ParquetCatalog:
 
     def _cow_commit(self, spark: SparkSession, table: str, op: str,
                     matches: Callable, keep: Callable, summary: dict,
-                    new_df: DataFrame | None = None) -> str:
+                    new_df: DataFrame | None = None,
+                    predicate: str | None = None) -> str:
         """Copy-on-write commit of ``op`` against the current snapshot
-        (the base), touching only the data dirs it affects — the
+        (the base), touching only the partitions it affects — the
         manifest-filtering analog behind :meth:`delete_where`,
         :meth:`replace_where` and :meth:`merge_upsert`.
 
         ``new_df`` (if any) is written first as ``snap=<id>`` and read
         back as ``written``: the probes and the rewrite then scan a
         stable delta instead of recomputing an arbitrary upstream plan
-        per dir. Every data dir of the base is probed with
-        ``matches(rows, written).limit(1)`` — partition pruning and
-        parquet min-max pushdown make this a metadata read for
-        partition- and range-predicates, the TTL shape. Dirs with NO
-        match carry over into the new snapshot untouched: their files
-        stay byte-identical on disk (asserted in tests). The affected
-        dirs are rewritten together as ``keep(rows, written)`` into
-        ``snap=<id>_rw`` next to new data, or ``snap=<id>`` without.
-        Real Iceberg goes one step further (whole-partition deletes are
-        metadata-only); the shim's unit of pruning is the commit data
-        dir. The snapshot inherits the base's spec and schema, and the
-        delete and the insert are atomic together, so a reader never
-        sees the gap between them.
+        per dir.
+
+        The unit of pruning is a leaf ``snap=<id>/<col>=<v>`` when the
+        spec is one column ``col``, else a commit dir. A ``predicate``
+        that references only ``col`` is decided from the leaf names
+        (:meth:`_partition_only`): the matching leaves leave the view
+        with no probe, no rewrite and no Spark job, as Iceberg's
+        whole-partition deletes are metadata-only. Otherwise every
+        commit dir of the base is probed once with
+        ``matches(rows, written)`` — ``limit(1)``, or under a ``col``
+        spec the distinct ``col`` values of the matches, which name the
+        affected leaves; partition pruning and parquet min-max pushdown
+        make this a metadata read for partition- and range-predicates.
+        Unaffected dirs and leaves carry over into the new snapshot
+        untouched: their files stay byte-identical on disk (asserted in
+        tests). The affected ones are rewritten together as
+        ``keep(rows, written)`` into ``snap=<id>_rw`` next to new data,
+        or ``snap=<id>`` without. The snapshot inherits the base's spec
+        and schema, and the delete and the insert are atomic together,
+        so a reader never sees the gap between them.
 
         Dirs are probed CONCURRENTLY (Spark job submission is
         thread-safe): each probe is a Spark job of its own, which
@@ -282,44 +329,142 @@ class ParquetCatalog:
         base = self._snapshot(table)
         spec = base.summary.get("partition_by")
         schema = base.summary.get("schema")
+        col = _leaf_col(base)
         snap_id = self._new_snap_id()
         data_dir = self._new_data_dir(table, snap_id)
         written = None
+        new_paths = []
         if new_df is not None:
             self._write_data(new_df, data_dir, spec)
+            new_paths.append(data_dir)
             written = self._read_dirs(spark, [data_dir],
                                       new_df.schema.jsonValue())
 
-        def untouched(p: str) -> bool:
-            rows = self._read_dirs(spark, [p], schema)
-            return matches(rows, written).limit(1).count() == 0
+        groups: dict[str, list[str]] = {}  # commit dir -> its leaves
+        for p in base.paths:
+            groups.setdefault(_commit_dir(p), []).extend(_leaves(p, col))
+        units = [u for us in groups.values() for u in us]
+        rel = self._leaf_relation(units, col, schema)
+        gone = self._partition_only(spark, rel, units, col, predicate)
+        rewritten = 0
+        if gone is not None:
+            summary = {**summary, "dropped_leaves": len(gone)}
+        else:
+            value = ({units[r[0]]: r[col] for r in spark.sql(rel).collect()}
+                     if rel is not None else {})
 
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(8, len(base.paths)))
-        ) as ex:
-            empty = list(ex.map(untouched, base.paths))
-        affected = [p for p, e in zip(base.paths, empty) if not e]
-        new_paths = []
-        if affected:
-            rewrite_dir = data_dir + "_rw" if new_df is not None else data_dir
-            kept = keep(self._read_dirs(spark, affected, schema), written)
-            self._write_data(kept, rewrite_dir, spec)
-            new_paths.append(rewrite_dir)
-        if new_df is not None:
-            new_paths.append(data_dir)
-        paths = [p for p, e in zip(base.paths, empty) if e] + new_paths
-        summary = {**summary, "rewritten_dirs": len(affected),
-                   "pruned_dirs": len(base.paths) - len(affected),
-                   "partition_by": spec, "schema": schema}
+            def affected(leaves: list[str]) -> list[str]:
+                if not leaves:  # an empty commit under a col spec
+                    return []
+                hit = matches(self._read_dirs(spark, leaves, schema),
+                              written)
+                if col is None:
+                    return leaves if hit.limit(1).count() else []
+                vals = {r[0] for r in hit.select(col).distinct().collect()}
+                out = [u for u in leaves if u in value and value[u] in vals]
+                # a matched value that names no leaf: rewrite them all
+                return out if len(vals) == len({value[u] for u in out}) \
+                    else leaves
+
+            with ThreadPoolExecutor(
+                max_workers=max(1, min(8, len(groups)))
+            ) as ex:
+                hits = [h for h in ex.map(affected, groups.values()) if h]
+            gone = [u for h in hits for u in h]
+            rewritten = len(hits)
+            if gone:
+                rewrite_dir = data_dir + "_rw" if new_df is not None \
+                    else data_dir
+                kept = keep(self._read_dirs(spark, gone, schema), written)
+                self._write_data(kept, rewrite_dir, spec)
+                if _leaves(rewrite_dir, col):
+                    new_paths.insert(0, rewrite_dir)
+                else:  # under a col spec: the rewrite kept no row
+                    shutil.rmtree(rewrite_dir)
+        summary = {**summary, "rewritten_dirs": rewritten,
+                   "pruned_dirs": len(groups) - rewritten}
+        return self._swap_commit(table, base, snap_id, op, set(gone),
+                                 new_paths, summary)
+
+    def _swap_commit(self, table: str, base: Snapshot, snap_id: str,
+                     op: str, gone: set[str], new_paths: list[str],
+                     summary: dict) -> str:
+        """Commit ``base``'s view minus the ``gone`` leaves (or commit
+        dirs) plus ``new_paths`` as snapshot ``snap_id``, in the base's
+        spec and schema. A path with nothing gone carries over as it
+        is; a commit dir with some leaves gone is replaced by its other
+        leaves. Raises :class:`CommitConflictError`, removing
+        ``new_paths``, if another commit landed after ``base``."""
+        col = _leaf_col(base)
+        paths = []
+        for p in base.paths:
+            units = _leaves(p, col)
+            if gone.isdisjoint(units):
+                paths.append(p)
+            else:
+                paths.extend(u for u in units if u not in gone)
+        summary = {**summary,
+                   "partition_by": base.summary.get("partition_by"),
+                   "schema": base.summary.get("schema")}
 
         def make(cur: list[Snapshot]) -> Snapshot:
             if not cur or cur[-1].snapshot_id != base.snapshot_id:
                 raise CommitConflictError(
                     f"table {table!r} advanced past {base.snapshot_id!r} "
                     f"during {op} — re-run against the new snapshot")
-            return Snapshot(snap_id, base.snapshot_id, op, paths, summary)
+            return Snapshot(snap_id, base.snapshot_id, op,
+                            paths + new_paths, summary)
 
         return self._commit(table, make, new_paths)
+
+    @staticmethod
+    def _leaf_relation(leaves: list[str], col: str | None,
+                       schema_json: dict | None) -> str | None:
+        """SQL of one row per leaf: ``_leaf`` (its index in ``leaves``),
+        then every column of the table — ``col`` as the leaf's
+        partition value cast to the column's type, the others as typed
+        NULLs. A ``VALUES`` relation, which Spark folds at optimization
+        time: filtering and collecting it start no job. None when
+        there is no leaf or no recorded type for ``col``."""
+        from urllib.parse import unquote
+
+        if col is None or not leaves or schema_json is None:
+            return None
+        types = {f.name: f.dataType.simpleString()
+                 for f in StructType.fromJson(schema_json).fields}
+        if col not in types:
+            return None
+
+        def value(leaf: str) -> str:
+            v = os.path.basename(leaf).split("=", 1)[1]
+            if v == HIVE_NULL_PARTITION:
+                return "NULL"
+            v = unquote(v).replace("\\", "\\\\").replace("'", "\\'")
+            return f"'{v}'"
+
+        rows = ", ".join(f"({i}, {value(u)})" for i, u in enumerate(leaves))
+        cols = ", ".join(f"CAST({'v' if c == col else 'NULL'} AS {t}) AS `{c}`"
+                         for c, t in types.items())
+        return f"SELECT _leaf, {cols} FROM VALUES {rows} AS t(_leaf, v)"
+
+    @staticmethod
+    def _partition_only(spark: SparkSession, rel: str | None,
+                        leaves: list[str], col: str | None,
+                        predicate: str | None) -> set[str] | None:
+        """The leaves whose every row satisfies ``predicate`` — when it
+        is deterministic and references no column but the spec column
+        ``col``, so that it has one value per leaf — evaluated over
+        :meth:`_leaf_relation` with no Spark job; else None: the rows
+        must be probed."""
+        if rel is None or predicate is None:
+            return None
+        hit = spark.sql(f"SELECT _leaf FROM ({rel}) WHERE {predicate}")
+        cond = hit._jdf.queryExecution().analyzed().child().condition()
+        refs = cond.references().toSeq().mkString(",")  # "day#12,..."
+        if not cond.deterministic() or any(
+                a.rsplit("#", 1)[0] != col for a in refs.split(",") if a):
+            return None
+        return {leaves[r[0]] for r in hit.collect()}
 
     @staticmethod
     def _predicate(predicate: str) -> tuple[Callable, Callable]:
@@ -332,12 +477,15 @@ class ParquetCatalog:
     def delete_where(self, spark: SparkSession, table: str,
                      predicate: str) -> str:
         """Iceberg ``DELETE FROM t WHERE p`` → new snapshot: only
-        predicate=TRUE rows go, and only the data dirs holding them are
-        rewritten (:meth:`_cow_commit`). A delete that matches nothing
-        commits a metadata-only snapshot over the same dirs."""
+        predicate=TRUE rows go, and only the dirs or leaves holding
+        them are rewritten (:meth:`_cow_commit`); a predicate on the
+        spec column alone drops whole leaves with no rewrite. A delete
+        that matches nothing commits a metadata-only snapshot over the
+        same paths."""
         return self._cow_commit(spark, table, "delete_where",
                                 *self._predicate(predicate),
-                                {"predicate": predicate})
+                                {"predicate": predicate},
+                                predicate=predicate)
 
     def replace_where(self, spark: SparkSession, df: DataFrame, table: str,
                       predicate: str) -> str:
@@ -348,12 +496,15 @@ class ParquetCatalog:
 
         This is the continuous-aggregate refresh primitive: an
         incremental tier refresh replaces ONLY the affected day
-        partitions (``day IN (...)``) with freshly merged rows, so
+        partitions (``day IN (...)``) with freshly merged rows — a
+        predicate on the spec column alone, so the replaced leaves are
+        swapped for ``df``'s dir with no probe and no rewrite, and
         commit cost scales with the delta, never with table history.
         """
         return self._cow_commit(spark, table, "replace_where",
                                 *self._predicate(predicate),
-                                {"predicate": predicate}, new_df=df)
+                                {"predicate": predicate}, new_df=df,
+                                predicate=predicate)
 
     def merge_upsert(self, spark: SparkSession, source: DataFrame,
                      table: str, key_cols: list[str]) -> str:
@@ -423,8 +574,9 @@ class ParquetCatalog:
     # ---------- maintenance ----------
     def expire_snapshots(self, table: str, keep_last: int = 1) -> dict:
         """Retire all but the newest ``keep_last`` snapshots and delete
-        the data dirs they referenced that no retained snapshot still
-        does (Iceberg's ``expire_snapshots`` maintenance procedure).
+        the data dirs and leaves they referenced that no retained
+        snapshot still does (Iceberg's ``expire_snapshots`` maintenance
+        procedure).
 
         Without this, every append/delete commit dir lives forever —
         at 100 TB with high-frequency appends that is a multiple of
@@ -435,9 +587,10 @@ class ParquetCatalog:
         snapshots referenced (a concurrent writer's data dir exists on
         disk before its commit — sweeping "unreferenced" dirs would
         destroy it; those are :meth:`remove_orphan_files`'s job, with
-        an age guard). Dir removal happens after the new manifest is
-        in place, so a crash mid-GC leaves orphan dirs, never a
-        manifest referencing deleted data.
+        an age guard). A dead commit dir that still holds live leaves
+        loses only its dead leaves. Dir removal happens after the new
+        manifest is in place, so a crash mid-GC leaves orphan dirs,
+        never a manifest referencing deleted data.
         """
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
@@ -451,8 +604,17 @@ class ParquetCatalog:
             live = {os.path.abspath(p) for s in kept for p in s.paths}
             dead = {os.path.abspath(p) for s in expired
                     for p in s.paths} - live
+        live_dirs = {_commit_dir(p) for p in live}
+        targets = set()
+        for p in dead:
+            d = _commit_dir(p)
+            if d not in live_dirs:
+                targets.add(d)
+            elif d not in live:  # a retained snapshot reads some leaves
+                targets.update(u for u in _hive_leaves(d) if u not in live
+                               and (p == d or u == p))
         removed = 0
-        for full in dead:
+        for full in sorted(targets):
             if os.path.exists(full):
                 shutil.rmtree(full)
                 removed += 1
@@ -461,9 +623,11 @@ class ParquetCatalog:
 
     def remove_orphan_files(self, table: str,
                             older_than_s: float = 3 * 86400) -> dict:
-        """Delete ``snap=`` dirs no snapshot references (Iceberg's
-        ``remove_orphan_files``): leftovers of crashed writers and of
-        GC interrupted between manifest rewrite and dir removal.
+        """Delete ``snap=`` dirs and leaves no snapshot references
+        (Iceberg's ``remove_orphan_files``): leftovers of crashed
+        writers and of GC interrupted between manifest rewrite and dir
+        removal. A commit dir counts as referenced when any of its
+        leaves is; then only its unreferenced leaves can go.
 
         The age guard is load-bearing, exactly as in Iceberg: an
         in-flight writer's data dir exists on disk BEFORE its manifest
@@ -473,43 +637,69 @@ class ParquetCatalog:
         with self._lock(table):
             snaps = self.snapshots(table)
             referenced = {os.path.abspath(p) for s in snaps for p in s.paths}
-            tdir = os.path.join(self.root, table)
+            ref_dirs = {_commit_dir(p) for p in referenced}
+            tdir = os.path.abspath(os.path.join(self.root, table))
             cutoff = time.time() - older_than_s
             orphans = []
             for name in os.listdir(tdir):
-                full = os.path.abspath(os.path.join(tdir, name))
-                if (name.startswith("snap=") and full not in referenced
-                        and os.path.getmtime(full) < cutoff):
-                    orphans.append(full)
+                full = os.path.join(tdir, name)
+                if not name.startswith("snap=") or full in referenced:
+                    continue
+                units = ([full] if full not in ref_dirs else
+                         [u for u in _hive_leaves(full)
+                          if u not in referenced])
+                orphans += [u for u in units if os.path.getmtime(u) < cutoff]
         for full in orphans:
             shutil.rmtree(full, ignore_errors=True)
         return {"removed_dirs": len(orphans)}
 
     def compact(self, spark: SparkSession, table: str,
                 partition_by: list[str] | None = None) -> str:
-        """Rewrite the current view into a single data dir (Iceberg's
-        ``rewrite_data_files``): collapses the O(#commits) union that
-        ``read`` otherwise plans over a long append history back to
-        one scan node. Commits a normal overwrite snapshot — the
-        table's partition spec is inherited unless overridden,
-        so compaction never flattens a partitioned table — and time
+        """Rewrite the current view into fewer data dirs (Iceberg's
+        ``rewrite_data_files``), collapsing the union that ``read``
+        otherwise plans over a long append history, in a snapshot of
+        the table's partition spec unless ``partition_by`` overrides
+        it — compaction never flattens a partitioned table. Time
         travel to pre-compaction snapshots keeps working until
         ``expire_snapshots`` retires them.
 
-        No-op when the view already is at most one data dir and
-        ``partition_by`` is ``None`` or the table's spec: returns the
-        current snapshot id, rewrites nothing and commits nothing (a
-        rewrite would only copy the dir)."""
+        Under a one-column spec only the partition values that more
+        than one path holds are rewritten, into one new dir that
+        replaces their leaves (a copy-on-write ``compact`` commit);
+        under another spec, or with a new ``partition_by``, the whole
+        view is rewritten as one dir (an ``overwrite``). No-op when
+        there is nothing to merge — every partition value in one path,
+        or the view at most one dir — and ``partition_by`` is ``None``
+        or the table's spec: returns the current snapshot id, rewrites
+        nothing and commits nothing (a rewrite would only copy files).
+        """
         cur = self._snapshot(table)
-        if (len(cur.paths) <= 1
-                and partition_by in (None, cur.summary.get("partition_by"))):
+        spec = cur.summary.get("partition_by")
+        col = _leaf_col(cur)
+        if partition_by in (None, spec) and col is not None:
+            by_value: dict[str, list[str]] = {}
+            for p in cur.paths:
+                for u in _leaves(p, col):
+                    by_value.setdefault(os.path.basename(u), []).append(u)
+            gone = [u for us in by_value.values() if len(us) > 1 for u in us]
+            if not gone:
+                return cur.snapshot_id
+            snap_id = self._new_snap_id()
+            data_dir = self._new_data_dir(table, snap_id)
+            self._write_data(
+                self._read_dirs(spark, gone, cur.summary.get("schema")),
+                data_dir, spec)
+            return self._swap_commit(table, cur, snap_id, "compact",
+                                     set(gone), [data_dir],
+                                     {"rewritten_leaves": len(gone)})
+        if len(cur.paths) <= 1 and partition_by in (None, spec):
             return cur.snapshot_id
         return self.overwrite_table(self.read(spark, table), table,
                                     partition_by=partition_by)
 
     def partition_values(self, table: str, col: str,
                          snapshot_id: str | None = None) -> set[str] | None:
-        """Hive ``col=`` values of a snapshot's data dirs (default:
+        """Hive ``col=`` values of a snapshot's leaves (default:
         current), read with ``os.listdir`` alone — no Spark job, no
         parquet footer. A NULL value shows as
         :data:`HIVE_NULL_PARTITION`. ``None`` unless the table spec
@@ -518,19 +708,21 @@ class ParquetCatalog:
         snap = self._snapshot(table, snapshot_id)
         if snap.summary.get("partition_by") != [col]:
             return None
-        return {n.split("=", 1)[1] for p in snap.paths
-                for n in os.listdir(p) if n.startswith(f"{col}=")}
+        return {os.path.basename(u).split("=", 1)[1]
+                for p in snap.paths for u in _leaves(p, col)}
 
     # ---------- reads ----------
     @staticmethod
     def _read_dirs(spark: SparkSession, paths: list[str],
                    schema_json: dict | None) -> DataFrame:
-        """Union of per-commit-dir scans. One scan per dir: a
+        """Union of per-commit-dir scans. One scan per commit dir: a
         multi-path ``spark.read.parquet()`` refuses partitionBy'd
         commit dirs ("multiple root directories") because hive-style
         partition discovery needs a single root per scan. Found by the
         catalog contract suite; Catalyst still prunes columns/filters
-        into every branch of the union.
+        into every branch of the union. The leaves a view names of one
+        commit dir are one scan with the dir as ``basePath``, so they
+        keep their partition column.
 
         When the snapshot recorded its schema (``schema_json``), the
         scan applies it explicitly — schema lives in table metadata,
@@ -547,15 +739,21 @@ class ParquetCatalog:
                     [], schema=StructType.fromJson(schema_json))
             return spark.createDataFrame([], schema="dummy string").limit(0)
 
-        def one(p: str) -> DataFrame:
+        def one(d: str, ps: list[str]) -> DataFrame:
             r = spark.read.option("mergeSchema", "false")
             if schema_json is not None:
                 r = r.schema(StructType.fromJson(schema_json))
-            return r.parquet(p)
+            if ps != [d]:
+                r = r.option("basePath", d)
+            return r.parquet(*ps)
 
-        out = one(paths[0])
-        for p in paths[1:]:
-            out = out.unionByName(one(p), allowMissingColumns=True)
+        groups: dict[str, list[str]] = {}
+        for p in paths:
+            groups.setdefault(_commit_dir(p), []).append(p)
+        scans = [one(d, ps) for d, ps in groups.items()]
+        out = scans[0]
+        for s in scans[1:]:
+            out = out.unionByName(s, allowMissingColumns=True)
         return out
 
     def _snapshot(self, table: str,
@@ -577,13 +775,12 @@ class ParquetCatalog:
     def read(self, spark: SparkSession, table: str,
              snapshot_id: str | None = None) -> DataFrame:
         snap = self._snapshot(table, snapshot_id)
-        # Trade: the plan grows O(#append commits since last rewrite),
-        # so a long-lived high-frequency append table wants periodic
-        # compaction (overwrite_table with the current view collapses
-        # paths back to one dir — exactly what the retention/TTL jobs
-        # already do). Iceberg does this in metadata (one manifest
-        # list per snapshot, planned in a single scan node), which is
-        # one of the reasons the real deployment uses sources/iceberg.py.
+        # Trade: the plan is one scan per commit dir the view still
+        # reads, so a long-lived high-frequency append table wants
+        # periodic compaction (:meth:`compact`, which the retention
+        # and refresh jobs run). Iceberg plans any number of commits
+        # in a single scan node from its manifest list, which is one
+        # of the reasons the real deployment uses sources/iceberg.py.
         return self._read_dirs(spark, snap.paths,
                                snap.summary.get("schema"))
 

@@ -31,8 +31,10 @@ To enable on a real cluster (public Iceberg quickstart config):
 
 Mapping to the shim, method by method:
 
-    append               -> writeTo(t).append()      (create on first write)
-    overwrite_table      -> writeTo(t).createOrReplace()
+    append               -> writeTo(t).append()      (create on first write;
+                            a partition_by other than the spec raises)
+    overwrite_table      -> writeTo(t).createOrReplace() with partition_by,
+                            else writeTo(t).overwrite(TRUE) (keeps the spec)
     delete_where         -> DELETE FROM t WHERE p    (Iceberg retains
                             NULL-predicate rows natively — the shim
                             reproduces this with ``(p) IS NOT TRUE``)
@@ -42,7 +44,7 @@ Mapping to the shim, method by method:
 The TTL/retention semantics the engine relies on hold natively in
 Iceberg: partition-predicate deletes are metadata-only for fully
 matched files (copy-on-write rewrites only partially matched files),
-which is the scaled-up version of the shim's per-commit-dir pruning.
+which the shim reproduces per partition leaf under a one-column spec.
 """
 
 from __future__ import annotations
@@ -132,6 +134,38 @@ class IcebergCatalog:
         snaps = self.snapshots(table)
         return snaps[-1].snapshot_id if snaps else None
 
+    def _spec(self, table: str) -> list[str]:
+        """The table's partition spec from ``DESCRIBE TABLE``: identity
+        columns by name (under ``# Partition Information``), any other
+        transform as Spark describes it (``Part <i>`` rows under
+        ``# Partitioning``, e.g. ``days(ts)``); ``[]`` if unpartitioned."""
+        rows = [(r.col_name, r.data_type) for r in self.spark.sql(
+            f"DESCRIBE TABLE {self._fqn(table)}").collect()]
+        names = [n for n, _ in rows]
+        for header, skip, pick in (("# Partition Information", 2, 0),
+                                   ("# Partitioning", 1, 1)):
+            if header in names:
+                out = []
+                for row in rows[names.index(header) + skip:]:
+                    if not row[0] or row[0].startswith("#"):
+                        break
+                    out.append(row[pick])
+                return out
+        return []
+
+    def _check_spec(self, table: str, partition_by: list[str] | None,
+                    what: str) -> None:
+        """The shim's spec rule: only a whole-view write with an
+        explicit ``partition_by`` changes a table's spec."""
+        if partition_by is None:
+            return
+        spec = self._spec(table)
+        if list(partition_by) != spec:
+            raise ValueError(
+                f"{what} {table!r} with partition_by={partition_by} but "
+                f"the table spec is {spec}: only "
+                "overwrite_table(partition_by=...) changes a table's spec")
+
     # ---------- writes ----------
     def append(self, df: DataFrame, table: str,
                partition_by: list[str] | None = None) -> str:
@@ -142,14 +176,23 @@ class IcebergCatalog:
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.create()
         else:
+            self._check_spec(table, partition_by, "append to")
             w.append()
         return self.current_snapshot_id(table)
 
     def overwrite_table(self, df: DataFrame, table: str,
                         partition_by: list[str] | None = None) -> str:
+        """Replace the whole view. An explicit ``partition_by`` (re)sets
+        the spec (``createOrReplace``); ``None`` keeps the existing
+        table, its spec and schema, and replaces every row
+        (``overwrite(TRUE)``), as the shim keeps its spec."""
+        from pyspark.sql import functions as F
+
         w = df.writeTo(self._fqn(table))
+        if partition_by is None and self.exists(table):
+            w.overwrite(F.lit(True))
+            return self.current_snapshot_id(table)
         if partition_by:
-            from pyspark.sql import functions as F
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
         w.createOrReplace()
         return self.current_snapshot_id(table)
@@ -259,10 +302,12 @@ class IcebergCatalog:
     def compact(self, spark: SparkSession, table: str,
                 partition_by: list[str] | None = None) -> str:
         """Iceberg's ``rewrite_data_files`` (bin-packing compaction),
-        within the table's own partition spec: ``partition_by`` is not
-        applied."""
+        within the table's own partition spec: a ``partition_by`` other
+        than the spec raises ``ValueError`` (the procedure cannot
+        re-partition; ``overwrite_table(partition_by=...)`` can)."""
         if not self.exists(table):
             raise FileNotFoundError(f"no snapshots for table {table!r}")
+        self._check_spec(table, partition_by, "compact")
         spark.sql(
             f"CALL {self.catalog}.system.rewrite_data_files("
             f"table => '{self.namespace}.{table}')"
