@@ -14,9 +14,9 @@ are computed (count() would let Catalyst prune aggregates).
 Host-noise robustness: the sandbox host has multi-minute contention /
 memory-backend episodes (BENCH/BASELINE.md documents first-touch page
 faults degrading ~1000x). A single timed pass taken inside such a
-window measures the host, not the engine — round 2's committed bench
-overstated core queries 2-7x exactly this way. So the harness runs
-$SPARK_GRAFT_BENCH_REPEATS (default 2) INTERLEAVED rounds — all
+window measures the host, not the engine, and can overstate a query
+2-7x. So the harness runs $SPARK_GRAFT_BENCH_REPEATS (default 2)
+INTERLEAVED rounds — all
 queries once, then all again — and reports best-of-R per query: a
 degraded window inflates one round's numbers, not the minimum, and
 interleaving means no single query eats the whole bad window. Each
@@ -221,8 +221,8 @@ def main() -> None:
     }
     # full artifact (incl. every repeat's timing) goes to a sidecar;
     # stdout carries ONLY the compact summary line, kept well under
-    # the driver's 2000-char tail capture (round 3's line embedded
-    # all_runs, overflowed the capture, and committed as parsed=null)
+    # the driver's 2000-char tail capture (a line that embeds all_runs
+    # overflows the capture and parses as null)
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_summary.json"
     )

@@ -1,4 +1,4 @@
-"""Multi-pair scaling evidence (ADVICE round 2, low #5).
+"""Multi-pair scaling evidence.
 
 The single committed N->4N pair is chosen as the largest whose
 HARDWARE ceiling clears 0.8 — transparent, but the acceptance should

@@ -280,7 +280,7 @@ ideal 1.0 no physical workload on this guest can reach. A real
 cluster adds whole nodes and does not share turbo/oversubscription
 headroom between executors the way one guest shares it between vCPUs.
 
-## Engine fixes that this evidence depends on (round 2)
+## Engine fixes that this evidence depends on
 
 1. **Off-heap Tungsten memory + 16m pages** (`session.py`): on-heap
    execution memory funnels every page allocate/free of every task

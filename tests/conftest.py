@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from yahoo_anomaly_detection_spark import caching  # noqa: E402
 from yahoo_anomaly_detection_spark.session import get_spark  # noqa: E402
 
 
@@ -46,6 +47,32 @@ def jobs_started(spark, fn):
     out = fn()
     bus.waitUntilEmpty(30_000)
     return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def events_df(spark, rows):
+    """Event-table frame from ``(event_id, ts, user_id, event_type,
+    value)`` tuples."""
+    return spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double",
+    )
+
+
+def docs_df(spark, texts):
+    """``doc_id, text`` frame with doc ids 0..len(texts)-1."""
+    return spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string")
+
+
+@pytest.fixture
+def release_caches():
+    """Release every registered cache after the test. Operators that
+    materialize shared tiers leave the release to the caller, so the
+    modules that run them opt in with ``pytestmark`` and the shared
+    session does not accumulate caches."""
+    yield
+    caching.release_all()
 
 
 @pytest.fixture(scope="session")

@@ -1,4 +1,4 @@
-"""Catalog commit safety + run isolation (round-4 hardening).
+"""Catalog commit safety + run isolation.
 
 Covers the hazards a shared multi-writer warehouse hits:
 - delete_where / replace_where / merge_upsert raising on a concurrent

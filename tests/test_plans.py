@@ -11,16 +11,13 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_exchanges, plan_str
 from yahoo_anomaly_detection_spark.operators import rollup, stats
 from yahoo_anomaly_detection_spark.operators.cascade import residual_cascade
 
 
-# shared plan-audit helpers (single definition for all test modules)
-from conftest import count_exchanges as _exchanges, plan_str as _plan  # noqa: E402
-
-
 def _broadcasts(df) -> int:
-    return len(re.findall(r"BroadcastExchange", _plan(df)))
+    return len(re.findall(r"BroadcastExchange", plan_str(df)))
 
 
 @pytest.fixture(scope="module")
@@ -44,14 +41,14 @@ def test_latency_plus_rollup_one_shuffle(spark, points):
     ONE exchange — the superset-key distribution satisfies the agg."""
     lat = rollup.transcripts_latency(points.select("conv_id", "ts", "turn_idx"))
     t1m = rollup.rollup_points(lat, "1m")
-    assert _exchanges(t1m) == 1, _plan(t1m)
+    assert count_exchanges(t1m) == 1, plan_str(t1m)
 
 
 def test_cascade_recombination_one_shuffle(spark, points):
     t1m = rollup.rollup_points(points.select("conv_id", "ts", "value"), "1m")
     t1h = rollup.rollup_cascade(t1m, "1h")
     # one for the 1m agg, one for the 1h regroup — nothing more
-    assert _exchanges(t1h) == 2, _plan(t1h)
+    assert count_exchanges(t1h) == 2, plan_str(t1h)
 
 
 def test_residual_cascade_one_shuffle(spark, points):
@@ -59,8 +56,8 @@ def test_residual_cascade_one_shuffle(spark, points):
     series = t1m.select("conv_id", "bucket_start", F.col("mean").alias("v"))
     out = residual_cascade(series, value_col="v")
     # 1m agg + ONE partitioning shared by all cascade windows
-    assert _exchanges(out) == 2, _plan(out)
-    assert len(re.findall(r"Window", _plan(out))) >= 3
+    assert count_exchanges(out) == 2, plan_str(out)
+    assert len(re.findall(r"Window", plan_str(out))) >= 3
 
 
 def test_threshold_sweep_broadcasts_grid(spark, points):
@@ -70,9 +67,9 @@ def test_threshold_sweep_broadcasts_grid(spark, points):
     sw = stats.threshold_sweep(sc, g, score_col="score", label_col="label")
     # the grid (and the 1-row stats) reach the scores via broadcast —
     # no shuffle of the scores for the join itself
-    assert _broadcasts(sw) >= 1, _plan(sw)
+    assert _broadcasts(sw) >= 1, plan_str(sw)
     # only the |grid|-group aggregation shuffles
-    assert _exchanges(sw) <= 1, _plan(sw)
+    assert count_exchanges(sw) <= 1, plan_str(sw)
 
 
 def test_zscore_flags_no_score_shuffle(spark, points):
@@ -80,7 +77,7 @@ def test_zscore_flags_no_score_shuffle(spark, points):
     flagged = stats.zscore_envelope_flags(sc, "score", y=3.0)
     # global mean/std is a 1-row broadcast onto the scan — the scores
     # themselves never shuffle
-    assert _exchanges(flagged) == 0, _plan(flagged)
+    assert count_exchanges(flagged) == 0, plan_str(flagged)
     assert _broadcasts(flagged) >= 1
 
 
@@ -119,7 +116,7 @@ def test_minhash_lsh_pairs_no_cartesian(spark, docs):
     try:
         out = dedup.minhash_lsh_pairs(docs, n=3, k=16, bands=4,
                                       threshold=0.5)
-        plan = _plan(out)
+        plan = plan_str(out)
         assert _no_product_joins(plan), plan
         assert re.search(r"(SortMergeJoin|ShuffledHashJoin|"
                          r"BroadcastHashJoin)", plan), plan
@@ -131,7 +128,7 @@ def test_embedding_near_dups_bucket_join(spark, embs):
     from yahoo_anomaly_detection_spark.operators import similarity
 
     out = similarity.embedding_near_dups(embs, n_planes=8, threshold=0.9)
-    plan = _plan(out)
+    plan = plan_str(out)
     assert _no_product_joins(plan), plan
     # the self-join keys on the bucket column
     assert "bucket" in plan
@@ -149,20 +146,20 @@ def test_lsh_topk_single_projection_no_self_join(spark, embs):
         similarity.lsh_multiprobe_topk(embs, n_planes=8, query_mod=10,
                                        k=3),
     ):
-        plan = _plan(out)
+        plan = plan_str(out)
         assert _no_product_joins(plan), plan
         assert "SortMergeJoin" not in plan, plan
         assert _broadcasts(out) >= 1, plan
         # the only exchange is the rank window's partition-by-query —
         # never a corpus-wide join shuffle
-        assert _exchanges(out) <= 1, plan
+        assert count_exchanges(out) <= 1, plan
 
 
 def test_simhash_hamming_block_equality_join(spark, docs):
     from yahoo_anomaly_detection_spark.operators import dedup
 
     out = dedup.simhash_hamming_pairs(docs, k=2, bits=64)
-    plan = _plan(out)
+    plan = plan_str(out)
     assert _no_product_joins(plan), plan
 
 
@@ -173,7 +170,7 @@ def test_detector_lifecycle_broadcasts_fitted_threshold(spark):
     import __spark_entry__ as entry
 
     df = entry.q_detector_lifecycle(spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
+    plan = plan_str(df)
     # a BroadcastNestedLoopJoin against the 1-row fitted threshold IS
     # the intended shape; an unbroadcast CartesianProduct is not
     assert "CartesianProduct" not in plan, plan
@@ -187,7 +184,7 @@ def test_vocab_topk_is_take_ordered_not_global_sort(spark, docs):
     from yahoo_anomaly_detection_spark.operators import textstats
 
     out = textstats.vocab_topk(docs, k=10)
-    plan = _plan(out)
+    plan = plan_str(out)
     assert "TakeOrderedAndProject" in plan, plan
 
 
@@ -202,7 +199,7 @@ def test_sessionize_single_exchange_two_window_phases(spark):
         " value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"),
              "user_id", "event_type", "value", "props")
-    plan = _plan(sessions.sessionize(df))
+    plan = plan_str(sessions.sessionize(df))
     assert plan.count("Exchange") == 1, plan
 
 
@@ -217,7 +214,7 @@ def test_asof_join_is_union_window_not_range_join(spark):
         " value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"),
              "user_id", "event_type", "value", "props")
-    plan = _plan(sessions.events_vs_trailing_p95(ev))
+    plan = plan_str(sessions.events_vs_trailing_p95(ev))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Window" in plan, plan
@@ -237,7 +234,7 @@ def test_asof_join_two_phase_windows_on_key_and_bucket(spark):
         " value double, props string",
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"),
              "user_id", "event_type", "value", "props")
-    plan = _plan(sessions.events_vs_trailing_p95(ev))
+    plan = plan_str(sessions.events_vs_trailing_p95(ev))
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs, plan
 
@@ -269,7 +266,7 @@ def test_topk_per_band_never_exchanges_full_corpus(spark, docs):
     the ≤ k·#bands·P survivors into the final rank window."""
     from yahoo_anomaly_detection_spark.operators import textstats
 
-    plan = _plan(textstats.topk_per_band(docs, k=5))
+    plan = plan_str(textstats.topk_per_band(docs, k=5))
     assert "MapInPandas" in plan, plan
     band_ex = plan.index("Exchange hashpartitioning(band")
     # tree prints parents first: the band exchange must be a parent
@@ -284,7 +281,7 @@ def test_ivf_assign_zero_shuffle_of_corpus(spark, embs):
     (the only exchange allowed is the 1-row centroid-array agg)."""
     from yahoo_anomaly_detection_spark.operators import similarity
 
-    plan = _plan(similarity.ivf_assign(embs, centroid_mod=10))
+    plan = plan_str(similarity.ivf_assign(embs, centroid_mod=10))
     assert "BroadcastExchange" in plan or "broadcast" in plan.lower(), plan
     # corpus-side shuffle would appear as a hash-partitioned Exchange
     # over the embeddings scan; the centroid agg is a single-partition
@@ -302,7 +299,7 @@ def test_merge_tiers_single_merge_shuffle(spark, points):
     halves = [pts.where(parity == i) for i in (0, 1)]
     merged = rollup.merge_tiers(
         [rollup.rollup_points(h, "1m") for h in halves], "1m")
-    assert _exchanges(merged) == 3, _plan(merged)
+    assert count_exchanges(merged) == 3, plan_str(merged)
 
 
 def test_incremental_latency_semi_prunes_tails(spark, points):
@@ -314,7 +311,7 @@ def test_incremental_latency_semi_prunes_tails(spark, points):
 
     delta = points.select("conv_id", "ts", "turn_idx")
     tails = R.conv_tails(delta)  # stands in for the big state table
-    plan = _plan(R.incremental_latency(delta, tails))
+    plan = plan_str(R.incremental_latency(delta, tails))
     assert "LeftSemi" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -347,10 +344,10 @@ def test_broadcast_enrich_facts_never_shuffle(spark):
         (d1, "user_id", "c_custkey", ("c_mktsegment", "c_nationkey")),
         (d2, "c_nationkey", "n_nationkey", ("n_name",)),
     ]).groupBy("c_mktsegment", "n_name").agg(F.count(F.lit(1)).alias("n"))
-    p = _plan(out)
+    p = plan_str(out)
     assert p.count("BroadcastHashJoin") == 2, p
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
-    assert _exchanges(out) == 1, p
+    assert count_exchanges(out) == 1, p
 
 
 def test_broadcast_enrich_left_keeps_orphans(spark):

@@ -1,12 +1,16 @@
 """The numpy rounding twin must round exactly like Spark's
 ``portable_round``: the streaming kernels emit values that are compared
-bit-for-bit with the batch operators'."""
+bit-for-bit with the batch operators'. The quantized ordering key must
+be the same integer on Spark and in DuckDB."""
 
+import duckdb
 import numpy as np
 from pyspark.sql import functions as F
 
 from yahoo_anomaly_detection_spark.functions.portable import (
     np_portable_round,
+    portable_key,
+    portable_key_sql,
     portable_round,
 )
 
@@ -27,10 +31,18 @@ def test_np_portable_round_matches_spark(spark):
         vals += rng.uniform(-hi, hi, 200).round(5).tolist()
     rows = (
         spark.createDataFrame([(float(v),) for v in vals], "x double")
-        .select("x", portable_round(F.col("x")).alias("r"))
+        .select("x", portable_round(F.col("x")).alias("r"),
+                portable_key(F.col("x")).alias("k"))
         .collect()
     )
     got = np_portable_round(np.array([r.x for r in rows]))
-    for r, g in zip(rows, got):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)",
+                    [(i, r.x) for i, r in enumerate(rows)])
+    keys = con.execute(
+        f"SELECT {portable_key_sql('x')} FROM t ORDER BY i").fetchall()
+    for r, g, (k,) in zip(rows, got, keys):
         assert g == r.r, (r.x, r.r, g)
         assert float(np_portable_round(r.x)) == r.r, r.x
+        assert k == r.k, (r.x, r.k, k)

@@ -1,6 +1,6 @@
-"""Round-4g operators: statistical-testing & robust-QC layer
-(Mann-Kendall, Spearman, BH-FDR, W1 drift, OU half-life, Hurst,
-permutation entropy, max drawdown, winsorized rollup, Gini)."""
+"""Statistical-testing and robust-QC operators (operators/statstests.py)
+against numpy/python replicas, property tests of the identities they
+rely on, and the profile job that runs them."""
 
 import datetime as dt
 import math
@@ -8,18 +8,13 @@ import re
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from conftest import count_exchanges as _exchanges, plan_str as _plan
+from conftest import count_exchanges, events_df, plan_str
 from yahoo_anomaly_detection_spark.operators import statstests
 
-
-def _ev(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double",
-    )
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def _daily_rows(series):
@@ -74,7 +69,7 @@ def test_mann_kendall_matches_bruteforce_with_ties(spark):
         "down": [9, 8, 8, 7, 5, 4, 4, 3, 2, 1],
     }
     got = {r.event_type: r for r in statstests.mann_kendall(
-        _ev(spark, _daily_rows(series))).collect()}
+        events_df(spark, _daily_rows(series))).collect()}
     for typ, vals in series.items():
         s, var_s, z, trend = _mk_replica([float(v) for v in vals])
         r = got[typ]
@@ -112,7 +107,7 @@ def test_spearman_matches_numpy_rank_pearson(spark):
         "c": rng.permutation(a),          # shuffled
     }
     got = {(r.type_a, r.type_b): r for r in statstests.spearman_corr(
-        _ev(spark, _daily_rows(series))).collect()}
+        events_df(spark, _daily_rows(series))).collect()}
     for (ta, tb), r in got.items():
         ra, rb = _avg_ranks(series[ta]), _avg_ranks(series[tb])
         rho = np.corrcoef(ra, rb)[0, 1]
@@ -125,7 +120,7 @@ def test_spearman_matches_numpy_rank_pearson(spark):
 def test_spearman_constant_series_is_null(spark):
     series = {"a": [1, 2, 3, 4, 5], "k": [7, 7, 7, 7, 7]}
     [r] = statstests.spearman_corr(
-        _ev(spark, _daily_rows(series))).collect()
+        events_df(spark, _daily_rows(series))).collect()
     assert (r.type_a, r.type_b) == ("a", "k")
     assert r.rho is None
 
@@ -137,7 +132,7 @@ def test_bh_fdr_rejects_planted_outlier_only(spark):
     spiked = base.copy()
     spiked[17] = 500.0                    # one broken day
     series = {"calm": 50 + rng.rand(30), "spiky": spiked}
-    out = statstests.bh_fdr(_ev(spark, _daily_rows(series))).collect()
+    out = statstests.bh_fdr(events_df(spark, _daily_rows(series))).collect()
     rejected = [(r.event_type, r.day.day) for r in out if r.reject]
     assert rejected == [("spiky", 18)]    # day index 17 -> June 18
     # step-up property: the reject set is exactly ranks 1..k
@@ -149,7 +144,7 @@ def test_bh_fdr_rejects_planted_outlier_only(spark):
 
 def test_bh_fdr_degenerate_series_contribute_no_tests(spark):
     series = {"const": [5.0] * 10, "live": list(range(10))}
-    out = statstests.bh_fdr(_ev(spark, _daily_rows(series))).collect()
+    out = statstests.bh_fdr(events_df(spark, _daily_rows(series))).collect()
     assert {r.event_type for r in out} == {"live"}
     assert len(out) == 10
 
@@ -158,7 +153,7 @@ def test_bh_fdr_p_from_rounded_z_matches_erf_poly(spark):
     """p must equal the A&S 7.1.26 polynomial applied to the
     ROUNDED z (the cross-engine determinism contract)."""
     series = {"a": [1.0, 2.0, 3.0, 4.0, 100.0]}
-    out = statstests.bh_fdr(_ev(spark, _daily_rows(series))).collect()
+    out = statstests.bh_fdr(events_df(spark, _daily_rows(series))).collect()
     A = (0.254829592, -0.284496736, 1.421413741,
          -1.453152027, 1.061405429)
     for r in out:
@@ -186,7 +181,7 @@ def test_wasserstein_hand_case_two_bins(spark):
         rows.append((10 + i, t0 + dt.timedelta(days=1, minutes=i),
                      1, "m", 30.0))
     out = {r.day.day: r for r in statstests.wasserstein_drift(
-        _ev(spark, rows)).collect()}
+        events_df(spark, rows)).collect()}
     assert out[1].w1 is None and out[1].prev_day is None
     assert out[2].prev_day.day == 1
     # CDF(day1) = 1 from bin 2 upward; CDF(day2) = 1 from bin 4;
@@ -204,7 +199,7 @@ def test_wasserstein_identical_days_zero(spark):
                          1, "m", v))
             eid += 1
     out = {r.day.day: r.w1 for r in statstests.wasserstein_drift(
-        _ev(spark, rows)).collect()}
+        events_df(spark, rows)).collect()}
     assert out[2] == 0.0 and out[3] == 0.0
 
 
@@ -216,7 +211,7 @@ def test_ou_halflife_recovers_planted_phi(spark):
     for _ in range(500):
         y.append(2.0 + phi_true * y[-1] + rng.randn() * 0.1)
     out = {r.event_type: r for r in statstests.ou_halflife(
-        _ev(spark, _hourly_rows({"ou": y}))).collect()}
+        events_df(spark, _hourly_rows({"ou": y}))).collect()}
     r = out["ou"]
     assert r.n_pairs == 500
     assert r.phi == pytest.approx(phi_true, abs=0.05)
@@ -231,7 +226,7 @@ def test_ou_halflife_gap_pairs_excluded_and_trend_null(spark):
     # hour 3 missing -> pair (2,4) must not count
     rows = [(i, t0 + dt.timedelta(hours=h), 1, "m", float(2 ** h))
             for i, h in enumerate([0, 1, 2, 4, 5])]
-    [r] = statstests.ou_halflife(_ev(spark, rows)).collect()
+    [r] = statstests.ou_halflife(events_df(spark, rows)).collect()
     assert r.n_pairs == 3  # (0,1) (1,2) (4,5)
     assert r.half_life_hours is None
 
@@ -242,7 +237,7 @@ def test_hurst_separates_noise_from_random_walk(spark):
     noise = rng.randn(2048)
     walk = np.cumsum(rng.randn(2048))
     out = {r.event_type: r for r in statstests.hurst_exponent(
-        _ev(spark, _hourly_rows({"noise": noise, "walk": walk})))
+        events_df(spark, _hourly_rows({"noise": noise, "walk": walk})))
         .collect()}
     assert out["noise"].h == pytest.approx(0.5, abs=0.1)
     assert out["walk"].h == pytest.approx(1.0, abs=0.15)
@@ -253,7 +248,7 @@ def test_hurst_matches_numpy_replica(spark):
     rng = np.random.RandomState(9)
     y = rng.rand(200) * 10
     [r] = statstests.hurst_exponent(
-        _ev(spark, _hourly_rows({"m": y}))).collect()
+        events_df(spark, _hourly_rows({"m": y}))).collect()
     # blocks align to ABSOLUTE epoch-hours (block = h // m), not to
     # the series start — mirror that alignment here
     h0 = int(dt.datetime(2024, 6, 1,
@@ -277,7 +272,7 @@ def test_perm_entropy_ramp_zero_sawtooth_partial(spark):
     ramp = list(range(100))
     saw = [i % 2 for i in range(100)]          # up-down-up-down
     out = {r.event_type: r for r in statstests.perm_entropy(
-        _ev(spark, _hourly_rows({"ramp": ramp, "saw": saw})))
+        events_df(spark, _hourly_rows({"ramp": ramp, "saw": saw})))
         .collect()}
     assert out["ramp"].pe == 0.0
     # sawtooth alternates between exactly 2 ordinal patterns with
@@ -290,7 +285,7 @@ def test_perm_entropy_ramp_zero_sawtooth_partial(spark):
 def test_perm_entropy_random_near_one(spark):
     rng = np.random.RandomState(13)
     [r] = statstests.perm_entropy(
-        _ev(spark, _hourly_rows({"r": rng.rand(2000)}))).collect()
+        events_df(spark, _hourly_rows({"r": rng.rand(2000)}))).collect()
     assert r.pe > 0.97
 
 
@@ -300,7 +295,7 @@ def test_max_drawdown_hand_case(spark):
     # peak runs 10,12,12,12,12,15,15,15,15,20; dd max = (15-3)/15=0.8
     # underwater days: 9<12, 6<12, 11<12, 3<15, 8<15 -> 5
     [r] = statstests.max_drawdown(
-        _ev(spark, _daily_rows({"m": vals}))).collect()
+        events_df(spark, _daily_rows({"m": vals}))).collect()
     assert r.mdd == pytest.approx(0.8)
     assert r.trough_day == dt.datetime(2024, 6, 8)
     assert r.underwater_days == 5
@@ -308,7 +303,7 @@ def test_max_drawdown_hand_case(spark):
 
 def test_max_drawdown_monotone_series_zero(spark):
     [r] = statstests.max_drawdown(
-        _ev(spark, _daily_rows({"m": [1, 2, 3, 4, 5]}))).collect()
+        events_df(spark, _daily_rows({"m": [1, 2, 3, 4, 5]}))).collect()
     assert r.mdd == 0.0 and r.underwater_days == 0
     assert r.trough_day == dt.datetime(2024, 6, 1)
 
@@ -320,7 +315,7 @@ def test_winsor_rollup_matches_numpy(spark):
     t0 = dt.datetime(2024, 6, 1, 14)
     rows = [(i, t0 + dt.timedelta(seconds=i), 1, "m", float(v))
             for i, v in enumerate(vals)]
-    [r] = statstests.winsor_rollup(_ev(spark, rows)).collect()
+    [r] = statstests.winsor_rollup(events_df(spark, rows)).collect()
     lo, hi = np.percentile(vals, [5, 95])  # linear interp = Spark
     assert r.n == 51
     assert r.mean == pytest.approx(vals.mean(), abs=1e-4)
@@ -335,10 +330,10 @@ def test_winsor_rollup_matches_numpy(spark):
 def test_winsor_rollup_single_exchange(spark):
     rows = [(i, dt.datetime(2024, 6, 1, 2, i), 1, "m", float(i))
             for i in range(30)]
-    df = statstests.winsor_rollup(_ev(spark, rows))
+    df = statstests.winsor_rollup(events_df(spark, rows))
     # quantile window + groupBy share the (key, bucket) exchange;
     # +1 range exchange for the presentation orderBy
-    plan = _plan(df)
+    plan = plan_str(df)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, \
         plan
 
@@ -359,7 +354,7 @@ def test_gini_equal_and_concentrated(spark):
                          "m", 1.0))
             eid += 1
     out = {r.day.day: r for r in statstests.gini_concentration(
-        _ev(spark, rows)).collect()}
+        events_df(spark, rows)).collect()}
     assert out[1].gini == 0.0 and out[1].n_users == 4
     # replica: G = 2*sum(r*x)/(N*sum x) - (N+1)/N
     xs = sorted([1, 1, 1, 97])
@@ -377,7 +372,7 @@ def test_tier_first_operators_shuffle_corpus_once(spark):
     stays small and fixed)."""
     rng = np.random.RandomState(1)
     rows = _hourly_rows({"a": rng.rand(300), "b": rng.rand(300)})
-    ev = _ev(spark, rows)
+    ev = events_df(spark, rows)
     for fn, max_ex in [
         (statstests.ou_halflife, 2),
         (statstests.perm_entropy, 2),
@@ -390,7 +385,7 @@ def test_tier_first_operators_shuffle_corpus_once(spark):
         # repeatedly in the static plan (execution reads the cache)
     ]:
         df = fn(ev)
-        assert _exchanges(df) <= max_ex, (fn.__name__, _plan(df))
+        assert count_exchanges(df) <= max_ex, (fn.__name__, plan_str(df))
 
 
 def test_mann_kendall_pair_join_is_tier_level(spark):
@@ -398,8 +393,8 @@ def test_mann_kendall_pair_join_is_tier_level(spark):
     never the raw corpus: the plan contains exactly one scan
     feeding each join side through an aggregate."""
     rows = _daily_rows({"a": range(10), "b": range(10)})
-    df = statstests.mann_kendall(_ev(spark, rows))
-    plan = _plan(df)
+    df = statstests.mann_kendall(events_df(spark, rows))
+    plan = plan_str(df)
     assert "CartesianProduct" not in plan
     # the pair join's both sides are HashAggregates (the tier),
     # so every SortMergeJoin/ShuffledHashJoin key is event_type
@@ -426,7 +421,7 @@ def test_ljung_box_matches_replica_and_separates(spark):
     for _ in range(399):
         ar.append(0.9 * ar[-1] + rng.randn() * 0.1)
     out = {r.event_type: r for r in statstests.ljung_box(
-        _ev(spark, _hourly_rows({"white": white, "ar": ar})))
+        events_df(spark, _hourly_rows({"white": white, "ar": ar})))
         .collect()}
     assert out["white"].q == pytest.approx(
         _lb_replica(white), abs=1e-3)
@@ -437,7 +432,7 @@ def test_ljung_box_matches_replica_and_separates(spark):
 
 def test_ljung_box_short_or_constant_null(spark):
     out = {r.event_type: r for r in statstests.ljung_box(
-        _ev(spark, _hourly_rows({"short": [1, 2, 3],
+        events_df(spark, _hourly_rows({"short": [1, 2, 3],
                                  "const": [5.0] * 50}))).collect()}
     assert out["short"].q is None and out["short"].nonwhite is None
     assert out["const"].q is None
@@ -446,8 +441,8 @@ def test_ljung_box_short_or_constant_null(spark):
 def test_ljung_box_single_tier_sort(spark):
     """All 5 lag windows must ride ONE series-keyed exchange."""
     df = statstests.ljung_box(
-        _ev(spark, _hourly_rows({"a": range(50)})))
-    assert _exchanges(df) <= 2, _plan(df)
+        events_df(spark, _hourly_rows({"a": range(50)})))
+    assert count_exchanges(df) <= 2, plan_str(df)
 
 
 # -------------------------------------------------------------- croston
@@ -468,7 +463,7 @@ def test_croston_matches_recursive_ses(spark):
             rows.append((eid, t0 + dt.timedelta(days=d, hours=i),
                          1, "m", 1.0))
             eid += 1
-    [r] = statstests.croston(_ev(spark, rows)).collect()
+    [r] = statstests.croston(events_df(spark, rows)).collect()
     sizes = [c for _, c in active]
     gaps = [active[i][0] - active[i - 1][0]
             for i in range(1, len(active))]
@@ -483,7 +478,7 @@ def test_croston_single_demand_day_null_interval(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(hours=i), 1, "m", 1.0)
             for i in range(3)]
-    [r] = statstests.croston(_ev(spark, rows)).collect()
+    [r] = statstests.croston(events_df(spark, rows)).collect()
     assert r.n_demand_days == 1 and r.z_hat == 3.0
     assert r.p_hat is None and r.forecast is None
 
@@ -501,136 +496,11 @@ def test_corr_clusters_groups_comoving_series(spark):
         "iso": rng.permutation(base1),     # uncorrelated singleton
     }
     out = {r.event_type: r.cluster for r in statstests.corr_clusters(
-        _ev(spark, _daily_rows(series))).collect()}
+        events_df(spark, _daily_rows(series))).collect()}
     assert out["cpu"] == out["load"] == "cpu"
     assert out["mem"] == out["swap"] == "mem"
     assert out["iso"] == "iso"
     assert len(out) == 5
-
-
-# ------------------------------------------------------------ bloom join
-def test_bloom_no_false_negatives_and_prunes(spark):
-    from yahoo_anomaly_detection_spark.operators import enrich
-
-    keys = spark.range(0, 1000).select(
-        (F.col("id") * 7).alias("k"))          # members: multiples of 7
-    bloom = enrich.bloom_runtime_filter(keys, "k", 1 << 16, 5)
-    probe = spark.range(0, 20000).select(F.col("id").alias("k"))
-    kept = enrich.bloom_semi_join(probe, "k", bloom, 1 << 16, 5) \
-        .collect()
-    kept_ids = {r.k for r in kept}
-    members = {i * 7 for i in range(1000) if i * 7 < 20000}
-    assert members <= kept_ids                 # no false negatives
-    fp = len(kept_ids - members) / (20000 - len(members))
-    assert fp < 0.01                            # sized for ~1e-3
-    assert len(kept_ids) < 5000                 # pruning is real
-
-
-def test_bloom_mixed_int_width_keys_no_false_negatives(spark):
-    """xxhash64 is type-sensitive: an INT build key probed with a
-    BIGINT fact key hashes to different positions unless both sides
-    canonicalize to BIGINT — matching rows would silently vanish.
-    Build from INT keys, probe with BIGINT keys; every member must
-    survive."""
-    from yahoo_anomaly_detection_spark.operators import enrich
-
-    keys = spark.range(0, 500).select(
-        (F.col("id") * 3).cast("int").alias("k"))
-    bloom = enrich.bloom_runtime_filter(keys, "k", 1 << 16, 5)
-    probe = spark.range(0, 3000).select(F.col("id").alias("k"))  # bigint
-    kept_ids = {r.k for r in
-                enrich.bloom_semi_join(probe, "k", bloom, 1 << 16, 5)
-                .collect()}
-    members = {i * 3 for i in range(500) if i * 3 < 3000}
-    assert members <= kept_ids
-
-
-def test_bloom_zero_scale_decimal_keys_no_false_negatives(spark):
-    """Zero-scale decimal keys against integer keys, both ways: every
-    member must survive. DECIMAL(10,0) vs INT pins the explicit BIGINT
-    widening; DECIMAL(20,0) hashes by its bytes under xxhash64, so
-    against BIGINT it needs the try_cast narrowing."""
-    from yahoo_anomaly_detection_spark.operators import enrich
-
-    def keys(typ, n, step):
-        return spark.range(0, n).select(
-            (F.col("id") * step).cast(typ).alias("k"))
-
-    members = {i * 3 for i in range(500) if i * 3 < 3000}
-    for build, probe in (("int", "decimal(10,0)"), ("decimal(10,0)", "int"),
-                         ("bigint", "decimal(20,0)"),
-                         ("decimal(20,0)", "bigint")):
-        bloom = enrich.bloom_runtime_filter(keys(build, 500, 3), "k",
-                                            1 << 16, 5)
-        kept_ids = {int(r.k) for r in enrich.bloom_semi_join(
-            keys(probe, 3000, 1), "k", bloom, 1 << 16, 5).collect()}
-        assert members <= kept_ids, (build, probe)
-
-
-def test_bloom_semi_join_rejects_reserved_column(spark):
-    from yahoo_anomaly_detection_spark.operators import enrich
-    import pytest
-
-    keys = spark.range(0, 10).select(F.col("id").alias("k"))
-    bloom = enrich.bloom_runtime_filter(keys, "k", 1 << 10, 3)
-    bad = spark.range(0, 10).select(
-        F.col("id").alias("k"), F.lit(1).alias("__bloom_bits"))
-    with pytest.raises(ValueError, match="__bloom_bits"):
-        enrich.bloom_semi_join(bad, "k", bloom, 1 << 10, 3)
-    # a fact column literally named "bloom" is fine now
-    ok = spark.range(0, 10).select(
-        F.col("id").alias("k"), F.lit(1).alias("bloom"))
-    got = enrich.bloom_semi_join(ok, "k", bloom, 1 << 10, 3)
-    assert got.count() == 10 and "bloom" in got.columns
-
-
-def test_bloom_join_equals_plain_join(spark):
-    t0 = dt.datetime(2024, 3, 1)
-    orders = spark.createDataFrame(
-        [(i, t0 + dt.timedelta(days=i % 90),
-          "1-URGENT" if i % 5 == 0 else "5-LOW")
-         for i in range(500)],
-        "o_orderkey long, o_orderdate timestamp, o_orderpriority string")
-    lineitem = spark.createDataFrame(
-        [(i % 500, float(1 + i % 7)) for i in range(3000)],
-        "l_orderkey long, l_quantity double")
-    from yahoo_anomaly_detection_spark.operators import enrich
-
-    got = {(str(r.month), r.n_items, r.sum_qty, r.n_orders)
-           for r in enrich.urgent_order_items(lineitem, orders)
-           .collect()}
-    plain = (lineitem.join(
-        orders.where(F.col("o_orderpriority") == "1-URGENT"),
-        lineitem.l_orderkey == orders.o_orderkey)
-        .groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
-        .agg(F.count(F.lit(1)).alias("n_items"),
-             F.sum("l_quantity").cast("long").alias("sum_qty"),
-             F.countDistinct("o_orderkey").alias("n_orders")))
-    exp = {(str(r.month), r.n_items, r.sum_qty, r.n_orders)
-           for r in plain.collect()}
-    assert got == exp and len(got) == 3
-
-
-def test_bloom_prune_runs_before_fact_exchange(spark):
-    """The bloom filter must apply map-side: the plan shows the
-    single-row bloom arriving via a broadcast nested-loop join with
-    the bit-test filter ABOVE it, and only the survivors reach the
-    equi-join exchange."""
-    from yahoo_anomaly_detection_spark.operators import enrich
-
-    orders = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1), "1-URGENT")],
-        "o_orderkey long, o_orderdate timestamp, o_orderpriority string")
-    lineitem = spark.createDataFrame(
-        [(1, 2.0)], "l_orderkey long, l_quantity double")
-    plan = _plan(enrich.urgent_order_items(lineitem, orders))
-    # the bit test is the BNLJ condition itself
-    bnlj = plan.index("BroadcastNestedLoopJoin")
-    assert "element_at(__bloom_bits" in plan[bnlj:], plan
-    # plan prints parents first: the fact-side equi-join exchange
-    # must be ABOVE (execute after) the bloom BNLJ prune
-    ex = re.search(r"Exchange hashpartitioning\(l_orderkey", plan)
-    assert ex is not None and ex.start() < bnlj, plan
 
 
 def test_bh_fdr_rank_is_distributed(spark):
@@ -638,9 +508,9 @@ def test_bh_fdr_rank_is_distributed(spark):
     form: every row_number window is partitioned by _pid — no
     unpartitioned window ever sees the tier."""
     rng = np.random.RandomState(2)
-    df = statstests.bh_fdr(_ev(spark, _daily_rows(
+    df = statstests.bh_fdr(events_df(spark, _daily_rows(
         {"a": rng.rand(30), "b": rng.rand(30)})))
-    plan = _plan(df)
+    plan = plan_str(df)
     for mt in re.finditer(r"row_number\(\) windowspecdefinition\(([^)]*)\)",
                           plan):
         assert "_pid" in mt.group(1), plan
@@ -651,8 +521,8 @@ def test_gini_rank_is_distributed(spark):
     from yahoo_anomaly_detection_spark import caching
 
     df = statstests.gini_concentration(
-        _ev(spark, _daily_rows({"a": range(40)})))
-    plan = _plan(df)
+        events_df(spark, _daily_rows({"a": range(40)})))
+    plan = plan_str(df)
     caching.release_all()
     for mt in re.finditer(r"row_number\(\) windowspecdefinition\(([^)]*)\)",
                           plan):
@@ -666,7 +536,7 @@ def test_gini_rank_is_distributed(spark):
 # ------------------------------------------------------ series_profile
 def test_series_profile_composes_branch_outputs(spark):
     rng = np.random.RandomState(41)
-    ev = _ev(spark, _hourly_rows({
+    ev = events_df(spark, _hourly_rows({
         "walk": 100 + np.cumsum(rng.randn(300)),
         "noise": 100 + rng.randn(300),
     }))
@@ -687,10 +557,6 @@ def test_series_profile_composes_branch_outputs(spark):
 
 
 # ----------------------------------------- property tests (pure py)
-from hypothesis import given, settings  # noqa: E402
-from hypothesis import strategies as st  # noqa: E402
-
-
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.floats(0, 1, allow_nan=False), min_size=1,
                 max_size=200),
@@ -840,7 +706,7 @@ def test_variance_decomp_attributes_planted_cycles(spark):
         "noise": 100 + rng.randn(n),
     }
     out = {r.event_type: r for r in statstests.variance_decomp(
-        _ev(spark, _hourly_rows(series))).collect()}
+        events_df(spark, _hourly_rows(series))).collect()}
     assert out["hourly_cycle"].eta2_hour > 0.95
     assert out["hourly_cycle"].eta2_weekday < 0.05
     assert out["weekly_cycle"].eta2_weekday > 0.9
@@ -854,7 +720,7 @@ def test_variance_decomp_attributes_planted_cycles(spark):
 
 def test_variance_decomp_constant_series_null(spark):
     [r] = statstests.variance_decomp(
-        _ev(spark, _hourly_rows({"c": [5.0] * 48}))).collect()
+        events_df(spark, _hourly_rows({"c": [5.0] * 48}))).collect()
     assert r.eta2_hour is None and r.resid_frac is None
 
 
@@ -862,7 +728,7 @@ def test_variance_decomp_matches_numpy_eta2(spark):
     rng = np.random.RandomState(57)
     y = rng.rand(24 * 10) * 40
     [r] = statstests.variance_decomp(
-        _ev(spark, _hourly_rows({"m": y}))).collect()
+        events_df(spark, _hourly_rows({"m": y}))).collect()
     h0 = int(dt.datetime(2024, 6, 1,
                          tzinfo=dt.timezone.utc).timestamp()) // 3600
     hs = (h0 + np.arange(len(y)))
@@ -957,17 +823,6 @@ def test_profile_job_end_to_end_and_resume(spark, tmp_path):
     assert m2["skipped_units"] == 4
 
 
-@pytest.fixture(autouse=True)
-def _release_registry_caches():
-    """Operators in this layer materialize shared tiers through the
-    caching registry; the contract is caller-releases — do it per
-    test so the shared session doesn't accumulate tier caches."""
-    yield
-    from yahoo_anomaly_detection_spark import caching
-
-    caching.release_all()
-
-
 # ------------------------------------------------------ matrix_profile
 def _mp_replica(y, m=4):
     """Exact numpy matrix profile on consecutive windows (same
@@ -1006,7 +861,7 @@ def test_matrix_profile_finds_planted_motif(spark):
     y[20:24] = 50 + shape          # motif copy 1 (offset differs,
     y[80:84] = 120 + shape         # z-norm makes them identical)
     [r] = statstests.matrix_profile(
-        _ev(spark, _hourly_rows({"m": y}))).collect()
+        events_df(spark, _hourly_rows({"m": y}))).collect()
     (md4, mi, mj), (dd4, di), nw = _mp_replica(y)
     h0 = int(dt.datetime(2024, 6, 1,
                          tzinfo=dt.timezone.utc).timestamp()) // 3600
@@ -1029,7 +884,7 @@ def test_matrix_profile_finds_planted_discord(spark):
     y = 10 + np.sin(2 * np.pi * t / 24) * 5
     y[20:24] += np.array([4.0, -4.0, 4.0, -4.0])
     [r] = statstests.matrix_profile(
-        _ev(spark, _hourly_rows({"m": y}))).collect()
+        events_df(spark, _hourly_rows({"m": y}))).collect()
     (md4, mi, mj), (dd4, di), nw = _mp_replica(y)
     h0 = int(dt.datetime(2024, 6, 1,
                          tzinfo=dt.timezone.utc).timestamp()) // 3600
@@ -1044,7 +899,7 @@ def test_matrix_profile_replica_on_random_series(spark):
     rng = np.random.RandomState(73)
     y = rng.rand(60) * 100
     [r] = statstests.matrix_profile(
-        _ev(spark, _hourly_rows({"m": y}))).collect()
+        events_df(spark, _hourly_rows({"m": y}))).collect()
     (md4, mi, mj), (dd4, di), nw = _mp_replica(y)
     assert r.n_windows == nw
     assert r.motif_dist == pytest.approx(md4 / 1e4)
@@ -1057,9 +912,9 @@ def test_matrix_profile_band_covering_span_is_exact(spark):
     rng = np.random.RandomState(79)
     y = rng.rand(72) * 100
     full = statstests.matrix_profile(
-        _ev(spark, _hourly_rows({"m": y}))).collect()
+        events_df(spark, _hourly_rows({"m": y}))).collect()
     banded = statstests.matrix_profile(
-        _ev(spark, _hourly_rows({"m": y})), max_span_hours=100
+        events_df(spark, _hourly_rows({"m": y})), max_span_hours=100
     ).collect()
     assert sorted(map(tuple, full)) == sorted(map(tuple, banded))
 
@@ -1071,12 +926,12 @@ def test_matrix_profile_band_bounds_pair_cost(spark):
     S−m+1 neighbors regardless of total span."""
     rng = np.random.RandomState(101)
     y = rng.rand(200) * 100 + 1  # long span; no flat windows
-    df = _ev(spark, _hourly_rows({"m": y}))
+    df = events_df(spark, _hourly_rows({"m": y}))
     from yahoo_anomaly_detection_spark import caching
 
     m, s = 4, 12
     banded = statstests.matrix_profile(df, m=m, max_span_hours=s)
-    plan = _plan(banded)
+    plan = plan_str(banded)
     assert "CartesianProduct" not in plan, plan
     assert "_jb" in plan, plan          # block key reached the join
     caching.release_all()
@@ -1101,7 +956,7 @@ def test_matrix_profile_band_matches_banded_replica(spark):
     y = rng.rand(60) * 100
     m, s = 4, 10
     [r] = statstests.matrix_profile(
-        _ev(spark, _hourly_rows({"m": y})), m=m,
+        events_df(spark, _hourly_rows({"m": y})), m=m,
         max_span_hours=s).collect()
     # numpy replica with the band restriction
     yv = np.asarray(y, float)
@@ -1144,7 +999,7 @@ def test_spread_monitor_recovers_planted_hedge(spark):
     # z drifts away from x: a RANDOM-WALK spread (not mean-reverting)
     z = 2.0 * x + np.cumsum(rng.randn(120) * 5)
     out = {(r.type_a, r.type_b): r for r in statstests.spread_monitor(
-        _ev(spark, _daily_rows({"x": x, "y": y, "z": z}))).collect()}
+        events_df(spark, _daily_rows({"x": x, "y": y, "z": z}))).collect()}
     good = out[("x", "y")]
     assert good.beta == pytest.approx(3.0, abs=0.05)
     assert good.alpha == pytest.approx(20.0, abs=5.0)
@@ -1157,210 +1012,10 @@ def test_spread_monitor_recovers_planted_hedge(spark):
 
 def test_spread_monitor_degenerate_pairs_null(spark):
     out = {(r.type_a, r.type_b): r for r in statstests.spread_monitor(
-        _ev(spark, _daily_rows({"const": [5.0] * 10,
+        events_df(spark, _daily_rows({"const": [5.0] * 10,
                                 "live": list(range(10))}))).collect()}
     r = out[("const", "live")]
     assert r.beta is None and r.stable == 0
-
-
-# ------------------------------------------------------ coreset_kcenter
-def _kcenter_replica(vecs, k):
-    import numpy as _np
-
-    ids = sorted(vecs)
-    sel = [min(ids)]
-    radii = [None]
-    unit = {i: _np.asarray(v) / _np.linalg.norm(v)
-            for i, v in vecs.items()}
-    nrm = {i: float(_np.linalg.norm(v)) for i, v in vecs.items()}
-    raw = {i: _np.asarray(v, float) for i, v in vecs.items()}
-    while len(sel) < k and len(sel) < len(ids):
-        best = None
-        for i in ids:
-            if i in sel:
-                continue
-            dm = min(1 - float(raw[i] @ raw[c]) / (nrm[i] * nrm[c])
-                     for c in sel)
-            d4 = math.floor((dm + 1e-9) * 1e4 + 0.5)
-            cand = (d4, -i)
-            if best is None or cand > best:
-                best = cand
-        sel.append(-best[1])
-        radii.append(best[0] / 1e4)
-    return sel, radii
-
-
-def test_coreset_kcenter_matches_greedy_replica(spark):
-    rng = np.random.RandomState(91)
-    # three tight clusters + outliers: k=4 must cover all clusters
-    # before refining any of them (the k-center property)
-    centers = [rng.randn(8) * 0.1 + off
-               for off in ([5, 0, 0, 0, 0, 0, 0, 0],
-                           [0, 5, 0, 0, 0, 0, 0, 0],
-                           [0, 0, 5, 0, 0, 0, 0, 0])]
-    vecs = {}
-    vid = 0
-    for c in centers:
-        for _ in range(6):
-            vecs[vid] = (c + rng.randn(8) * 0.05).tolist()
-            vid += 1
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>, label int")
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    got = {r.sel_rank: (r.vec_id, r.radius)
-           for r in similarity.coreset_kcenter(df, k=4).collect()}
-    # float32 storage: replica must quantize identically
-    f32 = {i: np.asarray(v, np.float32).astype(float).tolist()
-           for i, v in vecs.items()}
-    sel, radii = _kcenter_replica(f32, 4)
-    assert [got[r][0] for r in range(4)] == sel
-    for r in range(1, 4):
-        assert got[r][1] == pytest.approx(radii[r], abs=2e-4)
-    # coverage: the first three picks hit three DIFFERENT clusters
-    first3_clusters = {got[r][0] // 6 for r in range(3)}
-    assert len(first3_clusters) == 3
-    # radius sequence is non-increasing (greedy max-min property)
-    assert got[1][1] >= got[2][1] >= got[3][1]
-
-
-def test_coreset_kcenter_batch1_is_exact_greedy(spark):
-    """batch=1 must be byte-identical to the default greedy — the
-    oversampled route is a pure superset of the classic loop."""
-    rng = np.random.RandomState(93)
-    vecs = {i: (rng.randn(8) * 2).tolist() for i in range(20)}
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>, label int")
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    a = sorted(map(tuple, similarity.coreset_kcenter(
-        df, k=5).collect()))
-    b = sorted(map(tuple, similarity.coreset_kcenter(
-        df, k=5, batch=1).collect()))
-    assert a == b
-
-
-def test_coreset_kcenter_batched_matches_replica(spark):
-    """batch=b semantics: each round takes the top-b of the SAME
-    integer encoding vs the pre-round set; radii are min-distances
-    to the pre-round centers. Verified against a numpy replica of
-    exactly that rule."""
-    rng = np.random.RandomState(97)
-    vecs = {i: (rng.randn(6) * 2).tolist() for i in range(24)}
-    f32 = {i: np.asarray(v, np.float32).astype(float)
-           for i, v in vecs.items()}
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>, label int")
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    k, b = 7, 3
-    got = {r.sel_rank: (r.vec_id, r.radius)
-           for r in similarity.coreset_kcenter(
-               df, k=k, batch=b).collect()}
-
-    # replica: rounds of top-b by (round(d4), -id) vs pre-round set
-    ids = sorted(f32)
-    sel = [min(ids)]
-    radii = {0: None}
-    while len(sel) < k:
-        encs = []
-        for i in ids:
-            if i in sel:
-                continue
-            dmin = min(
-                1.0 - float(np.dot(f32[i], f32[c]))
-                / (np.linalg.norm(f32[i]) * np.linalg.norm(f32[c]))
-                for c in sel)
-            d4 = math.floor((dmin + 1e-9) * 1e4 + 0.5)
-            encs.append((d4, -i))
-        encs.sort(reverse=True)
-        for d4, neg in encs[:min(b, k - len(sel))]:
-            radii[len(sel)] = d4 / 1e4
-            sel.append(-neg)
-    assert [got[r][0] for r in range(k)] == sel
-    for r in range(1, k):
-        assert got[r][1] == pytest.approx(radii[r], abs=2e-4)
-
-
-def test_coreset_kcenter_k_exceeds_corpus(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)],
-        "vec_id long, embedding array<float>, label int")
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    rows = similarity.coreset_kcenter(df, k=5).collect()
-    assert len(rows) == 2
-
-
-# --------------------------------------------------------- mmr_rerank
-def test_mmr_rerank_balances_relevance_and_diversity(spark):
-    rng = np.random.RandomState(97)
-    # query q; near-duplicate pair very relevant; one relevant-but-
-    # distinct doc; several irrelevant docs
-    q = np.array([1.0, 0, 0, 0])
-    rows = {
-        0: q,                                   # the query itself
-        1: np.array([0.99, 0.1, 0, 0]),         # top relevant
-        2: np.array([0.99, 0.1, 0, 0]),         # its EXACT duplicate
-        3: np.array([0.6, 0, 0.8, 0]),          # relevant + distinct
-        4: np.array([0, 1.0, 0, 0]),            # irrelevant
-        5: np.array([0, 0, 0, 1.0]),            # irrelevant
-    }
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in rows.items()],
-        "vec_id long, embedding array<float>, label int")
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    # lam=0.5: the duplicate's redundancy term (sim=1) sinks it
-    # below the distinct doc despite near-max relevance
-    picks = [r.vec_id for r in sorted(
-        similarity.mmr_rerank(df, query_id=0, k=3, lam=0.5)
-        .collect(), key=lambda r: r.sel_rank)]
-    # rank 0 = most relevant (1); rank 1 must SKIP the duplicate
-    # (2) in favor of the distinct doc (3); rank 2 shows the full
-    # pecking order: even an irrelevant-but-novel doc (5: rel 0,
-    # redundancy 0, score 0) outranks the duplicate (score < 0)
-    assert picks == [1, 3, 5]
-
-
-def test_mmr_rerank_missing_query_id_raises(spark):
-    """A query_id with no row must raise a clear ValueError instead
-    of an unpacking error (the SQL oracle degrades to empty — the
-    Spark API should fail loudly, not cryptically)."""
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
-        "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="query_id"):
-        similarity.mmr_rerank(df, query_id=99, k=2)
-
-
-def test_mmr_rerank_lambda_one_is_pure_relevance(spark):
-    rng = np.random.RandomState(101)
-    vecs = {i: rng.randn(8) for i in range(12)}
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>, label int")
-    from yahoo_anomaly_detection_spark.operators import similarity
-
-    got = [r.vec_id for r in sorted(
-        similarity.mmr_rerank(df, query_id=0, k=4, lam=1.0)
-        .collect(), key=lambda r: r.sel_rank)]
-    # replica: cosine to query desc, rounded, ties by id (float32!)
-    q = np.asarray(vecs[0], np.float32).astype(float)
-    scored = []
-    for i, v in vecs.items():
-        if i == 0:
-            continue
-        v = np.asarray(v, np.float32).astype(float)
-        c = float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
-        scored.append((-math.floor((c + 2 + 1e-9) * 1e4 + 0.5), i))
-    want = [i for _, i in sorted(scored)[:4]]
-    assert got == want
 
 
 # ----------------------------------------------------------- granger_1d
@@ -1373,7 +1028,7 @@ def test_granger_detects_planted_direction(spark):
         y[t] = 0.3 * y[t - 1] + 0.9 * x[t - 1] + rng.randn() * 0.2
     z = rng.randn(200) + 20        # unrelated
     out = {(r.x_type, r.y_type): r for r in statstests.granger_1d(
-        _ev(spark, _daily_rows({"x": x, "y": y, "z": z}))).collect()}
+        events_df(spark, _daily_rows({"x": x, "y": y, "z": z}))).collect()}
     assert out[("x", "y")].leads == 1        # x -> y strongly
     assert out[("z", "y")].leads == 0        # z does not lead y
     assert out[("x", "y")].f_stat > 100
@@ -1389,7 +1044,7 @@ def test_granger_matches_numpy_ols(spark):
     x = rng.rand(60) * 10
     y = rng.rand(60) * 10
     out = {(r.x_type, r.y_type): r for r in statstests.granger_1d(
-        _ev(spark, _daily_rows({"x": x, "y": y}))).collect()}
+        events_df(spark, _daily_rows({"x": x, "y": y}))).collect()}
     yv, yl, xl = y[1:], y[:-1], x[:-1]
     X_r = np.column_stack([np.ones(59), yl])
     X_f = np.column_stack([np.ones(59), yl, xl])
@@ -1411,7 +1066,7 @@ def test_seasonal_mk_ignores_weekly_cycle_catches_trend(spark):
         "cyc_trend": 50 + wk + np.arange(n) * 0.5 + noise,
     }
     got = {r.event_type: r for r in statstests.seasonal_mk(
-        _ev(spark, _daily_rows(series))).collect()}
+        events_df(spark, _daily_rows(series))).collect()}
     assert got["cyc"].trend == 0
     assert got["cyc_trend"].trend == 1
     # replica: per-weekday S and var summed
@@ -1442,7 +1097,7 @@ def test_corr_break_detects_decoupling(spark):
     # w tracks x throughout (stable pair)
     w = 3 * x + rng.rand(n)
     out = {(r.type_a, r.type_b): r for r in statstests.corr_break(
-        _ev(spark, _daily_rows({"x": x, "y": y, "w": w}))).collect()}
+        events_df(spark, _daily_rows({"x": x, "y": y, "w": w}))).collect()}
     dec = out[("x", "y")]
     assert dec.broken == 1
     assert dec.r_before > 0.99 and abs(dec.r_after) < 0.5
@@ -1457,7 +1112,7 @@ def test_corr_break_matches_scipy_style_replica(spark):
     x = rng.rand(40) * 5
     y = rng.rand(40) * 5
     [r] = statstests.corr_break(
-        _ev(spark, _daily_rows({"x": x, "y": y}))).collect()
+        events_df(spark, _daily_rows({"x": x, "y": y}))).collect()
     r1 = np.corrcoef(x[:20], y[:20])[0, 1]
     r2 = np.corrcoef(x[20:], y[20:])[0, 1]
     fz = lambda v: 0.5 * math.log((1 + v) / (1 - v))
@@ -1479,7 +1134,7 @@ def test_coflag_lift_groups_cofailing_pair(spark):
         b[d] += 200
     c[5] += 50                       # c fails alone once
     out = {(r.type_a, r.type_b): r for r in statstests.coflag_lift(
-        _ev(spark, _daily_rows({"a": a, "b": b, "c": c}))).collect()}
+        events_df(spark, _daily_rows({"a": a, "b": b, "c": c}))).collect()}
     ab = out[("a", "b")]
     assert ab.a_days == 3 and ab.b_days == 3 and ab.both_days == 3
     # lift = (3/40) / ((3/40)^2) = 40/3
@@ -1493,7 +1148,7 @@ def test_coflag_lift_groups_cofailing_pair(spark):
 def test_coflag_lift_never_flagging_side_null(spark):
     rng = np.random.RandomState(137)
     out = {(r.type_a, r.type_b): r for r in statstests.coflag_lift(
-        _ev(spark, _daily_rows({
+        events_df(spark, _daily_rows({
             "quiet": 5 + rng.rand(20) * 0.01,
             "spiky": np.concatenate([5 + rng.rand(19),
                                      [500.0]])}))).collect()}

@@ -24,6 +24,18 @@ def portable_round(c: Column, nd: int = 4) -> Column:
     return F.round((c + F.lit(1e-9)) * p) / p
 
 
+def portable_key(c: Column, nd: int = 4) -> Column:
+    """``round((x + 1e-9)·10^nd)`` as BIGINT: the quantized ordering
+    key of :func:`portable_round`, for argmin/argmax encodings that
+    both engines must tie-break identically."""
+    return F.round((c + F.lit(1e-9)) * F.lit(float(10 ** nd))).cast("long")
+
+
+def portable_key_sql(expr: str, nd: int = 4) -> str:
+    """DuckDB text of :func:`portable_key` over the SQL ``expr``."""
+    return f"CAST(round(({expr} + 1e-9) * 1e{nd}) AS BIGINT)"
+
+
 def np_portable_round(x, nd: int = 4):
     """numpy twin of :func:`portable_round` for the streaming kernels,
     which round in Python and must emit the batch operators' values.

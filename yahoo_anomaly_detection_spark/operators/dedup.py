@@ -559,8 +559,8 @@ def ham_blocks(bits: int, k: int) -> tuple[tuple[int, int, int], ...]:
     """Pigeonhole blocks (j, offset, mask) for Hamming-distance-≤k
     search over ``bits``-bit signatures: k+1 blocks of ⌈bits/(k+1)⌉ /
     ⌊bits/(k+1)⌋ bits — two signatures within distance k must agree
-    exactly on ≥ 1 block. (bits=32, k=2) → 11/11/10, the round-2
-    layout; (bits=64, k=2) → 22/21/21; (bits=64, k=3) → 4×16."""
+    exactly on ≥ 1 block. (bits=32, k=2) → 11/11/10; (bits=64, k=2)
+    → 22/21/21; (bits=64, k=3) → 4×16."""
     nb = k + 1
     assert 1 <= nb <= bits, (bits, k)
     base, rem = divmod(bits, nb)

@@ -622,7 +622,7 @@ def events_vs_trailing_p95(events: DataFrame) -> DataFrame:
     as-of join (1-day buckets): per-task window input is one type's
     single day, bounded no matter how long the stream grows — the
     single-phase path would funnel each type's full history through
-    one task (the round-3 scale flag)."""
+    one task."""
     p = value_percentiles(events).select(
         "event_type",
         (F.col("day") + F.expr("INTERVAL 1 DAY")).alias("effective"),

@@ -24,7 +24,7 @@ the identical numbers), and cheaper per row than computing a hash per
 (plane, dim) inside the projection. An affine hash (LCG) is NOT
 usable here: w(j,d) affine in (j·DIM+d) puts every plane on a line in
 R^64, correlating all bucket bits — measured ~30× candidate-pair
-skew vs uniform at 8 planes (tests/test_round3_ops.py pins the
+skew vs uniform at 8 planes (tests/test_similarity.py pins the
 fixed behavior: candidate volume ~linear in N under adaptive planes).
 """
 
@@ -37,7 +37,11 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from yahoo_anomaly_detection_spark import caching
-from yahoo_anomaly_detection_spark.functions.portable import portable_round
+from yahoo_anomaly_detection_spark.functions.portable import (
+    portable_key,
+    portable_key_sql,
+    portable_round,
+)
 
 _R = 4
 DIM = 64
@@ -69,7 +73,7 @@ def adaptive_n_planes(n_rows: int, target_bucket: int = 64,
     and candidate pairs grow ~N²/2^planes — a scale-killer at 10⁹
     vectors. Scaling planes with log2(N) keeps expected occupancy at
     ``target_bucket`` and candidate volume ~linear in N (tested in
-    tests/test_round3_ops.py). Callers that know the corpus size pass
+    tests/test_similarity.py). Callers that know the corpus size pass
     it; :func:`embedding_near_dups` with ``n_planes=None`` counts the
     corpus itself (one cheap aggregate) before planning the join.
     """
@@ -1148,7 +1152,7 @@ def coreset_kcenter(embs: DataFrame, k: int = 8,
             picked = picked.withColumn(f"_d{i}", d_named).drop("_cv")
             mind = (F.col(f"_d{i}") if mind is None
                     else F.least(mind, F.col(f"_d{i}")))
-        d4 = F.round((mind + F.lit(1e-9)) * F.lit(1e4)).cast("long")
+        d4 = portable_key(mind)
         enc = (d4 * F.lit(1_000_000_000_000)
                + (F.lit(999_999_999_999)
                   - F.col("vec_id").cast("long")))
@@ -1195,7 +1199,7 @@ def _coreset_sql(k: int = 8) -> str:
             f"SELECT vec_id FROM s{j}" for j in range(r))
         ctes.append(
             f"d{r} AS MATERIALIZED (SELECT b.vec_id, b.e, b.nrm, "
-            f"CAST(round(({least} + 1e-9) * 1e4) AS BIGINT) AS d4 "
+            f"{portable_key_sql(least)} AS d4 "
             f"FROM base b, {prev} "
             f"WHERE b.vec_id NOT IN ({not_in}))")
         ctes.append(
@@ -1291,8 +1295,7 @@ def mmr_rerank(embs: DataFrame, query_id: int = 0, k: int = 5,
         score = (F.lit(lam) * F.col("_rel")
                  - (F.lit(1.0 - lam) * red if red is not None
                     else F.lit(0.0)))
-        s4 = F.round((score + F.lit(2.0) + F.lit(1e-9))
-                     * F.lit(1e4)).cast("long")
+        s4 = portable_key(score + F.lit(2.0))
         enc = (s4 * F.lit(1_000_000_000_000)
                + (F.lit(999_999_999_999)
                   - F.col("vec_id").cast("long")))
@@ -1347,8 +1350,7 @@ def _mmr_sql(query_id: int = 0, k: int = 5, lam: float = 0.7) -> str:
             + [f"SELECT vec_id FROM m{j}" for j in range(r)])
         ctes.append(
             f"c{r} AS MATERIALIZED (SELECT b.vec_id, b.e, b.nrm, "
-            f"CAST(round((({score}) + 2.0 + 1e-9) * 1e4) AS BIGINT)"
-            f" AS s4 "
+            f"{portable_key_sql(f'({score}) + 2.0')} AS s4 "
             f"FROM base b, qv{prev} "
             f"WHERE b.vec_id NOT IN ({not_in}))")
         ctes.append(

@@ -18,7 +18,7 @@ sup-norm KS test and bin-ratio PSI already shipped, and the Hurst /
 permutation-entropy pair characterizes series MEMORY — which
 rolling-window sigma detectors silently assume away.
 
-Scale shapes (plan-audited in tests/test_round4g_ops.py): every
+Scale shapes (plan-audited in tests/test_statstests.py): every
 operator collapses the raw corpus to a (series, bucket) tier with
 ONE map-side-combined groupBy as its first move; all pair joins,
 windows, and regressions run on tier-sized relations (≤ series ×
@@ -39,7 +39,11 @@ from yahoo_anomaly_detection_spark.functions.comoments import (
     OLS, PEARSON, Fit, comoments, comoments_sql, ols_slope, ols_slope_sql,
     pearson, pearson_sql,
 )
-from yahoo_anomaly_detection_spark.functions.portable import portable_round
+from yahoo_anomaly_detection_spark.functions.portable import (
+    portable_key,
+    portable_key_sql,
+    portable_round,
+)
 
 _R = 4
 
@@ -1692,8 +1696,8 @@ def matrix_profile(events: DataFrame, m: int = 4,
                      F.col("a.i").alias("ia"),
                      F.col("b.i").alias("ib"),
                      F.sqrt(d2).alias("d")))
-    d4 = F.round((F.col("d") + F.lit(1e-9)) * F.lit(1e4)).cast("long")
-    pairs = caching.materialize(pairs.withColumn("d4", d4))
+    pairs = caching.materialize(
+        pairs.withColumn("d4", portable_key(F.col("d"))))
 
     # motif: min over pairs of d4*1e12 + ia*1e6 + ib (ia, ib < 1e6)
     enc_m = (F.col("d4") * F.lit(1_000_000_000_000)
@@ -1777,7 +1781,7 @@ base AS (
 ),
 pairs AS (
     SELECT a.event_type, a.i AS ia, b.i AS ib,
-           CAST(round((sqrt({zdiff}) + 1e-9) * 1e4) AS BIGINT) AS d4
+           {portable_key_sql(f"sqrt({zdiff})")} AS d4
     FROM base a JOIN base b
       ON a.event_type = b.event_type AND b.i >= a.i + {m}{band}
 ),

@@ -586,8 +586,8 @@ def topk_per_band(docs: DataFrame, k: int = 20,
 
     ``bounded=False`` is the naive formulation — ONE rank window
     partitioned by the band key — which shuffles the whole corpus
-    into #bands tasks: the low-cardinality-key straggler (the
-    round-3 scale flag). Kept for plan comparison/tests.
+    into #bands tasks: the low-cardinality-key straggler. Kept for
+    plan comparison/tests.
 
     Here bands are a demo stratum; real pipelines key on
     (domain, language) — thousands of groups — where either shape

@@ -4426,9 +4426,13 @@ def dominant_period(events: DataFrame, max_lag: int = 24,
     """
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
+    # an hour whose values are all NULL has a NULL mean; drop it so
+    # the fit sees only pairs with both sides present, like DuckDB's
+    # corr (an unmasked fit would center v over pairs whose v2 is NULL)
     hourly = (events.groupBy(
         F.col(key), F.date_trunc("hour", F.col(ts_col)).alias("b"))
-        .agg(F.avg(F.col(value_col).cast("double")).alias("v")))
+        .agg(F.avg(F.col(value_col).cast("double")).alias("v"))
+        .where(F.col("v").isNotNull()))
     lags = F.explode(
         F.sequence(F.lit(1), F.lit(int(max_lag)))).alias("lag")
     grid = (hourly.select(F.col(key).alias("kk"), "b", "v", lags)

@@ -1,6 +1,6 @@
 """Streaming per-conversation latency derivation.
 
-Closes the gap documented in round 2 (rollup_stream.py scope note):
+Closes the gap in rollup_stream.py's scope note:
 the batch path derives per-turn latency with a lag window over
 ``(conv_id, turn_idx)`` — an unbounded-partition window Structured
 Streaming cannot express declaratively. This module derives the same
