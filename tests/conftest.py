@@ -65,6 +65,28 @@ def docs_df(spark, texts):
         list(enumerate(texts)), "doc_id long, text string")
 
 
+def pairs_df(spark, pairs):
+    """``doc_a, doc_b`` candidate-pair frame."""
+    return spark.createDataFrame(pairs, "doc_a long, doc_b long")
+
+
+def lcg_embeddings(spark, n: int):
+    """Deterministic synthetic embeddings with md5-derived components
+    (iid-uniform-ish). An LCG won't do here: affine in the key, it
+    puts every vector on a line in R^64 — degenerate bucket skew no
+    plane count can fix."""
+    from pyspark.sql import functions as F
+
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.expr(
+            "transform(sequence(0, 63), d -> cast("
+            "cast(conv(substr(md5(concat('v:', id, ':', d)), 1, 8), 16, 10)"
+            " as double) / 4294967296.0 - 0.5 as float))"
+        ).alias("embedding"),
+    )
+
+
 @pytest.fixture
 def release_caches():
     """Release every registered cache after the test. Operators that

@@ -9,9 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import count_exchanges, plan_str
-from yahoo_anomaly_detection_spark import caching
 from yahoo_anomaly_detection_spark.operators import alerting as al
-from yahoo_anomaly_detection_spark.sources.catalog import ParquetCatalog
 
 
 def _flags(spark, vals, key="a", step=60):
@@ -595,109 +593,3 @@ def test_fleet_incidents_edge_join_is_bucketed_not_cartesian(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def _monitor_transcripts(spark, tmp_path):
-    """Deterministic transcripts with one engineered incident: conv
-    "a" ticks every 10 s, then goes silent for 50 minutes (absence
-    run + a 3000 s latency spike on return); conv "b" stays steady."""
-    base = 1699999200  # hour-aligned
-    rows = []
-    for i in range(180):  # 30 min of 10s turns
-        rows.append(("a", i, "user", "t", "none", base + i * 10))
-    rows.append(("a", 180, "user", "t", "none", base + 179 * 10 + 3000))
-    for i in range(120):
-        rows.append(("b", i, "user", "t", "none", base + i * 30))
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-              "tool string, epoch long",
-    ).select("conv_id", "turn_idx", "role", "text", "tool",
-             F.timestamp_seconds(F.col("epoch")).alias("ts"))
-    path = str(tmp_path / "mon_transcripts")
-    df.write.mode("overwrite").parquet(path)
-    return path
-
-
-def test_monitor_job_end_to_end_and_resume(spark, tmp_path):
-    """jobs/monitor_job.py: tier → ensemble flags → padded incident
-    windows → daily coverage (+ absence channel) through the catalog;
-    coverage must equal the operator composition exactly and a re-run
-    with the same run-id skips every stage."""
-    from jobs import monitor_job
-    from yahoo_anomaly_detection_spark.operators import (
-        alerting, tsanalytics,
-    )
-    from yahoo_anomaly_detection_spark.operators.rollup import (
-        rollup_points, transcripts_latency,
-    )
-    from yahoo_anomaly_detection_spark.sources.ingest import (
-        bronze_transcripts,
-    )
-
-    src = _monitor_transcripts(spark, tmp_path)
-    wh = str(tmp_path / "mon_wh")
-    argv = ["--input", src, "--catalog-root", wh, "--run-id", "m1"]
-    m1 = monitor_job.main(argv)
-    assert m1["skipped_units"] == 0
-    cat = ParquetCatalog(wh)
-    flags = cat.read(spark, "mon_flags")
-    # the engineered spike is caught by at least two detectors
-    assert flags.where(F.col("flag") == 1).count() >= 1
-    # absence channel fires inside the 50-minute silence
-    assert m1["stages"]["mon_absent_rows"] >= 1
-    got_cov = sorted(
-        (r["conv_id"], str(r["bucket_start"]), r["covered_s"])
-        for r in cat.read(spark, "mon_coverage").collect()
-    )
-    # direct operator composition (same parameters as the job)
-    t1m = rollup_points(
-        transcripts_latency(bronze_transcripts(spark.read.parquet(src))),
-        "1m",
-    ).select("conv_id", "bucket_start", F.col("mean").alias("mean_v"))
-    ens = tsanalytics.ensemble_flags(
-        t1m.where(F.col("mean_v").isNotNull()), "mean_v")
-    eps = alerting.flag_intervals(ens, "flag", sample_seconds=60).select(
-        "conv_id",
-        F.timestamp_micros(F.unix_micros("interval_start")
-                           - F.lit(120_000_000)).alias("s"),
-        F.timestamp_micros(F.unix_micros("interval_end")
-                           + F.lit(120_000_000)).alias("e"),
-    )
-    mi = alerting.merge_intervals(eps, keys=("conv_id",),
-                                  start_col="s", end_col="e")
-    want_cov = sorted(
-        (r["conv_id"], str(r["bucket_start"]), r["covered_s"])
-        for r in alerting.interval_coverage(
-            mi, start_col="interval_start",
-            end_col="interval_end").collect()
-    )
-    caching.release_all()
-    assert got_cov == want_cov and len(got_cov) > 0
-    # resume: same run-id skips all five stages
-    m2 = monitor_job.main(argv)
-    assert m2["skipped_units"] == 5
-
-
-# ------------------------------------------------- anomaly movers
-def test_anomaly_movers_planted_deterioration(spark):
-    """Series 'bad' goes from 0 breaches on day 1 to many on day 2;
-    series 'calm' stays flat -> 'bad' must be day-2's rank 1 with a
-    positive delta, 'calm' delta 0."""
-    import datetime as dt
-    rows = []
-    for d in (1, 2):
-        for i in range(50):
-            rows.append(("calm", dt.datetime(2024, 6, d, 1, 0, i), 10.0))
-            v = 200.0 if (d == 2 and i < 20) else 10.0
-            rows.append(("bad", dt.datetime(2024, 6, d, 1, 0, i), v))
-    df = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, value double")
-    out = {r.event_type: r for r in al.anomaly_movers(
-        df, y=1.0).collect()}
-    # only day 2 appears (day 1 has no predecessor)
-    assert all(r.bucket_start.day == 2 for r in out.values())
-    assert out["bad"].day_rank == 1
-    assert out["bad"].delta > 0.3
-    assert out["bad"].rate == 0.4 and out["bad"].prev_rate == 0.0
-    assert out["calm"].delta == 0.0
-    assert out["calm"].day_rank == 2

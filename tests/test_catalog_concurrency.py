@@ -19,7 +19,6 @@ Covers the hazards a shared multi-writer warehouse hits:
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from yahoo_anomaly_detection_spark.operators.checkpoint import (
     CHECKPOINT_TABLE,

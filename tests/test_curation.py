@@ -8,14 +8,9 @@ from collections import Counter
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from conftest import count_exchanges, docs_df, plan_str
-from yahoo_anomaly_detection_spark import caching
 from yahoo_anomaly_detection_spark.operators import curation as cu
-from yahoo_anomaly_detection_spark.operators import dedup
-
-pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------------------------ repetition
@@ -270,207 +265,3 @@ def test_time_folds_contiguous_and_leak_free(spark):
     for a, b in zip(out, out[1:]):
         assert a.fold_end < b.fold_start  # walk-forward, no overlap
     assert sum(r.n_events for r in out) == 200
-
-
-# ------------------------------------------- curation job (e2e)
-def test_curation_job_end_to_end_and_resume(spark, tmp_path, capsys):
-    """jobs/curation_job.py: full curation DAG through the catalog
-    with per-stage checkpoints — curated ids must equal the operator
-    composition exactly, and a re-run with the same run-id skips
-    every stage (resume) while reading back identical results."""
-    from jobs import curation_job
-    from yahoo_anomaly_detection_spark.operators import textstats
-    from yahoo_anomaly_detection_spark.sources.catalog import (
-        ParquetCatalog as PC,
-    )
-
-    src = "/root/testdata/sf0.001/documents.parquet"
-    wh = str(tmp_path / "cur_wh")
-    argv = ["--input", src, "--catalog-root", wh, "--run-id", "r1"]
-    m1 = curation_job.main(argv)
-    assert m1["skipped_units"] == 0
-    cat = PC(wh)
-    curated = sorted(
-        r["doc_id"] for r in cat.read(spark, "curated_ids").collect()
-    )
-    docs = spark.read.parquet(src)
-    quality = textstats.quality_filter(
-        docs, min_quality=0.4, min_stop_ratio=0.01, langs=("en",)
-    ).select("doc_id")
-    canon = dedup.canonical_corpus(docs, n=3, threshold=0.5)
-    sample = textstats.stratified_sample(
-        docs, rates=(0.25, 0.5, 1.0), salt="s0"
-    ).select("doc_id")
-    expect = sorted(
-        r["doc_id"]
-        for r in quality.join(canon, "doc_id", "left_semi")
-        .join(sample, "doc_id", "left_semi")
-        .collect()
-    )
-    caching.release_all()
-    caching.release_orphan_rdds(spark)
-    assert curated == expect and len(curated) > 0
-    # digest table carries the text-equality invariant for every doc
-    assert m1["stages"]["doc_digest_rows"] == docs.count()
-    # resume: same run-id skips all five stages, same curated set
-    m2 = curation_job.main(argv)
-    assert m2["skipped_units"] == 5
-    curated2 = sorted(
-        r["doc_id"] for r in cat.read(spark, "curated_ids").collect()
-    )
-    assert curated2 == curated
-
-
-# ------------------------------------------------- BPE pair counts
-def test_bpe_pairs_hand_counts(spark):
-    docs = spark.createDataFrame(
-        [(1, "aba ab"), (2, "ba x")], "doc_id long, text string")
-    # pairs: aba -> ab, ba; ab -> ab; ba -> ba; x dropped (len 1)
-    out = {r.pair: (r.cnt, r.rank) for r in
-           cu.bpe_pair_counts(docs, k=10).collect()}
-    assert out == {"ab": (2, 1), "ba": (2, 2)}
-
-
-def test_bpe_pairs_take_ordered_not_global_sort(spark):
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta w{i}") for i in range(50)],
-        "doc_id long, text string")
-    plan = plan_str(cu.bpe_pair_counts(docs, k=5))
-    assert "TakeOrderedAndProject" in plan
-
-
-# ------------------------------------------------- mixture sampling
-@pytest.fixture(scope="module")
-def mix_docs(spark):
-    """3 sources x 100 docs x 10 tokens each = 1000 tokens/source."""
-    return spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("s"), (F.col("id") % 3).cast("string"))
-        .alias("source"),
-        F.expr("concat_ws(' ', transform(sequence(0, 9), "
-               "i -> concat('t', id, '_', i)))").alias("text"),
-    )
-
-
-def test_mixture_sample_caps_overasked_source(spark, mix_docs):
-    # s0 desired = 3000 * (2/4) = 1500 > 1000 available -> frac 1.0,
-    # every s0 doc survives; s1 desired = 750 -> frac 0.75
-    out = cu.mixture_sample(
-        mix_docs, {"s0": 2.0, "s1": 1.0, "s2": 1.0}, 3000).cache()
-    s0 = out.where(F.col("source") == "s0")
-    assert s0.count() == 100
-    assert s0.select("frac").distinct().collect()[0][0] == 1.0
-    fr1 = out.where(F.col("source") == "s1") \
-             .select("frac").distinct().collect()[0][0]
-    assert fr1 == 0.75
-    out.unpersist()
-
-
-def test_mixture_sample_excludes_unweighted_sources(spark, mix_docs):
-    out = cu.mixture_sample(mix_docs, {"s0": 1.0}, 500)
-    assert out.where(F.col("source") != "s0").count() == 0
-    # s0 frac = 500/1000 = 0.5: a real subset, not empty
-    n = out.count()
-    assert 0 < n < 100
-
-
-def test_mixture_sample_expected_token_mass(spark, mix_docs):
-    # all docs are 10 tokens, so realized tokens = 10 * kept docs;
-    # binomial(100, 0.5) stays within +-4 sigma = +-20 of 50
-    out = cu.mixture_sample(mix_docs, {"s1": 1.0}, 500)
-    got = out.agg(F.sum("n_tokens")).collect()[0][0]
-    assert 300 <= got <= 700
-
-
-def test_mixture_sample_deterministic_and_salted(spark, mix_docs):
-    w = {"s0": 1.0, "s1": 1.0}
-    a = {r.doc_id for r in
-         cu.mixture_sample(mix_docs, w, 1000, salt="mx0").collect()}
-    b = {r.doc_id for r in
-         cu.mixture_sample(mix_docs, w, 1000, salt="mx0").collect()}
-    c = {r.doc_id for r in
-         cu.mixture_sample(mix_docs, w, 1000, salt="zz").collect()}
-    assert a == b
-    assert a != c
-
-
-# ------------------------------------------------- bigram perplexity
-def test_bigram_logppl_word_order_sensitivity(spark):
-    """Same unigram bag, different order: the coherent doc (made of
-    the corpus's dominant transitions) must score LOWER than the
-    shuffled doc — the signal unigram_logppl cannot see."""
-    base = ["the cat sat on the mat"] * 8
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(base)]
-        + [(100, "the cat sat on the mat"),
-           (101, "mat the on sat cat the")],   # same bag, scrambled
-        "doc_id long, text string")
-    uni = {r.doc_id: r.logppl for r in
-           cu.unigram_logppl(docs).collect()}
-    bi = {r.doc_id: r.logppl for r in
-          cu.bigram_logppl(docs).collect()}
-    assert uni[100] == uni[101]          # unigram LM is order-blind
-    assert bi[100] < bi[101]             # bigram LM is not
-    assert bi[100] == bi[0]              # identical docs score equal
-
-
-def test_bigram_logppl_python_replica(spark):
-    import collections
-    import math
-    texts = ["a b a c", "b a", "c c c", "a", "x y"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {r.doc_id: (r.n_bigrams, r.logppl) for r in
-           cu.bigram_logppl(docs, smoothing=0.5).collect()}
-    # python replica
-    c12, c1 = collections.Counter(), collections.Counter()
-    vocab = set()
-    for t in texts:
-        ws = t.split(" ")
-        vocab |= set(ws)
-        for a, b in zip(ws, ws[1:]):
-            c12[(a, b)] += 1
-            c1[a] += 1
-    V = len(vocab)
-    for i, t in enumerate(texts):
-        ws = t.split(" ")
-        pairs = list(zip(ws, ws[1:]))
-        if not pairs:
-            assert i not in got      # single-token doc: absent
-            continue
-        lp = [math.log((c12[p] + 0.5) / (c1[p[0]] + 0.5 * V))
-              for p in pairs]
-        exp = round(-sum(lp) / len(lp) + 1e-9, 4)
-        assert got[i][0] == len(pairs)
-        assert abs(got[i][1] - exp) < 2e-4, i
-
-
-def test_shingle_novelty_first_doc_owns_everything(spark):
-    """doc0 introduces all its shingles (novelty 1); an exact copy at
-    doc1 introduces none (novelty 0); a half-overlap doc scores in
-    between; a too-short doc gets NULL."""
-    base = "w1 w2 w3 w4 w5"           # 3-shingles: 3
-    out = {r.doc_id: r for r in cu.shingle_novelty(docs_df(spark, [
-        base,                          # doc0: all novel
-        base,                          # doc1: exact copy -> 0
-        "w3 w4 w5 w6 w7",              # doc2: shares (w3 w4 w5) only
-        "w1 w2",                       # doc3: < n tokens -> no shingles
-    ]), n=3).collect()}
-    assert out[0].n_shingles == 3 and out[0].novelty == 1.0
-    assert out[1].n_shingles == 3 and out[1].novelty == 0.0
-    assert out[2].n_shingles == 3 and out[2].n_novel == 2
-    assert abs(out[2].novelty - round(2 / 3, 4)) < 1e-9
-    assert out[3].n_shingles == 0 and out[3].novelty is None
-
-
-def test_shingle_novelty_every_shingle_charged_once(spark):
-    """Conservation: sum(n_novel) == count of distinct shingles in the
-    corpus (each distinct shingle is novel for exactly one doc)."""
-    texts = ["a b c d e", "c d e f g", "f g h a b", "a b c d e f g h"]
-    df = cu.shingle_novelty(docs_df(spark, texts), n=3)
-    total_novel = df.agg(F.sum("n_novel")).collect()[0][0]
-    distinct = set()
-    for t in texts:
-        w = t.split()
-        distinct |= {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
-    assert total_novel == len(distinct)

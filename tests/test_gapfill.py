@@ -1,15 +1,13 @@
 """Gap-fill: grid completeness + linear interpolation oracle, and
 parity with the skeleton-join form it replaced."""
 
-import datetime as dt
-
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from conftest import count_exchanges, events_df, jobs_started
+from conftest import count_exchanges, jobs_started
 from yahoo_anomaly_detection_spark.operators.gapfill import (
     _run_explode,
     gapfill_linear,
@@ -205,28 +203,3 @@ def test_one_shuffle_no_join_no_cache(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "InMemory" not in plan, plan
     assert count_exchanges(out) == 1, plan
-
-
-# ------------------------------------------------- backfill_plan
-def test_backfill_plan_groups_contiguous_missing_days(spark):
-    """Planted holes collapse into contiguous runs with correct
-    bounds; a gapless series emits nothing."""
-    from yahoo_anomaly_detection_spark.operators import gapfill
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    # series "holey": days 0,1,2, [3,4 missing], 5, [6 missing], 7
-    for day in [0, 1, 2, 5, 7]:
-        rows.append((eid, t0 + dt.timedelta(days=day), 1, "holey",
-                     1.0))
-        eid += 1
-    for day in range(4):  # series "dense": no gaps
-        rows.append((eid, t0 + dt.timedelta(days=day), 1, "dense",
-                     1.0))
-        eid += 1
-    out = sorted(
-        ((r.event_type, r.backfill_start.day, r.backfill_end.day,
-          r.n_days)
-         for r in gapfill.backfill_plan(events_df(spark, rows),
-                                        granularity="day").collect()))
-    assert out == [("holey", 4, 5, 2), ("holey", 7, 7, 1)]

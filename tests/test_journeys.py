@@ -6,14 +6,10 @@ terminal rows, exact power-of-two bucketing) against hand-computed
 expectations, and the shuffle structure the scale design depends on.
 """
 
-import datetime as dt
-import math
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import count_exchanges, events_df, plan_str
+from conftest import count_exchanges, plan_str
 from yahoo_anomaly_detection_spark.operators import journeys
 
 
@@ -144,234 +140,3 @@ def test_next_gap_two_exchanges(spark, seq):
 def test_depth_histogram_two_mapside_combined_aggs(spark, seq):
     df = journeys.depth_histogram(seq)
     assert count_exchanges(df) == 2, plan_str(df)
-
-
-# ------------------------------------------------- pagerank
-def test_pagerank_star_graph_center_dominates(spark):
-    """Star: a,b,c,d all point to hub -> hub's rank must dominate and
-    ranks must sum to 1 (dangling hub redistributes its mass)."""
-    edges = spark.createDataFrame(
-        [("a", "hub"), ("b", "hub"), ("c", "hub"), ("d", "hub")],
-        "src string, dst string")
-    out = {r.node: r.pr for r in journeys.pagerank(edges).collect()}
-    assert max(out, key=out.get) == "hub"
-    assert abs(sum(out.values()) - 1.0) < 1e-3
-    # leaves are symmetric -> identical ranks
-    assert len({out[k] for k in "abcd"}) == 1
-
-
-def test_pagerank_matches_numpy_power_iteration(spark):
-    """Weighted 4-node graph vs an explicit numpy power iteration
-    with the same dangling handling and iteration count."""
-    import numpy as np
-    E = [("a", "b", 3.0), ("a", "c", 1.0), ("b", "c", 2.0),
-         ("c", "a", 1.0), ("c", "d", 1.0)]  # d is dangling
-    edges = spark.createDataFrame(E, "src string, dst string, w double")
-    out = {r.node: r.pr for r in journeys.pagerank(
-        edges, weight_col="w", iters=8).collect()}
-    idx = {"a": 0, "b": 1, "c": 2, "d": 3}
-    P = np.zeros((4, 4))
-    for s, t, w in E:
-        P[idx[s], idx[t]] = w
-    outdeg = P.sum(axis=1)
-    for i in range(4):
-        if outdeg[i]:
-            P[i] /= outdeg[i]
-    r = np.full(4, 0.25)
-    d = 0.85
-    for _ in range(8):
-        dangling = r[outdeg == 0].sum()
-        r = (1 - d) / 4 + d * (P.T @ r + dangling / 4)
-    for k, i in idx.items():
-        assert abs(out[k] - r[i]) < 1e-3, (k, out[k], r[i])
-
-
-def test_pagerank_rejects_bad_params(spark):
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError):
-        journeys.pagerank(edges, damping=1.0)
-    with pytest.raises(ValueError):
-        journeys.pagerank(edges, iters=0)
-
-
-# ------------------------------------------------- trigram_flows
-def _user_type_events(spark, rows):
-    t0 = dt.datetime(2024, 6, 1)
-    data = [(i, t0 + dt.timedelta(seconds=i), u, t, 1.0)
-            for i, (u, t) in enumerate(rows)]
-    return spark.createDataFrame(
-        data,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double")
-
-
-def test_trigram_flows_counts_and_user_boundaries(spark):
-    """Two users: trigrams never cross the user boundary, counts are
-    exact, users with < 3 events contribute nothing."""
-    ev = _user_type_events(spark, [
-        (1, "a"), (1, "b"), (1, "c"), (1, "a"), (1, "b"), (1, "c"),
-        (2, "x"), (2, "y"),  # depth 2 -> no trigram
-    ])
-    out = {(r.t1, r.t2, r.t3): r.n for r in
-           journeys.trigram_flows(ev).collect()}
-    assert out == {("a", "b", "c"): 2, ("b", "c", "a"): 1,
-                   ("c", "a", "b"): 1}
-
-
-def test_trigram_flows_topk_deterministic_tiebreak(spark):
-    """At the k boundary, ties break by (t1, t2, t3) asc."""
-    ev = _user_type_events(spark, [(1, "b"), (1, "b"), (1, "b"),
-                     (2, "a"), (2, "a"), (2, "a")])
-    out = journeys.trigram_flows(ev, k=1).collect()
-    assert len(out) == 1
-    assert (out[0].t1, out[0].t2, out[0].t3) == ("a", "a", "a")
-
-
-def test_trigram_flows_single_exchange_before_agg(spark):
-    """Both leads ride ONE user-key exchange; with the tiny groupBy
-    and the top-k that's at most 2 shuffles total, never 3."""
-    ev = _user_type_events(spark, [(1, "a")] * 5)
-    assert count_exchanges(journeys.trigram_flows(ev)) <= 2
-
-
-# ------------------------------------------------- survival_km
-def test_survival_km_textbook_small_sample(spark):
-    """5 users, cutoff day 10: deaths at ages 2 (u1) and 5 (u2, u3
-    censored at 5 is separate), one censored mid-range, two censored
-    at the edge. Hand-computed KM product."""
-    import datetime as dt
-    d0 = dt.datetime(2024, 1, 1)
-
-    def u(uid, first, last):
-        return [(uid * 100, d0 + dt.timedelta(days=first), uid, "a", 1.0),
-                (uid * 100 + 1, d0 + dt.timedelta(days=last), uid, "a", 1.0)]
-
-    rows = (u(1, 0, 2)      # dies at age 2
-            + u(2, 0, 5)    # dies at age 5
-            + u(3, 5, 10)   # last == cutoff -> censored at age 5
-            + u(4, 3, 10)   # censored at age 7
-            + u(5, 0, 10))  # censored at age 10
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    out = {r.t_day: r for r in journeys.survival_km(ev).collect()}
-    # ages: 2 (1 death, risk 5), 5 (1 death + 1 censored, risk 4),
-    #       7 (censored, risk 2), 10 (censored, risk 1)
-    assert out[2].n_risk == 5 and out[2].n_events == 1
-    assert out[5].n_risk == 4 and out[5].n_events == 1 \
-        and out[5].n_censored == 1
-    assert out[7].n_risk == 2 and out[7].n_events == 0
-    assert out[10].n_risk == 1 and out[10].n_censored == 1
-    s2 = 1 - 1 / 5
-    s5 = s2 * (1 - 1 / 4)
-    assert abs(out[2].survival - round(s2 + 1e-9, 4)) < 1e-9
-    assert abs(out[5].survival - round(s5 + 1e-9, 4)) < 1e-9
-    # censoring-only ages don't move the curve
-    assert out[7].survival == out[5].survival
-    assert out[10].survival == out[5].survival
-
-
-def test_survival_km_total_collapse_hits_zero(spark):
-    """Everyone dies at the same age before the cutoff -> survival 0
-    exactly (the ln(0) guard), and a later censored age stays 0."""
-    import datetime as dt
-    d0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for uid in (1, 2):
-        rows += [(uid * 10, d0, uid, "a", 1.0),
-                 (uid * 10 + 1, d0 + dt.timedelta(days=3), uid, "a", 1.0)]
-    rows += [(90, d0, 9, "a", 1.0),
-             (91, d0 + dt.timedelta(days=8), 9, "a", 1.0)]  # sets cutoff
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    out = {r.t_day: r for r in journeys.survival_km(ev).collect()}
-    assert out[3].n_risk == 3 and out[3].n_events == 2
-    assert out[8].n_risk == 1 and out[8].n_events == 0
-    assert out[3].survival == round((1 - 2 / 3) + 1e-9, 4)
-    assert out[8].survival == out[3].survival
-
-
-# ------------------------------------------------- markov_entropy
-def test_markov_entropy_hand_cases(spark):
-    """Deterministic chain -> 0 bits; uniform 2-way fan-out -> 1 bit;
-    weights sum to the chain's entropy rate."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    # user 1: a->b a->b ... deterministic from 'a' (and b->a)
-    for i in range(8):
-        rows.append((eid, t0 + dt.timedelta(seconds=eid), 1,
-                     "ab"[i % 2], 1.0))
-        eid += 1
-    # user 2: walk c a c b c a c b -> from c: {a,b} twice each
-    for i, typ in enumerate("cacbcacb"):
-        rows.append((eid, t0 + dt.timedelta(seconds=eid), 2, typ, 1.0))
-        eid += 1
-    # user 3: d d d d -> from d: always d (deterministic)
-    for i in range(4):
-        rows.append((eid, t0 + dt.timedelta(seconds=eid), 3, "d", 1.0))
-        eid += 1
-    out = {r.from_type: r for r in
-           journeys.markov_entropy(events_df(spark, rows)).collect()}
-    assert out["d"].h_bits == 0.0  # deterministic chain
-    # from c: a,b,a,b -> uniform over 2 = 1 bit
-    assert out["c"].h_bits == 1.0
-    # from b: user1 b->a x3, user2 b->c x1 -> H(3/4, 1/4)
-    h_b = -(0.75 * math.log2(0.75) + 0.25 * math.log2(0.25))
-    assert out["b"].h_bits == pytest.approx(h_b, abs=1e-4)
-    # a -> b (user1 x4) and a -> c (user2 x2): H(2/3,1/3)
-    h_a = -(2 / 3) * math.log2(2 / 3) - (1 / 3) * math.log2(1 / 3)
-    assert out["a"].h_bits == pytest.approx(h_a, abs=1e-4)
-    total = sum(r.n_out for r in out.values())
-    rate = sum(r.n_out / total * r.h_bits for r in out.values())
-    assert sum(r.w_bits for r in out.values()) == \
-        pytest.approx(rate, abs=2e-4)
-
-
-def test_markov_entropy_single_user_key_exchange(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=i), i % 7,
-             "t%d" % (i % 3), 1.0) for i in range(300)]
-    df = journeys.markov_entropy(events_df(spark, rows))
-    plan = plan_str(df)
-    # corpus-sized exchange: exactly one hashpartitioning(user_id)
-    assert len(re.findall(
-        r"Exchange hashpartitioning\(user_id", plan)) == 1, plan
-
-
-# ------------------------------------------------- journey_surprise
-def test_journey_surprise_deterministic_user_scores_zero(spark):
-    """A user whose every step follows a probability-1 edge scores 0
-    bits; a user taking a rare edge scores > 0."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    # users 1-3 walk a->b->a->b... (so a->b and b->a are the only
-    # edges from a and b); user 4 injects one a->c edge
-    for uid in (1, 2, 3):
-        for i in range(8):
-            rows.append((eid, t0 + dt.timedelta(seconds=eid), uid,
-                         "ab"[i % 2], 1.0))
-            eid += 1
-    for typ in ["a", "b", "a", "b", "a", "c", "a", "b"]:
-        rows.append((eid, t0 + dt.timedelta(seconds=eid), 4, typ, 1.0))
-        eid += 1
-    out = {r.user_id: r for r in
-           journeys.journey_surprise(events_df(spark, rows),
-                                     min_trans=5).collect()}
-    assert out[1].bits == out[2].bits == out[3].bits
-    assert out[4].bits > out[1].bits
-    # every step of users 1-3 is still slightly surprising (a->b is
-    # not prob 1: user 4 contributes a->c), so just check ordering
-    assert out[1].n_trans == 7 and out[4].n_trans == 7
-
-
-def test_journey_surprise_min_trans_filter(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=i), 1, "ab"[i % 2], 1.0)
-            for i in range(10)]
-    rows += [(100, t0, 2, "a", 1.0), (101, t0 + dt.timedelta(1), 2,
-                                      "b", 1.0)]
-    got = journeys.journey_surprise(events_df(spark, rows), min_trans=5)
-    assert [r.user_id for r in got.collect()] == [1]

@@ -3,14 +3,9 @@ python replica, and the layout's measurable objective — 2-D box
 queries must prune dramatically better than a linear single-column
 sort."""
 
-import datetime as dt
-
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from conftest import events_df
 from yahoo_anomaly_detection_spark.operators import layout
 
 
@@ -177,74 +172,3 @@ def test_one_sided_bucketed_join_shuffles_probe_only(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS bt_c")
-
-
-# ------------------------------------------------- compaction_plan
-def test_compaction_plan_matches_python_replica(spark):
-    """Bin assignment == the greedy running-total replica; bins are
-    consecutive in day order and only the last bin of a key may be
-    under target."""
-    from yahoo_anomaly_detection_spark.operators import layout as lay
-    t0 = dt.datetime(2024, 6, 1)
-    sizes = [5, 5, 5, 5, 7, 2, 7, 25, 1]
-    rows = []
-    eid = 0
-    for day, n in enumerate(sizes):
-        for _ in range(n):
-            rows.append((eid, t0 + dt.timedelta(days=day,
-                                                seconds=eid % 3600),
-                         7, "k", 1.0))
-            eid += 1
-    got = sorted(
-        ((r.day.day, r.n_rows, r.bin_id, r.bin_rows, r.bin_files)
-         for r in lay.compaction_plan(events_df(spark, rows),
-                                      target_rows=10).collect()))
-    # replica
-    cum, plan = 0, []
-    for day, n in enumerate(sizes):
-        plan.append((day + 1, n, cum // 10))
-        cum += n
-    import collections
-    totals = collections.Counter()
-    files = collections.Counter()
-    for _, n, b in plan:
-        totals[b] += n
-        files[b] += 1
-    want = sorted((d, n, b, totals[b], files[b]) for d, n, b in plan)
-    assert got == want
-    # every bin except the last reaches the target
-    last = max(totals)
-    for b, tot in totals.items():
-        if b != last:
-            assert tot >= 10
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.integers(1, 50), min_size=1, max_size=40),
-       st.integers(1, 60))
-def test_compaction_bins_invariants(sizes, target):
-    """Streaming bin-pack invariants for ANY file-size sequence:
-    bin ids nondecreasing in order, no file split, and bin b opens
-    only after b*target rows accumulated (so occupied bins AVERAGE
-    >= target fill; an individual middle bin may run small only when
-    an oversized neighbor overshot — found by this very test)."""
-    cum, bins, opens = 0, [], {}
-    for n in sizes:
-        b = cum // target
-        bins.append(b)
-        opens.setdefault(b, cum)
-        cum += n
-    assert bins == sorted(bins)  # nondecreasing in file order
-    for b, first_cum in opens.items():
-        assert first_cum >= b * target  # cumulative-fill guarantee
-    # per-bin minimum fill is NOT guaranteed (an overshooting
-    # neighbor absorbs it); the CUMULATIVE guarantee is: once any
-    # later bin opens, the files through bin b total >= (b+1)*target
-    last = max(bins)
-    totals = {}
-    for n, b in zip(sizes, bins):
-        totals[b] = totals.get(b, 0) + n
-    for b in totals:
-        if b != last:
-            upto = sum(t for bb, t in totals.items() if bb <= b)
-            assert upto >= (b + 1) * target

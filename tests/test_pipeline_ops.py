@@ -10,7 +10,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from yahoo_anomaly_detection_spark.operators import (
     dedup,
@@ -205,21 +204,3 @@ def test_multimodal_meta(docs):
         assert meta[i]["n_bytes"] == 16
         assert meta[i]["width"] == int(h[0:2], 16)
         assert meta[i]["height"] == int(h[2:4], 16)
-
-
-def test_multimodal_decode_batch_shapes():
-    """Zero-row Arrow batches decode to (0, 16) instead of raising,
-    and ragged payloads fail loudly instead of misaligning rows."""
-    import numpy as np
-
-    from yahoo_anomaly_detection_spark.operators.multimodal import (
-        PAYLOAD_BYTES,
-        _decode_batch,
-    )
-
-    assert _decode_batch([]).shape == (0, PAYLOAD_BYTES)
-    two = _decode_batch([bytes(range(16)), bytes(range(16, 32))])
-    assert two.shape == (2, PAYLOAD_BYTES)
-    assert two[1, 0] == 16
-    with pytest.raises(ValueError):
-        _decode_batch([bytes(range(16)), b"\x00" * 15])  # ragged

@@ -3,7 +3,6 @@
 import os
 from datetime import datetime
 
-import pandas as pd
 import pytest
 
 from conftest import file_digests, jobs_started
@@ -310,79 +309,3 @@ def test_day_replace_swaps_leaves_without_a_probe(spark, catalog, tmp_path):
                  catalog.read(spark, "tier_1m").collect())
     assert got == sorted([("c1", d) for d in (1, 3, 5) for _ in range(4)]
                          + [("c9", 2), ("c9", 4)])
-
-
-# ------------------------- DELETE with NULL-predicate rows (ADVICE)
-def test_delete_where_retains_null_predicate_rows(spark, catalog):
-    """ANSI / Iceberg DELETE removes only predicate=TRUE rows; rows
-    where the predicate evaluates NULL survive — and must survive
-    REGARDLESS of whether their data dir was rewritten (it contained
-    TRUE matches) or carried over untouched (it did not). The old
-    ``NOT (p)`` rewrite filter dropped NULL rows from rewritten dirs
-    only, making survival depend on physical layout."""
-    # dir 1: a TRUE match + a NULL row  -> rewritten
-    catalog.append(
-        spark.createDataFrame(
-            [(1, 5.0), (2, None)], "id long, v double"
-        ),
-        "t",
-    )
-    # dir 2: a FALSE row + a NULL row   -> untouched (no TRUE match)
-    catalog.append(
-        spark.createDataFrame(
-            [(3, 50.0), (4, None)], "id long, v double"
-        ),
-        "t",
-    )
-    catalog.delete_where(spark, "t", "v < 10")
-    snap = catalog.snapshots("t")[-1]
-    assert snap.summary["rewritten_dirs"] == 1
-    assert snap.summary["pruned_dirs"] == 1
-    kept = sorted(r["id"] for r in catalog.read(spark, "t").collect())
-    # only id=1 (v=5, predicate TRUE) is deleted; both NULL rows live
-    assert kept == [2, 3, 4]
-
-
-def test_rollup_job_vacuum_stage(spark, tmp_path):
-    """jobs/rollup_job.py --vacuum-keep-last: after two runs each tier
-    table carries two overwrite snapshots; vacuum compacts the live
-    view and physically removes every superseded commit dir while the
-    tier contents survive byte-for-row."""
-    import os
-
-    from jobs import rollup_job
-    from yahoo_anomaly_detection_spark.sources.catalog import (
-        ParquetCatalog as PC,
-    )
-    from yahoo_anomaly_detection_spark.synthgen import gen_transcripts
-
-    src = str(tmp_path / "transcripts")
-    gen_transcripts(spark, n_convs=20, partitions=4).write.parquet(src)
-    wh = str(tmp_path / "wh")
-    base = ["--input", src, "--catalog-root", wh, "--tiers", "1m,1h"]
-    rollup_job.main(base + ["--run-id", "v1"])
-    # --evict-now far in the past: a no-op eviction that still
-    # exercises the partition-pruned predicate + the verify gate
-    m2 = rollup_job.main(
-        base + ["--run-id", "v2", "--vacuum-keep-last", "1",
-                "--evict-now", "2020-01-01 00:00:00"]
-    )
-    for tier in ("1m", "1h"):
-        assert f"evict_{tier}_snapshot" in m2["stages"]
-        # only the run-1 dir is GC'd: the no-op eviction commits
-        # nothing and run 2's view already is one dir, so compaction
-        # is a no-op too and leaves no pre-compaction dir behind
-        assert m2["stages"][f"vacuum_tier_{tier}_removed_dirs"] == 1
-        cat = PC(wh)
-        snaps = cat.snapshots(f"tier_{tier}")
-        assert len(snaps) == 1 and len(snaps[-1].paths) == 1
-        n_dirs = sum(
-            1 for n in os.listdir(os.path.join(wh, f"tier_{tier}"))
-            if n.startswith("snap="))
-        assert n_dirs == 1
-        # tiers are hive-partitioned by day and the layout survived
-        # the no-op eviction + compaction (sticky spec)
-        assert any(n.startswith("day=")
-                   for n in os.listdir(snaps[-1].paths[0]))
-        assert (cat.read(spark, f"tier_{tier}").count()
-                == m2["stages"][f"tier_{tier}_rows"] > 0)

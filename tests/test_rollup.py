@@ -1,15 +1,10 @@
 """Tier rollups: oracle equality vs pandas (ddof=0) + exact cascade."""
 
-import datetime as dt
-import re
-
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import count_exchanges, events_df, plan_str
-from yahoo_anomaly_detection_spark.operators import rollup
 from yahoo_anomaly_detection_spark.operators.rollup import (
     rollup_all_tiers,
     rollup_cascade,
@@ -121,70 +116,3 @@ def test_route_tier_picks_finest_within_budget():
         route_tier(0, 10)
     with _pt.raises(ValueError):
         route_tier(60, 0)
-
-
-def test_salted_agg_rejects_non_decomposable_alias(spark):
-    from yahoo_anomaly_detection_spark.operators.rollup import salted_agg
-
-    df = spark.createDataFrame([("c1", 1.0)], "conv_id string, value double")
-    with pytest.raises(ValueError, match="cannot recombine"):
-        salted_agg(df, "conv_id", [F.avg("value").alias("mean")])
-    # the decomposable shape still works
-    out = salted_agg(
-        df, "conv_id",
-        [F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum")],
-    ).collect()
-    assert out[0]["cnt"] == 1 and out[0]["sum"] == 1.0
-
-
-# ------------------------------------------------- grouped_rollup
-@pytest.fixture(scope="module")
-def small_events(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    for day in range(3):
-        for typ, vals in [("a", [1.0, 2.0, 3.0]), ("b", [10.0 + day])]:
-            for v in vals:
-                rows.append((eid, t0 + dt.timedelta(days=day,
-                                                    seconds=eid), 7,
-                             typ, v))
-                eid += 1
-    return events_df(spark, rows)
-
-
-def test_grouped_rollup_matches_four_separate_aggs(spark, small_events):
-    """cube output must equal the union of the four grains computed
-    independently — every lattice cell, exact counts and sums."""
-    got = {(r.event_type, str(r.day), r.gid, r.n, r.sum_v)
-           for r in rollup.grouped_rollup(small_events).collect()}
-    ev = small_events.withColumn("day", F.date_trunc("day", "ts"))
-    fine = {(r.event_type, str(r.day), 0, r.n, round(r.s + 1e-9, 4))
-            for r in ev.groupBy("event_type", "day")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-            .collect()}
-    by_type = {(r.event_type, "1970-01-01 00:00:00", 1, r.n,
-                round(r.s + 1e-9, 4))
-               for r in ev.groupBy("event_type")
-               .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-               .collect()}
-    by_day = {("<all>", str(r.day), 2, r.n, round(r.s + 1e-9, 4))
-              for r in ev.groupBy("day")
-              .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-              .collect()}
-    [g] = ev.agg(F.count("*").alias("n"), F.sum("value").alias("s")) \
-        .collect()
-    grand = {("<all>", "1970-01-01 00:00:00", 3, g.n,
-              round(g.s + 1e-9, 4))}
-    assert got == fine | by_type | by_day | grand
-    # 3 days x 2 types (a every day, b every day) = 6 fine cells
-    assert len(got) == 6 + 2 + 3 + 1
-
-
-def test_grouped_rollup_single_expand_single_shuffle(spark, small_events):
-    """The cube must plan as ONE Expand feeding ONE exchange of
-    partial aggregates — never four scans or four shuffles."""
-    df = rollup.grouped_rollup(small_events)
-    plan = plan_str(df)
-    assert len(re.findall(r"\bExpand\b", plan)) == 1, plan
-    assert count_exchanges(df) == 1, plan

@@ -4,8 +4,6 @@ multi-probe LSH, EWMA partition sizing."""
 import math
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from yahoo_anomaly_detection_spark.operators import dedup, similarity, stats
 from yahoo_anomaly_detection_spark.operators.cascade import (

@@ -3,29 +3,12 @@ volume ~linear in N), per-bucket candidate caps, 64-bit SimHash with
 parameterized pigeonhole blocks (planted d≤k recall at k=3), and
 scoped cache release."""
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import lcg_embeddings, pairs_df
 from yahoo_anomaly_detection_spark import caching
 from yahoo_anomaly_detection_spark.operators import dedup, similarity
-
-
-# ------------------------------------------------------- corpora
-def lcg_embeddings(spark, n: int):
-    """Deterministic synthetic embeddings with md5-derived components
-    (iid-uniform-ish). An LCG won't do here: affine in the key, it
-    puts every vector on a line in R^64 — degenerate bucket skew no
-    plane count can fix."""
-    return spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d -> cast("
-            "cast(conv(substr(md5(concat('v:', id, ':', d)), 1, 8), 16, 10)"
-            " as double) / 4294967296.0 - 0.5 as float))"
-        ).alias("embedding"),
-    )
 
 
 def _candidate_pairs(spark, n: int, n_planes: int) -> int:
@@ -251,17 +234,13 @@ def test_ivf_topk_nprobe_subset_of_brute_force(spark):
 
 
 # ---------------------------------------------- duplicate clustering
-def _pairs_df(spark, pairs):
-    return spark.createDataFrame(pairs, "doc_a long, doc_b long")
-
-
 def test_cc_path_graph_transitivity(spark):
     """A path 1-2-3-4 has NO direct (1,4) edge — the component only
     closes through repeated propagation; plus a disjoint pair and an
     isolated triangle to check components never bleed into each
     other."""
     cc = dedup.connected_components(
-        _pairs_df(spark, [(1, 2), (2, 3), (3, 4), (10, 11),
+        pairs_df(spark, [(1, 2), (2, 3), (3, 4), (10, 11),
                           (20, 21), (21, 22), (20, 22)])
     )
     got = {r["doc_id"]: r["cluster"] for r in cc.collect()}
@@ -273,7 +252,7 @@ def test_cc_long_chain_converges(spark):
     """A 12-node chain needs ~11 propagation rounds — exercises the
     fixpoint loop well past the 1-3 rounds typical of dup cliques."""
     edges = [(i, i + 1) for i in range(12)]
-    cc = dedup.connected_components(_pairs_df(spark, edges))
+    cc = dedup.connected_components(pairs_df(spark, edges))
     got = {r["doc_id"]: r["cluster"] for r in cc.collect()}
     assert got == {i: 0 for i in range(13)}
 
@@ -309,9 +288,9 @@ def test_cc_shortcut_converges_in_fewer_rounds(spark):
     edges = [(i, i + 1) for i in range(24)]
     plain_stats, sc_stats = {}, {}
     plain = dedup.connected_components(
-        _pairs_df(spark, edges), max_iter=40, stats=plain_stats)
+        pairs_df(spark, edges), max_iter=40, stats=plain_stats)
     short = dedup.connected_components(
-        _pairs_df(spark, edges), max_iter=40, shortcut=True,
+        pairs_df(spark, edges), max_iter=40, shortcut=True,
         stats=sc_stats)
     p = {r["doc_id"]: r["cluster"] for r in plain.collect()}
     s = {r["doc_id"]: r["cluster"] for r in short.collect()}
@@ -389,7 +368,7 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         got = {
             r["doc_id"]: r["cluster"]
             for r in dedup.connected_components(
-                _pairs_df(spark, edges), shortcut=(trial % 2 == 0)
+                pairs_df(spark, edges), shortcut=(trial % 2 == 0)
             ).collect()
         }
         assert got == union_find(edges, nodes), (trial, edges)

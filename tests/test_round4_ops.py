@@ -7,20 +7,15 @@ stratum, and sketch percentiles."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import lcg_embeddings, pairs_df
 from yahoo_anomaly_detection_spark import caching
 from yahoo_anomaly_detection_spark.operators import dedup, similarity
 from yahoo_anomaly_detection_spark.sources.catalog import ParquetCatalog
-
-from tests.test_round3_ops import lcg_embeddings
 
 
 @pytest.fixture()
 def catalog(tmp_path):
     return ParquetCatalog(str(tmp_path / "warehouse"))
-
-
-def _pairs_df(spark, pairs):
-    return spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
 
 # ------------------------- DELETE with NULL-predicate rows (ADVICE)
@@ -78,7 +73,7 @@ def test_release_orphan_rdds_refuses_with_live_registry(spark):
 # ------------------------------------ connected-components hygiene
 def test_cc_max_iter_zero_raises(spark):
     with pytest.raises(ValueError, match="max_iter"):
-        dedup.connected_components(_pairs_df(spark, [(1, 2)]), max_iter=0)
+        dedup.connected_components(pairs_df(spark, [(1, 2)]), max_iter=0)
 
 
 def test_cc_releases_previous_round_blocks(spark):
@@ -91,7 +86,7 @@ def test_cc_releases_previous_round_blocks(spark):
     caching.release_orphan_rdds(spark)  # clean slate
     edges = [(i, i + 1) for i in range(12)]  # ~11 propagation rounds
     stats = {}
-    cc = dedup.connected_components(_pairs_df(spark, edges), stats=stats)
+    cc = dedup.connected_components(pairs_df(spark, edges), stats=stats)
     got = {r["doc_id"]: r["cluster"] for r in cc.collect()}
     assert got == {i: 0 for i in range(13)}
     assert stats["rounds"] >= 10
@@ -110,7 +105,7 @@ def test_cc_reliable_requires_checkpoint_dir(spark):
         pytest.skip("checkpoint dir already set in this session")
     with pytest.raises(RuntimeError, match="setCheckpointDir"):
         dedup.connected_components(
-            _pairs_df(spark, [(1, 2)]), reliable=True
+            pairs_df(spark, [(1, 2)]), reliable=True
         )
 
 
@@ -122,7 +117,7 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     edges = [(1, 2), (2, 3), (3, 4), (10, 11)]
     stats = {}
-    cc = dedup.connected_components(_pairs_df(spark, edges),
+    cc = dedup.connected_components(pairs_df(spark, edges),
                                     reliable=True, stats=stats)
     got = {r["doc_id"]: r["cluster"] for r in cc.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}

@@ -7,11 +7,17 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from yahoo_anomaly_detection_spark.operators import curation, dedup, \
-    textstats, tsanalytics
+from conftest import count_exchanges, plan_str
+from yahoo_anomaly_detection_spark.operators import (
+    curation,
+    dedup,
+    textstats,
+    tsanalytics,
+)
 from yahoo_anomaly_detection_spark.operators.textstats import _mg_merge
 
-from conftest import count_exchanges, plan_str
+
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------------- Misra-Gries sketch
@@ -335,13 +341,3 @@ def test_leadlag_grid_join_is_broadcast_no_cartesian(spark):
     # lag groupBy + the best-rank window over the reduced relation
     assert plan.count("InMemoryTableScan") >= 2, plan
     assert count_exchanges(out) <= 6, plan
-
-
-# sweep any caches the dup-span runs left behind
-from yahoo_anomaly_detection_spark import caching  # noqa: E402
-
-
-@pytest.fixture(autouse=True)
-def _sweep_caches():
-    yield
-    caching.release_all()

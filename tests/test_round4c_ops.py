@@ -1,10 +1,19 @@
 """Round-4 final-wave operators: leakage-safe cluster-granular
 train/val/test splitting and token-budget mixture sampling."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from yahoo_anomaly_detection_spark.operators import curation, dedup
+from conftest import count_exchanges, plan_str
+from yahoo_anomaly_detection_spark.operators import (
+    alerting,
+    curation,
+    dedup,
+    sessions,
+    textstats,
+    tsanalytics,
+)
 
 
 @pytest.fixture(scope="module")
@@ -127,10 +136,6 @@ def test_mixture_sample_deterministic_and_salted(spark, mix_docs):
 
 
 # ------------------------------------------------- season strength
-from yahoo_anomaly_detection_spark.operators import tsanalytics  # noqa: E402
-from conftest import count_exchanges  # noqa: E402
-
-
 @pytest.fixture(scope="module")
 def stl_series(spark):
     """Three planted series on a 4-hour minute grid: a pure linear
@@ -171,10 +176,6 @@ def test_season_strength_single_exchange(spark, stl_series):
 
 
 # ------------------------------------------------- exact KS drift
-import numpy as np  # noqa: E402
-from conftest import plan_str  # noqa: E402
-
-
 def _ks_numpy(a, b):
     """sup_x |F_a(x) - F_b(x)| evaluated at every pooled sample."""
     a, b = np.sort(np.asarray(a, float)), np.sort(np.asarray(b, float))
@@ -237,9 +238,6 @@ def test_ks_drift_plan_broadcasts_pairs(spark):
 
 
 # ------------------------------------------------- char entropy
-from yahoo_anomaly_detection_spark.operators import textstats  # noqa: E402
-
-
 def test_char_entropy_planted_distributions(spark):
     docs = spark.createDataFrame(
         [(1, "aaaaaaaa"),          # zero entropy, single char
@@ -335,9 +333,6 @@ def test_rate_range_single_exchange(spark):
 
 
 # ------------------------------------------------- bigram perplexity
-from yahoo_anomaly_detection_spark.operators import curation  # noqa: E402,F811
-
-
 def test_bigram_logppl_word_order_sensitivity(spark):
     """Same unigram bag, different order: the coherent doc (made of
     the corpus's dominant transitions) must score LOWER than the
@@ -389,9 +384,6 @@ def test_bigram_logppl_python_replica(spark):
 
 
 # ------------------------------------------------- key skew profile
-from yahoo_anomaly_detection_spark.operators import sessions  # noqa: E402
-
-
 def _gini_numpy(counts):
     c = np.sort(np.asarray(counts, float))
     n = len(c)
@@ -462,9 +454,6 @@ def test_sax_discords_planted_unique_shape(spark):
 
 
 # ------------------------------------------------- anomaly movers
-from yahoo_anomaly_detection_spark.operators import alerting  # noqa: E402
-
-
 def test_anomaly_movers_planted_deterioration(spark):
     """Series 'bad' goes from 0 breaches on day 1 to many on day 2;
     series 'calm' stays flat -> 'bad' must be day-2's rank 1 with a

@@ -8,7 +8,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from yahoo_anomaly_detection_spark.operators import tsanalytics
+from yahoo_anomaly_detection_spark.operators import (
+    journeys,
+    sketches,
+    tsanalytics,
+)
 
 
 # ------------------------------------------------- ddsketch_quantiles
@@ -93,9 +97,6 @@ def test_fleet_envelope_flags_cross_sectional_outlier(spark):
 
 
 # ------------------------------------------------- sketches (HLL/CMS)
-from yahoo_anomaly_detection_spark.operators import sketches  # noqa: E402
-
-
 def test_hll_raw_branch_accuracy_50k(spark):
     """50k distinct ids in one group — deep in the raw-estimator
     regime (E >> 2.5m) — must land within 5 standard errors
@@ -169,9 +170,6 @@ def test_cms_rejects_bad_params(spark):
 
 
 # ------------------------------------------------- pagerank
-from yahoo_anomaly_detection_spark.operators import journeys  # noqa: E402
-
-
 def test_pagerank_star_graph_center_dominates(spark):
     """Star: a,b,c,d all point to hub -> hub's rank must dominate and
     ranks must sum to 1 (dangling hub redistributes its mass)."""

@@ -4,10 +4,9 @@ novelty, and the corpus Zipf power-law fit."""
 import datetime as dt
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import count_exchanges
+from conftest import count_exchanges, docs_df
 from yahoo_anomaly_detection_spark.operators import (
     curation,
     journeys,
@@ -16,7 +15,7 @@ from yahoo_anomaly_detection_spark.operators import (
 
 
 # ------------------------------------------------- trigram_flows
-def _ev(spark, rows):
+def _user_type_events(spark, rows):
     t0 = dt.datetime(2024, 6, 1)
     data = [(i, t0 + dt.timedelta(seconds=i), u, t, 1.0)
             for i, (u, t) in enumerate(rows)]
@@ -29,7 +28,7 @@ def _ev(spark, rows):
 def test_trigram_flows_counts_and_user_boundaries(spark):
     """Two users: trigrams never cross the user boundary, counts are
     exact, users with < 3 events contribute nothing."""
-    ev = _ev(spark, [
+    ev = _user_type_events(spark, [
         (1, "a"), (1, "b"), (1, "c"), (1, "a"), (1, "b"), (1, "c"),
         (2, "x"), (2, "y"),  # depth 2 -> no trigram
     ])
@@ -41,7 +40,7 @@ def test_trigram_flows_counts_and_user_boundaries(spark):
 
 def test_trigram_flows_topk_deterministic_tiebreak(spark):
     """At the k boundary, ties break by (t1, t2, t3) asc."""
-    ev = _ev(spark, [(1, "b"), (1, "b"), (1, "b"),
+    ev = _user_type_events(spark, [(1, "b"), (1, "b"), (1, "b"),
                      (2, "a"), (2, "a"), (2, "a")])
     out = journeys.trigram_flows(ev, k=1).collect()
     assert len(out) == 1
@@ -51,22 +50,17 @@ def test_trigram_flows_topk_deterministic_tiebreak(spark):
 def test_trigram_flows_single_exchange_before_agg(spark):
     """Both leads ride ONE user-key exchange; with the tiny groupBy
     and the top-k that's at most 2 shuffles total, never 3."""
-    ev = _ev(spark, [(1, "a")] * 5)
+    ev = _user_type_events(spark, [(1, "a")] * 5)
     assert count_exchanges(journeys.trigram_flows(ev)) <= 2
 
 
 # ------------------------------------------------- shingle_novelty
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-
-
 def test_shingle_novelty_first_doc_owns_everything(spark):
     """doc0 introduces all its shingles (novelty 1); an exact copy at
     doc1 introduces none (novelty 0); a half-overlap doc scores in
     between; a too-short doc gets NULL."""
     base = "w1 w2 w3 w4 w5"           # 3-shingles: 3
-    out = {r.doc_id: r for r in curation.shingle_novelty(_docs(spark, [
+    out = {r.doc_id: r for r in curation.shingle_novelty(docs_df(spark, [
         base,                          # doc0: all novel
         base,                          # doc1: exact copy -> 0
         "w3 w4 w5 w6 w7",              # doc2: shares (w3 w4 w5) only
@@ -83,7 +77,7 @@ def test_shingle_novelty_every_shingle_charged_once(spark):
     """Conservation: sum(n_novel) == count of distinct shingles in the
     corpus (each distinct shingle is novel for exactly one doc)."""
     texts = ["a b c d e", "c d e f g", "f g h a b", "a b c d e f g h"]
-    df = curation.shingle_novelty(_docs(spark, texts), n=3)
+    df = curation.shingle_novelty(docs_df(spark, texts), n=3)
     total_novel = df.agg(F.sum("n_novel")).collect()[0][0]
     distinct = set()
     for t in texts:
@@ -103,7 +97,7 @@ def test_zipf_fit_recovers_planted_power_law(spark):
     # spread tokens over a few docs (split is per-doc, counts global)
     step = len(toks) // 7 + 1
     texts = [" ".join(toks[i:i + step]) for i in range(0, len(toks), step)]
-    row = textstats.zipf_fit(_docs(spark, texts), k=50).collect()[0]
+    row = textstats.zipf_fit(docs_df(spark, texts), k=50).collect()[0]
     assert row.n_terms == 50
     # exact replica: ranks are count-desc, token-asc
     counts = sorted(
@@ -125,7 +119,7 @@ def test_zipf_fit_recovers_planted_power_law(spark):
 def test_zipf_fit_degenerate_single_term(spark):
     """One distinct token: var(x) = 0 -> slope/intercept/r2 NULL, not
     NaN/zero-division."""
-    row = textstats.zipf_fit(_docs(spark, ["solo solo solo"]),
+    row = textstats.zipf_fit(docs_df(spark, ["solo solo solo"]),
                              k=10).collect()[0]
     assert row.n_terms == 1
     assert row.slope is None and row.intercept is None and row.r2 is None

@@ -7,22 +7,15 @@ import re
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from conftest import count_exchanges as _exchanges, plan_str as _plan
+from conftest import count_exchanges, events_df, plan_str
 from yahoo_anomaly_detection_spark.operators import (
     journeys,
     rollup,
     tsanalytics,
 )
-
-
-def _ev(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double",
-    )
 
 
 # ------------------------------------------------- grouped_rollup
@@ -38,7 +31,7 @@ def small_events(spark):
                                                     seconds=eid), 7,
                              typ, v))
                 eid += 1
-    return _ev(spark, rows)
+    return events_df(spark, rows)
 
 
 def test_grouped_rollup_matches_four_separate_aggs(spark, small_events):
@@ -73,9 +66,9 @@ def test_grouped_rollup_single_expand_single_shuffle(spark, small_events):
     """The cube must plan as ONE Expand feeding ONE exchange of
     partial aggregates — never four scans or four shuffles."""
     df = rollup.grouped_rollup(small_events)
-    plan = _plan(df)
+    plan = plan_str(df)
     assert len(re.findall(r"\bExpand\b", plan)) == 1, plan
-    assert _exchanges(df) == 1, plan
+    assert count_exchanges(df) == 1, plan
 
 
 # ------------------------------------------------- pot_tail
@@ -87,7 +80,7 @@ def test_pot_tail_matches_numpy_replica(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(seconds=i), i % 50, "k",
              float(v)) for i, v in enumerate(vals)]
-    [r] = tsanalytics.pot_tail(_ev(spark, rows), q=0.001,
+    [r] = tsanalytics.pot_tail(events_df(spark, rows), q=0.001,
                                u_q=0.95).collect()
     n = len(vals)
     t = np.quantile(vals, 0.95, method="linear")
@@ -115,7 +108,7 @@ def test_pot_tail_degenerate_series_yields_null_model(spark):
     rows += [(200 + i, t0 + dt.timedelta(seconds=i), 1, "tiny",
               float(i)) for i in range(1)]
     out = {r.event_type: r for r in
-           tsanalytics.pot_tail(_ev(spark, rows)).collect()}
+           tsanalytics.pot_tail(events_df(spark, rows)).collect()}
     for k in ("flat", "tiny"):
         r = out[k]
         assert r.xi is None and r.sigma is None and r.z_q is None
@@ -126,8 +119,8 @@ def test_pot_tail_broadcasts_model_never_shuffles_raw(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(seconds=i), i % 5, "k",
              float(i % 97)) for i in range(500)]
-    df = tsanalytics.pot_tail(_ev(spark, rows))
-    plan = _plan(df)
+    df = tsanalytics.pot_tail(events_df(spark, rows))
+    plan = plan_str(df)
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
     # every SortMergeJoin would mean a raw-relation shuffle
@@ -155,7 +148,7 @@ def test_markov_entropy_hand_cases(spark):
         rows.append((eid, t0 + dt.timedelta(seconds=eid), 3, "d", 1.0))
         eid += 1
     out = {r.from_type: r for r in
-           journeys.markov_entropy(_ev(spark, rows)).collect()}
+           journeys.markov_entropy(events_df(spark, rows)).collect()}
     assert out["d"].h_bits == 0.0  # deterministic chain
     # from c: a,b,a,b -> uniform over 2 = 1 bit
     assert out["c"].h_bits == 1.0
@@ -175,8 +168,8 @@ def test_markov_entropy_single_user_key_exchange(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(seconds=i), i % 7,
              "t%d" % (i % 3), 1.0) for i in range(300)]
-    df = journeys.markov_entropy(_ev(spark, rows))
-    plan = _plan(df)
+    df = journeys.markov_entropy(events_df(spark, rows))
+    plan = plan_str(df)
     # corpus-sized exchange: exactly one hashpartitioning(user_id)
     assert len(re.findall(
         r"Exchange hashpartitioning\(user_id", plan)) == 1, plan
@@ -195,7 +188,7 @@ def test_kmv_exact_when_sets_smaller_than_k(spark):
                          typ, 1.0))
             eid += 1
     from yahoo_anomaly_detection_spark.operators import sketches
-    [r] = sketches.kmv_overlap(_ev(spark, rows), k=64).collect()
+    [r] = sketches.kmv_overlap(events_df(spark, rows), k=64).collect()
     assert (r.est_a, r.est_b) == (30.0, 30.0)
     assert r.est_union == 50.0
     assert r.est_inter == 10.0
@@ -219,7 +212,7 @@ def test_kmv_estimate_accuracy_large_sets(spark):
                          typ, 1.0))
             eid += 1
     from yahoo_anomaly_detection_spark.operators import sketches
-    [r] = sketches.kmv_overlap(_ev(spark, rows), k=128).collect()
+    [r] = sketches.kmv_overlap(events_df(spark, rows), k=128).collect()
 
     def hs(uids):
         return sorted(
@@ -253,7 +246,7 @@ def test_kmv_sketch_partition_invariant(spark):
     rows = [(i, t0 + dt.timedelta(seconds=i), i * 7919 % 5000, "k",
              1.0) for i in range(3000)]
     from yahoo_anomaly_detection_spark.operators import sketches
-    ev = _ev(spark, rows)
+    ev = events_df(spark, rows)
     a = sorted((r.h, r.rk) for r in
                sketches.kmv_sketches(ev.repartition(2), k=32).collect())
     b = sorted((r.h, r.rk) for r in
@@ -280,7 +273,7 @@ def test_journey_surprise_deterministic_user_scores_zero(spark):
         rows.append((eid, t0 + dt.timedelta(seconds=eid), 4, typ, 1.0))
         eid += 1
     out = {r.user_id: r for r in
-           journeys.journey_surprise(_ev(spark, rows),
+           journeys.journey_surprise(events_df(spark, rows),
                                      min_trans=5).collect()}
     assert out[1].bits == out[2].bits == out[3].bits
     assert out[4].bits > out[1].bits
@@ -295,7 +288,7 @@ def test_journey_surprise_min_trans_filter(spark):
             for i in range(10)]
     rows += [(100, t0, 2, "a", 1.0), (101, t0 + dt.timedelta(1), 2,
                                       "b", 1.0)]
-    got = journeys.journey_surprise(_ev(spark, rows), min_trans=5)
+    got = journeys.journey_surprise(events_df(spark, rows), min_trans=5)
     assert [r.user_id for r in got.collect()] == [1]
 
 
@@ -319,7 +312,7 @@ def test_shesd_seasonal_peak_not_flagged_spike_flagged(spark):
                          1, "m", v))
             eid += 1
     out = {r.event_id: r for r in
-           tsanalytics.shesd_flags(_ev(spark, rows), k=3.0).collect()}
+           tsanalytics.shesd_flags(events_df(spark, rows), k=3.0).collect()}
     assert out[spike_eid].flag == 1
     # every seasonal-peak hour on OTHER days survives
     others = [r for i, r in out.items()
@@ -334,8 +327,8 @@ def test_shesd_single_exchange_all_rounds(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(hours=i), 1, "m",
              float(i % 24)) for i in range(200)]
-    df = tsanalytics.shesd_flags(_ev(spark, rows), rounds=3)
-    plan = _plan(df)
+    df = tsanalytics.shesd_flags(events_df(spark, rows), rounds=3)
+    plan = plan_str(df)
     corpus_ex = re.findall(
         r"Exchange hashpartitioning\(event_type[^)]*bucket_start",
         plan)
@@ -360,7 +353,7 @@ def test_did_impact_isolates_fleet_drift(spark):
                          typ, post))
             eid += 1
     out = {r.event_type: r for r in
-           tsanalytics.did_impact(_ev(spark, rows)).collect()}
+           tsanalytics.did_impact(events_df(spark, rows)).collect()}
     assert out["a"].pre_mean == 1.0 and out["a"].post_mean == 11.0
     # a: own delta +10, control (b) delta 0 -> did = +10
     assert out["a"].did == 10.0
@@ -377,7 +370,7 @@ def test_did_impact_isolates_fleet_drift(spark):
             rows2.append((eid, t0 + dt.timedelta(hours=100 + i), 7,
                           typ, 6.0))
             eid += 1
-    for r in tsanalytics.did_impact(_ev(spark, rows2)).collect():
+    for r in tsanalytics.did_impact(events_df(spark, rows2)).collect():
         assert r.did == 0.0
 
 
@@ -387,8 +380,8 @@ def test_did_impact_two_corpus_scans_only(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(hours=i % 50), 7, "t%d" % (i % 6),
              float(i % 9)) for i in range(600)]
-    df = tsanalytics.did_impact(_ev(spark, rows))
-    plan = _plan(df)
+    df = tsanalytics.did_impact(events_df(spark, rows))
+    plan = plan_str(df)
     assert plan.count("Scan ExistingRDD") == 2, plan
     assert "BroadcastExchange" in plan, plan
 
@@ -408,7 +401,7 @@ def test_dominant_period_finds_planted_cycle(spark):
                      math.sin(2 * math.pi * h / 6) + 2.0))
         eid += 1
     out = {r.event_type: r for r in
-           tsanalytics.dominant_period(_ev(spark, rows)).collect()}
+           tsanalytics.dominant_period(events_df(spark, rows)).collect()}
     assert out["daily"].best_lag == 24
     assert out["daily"].best_corr == pytest.approx(1.0, abs=1e-3)
     assert out["sixh"].best_lag == 6  # tie over {6,12,18,24} -> min
@@ -419,7 +412,7 @@ def test_dominant_period_constant_series_emits_no_row(spark):
     t0 = dt.datetime(2024, 6, 1)
     rows = [(i, t0 + dt.timedelta(hours=i), 7, "flat", 5.0)
             for i in range(48)]
-    assert tsanalytics.dominant_period(_ev(spark, rows)).count() == 0
+    assert tsanalytics.dominant_period(events_df(spark, rows)).count() == 0
 
 
 # ------------------------------------------------- compaction_plan
@@ -440,7 +433,7 @@ def test_compaction_plan_matches_python_replica(spark):
             eid += 1
     got = sorted(
         ((r.day.day, r.n_rows, r.bin_id, r.bin_rows, r.bin_files)
-         for r in lay.compaction_plan(_ev(spark, rows),
+         for r in lay.compaction_plan(events_df(spark, rows),
                                       target_rows=10).collect()))
     # replica
     cum, plan = 0, []
@@ -517,7 +510,7 @@ def test_weekend_effect_matches_scipy_style_replica(spark):
                          7, "flat", float(rng.normal(5.0, 1.0))))
             eid += 1
     out = {r.event_type: r for r in
-           tsanalytics.weekend_effect(_ev(spark, rows)).collect()}
+           tsanalytics.weekend_effect(events_df(spark, rows)).collect()}
     a, b = np.array(wd_vals), np.array(we_vals)
     v1, v2 = a.var(ddof=1), b.var(ddof=1)
     se2 = v1 / len(a) + v2 / len(b)
@@ -538,7 +531,7 @@ def test_weekend_effect_degenerate_null(spark):
     t0 = dt.datetime(2024, 6, 3)  # Monday
     rows = [(i, t0 + dt.timedelta(hours=i % 48), 7, "wd_only",
              float(i % 7)) for i in range(50)]  # Mon/Tue only
-    [r] = tsanalytics.weekend_effect(_ev(spark, rows)).collect()
+    [r] = tsanalytics.weekend_effect(events_df(spark, rows)).collect()
     assert r.n_we == 0
     assert r.t_stat is None and r.dof is None and r.significant is None
 
@@ -617,7 +610,7 @@ def test_change_attribution_pins_the_moving_segment(spark):
                          typ, post_v))
             eid += 1
     out = {r.event_type: r for r in
-           tsanalytics.change_attribution(_ev(spark, rows)).collect()}
+           tsanalytics.change_attribution(events_df(spark, rows)).collect()}
     assert out["mover"].ep == 1.0
     assert out["flat1"].ep == 0.0 and out["flat2"].ep == 0.0
     assert out["mover"].surprise > out["flat1"].surprise
@@ -650,7 +643,7 @@ def test_funnel_latency_first_touch_and_strict_order(spark):
         (8, t0 + dt.timedelta(seconds=200), 4, "view", 1.0),
         (9, t0 + dt.timedelta(seconds=300), 4, "purchase", 1.0),
     ]
-    [r] = sessions.funnel_latency(_ev(spark, rows)).collect()
+    [r] = sessions.funnel_latency(events_df(spark, rows)).collect()
     assert r.n_conversions == 2  # users 1 and 4
     # latencies: 100 (user 1), 300 (user 4)
     assert r.p50_s == pytest.approx(200.0)  # interpolated median
@@ -693,7 +686,7 @@ def test_fleet_beta_recovers_planted_betas(spark):
                          beta * f + alpha))
             eid += 1
     out = {r.event_type: r for r in
-           tsanalytics.fleet_beta(_ev(spark, rows)).collect()}
+           tsanalytics.fleet_beta(events_df(spark, rows)).collect()}
     # fleet mean x = mean over the 3 series = (2f+1 + .5f-3 + 4)/3
     # = (2.5 f + 2)/3, linear in f -> each series still linear in x
     # with slope beta_i / (2.5/3)
@@ -723,7 +716,7 @@ def test_normality_check_matches_scipy_formulas(spark):
             eid += 1
     rows.append((eid, t0, 7, "const", 1.0))
     out = {r.event_type: r for r in
-           tsanalytics.normality_check(_ev(spark, rows)).collect()}
+           tsanalytics.normality_check(events_df(spark, rows)).collect()}
 
     def replica(vals):
         v = np.asarray(vals)
@@ -759,7 +752,7 @@ def test_bitmap_rolling_equals_exact_windowed_distinct(spark):
                          u, "k", 1.0))
             eid += 1
     got = {r.day.day: r.n_users for r in
-           sketches.bitmap_rolling(_ev(spark, rows),
+           sketches.bitmap_rolling(events_df(spark, rows),
                                    window_days=3).collect()}
     # brute force trailing 3 calendar days
     def exact(day):
@@ -775,10 +768,6 @@ def test_bitmap_rolling_equals_exact_windowed_distinct(spark):
 
 
 # ----------------------------------------- property tests (pure py)
-from hypothesis import given, settings  # noqa: E402
-from hypothesis import strategies as st  # noqa: E402
-
-
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.integers(0, 10_000), min_size=1, max_size=300),
        st.integers(2, 32))
@@ -851,7 +840,7 @@ def test_backfill_plan_groups_contiguous_missing_days(spark):
     out = sorted(
         ((r.event_type, r.backfill_start.day, r.backfill_end.day,
           r.n_days)
-         for r in gapfill.backfill_plan(_ev(spark, rows),
+         for r in gapfill.backfill_plan(events_df(spark, rows),
                                         granularity="day").collect()))
     assert out == [("holey", 4, 5, 2), ("holey", 7, 7, 1)]
 
@@ -873,7 +862,7 @@ def test_quota_violations_sliding_window_semantics(spark):
         (5, t0 + dt.timedelta(seconds=120), 2, "t", 1.0),
     ]
     out = {r.user_id: r for r in
-           sessions.quota_violations(_ev(spark, rows),
+           sessions.quota_violations(events_df(spark, rows),
                                      quota=2).collect()}
     # event 3's frame = (1s, 61s] -> events 1, 2, 3 -> rpm 3
     assert out[1].n_violations == 2
@@ -902,7 +891,7 @@ def test_lateness_audit_two_phase_equals_global_prefix_max(spark):
         rows.append((1000 + i, t0 + dt.timedelta(seconds=i), 7,
                      "ordered", 1.0))
     out = {r.event_type: r for r in
-           tsanalytics.lateness_audit(_ev(spark, rows),
+           tsanalytics.lateness_audit(events_df(spark, rows),
                                       bucket_rows=32).collect()}
     pos = [x for x in lates if x > 0]
     r = out["jittery"]
@@ -936,7 +925,7 @@ def test_session_lift_hand_case(spark):
                              typ, 1.0))
                 eid += 1
     got = {(r.type_a, r.type_b): r for r in
-           sessions.session_lift(_ev(spark, rows),
+           sessions.session_lift(events_df(spark, rows),
                                  min_sessions=1).collect()}
     # 8 sessions; x,y in all 8; z in 4
     r = got[("x", "y")]
@@ -954,7 +943,7 @@ def test_session_lift_hand_case(spark):
                       1.0))
         eid += 1
     got2 = {(r.type_a, r.type_b): r for r in
-            sessions.session_lift(_ev(spark, rows2),
+            sessions.session_lift(events_df(spark, rows2),
                                   min_sessions=1).collect()}
     assert ("w", "z") not in got2          # never co-occur
     rw = got2[("w", "x")]
@@ -986,7 +975,7 @@ def test_touch_attribution_linear_vs_last_touch(spark):
                                       "view", 1.0),
     ]
     out = {r.event_type: r for r in
-           sessions.touch_attribution(_ev(spark, rows)).collect()}
+           sessions.touch_attribution(events_df(spark, rows)).collect()}
     # user 1: {view, click} -> 0.5 each, last = click
     # user 2: {click} -> 1.0, last = click
     assert out["view"].linear_credit == pytest.approx(0.5)
@@ -1047,7 +1036,7 @@ def test_anomalous_days_finds_broken_day_profile(spark):
                          1, "m", v))
             eid += 1
     out = {r.day.day: r for r in
-           tsanalytics.anomalous_days(_ev(spark, rows)).collect()}
+           tsanalytics.anomalous_days(events_df(spark, rows)).collect()}
     flagged = {d for d, r in out.items() if r.flag == 1}
     # day index 10 -> June 13 (a Thursday). The broken day must flag
     # with the TOP score; its weekday SIBLINGS may co-flag (their
@@ -1079,7 +1068,7 @@ def test_capacity_forecast_eta_math(spark):
                          "drop", 200.0 - day))
             eid += 1
     out = {r.event_type: r for r in
-           tsanalytics.capacity_forecast(_ev(spark, rows),
+           tsanalytics.capacity_forecast(events_df(spark, rows),
                                          threshold=100.0,
                                          horizon_days=30.0).collect()}
     g = out["grow"]
@@ -1093,7 +1082,7 @@ def test_capacity_forecast_eta_math(spark):
     assert out["drop"].eta_days is None and out["drop"].urgent == 0
     # tighter horizon flips urgency
     out2 = {r.event_type: r for r in
-            tsanalytics.capacity_forecast(_ev(spark, rows),
+            tsanalytics.capacity_forecast(events_df(spark, rows),
                                           threshold=75.0,
                                           horizon_days=30.0).collect()}
     assert out2["grow"].urgent == 1  # ~6 days to 75

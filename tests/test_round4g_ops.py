@@ -1,6 +1,6 @@
-"""Statistical-testing and robust-QC operators (operators/statstests.py)
-against numpy/python replicas, property tests of the identities they
-rely on, and the profile job that runs them."""
+"""Round-4g operators: statistical-testing & robust-QC layer
+(Mann-Kendall, Spearman, BH-FDR, W1 drift, OU half-life, Hurst,
+permutation entropy, max drawdown, winsorized rollup, Gini)."""
 
 import datetime as dt
 import math
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from conftest import count_exchanges, events_df, plan_str
 from yahoo_anomaly_detection_spark.operators import statstests
+
 
 pytestmark = pytest.mark.usefixtures("release_caches")
 
@@ -501,6 +502,131 @@ def test_corr_clusters_groups_comoving_series(spark):
     assert out["mem"] == out["swap"] == "mem"
     assert out["iso"] == "iso"
     assert len(out) == 5
+
+
+# ------------------------------------------------------------ bloom join
+def test_bloom_no_false_negatives_and_prunes(spark):
+    from yahoo_anomaly_detection_spark.operators import enrich
+
+    keys = spark.range(0, 1000).select(
+        (F.col("id") * 7).alias("k"))          # members: multiples of 7
+    bloom = enrich.bloom_runtime_filter(keys, "k", 1 << 16, 5)
+    probe = spark.range(0, 20000).select(F.col("id").alias("k"))
+    kept = enrich.bloom_semi_join(probe, "k", bloom, 1 << 16, 5) \
+        .collect()
+    kept_ids = {r.k for r in kept}
+    members = {i * 7 for i in range(1000) if i * 7 < 20000}
+    assert members <= kept_ids                 # no false negatives
+    fp = len(kept_ids - members) / (20000 - len(members))
+    assert fp < 0.01                            # sized for ~1e-3
+    assert len(kept_ids) < 5000                 # pruning is real
+
+
+def test_bloom_mixed_int_width_keys_no_false_negatives(spark):
+    """xxhash64 is type-sensitive: an INT build key probed with a
+    BIGINT fact key hashes to different positions unless both sides
+    canonicalize to BIGINT — matching rows would silently vanish.
+    Build from INT keys, probe with BIGINT keys; every member must
+    survive."""
+    from yahoo_anomaly_detection_spark.operators import enrich
+
+    keys = spark.range(0, 500).select(
+        (F.col("id") * 3).cast("int").alias("k"))
+    bloom = enrich.bloom_runtime_filter(keys, "k", 1 << 16, 5)
+    probe = spark.range(0, 3000).select(F.col("id").alias("k"))  # bigint
+    kept_ids = {r.k for r in
+                enrich.bloom_semi_join(probe, "k", bloom, 1 << 16, 5)
+                .collect()}
+    members = {i * 3 for i in range(500) if i * 3 < 3000}
+    assert members <= kept_ids
+
+
+def test_bloom_zero_scale_decimal_keys_no_false_negatives(spark):
+    """Zero-scale decimal keys against integer keys, both ways: every
+    member must survive. DECIMAL(10,0) vs INT pins the explicit BIGINT
+    widening; DECIMAL(20,0) hashes by its bytes under xxhash64, so
+    against BIGINT it needs the try_cast narrowing."""
+    from yahoo_anomaly_detection_spark.operators import enrich
+
+    def keys(typ, n, step):
+        return spark.range(0, n).select(
+            (F.col("id") * step).cast(typ).alias("k"))
+
+    members = {i * 3 for i in range(500) if i * 3 < 3000}
+    for build, probe in (("int", "decimal(10,0)"), ("decimal(10,0)", "int"),
+                         ("bigint", "decimal(20,0)"),
+                         ("decimal(20,0)", "bigint")):
+        bloom = enrich.bloom_runtime_filter(keys(build, 500, 3), "k",
+                                            1 << 16, 5)
+        kept_ids = {int(r.k) for r in enrich.bloom_semi_join(
+            keys(probe, 3000, 1), "k", bloom, 1 << 16, 5).collect()}
+        assert members <= kept_ids, (build, probe)
+
+
+def test_bloom_semi_join_rejects_reserved_column(spark):
+    from yahoo_anomaly_detection_spark.operators import enrich
+    import pytest
+
+    keys = spark.range(0, 10).select(F.col("id").alias("k"))
+    bloom = enrich.bloom_runtime_filter(keys, "k", 1 << 10, 3)
+    bad = spark.range(0, 10).select(
+        F.col("id").alias("k"), F.lit(1).alias("__bloom_bits"))
+    with pytest.raises(ValueError, match="__bloom_bits"):
+        enrich.bloom_semi_join(bad, "k", bloom, 1 << 10, 3)
+    # a fact column literally named "bloom" is fine now
+    ok = spark.range(0, 10).select(
+        F.col("id").alias("k"), F.lit(1).alias("bloom"))
+    got = enrich.bloom_semi_join(ok, "k", bloom, 1 << 10, 3)
+    assert got.count() == 10 and "bloom" in got.columns
+
+
+def test_bloom_join_equals_plain_join(spark):
+    t0 = dt.datetime(2024, 3, 1)
+    orders = spark.createDataFrame(
+        [(i, t0 + dt.timedelta(days=i % 90),
+          "1-URGENT" if i % 5 == 0 else "5-LOW")
+         for i in range(500)],
+        "o_orderkey long, o_orderdate timestamp, o_orderpriority string")
+    lineitem = spark.createDataFrame(
+        [(i % 500, float(1 + i % 7)) for i in range(3000)],
+        "l_orderkey long, l_quantity double")
+    from yahoo_anomaly_detection_spark.operators import enrich
+
+    got = {(str(r.month), r.n_items, r.sum_qty, r.n_orders)
+           for r in enrich.urgent_order_items(lineitem, orders)
+           .collect()}
+    plain = (lineitem.join(
+        orders.where(F.col("o_orderpriority") == "1-URGENT"),
+        lineitem.l_orderkey == orders.o_orderkey)
+        .groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
+        .agg(F.count(F.lit(1)).alias("n_items"),
+             F.sum("l_quantity").cast("long").alias("sum_qty"),
+             F.countDistinct("o_orderkey").alias("n_orders")))
+    exp = {(str(r.month), r.n_items, r.sum_qty, r.n_orders)
+           for r in plain.collect()}
+    assert got == exp and len(got) == 3
+
+
+def test_bloom_prune_runs_before_fact_exchange(spark):
+    """The bloom filter must apply map-side: the plan shows the
+    single-row bloom arriving via a broadcast nested-loop join with
+    the bit-test filter ABOVE it, and only the survivors reach the
+    equi-join exchange."""
+    from yahoo_anomaly_detection_spark.operators import enrich
+
+    orders = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1), "1-URGENT")],
+        "o_orderkey long, o_orderdate timestamp, o_orderpriority string")
+    lineitem = spark.createDataFrame(
+        [(1, 2.0)], "l_orderkey long, l_quantity double")
+    plan = plan_str(enrich.urgent_order_items(lineitem, orders))
+    # the bit test is the BNLJ condition itself
+    bnlj = plan.index("BroadcastNestedLoopJoin")
+    assert "element_at(__bloom_bits" in plan[bnlj:], plan
+    # plan prints parents first: the fact-side equi-join exchange
+    # must be ABOVE (execute after) the bloom BNLJ prune
+    ex = re.search(r"Exchange hashpartitioning\(l_orderkey", plan)
+    assert ex is not None and ex.start() < bnlj, plan
 
 
 def test_bh_fdr_rank_is_distributed(spark):
@@ -1016,6 +1142,206 @@ def test_spread_monitor_degenerate_pairs_null(spark):
                                 "live": list(range(10))}))).collect()}
     r = out[("const", "live")]
     assert r.beta is None and r.stable == 0
+
+
+# ------------------------------------------------------ coreset_kcenter
+def _kcenter_replica(vecs, k):
+    import numpy as _np
+
+    ids = sorted(vecs)
+    sel = [min(ids)]
+    radii = [None]
+    unit = {i: _np.asarray(v) / _np.linalg.norm(v)
+            for i, v in vecs.items()}
+    nrm = {i: float(_np.linalg.norm(v)) for i, v in vecs.items()}
+    raw = {i: _np.asarray(v, float) for i, v in vecs.items()}
+    while len(sel) < k and len(sel) < len(ids):
+        best = None
+        for i in ids:
+            if i in sel:
+                continue
+            dm = min(1 - float(raw[i] @ raw[c]) / (nrm[i] * nrm[c])
+                     for c in sel)
+            d4 = math.floor((dm + 1e-9) * 1e4 + 0.5)
+            cand = (d4, -i)
+            if best is None or cand > best:
+                best = cand
+        sel.append(-best[1])
+        radii.append(best[0] / 1e4)
+    return sel, radii
+
+
+def test_coreset_kcenter_matches_greedy_replica(spark):
+    rng = np.random.RandomState(91)
+    # three tight clusters + outliers: k=4 must cover all clusters
+    # before refining any of them (the k-center property)
+    centers = [rng.randn(8) * 0.1 + off
+               for off in ([5, 0, 0, 0, 0, 0, 0, 0],
+                           [0, 5, 0, 0, 0, 0, 0, 0],
+                           [0, 0, 5, 0, 0, 0, 0, 0])]
+    vecs = {}
+    vid = 0
+    for c in centers:
+        for _ in range(6):
+            vecs[vid] = (c + rng.randn(8) * 0.05).tolist()
+            vid += 1
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
+        "vec_id long, embedding array<float>, label int")
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    got = {r.sel_rank: (r.vec_id, r.radius)
+           for r in similarity.coreset_kcenter(df, k=4).collect()}
+    # float32 storage: replica must quantize identically
+    f32 = {i: np.asarray(v, np.float32).astype(float).tolist()
+           for i, v in vecs.items()}
+    sel, radii = _kcenter_replica(f32, 4)
+    assert [got[r][0] for r in range(4)] == sel
+    for r in range(1, 4):
+        assert got[r][1] == pytest.approx(radii[r], abs=2e-4)
+    # coverage: the first three picks hit three DIFFERENT clusters
+    first3_clusters = {got[r][0] // 6 for r in range(3)}
+    assert len(first3_clusters) == 3
+    # radius sequence is non-increasing (greedy max-min property)
+    assert got[1][1] >= got[2][1] >= got[3][1]
+
+
+def test_coreset_kcenter_batch1_is_exact_greedy(spark):
+    """batch=1 must be byte-identical to the default greedy — the
+    oversampled route is a pure superset of the classic loop."""
+    rng = np.random.RandomState(93)
+    vecs = {i: (rng.randn(8) * 2).tolist() for i in range(20)}
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
+        "vec_id long, embedding array<float>, label int")
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    a = sorted(map(tuple, similarity.coreset_kcenter(
+        df, k=5).collect()))
+    b = sorted(map(tuple, similarity.coreset_kcenter(
+        df, k=5, batch=1).collect()))
+    assert a == b
+
+
+def test_coreset_kcenter_batched_matches_replica(spark):
+    """batch=b semantics: each round takes the top-b of the SAME
+    integer encoding vs the pre-round set; radii are min-distances
+    to the pre-round centers. Verified against a numpy replica of
+    exactly that rule."""
+    rng = np.random.RandomState(97)
+    vecs = {i: (rng.randn(6) * 2).tolist() for i in range(24)}
+    f32 = {i: np.asarray(v, np.float32).astype(float)
+           for i, v in vecs.items()}
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
+        "vec_id long, embedding array<float>, label int")
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    k, b = 7, 3
+    got = {r.sel_rank: (r.vec_id, r.radius)
+           for r in similarity.coreset_kcenter(
+               df, k=k, batch=b).collect()}
+
+    # replica: rounds of top-b by (round(d4), -id) vs pre-round set
+    ids = sorted(f32)
+    sel = [min(ids)]
+    radii = {0: None}
+    while len(sel) < k:
+        encs = []
+        for i in ids:
+            if i in sel:
+                continue
+            dmin = min(
+                1.0 - float(np.dot(f32[i], f32[c]))
+                / (np.linalg.norm(f32[i]) * np.linalg.norm(f32[c]))
+                for c in sel)
+            d4 = math.floor((dmin + 1e-9) * 1e4 + 0.5)
+            encs.append((d4, -i))
+        encs.sort(reverse=True)
+        for d4, neg in encs[:min(b, k - len(sel))]:
+            radii[len(sel)] = d4 / 1e4
+            sel.append(-neg)
+    assert [got[r][0] for r in range(k)] == sel
+    for r in range(1, k):
+        assert got[r][1] == pytest.approx(radii[r], abs=2e-4)
+
+
+def test_coreset_kcenter_k_exceeds_corpus(spark):
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)],
+        "vec_id long, embedding array<float>, label int")
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    rows = similarity.coreset_kcenter(df, k=5).collect()
+    assert len(rows) == 2
+
+
+# --------------------------------------------------------- mmr_rerank
+def test_mmr_rerank_balances_relevance_and_diversity(spark):
+    rng = np.random.RandomState(97)
+    # query q; near-duplicate pair very relevant; one relevant-but-
+    # distinct doc; several irrelevant docs
+    q = np.array([1.0, 0, 0, 0])
+    rows = {
+        0: q,                                   # the query itself
+        1: np.array([0.99, 0.1, 0, 0]),         # top relevant
+        2: np.array([0.99, 0.1, 0, 0]),         # its EXACT duplicate
+        3: np.array([0.6, 0, 0.8, 0]),          # relevant + distinct
+        4: np.array([0, 1.0, 0, 0]),            # irrelevant
+        5: np.array([0, 0, 0, 1.0]),            # irrelevant
+    }
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in rows.items()],
+        "vec_id long, embedding array<float>, label int")
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    # lam=0.5: the duplicate's redundancy term (sim=1) sinks it
+    # below the distinct doc despite near-max relevance
+    picks = [r.vec_id for r in sorted(
+        similarity.mmr_rerank(df, query_id=0, k=3, lam=0.5)
+        .collect(), key=lambda r: r.sel_rank)]
+    # rank 0 = most relevant (1); rank 1 must SKIP the duplicate
+    # (2) in favor of the distinct doc (3); rank 2 shows the full
+    # pecking order: even an irrelevant-but-novel doc (5: rel 0,
+    # redundancy 0, score 0) outranks the duplicate (score < 0)
+    assert picks == [1, 3, 5]
+
+
+def test_mmr_rerank_missing_query_id_raises(spark):
+    """A query_id with no row must raise a clear ValueError instead
+    of an unpacking error (the SQL oracle degrades to empty — the
+    Spark API should fail loudly, not cryptically)."""
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="query_id"):
+        similarity.mmr_rerank(df, query_id=99, k=2)
+
+
+def test_mmr_rerank_lambda_one_is_pure_relevance(spark):
+    rng = np.random.RandomState(101)
+    vecs = {i: rng.randn(8) for i in range(12)}
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in vecs.items()],
+        "vec_id long, embedding array<float>, label int")
+    from yahoo_anomaly_detection_spark.operators import similarity
+
+    got = [r.vec_id for r in sorted(
+        similarity.mmr_rerank(df, query_id=0, k=4, lam=1.0)
+        .collect(), key=lambda r: r.sel_rank)]
+    # replica: cosine to query desc, rounded, ties by id (float32!)
+    q = np.asarray(vecs[0], np.float32).astype(float)
+    scored = []
+    for i, v in vecs.items():
+        if i == 0:
+            continue
+        v = np.asarray(v, np.float32).astype(float)
+        c = float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
+        scored.append((-math.floor((c + 2 + 1e-9) * 1e4 + 0.5), i))
+    want = [i for _, i in sorted(scored)[:4]]
+    assert got == want
 
 
 # ----------------------------------------------------------- granger_1d

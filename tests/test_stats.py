@@ -3,9 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from yahoo_anomaly_detection_spark.operators import stats
 from yahoo_anomaly_detection_spark.operators.stats import (
     best_threshold,
     confusion_metrics,
@@ -197,19 +195,3 @@ def test_ewma_partition_count_from_plan_stats_no_job(spark, tmp_path):
                           plan).group(1))
     assert parts == max(spark.sparkContext.defaultParallelism,
                         -(-scan.count() // stats.EWMA_MAX_ROWS_PER_PARTITION))
-
-
-def test_ewma_partition_bound(spark):
-    df = spark.createDataFrame(
-        [(f"c{i % 7}", i, float(i)) for i in range(500)],
-        "conv_id string, bucket_start int, v double",
-    )
-    # explicit n_rows avoids the count job and pins the partition math
-    out = stats.ewma(df, "v", alpha=0.5, n_rows=500)
-    pdf = out.toPandas().sort_values(["conv_id", "bucket_start"])
-    for conv, g in pdf.groupby("conv_id"):
-        expected = g["v"].ewm(alpha=0.5, adjust=False).mean().to_numpy()
-        np.testing.assert_allclose(g["ewma"].to_numpy(), expected, rtol=1e-12)
-    # partition count scales with data, floored at parallelism
-    par = spark.sparkContext.defaultParallelism
-    assert max(par, -(-500 // stats.EWMA_MAX_ROWS_PER_PARTITION)) == par

@@ -1553,19 +1553,3 @@ def test_stream_drift_drops_backwards_days(spark, tmp_path):
 
     caching.release_all()
     assert got == want
-
-
-def test_streaming_rollup_requires_utc(spark):
-    """F.window() buckets are epoch/UTC-aligned while batch date_trunc
-    follows the session zone — a non-UTC session must fail loudly
-    instead of silently shifting streamed 1h/1d buckets."""
-    from yahoo_anomaly_detection_spark.streaming import hop
-
-    df = spark.range(1)
-    hop.require_utc(df)  # session is UTC: passes
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
-    try:
-        with pytest.raises(ValueError, match="timeZone"):
-            hop.require_utc(df)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -15,8 +15,6 @@ import __spark_entry__ as entry
 from conftest import count_exchanges, events_df, plan_str
 from yahoo_anomaly_detection_spark.operators import tsanalytics as tsa
 
-pytestmark = pytest.mark.usefixtures("release_caches")
-
 
 def _ts(sec: float):
     return F.timestamp_seconds(F.lit(1700000000) + F.lit(float(sec)))
@@ -1681,678 +1679,7 @@ def test_ewma_chart_matches_python_replay(spark):
         tsa.ewma_chart(_tier(spark, rows), "mean_v", alpha=0.0)
 
 
-# ------------------------------------------------- SAX
-def _sax_events(spark, vals):
-    base = 1699999200  # hour-aligned (22:00 UTC)
-    rows = [("c1", i, base + i * 450, v) for i, v in enumerate(vals)]
-    return spark.createDataFrame(
-        rows, "conv_id string, event_id long, epoch long, value double"
-    ).select("conv_id", "event_id",
-             F.timestamp_seconds("epoch").alias("ts"), "value")
-
-
-def test_sax_constant_series_is_all_c(spark):
-    out = tsa.sax_words(
-        _sax_events(spark, [5.0] * 8), n_frames=4, alphabet=4).collect()
-    assert len(out) == 1
-    r = out[0]
-    # sd = 0 -> z = 0 for every frame -> symbol 'c'; 8 points at 450 s
-    # spacing fill all 4 frames of one hour
-    assert r.word == "cccc" and r.n_frames == 4 and r.n == 8
-
-
-def test_sax_shape_word(spark):
-    # frame means 0,0,10,10 over one hour: mu=5, sd=5 -> z=-1,+1
-    # -> word 'aadd'
-    out = tsa.sax_words(
-        _sax_events(spark, [0.0, 0.0, 0.0, 0.0, 10.0, 10.0, 10.0, 10.0]),
-        n_frames=4, alphabet=4).collect()
-    assert out[0].word == "aadd"
-
-
-def test_sax_alphabet_and_frames_guards(spark):
-    ev = _sax_events(spark, [1.0])
-    with pytest.raises(ValueError, match="alphabet"):
-        tsa.sax_words(ev, alphabet=9)
-    with pytest.raises(ValueError, match="n_frames"):
-        tsa.sax_words(ev, n_frames=7)
-
-
-def test_sax_plan_broadcast_stats_three_exchanges(spark):
-    ev = _sax_events(spark, [float(i % 11) for i in range(64)])
-    out = tsa.sax_words(ev)
-    plan = plan_str(out)
-    assert "BroadcastExchange" in plan  # per-series stats
-    # frame agg + stats agg + word agg; never a window over raw points
-    assert count_exchanges(out) == 3, plan
-    assert "Window" not in plan
-
-
-def test_sax_motifs_counts_and_series(spark):
-    rows = []
-    base = 1699999200
-    shapes = {0: [0.0] * 4 + [10.0] * 4,
-              1: [0.0] * 4 + [10.0] * 4,
-              2: [10.0] * 4 + [0.0] * 4}
-    eid = 0
-    for conv in ("c1", "c2"):
-        for h, vals in shapes.items():
-            for i, v in enumerate(vals):
-                rows.append((conv, eid, base + h * 3600 + i * 450, v))
-                eid += 1
-    ev = spark.createDataFrame(
-        rows, "conv_id string, event_id long, epoch long, value double"
-    ).select("conv_id", "event_id",
-             F.timestamp_seconds("epoch").alias("ts"), "value")
-    out = tsa.sax_motifs(ev, k=5, n_frames=2).collect()
-    by_word = {r.word: r for r in out}
-    # "ad" twice per series x 2 series; "da" once per series
-    assert by_word["ad"].n_occurrences == 4
-    assert by_word["ad"].n_series == 2 and by_word["ad"].rank == 1
-    assert by_word["da"].n_occurrences == 2 and by_word["da"].n_series == 2
-
-
-# ------------------------------------------------- sigma clipping
-def _sigma_events(spark, vals):
-    # 60 s spacing keeps every point inside ONE day bucket (the SAX
-    # helper's 450 s spacing crosses midnight after 16 points)
-    base = 1699999200
-    rows = [("c1", i, base + i * 60, v) for i, v in enumerate(vals)]
-    return spark.createDataFrame(
-        rows, "conv_id string, event_id long, epoch long, value double"
-    ).select("conv_id", "event_id",
-             F.timestamp_seconds("epoch").alias("ts"), "value")
-
-
-def test_sigma_clip_unmasks_second_outlier(spark):
-    import numpy as np
-
-    vals = [10.0] * 20 + [1000.0, 25.0]
-    ev = _sigma_events(spark, vals)
-    out = {r.event_id: r for r in
-           tsa.sigma_clip(ev, k=3.0, rounds=2).collect()}
-    # independent numpy replay of the two rounds
-    a = np.array(vals)
-    z1 = np.abs(a - a.mean()) / a.std()
-    assert z1[20] > 3.0 and z1[21] <= 3.0  # 1000 masks 25 in round 1
-    surv = a[z1 <= 3.0]
-    z2 = np.abs(25.0 - surv.mean()) / surv.std()
-    assert z2 > 3.0  # unmasked in round 2
-    assert out[20].clipped_round == 1
-    assert out[21].clipped_round == 2
-    assert all(out[i].clipped_round == 0 and out[i].flag == 0
-               for i in range(20))
-    assert out[21].flag == 1
-
-
-def test_sigma_clip_constant_group_never_flags(spark):
-    ev = _sigma_events(spark, [7.0] * 6)
-    out = tsa.sigma_clip(ev, k=3.0, rounds=2).collect()
-    assert all(r.clipped_round == 0 and r.z_last is None for r in out)
-
-
-def test_sigma_clip_rounds_guard_and_single_exchange(spark):
-    ev = _sigma_events(spark, [float(i) for i in range(12)])
-    with pytest.raises(ValueError, match="rounds"):
-        tsa.sigma_clip(ev, rounds=0)
-    out = tsa.sigma_clip(ev, k=3.0, rounds=3)
-    # all rounds chain onto ONE (key, bucket) hash exchange
-    assert count_exchanges(out) == 1, plan_str(out)
-
-
-# ------------------------------------------------- lead-lag sweep
-def _leadlag_events(spark):
-    # metric "b" is metric "a" delayed by exactly 2 grid hours
-    base = 1699999200
-    a_vals = [0.0, 1.0, 2.0, 3.0, 1.0, 5.0, 0.0, 2.0, 4.0, 3.0]
-    rows = []
-    for h, v in enumerate(a_vals):
-        rows.append((1000 + h, base + h * 3600 + 60, "a", v))
-        rows.append((2000 + h, base + (h + 2) * 3600 + 120, "b", v))
-    return spark.createDataFrame(
-        rows, "event_id long, epoch long, event_type string, value double"
-    ).select("event_id", F.timestamp_seconds("epoch").alias("ts"),
-             "event_type", "value")
-
-
-def test_leadlag_finds_planted_shift(spark):
-    out = tsa.leadlag_corr(
-        _leadlag_events(spark), ("a", "b"), max_lag=3).collect()
-    rows = {r.lag: r for r in out}
-    assert len(rows) == 7
-    best = [r for r in out if r.best == 1]
-    assert len(best) == 1 and best[0].lag == 2
-    assert rows[2].r == 1.0 and rows[2].n_pts == 10
-    # metric_a always leads in the planted data
-    assert rows[2].metric_a == "a" and rows[2].metric_b == "b"
-
-
-def test_leadlag_guards(spark):
-    ev = _leadlag_events(spark)
-    with pytest.raises(ValueError, match="metrics"):
-        tsa.leadlag_corr(ev, ("a",))
-    with pytest.raises(ValueError, match="max_lag"):
-        tsa.leadlag_corr(ev, ("a", "b"), max_lag=0)
-
-
-def test_leadlag_grid_join_is_broadcast_no_cartesian(spark):
-    out = tsa.leadlag_corr(
-        _leadlag_events(spark), ("a", "b"), max_lag=2)
-    plan = plan_str(out)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan  # shifted-grid self-join
-    # both lag-join sides read the CACHED grid (raw events cross the
-    # grid aggregate once, at cache-fill time) — InMemoryTableScan's
-    # printed subtree repeats the build plan's exchange, so the raw
-    # count includes phantom cached exchanges; the live ones are the
-    # lag groupBy + the best-rank window over the reduced relation
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    assert count_exchanges(out) <= 6, plan
-
-
-# ------------------------------------------------- season strength
-@pytest.fixture(scope="module")
-def stl_series(spark):
-    """Three planted series on a 4-hour minute grid: a pure linear
-    trend, a pure minute-of-hour pattern, and a constant."""
-    return spark.range(240).select(
-        F.expr("timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,cast(id as int),0)")
-        .alias("bucket_start"),
-        F.col("id"),
-    ).selectExpr(
-        "stack(3, "
-        " 'trend',  cast(id as double), bucket_start,"
-        " 'season', cast(case when id % 60 < 30 then 10 else -10 end as double), bucket_start,"
-        " 'flat',   cast(5.0 as double), bucket_start"
-        ") as (conv_id, mean_v, bucket_start)"
-    )
-
-
-def test_season_strength_planted_components(spark, stl_series):
-    rows = {r.conv_id: r for r in tsa.season_strength(
-        stl_series, "mean_v").collect()}
-    # linear series: centered rolling mean tracks it exactly except
-    # frame edges -> trend explains nearly everything
-    assert rows["trend"].trend_strength > 0.95
-    # minute-of-hour square wave: phase means capture it
-    assert rows["season"].seasonal_strength > 0.8
-    assert rows["season"].seasonal_strength > rows["trend"].seasonal_strength
-    # constant series: zero variance everywhere -> NULL, never 0/0
-    assert rows["flat"].trend_strength is None
-    assert rows["flat"].seasonal_strength is None
-    assert all(r.n_points == 240 for r in rows.values())
-
-
-def test_season_strength_single_exchange(spark, stl_series):
-    out = tsa.season_strength(stl_series, "mean_v")
-    # decomposition windows + strength rollup all ride ONE conv_id
-    # hash exchange (the stack source is a local relation)
-    assert count_exchanges(out) == 1
-
-
-# ------------------------------------------------- exact KS drift
-def _ks_numpy(a, b):
-    """sup_x |F_a(x) - F_b(x)| evaluated at every pooled sample."""
-    a, b = np.sort(np.asarray(a, float)), np.sort(np.asarray(b, float))
-    pts = np.concatenate([a, b])
-    fa = np.searchsorted(a, pts, side="right") / len(a)
-    fb = np.searchsorted(b, pts, side="right") / len(b)
-    return float(np.abs(fa - fb).max())
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        [(t, ts, float(v)) for t, ts, v in rows],
-        "event_type string, ts timestamp, value double")
-
-
-def test_ks_drift_planted_identical_and_disjoint(spark):
-    import datetime as dt
-    rows = []
-    for d, base in ((1, 0), (2, 0), (3, 100)):  # day2 == day1, day3 shifted
-        for i in range(10):
-            rows.append(("a", dt.datetime(2024, 1, d, 12, 0, i), base + i))
-    out = {r.bucket_start.day: r for r in
-           tsa.ks_drift(_mk_events(spark, rows)).collect()}
-    assert set(out) == {2, 3}  # first day has no predecessor
-    assert out[2].ks == 0.0          # identical distributions
-    assert out[3].ks == 1.0          # disjoint supports
-    assert out[2].n_cur == out[2].n_ref == 10
-    assert out[3].prev_bucket.day == 2
-
-
-def test_ks_drift_matches_numpy_replica(spark):
-    import datetime as dt
-    import random
-    rng = random.Random(7)
-    rows, by_day = [], {1: [], 2: [], 3: []}
-    for d in by_day:
-        for i in range(rng.randrange(8, 40)):
-            v = round(rng.gauss(d * 2.0, 1.0 + d), 3)
-            by_day[d].append(v)
-            rows.append(("m", dt.datetime(2024, 2, d, 3, 0, 0)
-                         + dt.timedelta(seconds=i), v))
-    out = {r.bucket_start.day: r.ks for r in
-           tsa.ks_drift(_mk_events(spark, rows)).collect()}
-    for d in (2, 3):
-        exp = round(_ks_numpy(by_day[d], by_day[d - 1]) + 1e-9, 4)
-        assert abs(out[d] - exp) < 1e-9, (d, out[d], exp)
-
-
-def test_ks_drift_plan_broadcasts_pairs(spark):
-    import datetime as dt
-    rows = [("a", dt.datetime(2024, 1, 1 + d, 0, 0, i), float(i))
-            for d in range(3) for i in range(5)]
-    out = tsa.ks_drift(_mk_events(spark, rows))
-    p = plan_str(out)
-    assert "BroadcastHashJoin" in p       # pair relation never shuffles pts
-    assert "SortMergeJoin" not in p
-    # exchanges: days distinct + lag window (both day-relation-sized)
-    # + the single corpus (key, pair-day) exchange
-    assert count_exchanges(out) <= 3
-
-
-# ------------------------------------------------- per-sample rate
-def _mk_counter(spark, rows):
-    return spark.createDataFrame(
-        [(c, i, ts, None if v is None else float(v))
-         for c, i, ts, v in rows],
-        "conv_id string, event_id long, ts timestamp, value double")
-
-
-def test_rate_range_resets_and_window_bounds(spark):
-    import datetime as dt
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    s = dt.timedelta(seconds=1)
-    rows = [
-        ("a", 0, t0, 10.0),            # first sample: no baseline
-        ("a", 1, t0 + 100 * s, 15.0),  # +5
-        ("a", 2, t0 + 200 * s, 3.0),   # reset -> +3
-        ("a", 3, t0 + 500 * s, 4.0),   # +1; samples 0,1 out of 5m window
-    ]
-    out = {r.event_id: r for r in tsa.rate_range(
-        _mk_counter(spark, rows), window_seconds=300,
-        order_cols=("event_id",)).collect()}
-    assert out[0].increase_w is None and out[0].rate_per_s is None
-    assert out[1].increase_w == 5.0
-    assert out[2].increase_w == 8.0          # 5 + 3 within (t-300, t]
-    # at event 3 (t=500): events at 200 (inc 3) and 500 (inc 1) are in
-    # (200, 500]; event 1 at t=100 is out; event 2 at exactly t-300=200
-    # is EXCLUDED (half-open)
-    assert out[3].increase_w == 1.0
-    assert out[3].rate_per_s == round(1.0 / 300 + 1e-9, 4)
-
-
-def test_rate_range_half_open_boundary_exact(spark):
-    import datetime as dt
-    t0 = dt.datetime(2024, 3, 1)
-    rows = [("b", 0, t0, 0.0),
-            ("b", 1, t0 + dt.timedelta(seconds=300), 7.0)]
-    out = {r.event_id: r for r in tsa.rate_range(
-        _mk_counter(spark, rows), window_seconds=300,
-        order_cols=("event_id",)).collect()}
-    # inc at event 1 is 7; its own sample is in the window, the
-    # boundary sample at exactly t-300 contributes no inc anyway
-    # (first sample, NULL) -> increase 7
-    assert out[1].increase_w == 7.0
-
-
-def test_rate_range_single_exchange(spark):
-    import datetime as dt
-    rows = [("a", i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=i),
-             float(i)) for i in range(10)]
-    out = tsa.rate_range(_mk_counter(spark, rows),
-                                 window_seconds=60,
-                                 order_cols=("event_id",))
-    assert count_exchanges(out) == 1
-    assert out.where(F.col("rate_per_s").isNotNull()).count() == 9
-
-
-# ------------------------------------------------- SAX discords
-def test_sax_discords_planted_unique_shape(spark):
-    """Two series repeat the same hour shape for 6 hours; one hour of
-    series b is a planted inverted shape unique in the corpus -> it
-    must be b's discord with corpus count 1."""
-    import datetime as dt
-    rows = []
-    t0 = dt.datetime(2024, 5, 1)
-    for conv in ("a", "b"):
-        for h in range(6):
-            for mnt in range(60):
-                # rising-then-falling shape, identical every hour
-                v = float(mnt if mnt < 30 else 60 - mnt)
-                if conv == "b" and h == 3:
-                    v = -v       # planted inversion: unique shape
-                rows.append((conv, t0 + dt.timedelta(hours=h,
-                                                     minutes=mnt), v))
-    df = spark.createDataFrame(rows,
-                               "conv_id string, ts timestamp, value double")
-    out = {r.conv_id: r for r in tsa.sax_discords(
-        df, n_frames=2, alphabet=4).collect()}
-    assert out["b"].bucket_start.hour == 3
-    assert out["b"].n_occurrences == 1
-    # series a: every hour shares the corpus-dominant word; tie-break
-    # picks its earliest hour
-    assert out["a"].bucket_start.hour == 0
-    assert out["a"].n_occurrences > 1
-
-
-# ------------------------------------------------- ddsketch_quantiles
-@pytest.fixture(scope="module")
-def lognormal_series(spark):
-    rng = np.random.default_rng(7)
-    vals = np.exp(rng.normal(3.0, 1.2, size=2000))
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [("a", t0 + dt.timedelta(seconds=i), float(v))
-            for i, v in enumerate(vals)]
-    return vals, spark.createDataFrame(
-        rows, "conv_id string, ts timestamp, value double")
-
-
-def test_ddsketch_within_relative_error(spark, lognormal_series):
-    """The DDSketch guarantee: for every q, the estimate is within
-    rel_error of the TRUE rank-ceil(q*n) sample (not the interpolated
-    quantile) — checked against a numpy sort on 2000 lognormal
-    values spanning ~4 orders of magnitude."""
-    vals, df = lognormal_series
-    alpha = 0.01
-    out = {r.q: r for r in tsa.ddsketch_quantiles(
-        df, qs=(0.5, 0.95, 0.99), rel_error=alpha).collect()}
-    srt = np.sort(vals)
-    for q in (0.5, 0.95, 0.99):
-        true = srt[math.ceil(q * len(srt)) - 1]
-        est = out[q].est
-        assert abs(est - true) <= alpha * true * (1 + 1e-6), (q, est, true)
-        assert out[q].n == len(vals)
-
-
-def test_ddsketch_merges_like_a_sketch(spark):
-    """Bucket counts are exact longs: the sketch over a union equals
-    the union of sketches (here: same data split across two days must
-    give per-day rows, and re-bucketing to one coarse bucket via a
-    second call over the union gives the same estimate as one pass)."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [("a", t0 + dt.timedelta(hours=i % 48), float(1.5 ** (i % 10) ))
-            for i in range(400)]
-    df = spark.createDataFrame(
-        rows, "conv_id string, ts timestamp, value double")
-    one = tsa.ddsketch_quantiles(
-        df, qs=(0.9,), bucket_seconds=7 * 86400).collect()
-    # split into halves, union, same call -> identical result
-    a = df.where(F.dayofmonth("ts") == 1)
-    b = df.where(F.dayofmonth("ts") != 1)
-    two = tsa.ddsketch_quantiles(
-        a.unionByName(b), qs=(0.9,), bucket_seconds=7 * 86400).collect()
-    assert one == two
-
-
-def test_ddsketch_drops_nonpositive_and_validates(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [("a", t0, -5.0), ("a", t0, 0.0), ("a", t0, None),
-            ("a", t0, 10.0), ("a", t0, 10.0)]
-    df = spark.createDataFrame(
-        rows, "conv_id string, ts timestamp, value double")
-    out = tsa.ddsketch_quantiles(df, qs=(0.5,)).collect()
-    assert len(out) == 1 and out[0].n == 2
-    assert abs(out[0].est - 10.0) <= 0.01 * 10.0 + 1e-6
-    with pytest.raises(ValueError):
-        tsa.ddsketch_quantiles(df, rel_error=1.5)
-    with pytest.raises(ValueError):
-        tsa.ddsketch_quantiles(df, qs=(0.0,))
-
-
-# ------------------------------------------------- fleet outliers
-def test_fleet_envelope_flags_cross_sectional_outlier(spark):
-    """Ten series share a day bucket; nine sit near 10, one at 1000.
-    Grouping by the bucket (keys=('bucket_start',)) must flag exactly
-    the deviant conversation — the within-series MAD would see a
-    1-point series and flag nothing."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(f"c{i}", t0, 10.0 + i * 0.1) for i in range(9)]
-    rows.append(("deviant", t0, 1000.0))
-    df = spark.createDataFrame(
-        rows, "conv_id string, bucket_start timestamp, mean_v double")
-    out = tsa.robust_flags(
-        df, "mean_v", k=3.0, keys=("bucket_start",))
-    flagged = [r.conv_id for r in out.where("flag = 1").collect()]
-    assert flagged == ["deviant"]
-
-
-# ------------------------------------------------- benford
-def test_benford_flags_uniform_but_passes_exponential(spark):
-    """Exponentially-spanning magnitudes follow Benford (small chi2);
-    a uniform [1000, 2000) feed pegs digit 1 (chi2 huge)."""
-    rows = []
-    # organic: 1.07^i spans 4 decades smoothly
-    for i in range(350):
-        rows.append(("organic", 1.07 ** i))
-    # fabricated: all values start with digit 1
-    for i in range(350):
-        rows.append(("capped", 1000.0 + i))
-    df = spark.createDataFrame(rows, "event_type string, value double")
-    out = tsa.benford_dq(df).collect()
-    chi = {r.event_type: r.chi2 for r in out}
-    assert chi["capped"] > 100 * max(chi["organic"], 1e-9)
-    # zero-filled spine: every key has exactly 9 digit rows
-    from collections import Counter
-    c = Counter(r.event_type for r in out)
-    assert c == {"organic": 9, "capped": 9}
-    capped = {r.digit: r for r in out if r.event_type == "capped"}
-    assert capped[1].share == 1.0 and capped[9].n_d == 0
-    # shares sum to 1 per key
-    for k in ("organic", "capped"):
-        assert abs(sum(r.share for r in out if r.event_type == k) - 1.0) \
-            < 1e-3
-
-
-def test_benford_excludes_sub_one_and_nulls(spark):
-    df = spark.createDataFrame(
-        [("t", 0.5), ("t", None), ("t", -23.0), ("t", 7.2)],
-        "event_type string, value double")
-    out = tsa.benford_dq(df).collect()
-    got = {r.digit: r.n_d for r in out}
-    assert got[2] == 1 and got[7] == 1  # |-23| -> 2, 7.2 -> 7
-    assert sum(got.values()) == 2
-
-
-# ------------------------------------------------- apdex
-def test_apdex_bands_and_score(spark):
-    from yahoo_anomaly_detection_spark.operators import tsanalytics
-    import datetime as dt
-    t0 = dt.datetime(2024, 1, 1, 12, 10)
-    vals = [10.0, 50.0, 51.0, 200.0, 201.0, None]  # sat,sat,tol,tol,fru,drop
-    rows = [(i, t0 + dt.timedelta(seconds=i), 1, "a", v)
-            for i, v in enumerate(vals)]
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    out = tsanalytics.apdex(ev, t_sat=50.0).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.bucket_start == dt.datetime(2024, 1, 1, 12, 0)
-    assert (r.n, r.n_sat, r.n_tol) == (5, 2, 2)
-    assert abs(r.apdex - round((2 + 1) / 5 + 1e-9, 4)) < 1e-9
-
-
-# ------------------------------------------------- pot_tail
-def test_pot_tail_matches_numpy_replica(spark):
-    """MoM GPD fit + extreme quantile vs a straight numpy replica on
-    a heavy-ish synthetic sample."""
-    rng = np.random.default_rng(7)
-    vals = rng.lognormal(mean=1.0, sigma=0.8, size=4000)
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=i), i % 50, "k",
-             float(v)) for i, v in enumerate(vals)]
-    [r] = tsa.pot_tail(events_df(spark, rows), q=0.001,
-                               u_q=0.95).collect()
-    n = len(vals)
-    t = np.quantile(vals, 0.95, method="linear")
-    exc = vals[vals > t] - t
-    m, s2 = exc.mean(), exc.var()
-    xi = 0.5 * (1 - m * m / s2)
-    sigma = 0.5 * m * (1 + m * m / s2)
-    z = t + sigma / xi * ((n * 0.001 / len(exc)) ** (-xi) - 1)
-    assert r.n == n and r.n_exc == len(exc)
-    assert r.thresh == pytest.approx(t, abs=2e-4)
-    assert r.xi == pytest.approx(xi, abs=2e-4)
-    assert r.sigma == pytest.approx(sigma, abs=2e-4)
-    assert r.z_q == pytest.approx(z, rel=1e-3)
-    assert r.n_above == int((vals > z).sum())
-    # the extreme quantile extrapolates BEYOND the threshold
-    assert r.z_q > r.thresh
-
-
-def test_pot_tail_degenerate_series_yields_null_model(spark):
-    """Constant exceedances (variance 0) and tiny series must emit
-    NULL model columns, not NaN/raise."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=i), 1, "flat", 1.0)
-            for i in range(100)]
-    rows += [(200 + i, t0 + dt.timedelta(seconds=i), 1, "tiny",
-              float(i)) for i in range(1)]
-    out = {r.event_type: r for r in
-           tsa.pot_tail(events_df(spark, rows)).collect()}
-    for k in ("flat", "tiny"):
-        r = out[k]
-        assert r.xi is None and r.sigma is None and r.z_q is None
-        assert r.n_above is None
-
-
-def test_pot_tail_broadcasts_model_never_shuffles_raw(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=i), i % 5, "k",
-             float(i % 97)) for i in range(500)]
-    df = tsa.pot_tail(events_df(spark, rows))
-    plan = plan_str(df)
-    assert "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-    # every SortMergeJoin would mean a raw-relation shuffle
-    assert "SortMergeJoin" not in plan, plan
-
-
-# ------------------------------------------------- shesd_flags
-def test_shesd_seasonal_peak_not_flagged_spike_flagged(spark):
-    """A strong hour-of-day seasonal peak is NOT an anomaly after
-    seasonal-median adjustment; a one-day departure from the
-    seasonal pattern IS."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    spike_eid = None
-    for day in range(7):
-        for hour in range(24):
-            v = 100.0 if hour == 12 else 1.0
-            v += 0.01 * ((eid * 7) % 5)  # mild jitter
-            if day == 3 and hour == 12:
-                v = 200.0
-                spike_eid = eid
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=hour),
-                         1, "m", v))
-            eid += 1
-    out = {r.event_id: r for r in
-           tsa.shesd_flags(events_df(spark, rows), k=3.0).collect()}
-    assert out[spike_eid].flag == 1
-    # every seasonal-peak hour on OTHER days survives
-    others = [r for i, r in out.items()
-              if i != spike_eid]
-    assert sum(r.flag for r in others) == 0
-    assert len(out) == 7 * 24
-
-
-def test_shesd_single_exchange_all_rounds(spark):
-    """All 2*rounds window phases + the seasonal join must ride ONE
-    corpus hash exchange (plus the tiny seasonal-agg side)."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(hours=i), 1, "m",
-             float(i % 24)) for i in range(200)]
-    df = tsa.shesd_flags(events_df(spark, rows), rounds=3)
-    plan = plan_str(df)
-    corpus_ex = re.findall(
-        r"Exchange hashpartitioning\(event_type[^)]*bucket_start",
-        plan)
-    assert len(corpus_ex) == 1, plan
-    assert "BroadcastExchange" in plan, plan
-
-
-# ------------------------------------------------- did_impact
-def test_did_impact_isolates_fleet_drift(spark):
-    """A fleet-wide +5 shift yields did=0 for every series; a series
-    moving +10 while the other is flat splits +-10."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    # 10 pre + 10 post points per type; cut = midpoint
-    for typ, pre, post in [("a", 1.0, 11.0), ("b", 2.0, 2.0)]:
-        for i in range(10):
-            rows.append((eid, t0 + dt.timedelta(hours=i), 7, typ, pre))
-            eid += 1
-        for i in range(10):
-            rows.append((eid, t0 + dt.timedelta(hours=100 + i), 7,
-                         typ, post))
-            eid += 1
-    out = {r.event_type: r for r in
-           tsa.did_impact(events_df(spark, rows)).collect()}
-    assert out["a"].pre_mean == 1.0 and out["a"].post_mean == 11.0
-    # a: own delta +10, control (b) delta 0 -> did = +10
-    assert out["a"].did == 10.0
-    # b: own delta 0, control (a) delta +10 -> did = -10
-    assert out["b"].did == -10.0
-    # fleet-wide drift: everyone +5 -> did = 0 for all
-    rows2 = []
-    eid = 0
-    for typ in ("a", "b", "c"):
-        for i in range(10):
-            rows2.append((eid, t0 + dt.timedelta(hours=i), 7, typ, 1.0))
-            eid += 1
-        for i in range(10):
-            rows2.append((eid, t0 + dt.timedelta(hours=100 + i), 7,
-                          typ, 6.0))
-            eid += 1
-    for r in tsa.did_impact(events_df(spark, rows2)).collect():
-        assert r.did == 0.0
-
-
-def test_did_impact_two_corpus_scans_only(spark):
-    """Cost must be independent of |series|: the plan holds exactly
-    two scans of the raw relation (bounds + conditional agg)."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(hours=i % 50), 7, "t%d" % (i % 6),
-             float(i % 9)) for i in range(600)]
-    df = tsa.did_impact(events_df(spark, rows))
-    plan = plan_str(df)
-    assert plan.count("Scan ExistingRDD") == 2, plan
-    assert "BroadcastExchange" in plan, plan
-
-
 # ------------------------------------------------- dominant_period
-def test_dominant_period_finds_planted_cycle(spark):
-    """A clean 24h sinusoid -> lag 24; a 6h cycle -> lag 6 (the
-    smallest of the tied perfect lags 6/12/18/24)."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    for h in range(24 * 7):
-        rows.append((eid, t0 + dt.timedelta(hours=h), 7, "daily",
-                     math.sin(2 * math.pi * h / 24) + 2.0))
-        eid += 1
-        rows.append((eid, t0 + dt.timedelta(hours=h), 7, "sixh",
-                     math.sin(2 * math.pi * h / 6) + 2.0))
-        eid += 1
-    out = {r.event_type: r for r in
-           tsa.dominant_period(events_df(spark, rows)).collect()}
-    assert out["daily"].best_lag == 24
-    assert out["daily"].best_corr == pytest.approx(1.0, abs=1e-3)
-    assert out["sixh"].best_lag == 6  # tie over {6,12,18,24} -> min
-    assert out["sixh"].best_corr == pytest.approx(1.0, abs=1e-3)
-
-
-def test_dominant_period_constant_series_emits_no_row(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    rows = [(i, t0 + dt.timedelta(hours=i), 7, "flat", 5.0)
-            for i in range(48)]
-    assert tsa.dominant_period(events_df(spark, rows)).count() == 0
-
-
 def test_dominant_period_null_hour_matches_oracle(spark):
     """An hour whose values are all NULL has a NULL mean. Like DuckDB's
     ``corr``, the fit must drop every lag pair with a NULL side, so the
@@ -2376,255 +1703,3 @@ def test_dominant_period_null_hour_matches_oracle(spark):
                   .fetchall())
     assert [r[0] for r in got] == ["click", "error"]
     assert got == want
-
-
-# ------------------------------------------------- weekend_effect
-def test_weekend_effect_matches_scipy_style_replica(spark):
-    """Welch t and Satterthwaite dof vs a numpy replica; planted
-    weekend shift detected, identical distributions not flagged."""
-    rng = np.random.default_rng(11)
-    t0 = dt.datetime(2024, 6, 3)  # a Monday
-    rows = []
-    eid = 0
-    wd_vals, we_vals = [], []
-    for day in range(28):
-        is_we = (t0 + dt.timedelta(days=day)).isoweekday() >= 6
-        for i in range(20):
-            v = float(rng.normal(10.0 + (3.0 if is_we else 0.0), 2.0))
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=i % 24),
-                         7, "shifted", v))
-            (we_vals if is_we else wd_vals).append(v)
-            eid += 1
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=i % 24),
-                         7, "flat", float(rng.normal(5.0, 1.0))))
-            eid += 1
-    out = {r.event_type: r for r in
-           tsa.weekend_effect(events_df(spark, rows)).collect()}
-    a, b = np.array(wd_vals), np.array(we_vals)
-    v1, v2 = a.var(ddof=1), b.var(ddof=1)
-    se2 = v1 / len(a) + v2 / len(b)
-    t_stat = (b.mean() - a.mean()) / math.sqrt(se2)
-    dof = se2 ** 2 / ((v1 / len(a)) ** 2 / (len(a) - 1)
-                      + (v2 / len(b)) ** 2 / (len(b) - 1))
-    r = out["shifted"]
-    assert r.n_wd == len(a) and r.n_we == len(b)
-    assert r.t_stat == pytest.approx(t_stat, abs=2e-4)
-    assert r.dof == pytest.approx(dof, abs=2e-3)
-    assert r.significant == 1
-    assert out["flat"].significant == 0
-    assert abs(out["flat"].t_stat) < 3.0
-
-
-def test_weekend_effect_degenerate_null(spark):
-    """All-weekday series (n_we = 0) emits NULL model columns."""
-    t0 = dt.datetime(2024, 6, 3)  # Monday
-    rows = [(i, t0 + dt.timedelta(hours=i % 48), 7, "wd_only",
-             float(i % 7)) for i in range(50)]  # Mon/Tue only
-    [r] = tsa.weekend_effect(events_df(spark, rows)).collect()
-    assert r.n_we == 0
-    assert r.t_stat is None and r.dof is None and r.significant is None
-
-
-# ------------------------------------------------- change_attribution
-def test_change_attribution_pins_the_moving_segment(spark):
-    """One segment doubles, others hold: it owns EP = 1 and the
-    highest surprise; EPs sum to 1 over segments."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    for typ, pre_v, post_v in [("mover", 10.0, 20.0),
-                               ("flat1", 30.0, 30.0),
-                               ("flat2", 5.0, 5.0)]:
-        for i in range(10):
-            rows.append((eid, t0 + dt.timedelta(hours=i), 7, typ,
-                         pre_v))
-            eid += 1
-            rows.append((eid, t0 + dt.timedelta(hours=100 + i), 7,
-                         typ, post_v))
-            eid += 1
-    out = {r.event_type: r for r in
-           tsa.change_attribution(events_df(spark, rows)).collect()}
-    assert out["mover"].ep == 1.0
-    assert out["flat1"].ep == 0.0 and out["flat2"].ep == 0.0
-    assert out["mover"].surprise > out["flat1"].surprise
-    assert out["mover"].surprise > out["flat2"].surprise
-    assert sum(r.ep for r in out.values()) == pytest.approx(1.0)
-    # flat segments still register SOME surprise: their SHARE of the
-    # total shrank when the mover grew
-    assert out["flat1"].surprise > 0
-
-
-# ------------------------------------------------- fleet_beta
-def test_fleet_beta_recovers_planted_betas(spark):
-    """Series built as y = beta*x + alpha on a shared factor recover
-    their betas exactly (r2 = 1); a constant series yields NULL."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    # factor value per hour h: f = 10 + (h % 7)
-    for h in range(100):
-        f = 10.0 + (h % 7)
-        for typ, beta, alpha in [("amp", 2.0, 1.0),
-                                 ("damp", 0.5, -3.0),
-                                 ("flat", 0.0, 4.0)]:
-            rows.append((eid, t0 + dt.timedelta(hours=h), 7, typ,
-                         beta * f + alpha))
-            eid += 1
-    out = {r.event_type: r for r in
-           tsa.fleet_beta(events_df(spark, rows)).collect()}
-    # fleet mean x = mean over the 3 series = (2f+1 + .5f-3 + 4)/3
-    # = (2.5 f + 2)/3, linear in f -> each series still linear in x
-    # with slope beta_i / (2.5/3)
-    scale = 2.5 / 3
-    assert out["amp"].beta == pytest.approx(2.0 / scale, abs=1e-3)
-    assert out["damp"].beta == pytest.approx(0.5 / scale, abs=1e-3)
-    assert out["amp"].r2 == pytest.approx(1.0, abs=1e-4)
-    assert out["flat"].beta == pytest.approx(0.0, abs=1e-6)
-    assert out["flat"].r2 is None  # zero y-variance
-    assert out["amp"].n_buckets == 100
-
-
-# ------------------------------------------------- normality_check
-def test_normality_check_matches_scipy_formulas(spark):
-    """Skew/kurtosis/JB vs numpy population-moment replica; a clean
-    normal sample passes, an exponential sample fails."""
-    rng = np.random.default_rng(5)
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    normal = rng.normal(10, 2, 2000)
-    expo = rng.exponential(5, 2000)
-    for typ, vals in [("gauss", normal), ("expo", expo)]:
-        for v in vals:
-            rows.append((eid, t0 + dt.timedelta(seconds=eid), 7, typ,
-                         float(v)))
-            eid += 1
-    rows.append((eid, t0, 7, "const", 1.0))
-    out = {r.event_type: r for r in
-           tsa.normality_check(events_df(spark, rows)).collect()}
-
-    def replica(vals):
-        v = np.asarray(vals)
-        m2, m3, m4 = (np.mean((v - v.mean()) ** p) for p in (2, 3, 4))
-        s = m3 / m2 ** 1.5
-        k = m4 / m2 ** 2 - 3
-        return s, k, len(v) / 6 * (s * s + k * k / 4)
-
-    for typ, vals in [("gauss", normal), ("expo", expo)]:
-        s, k, jb = replica(vals)
-        r = out[typ]
-        assert r.skew == pytest.approx(s, abs=2e-4)
-        assert r.kurt_excess == pytest.approx(k, abs=2e-4)
-        assert r.jb == pytest.approx(jb, rel=1e-3)
-    assert out["gauss"].normal_ok == 1
-    assert out["expo"].normal_ok == 0
-    assert out["const"].jb is None and out["const"].normal_ok is None
-
-
-# ------------------------------------------------- lateness_audit
-def test_lateness_audit_two_phase_equals_global_prefix_max(spark):
-    """With a tiny bucket size (forcing many carry-ins) the result
-    must equal a python global-prefix-max replica; ordered streams
-    yield NULL quantiles."""
-    rng = np.random.default_rng(9)
-    t0 = dt.datetime(2024, 6, 1)
-    rows, lates = [], []
-    runmax = None
-    for i in range(500):
-        # mostly forward, occasional 0-120s backwards jitter
-        ts = t0 + dt.timedelta(seconds=i * 10
-                               - int(rng.integers(0, 120)))
-        us = ts.timestamp()
-        runmax = us if runmax is None else max(runmax, us)
-        lates.append(runmax - us)
-        rows.append((i, ts, 7, "jittery", 1.0))
-    for i in range(100):  # perfectly ordered stream
-        rows.append((1000 + i, t0 + dt.timedelta(seconds=i), 7,
-                     "ordered", 1.0))
-    out = {r.event_type: r for r in
-           tsa.lateness_audit(events_df(spark, rows),
-                                      bucket_rows=32).collect()}
-    pos = [x for x in lates if x > 0]
-    r = out["jittery"]
-    assert r.n == 500
-    assert r.late_share == pytest.approx(len(pos) / 500, abs=1e-4)
-    assert r.max_late_s == pytest.approx(max(pos), abs=1e-3)
-    assert r.p99_late_s == pytest.approx(
-        float(np.quantile(pos, 0.99, method="linear")), abs=1e-2)
-    o = out["ordered"]
-    assert o.late_share == 0.0
-    assert o.p50_late_s is None and o.max_late_s is None
-
-
-# ------------------------------------------------- anomalous_days
-def test_anomalous_days_finds_broken_day_profile(spark):
-    """A day whose whole 24h profile departs from the weekday
-    template flags; same-mean days whose hourly errors cancel at the
-    daily grain still flag (the point the daily-mean detectors
-    miss); normal days don't."""
-    rng = np.random.default_rng(21)
-    t0 = dt.datetime(2024, 6, 3)  # Monday
-    rows = []
-    eid = 0
-    for day in range(28):
-        for hour in range(24):
-            v = 10.0 + (5.0 if hour == 12 else 0.0)
-            if day == 10:
-                # inverted profile, SAME daily mean: +5 moves to h0
-                v = 10.0 + (5.0 if hour == 0 else 0.0)
-            # mild noise so normal-day scores have nonzero MAD
-            v += float(rng.normal(0, 0.2))
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=hour),
-                         1, "m", v))
-            eid += 1
-    out = {r.day.day: r for r in
-           tsa.anomalous_days(events_df(spark, rows)).collect()}
-    flagged = {d for d, r in out.items() if r.flag == 1}
-    # day index 10 -> June 13 (a Thursday). The broken day must flag
-    # with the TOP score; its weekday SIBLINGS may co-flag (their
-    # 4-sample template is contaminated by the broken day — inherent
-    # to template scoring), but no other weekday does.
-    assert 13 in flagged
-    assert flagged <= {6, 13, 20, 27}
-    assert out[13].z == max(r.z for r in out.values() if r.z is not None)
-    assert out[13].rmsd > 2 * max(
-        r.rmsd for d, r in out.items() if d != 13)
-
-
-# ------------------------------------------------- capacity_forecast
-def test_capacity_forecast_eta_math(spark):
-    """A clean +1/day trend from 50 crosses 100 in ~(100-level)/1
-    days; a flat series yields NULL ETA; a decreasing one too."""
-    t0 = dt.datetime(2024, 6, 1)
-    rows = []
-    eid = 0
-    for day in range(20):
-        for h in (0, 12):
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=h), 1,
-                         "grow", 50.0 + day))
-            eid += 1
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=h), 1,
-                         "flat", 10.0))
-            eid += 1
-            rows.append((eid, t0 + dt.timedelta(days=day, hours=h), 1,
-                         "drop", 200.0 - day))
-            eid += 1
-    out = {r.event_type: r for r in
-           tsa.capacity_forecast(events_df(spark, rows),
-                                         threshold=100.0,
-                                         horizon_days=30.0).collect()}
-    g = out["grow"]
-    assert g.slope_per_day == pytest.approx(1.0, abs=1e-3)
-    assert g.level_now == pytest.approx(69.0, abs=0.1)  # day 19 fit
-    assert g.eta_days == pytest.approx(100.0 - g.level_now, abs=0.1)
-    assert g.urgent == 0  # ~31 days out at horizon 30
-    assert out["flat"].eta_days is None
-    assert out["flat"].urgent == 0
-    # decreasing AND already above threshold -> NULL eta, not urgent
-    assert out["drop"].eta_days is None and out["drop"].urgent == 0
-    # tighter horizon flips urgency
-    out2 = {r.event_type: r for r in
-            tsa.capacity_forecast(events_df(spark, rows),
-                                          threshold=75.0,
-                                          horizon_days=30.0).collect()}
-    assert out2["grow"].urgent == 1  # ~6 days to 75

@@ -24,7 +24,7 @@ the identical numbers), and cheaper per row than computing a hash per
 (plane, dim) inside the projection. An affine hash (LCG) is NOT
 usable here: w(j,d) affine in (j·DIM+d) puts every plane on a line in
 R^64, correlating all bucket bits — measured ~30× candidate-pair
-skew vs uniform at 8 planes (tests/test_similarity.py pins the
+skew vs uniform at 8 planes (tests/test_round3_ops.py pins the
 fixed behavior: candidate volume ~linear in N under adaptive planes).
 """
 
@@ -73,7 +73,7 @@ def adaptive_n_planes(n_rows: int, target_bucket: int = 64,
     and candidate pairs grow ~N²/2^planes — a scale-killer at 10⁹
     vectors. Scaling planes with log2(N) keeps expected occupancy at
     ``target_bucket`` and candidate volume ~linear in N (tested in
-    tests/test_similarity.py). Callers that know the corpus size pass
+    tests/test_round3_ops.py). Callers that know the corpus size pass
     it; :func:`embedding_near_dups` with ``n_planes=None`` counts the
     corpus itself (one cheap aggregate) before planning the join.
     """

@@ -18,7 +18,7 @@ sup-norm KS test and bin-ratio PSI already shipped, and the Hurst /
 permutation-entropy pair characterizes series MEMORY — which
 rolling-window sigma detectors silently assume away.
 
-Scale shapes (plan-audited in tests/test_statstests.py): every
+Scale shapes (plan-audited in tests/test_round4g_ops.py): every
 operator collapses the raw corpus to a (series, bucket) tier with
 ONE map-side-combined groupBy as its first move; all pair joins,
 windows, and regressions run on tier-sized relations (≤ series ×
